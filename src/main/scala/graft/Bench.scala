@@ -1,4 +1,5 @@
 package graft
+import scala.util.control.NonFatal
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main — one JSON line per run (driver contract).
@@ -147,7 +148,7 @@ object Bench {
     sys.env.get("SPARK_GRAFT_WARM_DIR").filter(d =>
       new java.io.File(d).exists()).foreach { warmDir =>
       mapConcurrent(spread, coldPar) { case (_, fn) =>
-        try fn(spark, warmDir).count() catch { case _: Throwable => () }
+        try fn(spark, warmDir).count() catch { case NonFatal(_) => () }
       }
     }
     val tWarmup = (System.nanoTime() - t0Run) / 1e9
@@ -261,7 +262,7 @@ object Bench {
     try java.nio.file.Files.write(
       java.nio.file.Paths.get("bench_full.json"),
       s"""{"metric":"total","value":${results.map(_._2).sum},"unit":"sec","min_total":$minTotal,"stall_iters":$stallIters,"cold_par":$coldPar,"warmup_wall":${f"$tWarmup%.1f"},"cold_wall":${f"$tColdWall%.1f"},"queries":$full,"sf":"$sfDir"}""".getBytes("UTF-8"))
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
     spark.stop()
     println(line)
   }

@@ -1,6 +1,7 @@
 package graft
 
 import scala.collection.mutable
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
@@ -65,7 +66,7 @@ object Cache {
       val id = System.identityHashCode(spark)
       store.collect { case ((s, _, _), df) if s == id => df }.toSeq
     }
-    mine.foreach(df => try df.count() catch { case _: Throwable => () })
+    mine.foreach(df => try df.count() catch { case NonFatal(_) => () })
   }
 
   private val sideCaches = mutable.Buffer.empty[Int => Unit]

@@ -86,9 +86,9 @@ object ScaleProbe {
     }
 
     /** Sign-flip replicated embeddings WITH labels — the distinct-
-      * vector derived corpus the r10 serving probes share (dirs-only
-      * coordinator, filtered sharded serve, streaming loop). One
-      * build, three consumers; lazy like [[embxDir]]. */
+      * vector derived corpus the serving probes share (filtered
+      * sharded serve, one-pass fan-out, LSM lifecycle, streaming
+      * loop). One build, many consumers; lazy like [[embxDir]]. */
     lazy val hnswProbeDir: String = {
       val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
         .select("vec_id", "embedding")
@@ -1345,10 +1345,10 @@ object ScaleProbe {
           .map(q -> _))
         val deltaHit = deltaWanted.count { case (q, id) =>
           byQd.getOrElse(q, Set.empty).contains(id) }
-        // the query-TABLE serve (unbounded-query quadrant): stream a
-        // 2,000-row query table through each segment image in turn —
-        // warm images, so the wall is the S passes themselves; the
-        // gauge is q/s and equality is spec-pinned (HnswShardSpec)
+        // the query-TABLE serve (unbounded-query quadrant): fan a
+        // 2,000-row query table out to the S warm segment images in
+        // one pass; the gauge is q/s and equality is spec-pinned
+        // (HnswShardSpec)
         val tq0 = System.nanoTime()
         val servedQt = Hnsw.serveShardedQueryTable(spark, gdir,
           spark.range(2000).toDF("query_id").repartition(32),
@@ -1402,57 +1402,6 @@ object ScaleProbe {
         }
         s"corpus=$sfDir n=${e.count()} " + grid.mkString(" ")
       },
-      time("hnsw_dirsonly") {
-        // The dirs-only coordinator at mult× / S=4 (r9 verdict item 2):
-        // the query-table serve's default must retain NO segment image
-        // on the driver between arms, vs retainImages=true which holds
-        // all S in the session cache. Gauges: answer checksums equal
-        // (the HnswShardSpec bit-equality, re-proven at mult×), both
-        // walls, and post-GC retained heap after each mode — the
-        // retained mode's delta is the S-image bill the default
-        // removes. MUST RUN BEFORE the other hm probes (they warm the
-        // session image cache and would pollute the retained gauge).
-        import operators.Hnsw
-        val gdir = hnswProbeDir
-        val n = spark.read.parquet(s"$gdir/embeddings.parquet").count()
-        val qs = spark.range(2000).toDF("query_id").repartition(32)
-        def checksum(df: org.apache.spark.sql.DataFrame): (Long, Long) = {
-          val r = df.agg(count(lit(1)),
-            sum(hash(col("query_id"), col("rank"), col("vec_id")))
-              .cast("long")).head
-          (r.getLong(0), r.getLong(1))
-        }
-        // the S index BUILDS are one-time disk artifacts shared by
-        // both coordinator modes — pay them up front (timed
-        // separately) so the two serve walls compare like for like
-        val tb0 = System.nanoTime()
-        val dirs = Hnsw.shardDirsFor(spark, gdir, 4)
-        locally {
-          import scala.collection.parallel.CollectionConverters._
-          dirs.par.foreach(d => Hnsw.indexFor(spark, d))
-        }
-        val tBuild = (System.nanoTime() - tb0) / 1e9
-        val t0 = System.nanoTime()
-        val dirsOnly = checksum(Hnsw.serveShardedQueryTable(spark, gdir,
-          qs, shards = 4, ef = 16, k = 10))
-        val tDirs = (System.nanoTime() - t0) / 1e9
-        // retention gauge: the session image cache itself — the claim
-        // is about what the coordinator HOLDS between calls, and the
-        // cache census measures exactly that (a shared local JVM's
-        // post-GC heap is noise: checkpoint blocks, G1 timing)
-        val (cDirs, bDirs) = Hnsw.cachedImageCensus(dirs)
-        val t1 = System.nanoTime()
-        val retained = checksum(Hnsw.serveShardedQueryTable(spark, gdir,
-          qs, shards = 4, ef = 16, k = 10, retainImages = true))
-        val tRet = (System.nanoTime() - t1) / 1e9
-        val (cRet, bRet) = Hnsw.cachedImageCensus(dirs)
-        s"n=$n shards=4 build=${f"$tBuild%.0f"}s " +
-          s"equal=${dirsOnly == retained} " +
-          s"rows=${dirsOnly._1} dirs_wall=${f"$tDirs%.0f"}s " +
-          s"retain_wall=${f"$tRet%.0f"}s " +
-          s"retained_images_dirs_mode=$cDirs (${bDirs / 1024}KB) " +
-          s"retained_images_retain_mode=$cRet (${bRet / 1024}KB)"
-      },
       time("hnsw_sharded_filtered") {
         // Filtered serving on the partitioned regime at mult× (r9
         // verdict item 5): selectivity-derived per-segment pools,
@@ -1497,12 +1446,12 @@ object ScaleProbe {
         val recall = qids.map(q => byQ.getOrElse(q, Set.empty[Long])
           .count(exact.getOrElse(q, Set.empty).contains) / 10.0)
           .sum / qids.size
-        // the ONE-PASS filtered arm (round 11): same strategy, the
+        // the query-table filtered arm (round 11): same strategy, the
         // segment-pinned concurrent fan-out — answers must match the
-        // sequential filtered serve row for row, at a one-pass wall
+        // bounded-batch filtered serve row for row
         Hnsw.ImageBlobCache.clear()
         val t1 = System.nanoTime()
-        val outOne = Hnsw.serveShardedQueryTableOnePassFiltered(spark,
+        val outOne = Hnsw.serveShardedQueryTableFiltered(spark,
           gdir, spark.range(40).toDF("query_id"), shards = s,
           labelCol = "label", labelVal = 3L, ef = 64, k = 10).collect()
         val tOne = (System.nanoTime() - t1) / 1e9
@@ -1516,44 +1465,24 @@ object ScaleProbe {
           s"onepass_equal=$onePassEq onepass_wall=${f"$tOne%.0f"}s"
       },
       time("hnsw_onepass") {
-        // One-pass segment-pinned serving vs the sequential
-        // broadcast-in-turn arms (r10 verdict item 3): with ≥S tasks
-        // available, all S segments must serve CONCURRENTLY — the
-        // sequential mode's wall is Σ arms, the one-pass wall the
-        // slowest arm plus the fan-out shuffle. Gauges: checksum
-        // equality at S=4 and S=10, both walls, executor blob-cache
-        // census (≤ S images in the shared local JVM; 1 per executor
-        // on a pinned cluster).
+        // The query-table serve's one-pass segment-pinned fan-out at
+        // S=4 and S=10 (2,000 queries): its wall and the executor
+        // blob-cache census (≤ S images in the shared local JVM; 1 per
+        // executor on a pinned cluster).
         import operators.Hnsw
         val gdir = hnswProbeDir
         val n = spark.read.parquet(s"$gdir/embeddings.parquet").count()
         val qs = spark.range(2000).toDF("query_id").repartition(32)
-        def checksum(df: org.apache.spark.sql.DataFrame): (Long, Long) = {
-          val r = df.agg(count(lit(1)),
-            sum(hash(col("query_id"), col("rank"), col("vec_id")))
-              .cast("long")).head
-          (r.getLong(0), r.getLong(1))
-        }
         val rows = Seq(4, 10).map { s =>
-          val dirs = Hnsw.shardDirsFor(spark, gdir, s)
-          locally {
-            import scala.collection.parallel.CollectionConverters._
-            dirs.par.foreach(d => Hnsw.indexFor(spark, d))
-          }
-          val t0 = System.nanoTime()
-          val seqC = checksum(Hnsw.serveShardedQueryTable(spark, gdir,
-            qs, shards = s))
-          val tSeq = (System.nanoTime() - t0) / 1e9
+          Hnsw.stageBlobs(spark, Hnsw.shardDirsFor(spark, gdir, s))
           Hnsw.ImageBlobCache.clear()
           val t1 = System.nanoTime()
-          val oneC = checksum(Hnsw.serveShardedQueryTableOnePass(spark,
-            gdir, qs, shards = s))
+          val served = Hnsw.serveShardedQueryTable(spark, gdir, qs,
+            shards = s).count()
           val tOne = (System.nanoTime() - t1) / 1e9
           val (execImgs, _) = Hnsw.ImageBlobCache.census
           Hnsw.ImageBlobCache.clear()
-          s"S=$s equal=${seqC == oneC} rows=${seqC._1} " +
-            s"seq_wall=${f"$tSeq%.0f"}s onepass_wall=${f"$tOne%.0f"}s " +
-            s"ratio=${f"${tSeq / math.max(tOne, 0.001)}%.1f"} " +
+          s"S=$s rows=$served onepass_wall=${f"$tOne%.0f"}s " +
             s"exec_imgs=$execImgs"
         }
         s"n=$n " + rows.mkString(" ")
@@ -1572,7 +1501,7 @@ object ScaleProbe {
             exact: Map[Long, Set[Long]]): (Double, Double) = {
           val t0 = System.nanoTime()
           val out = Hnsw.serveShardedRouted(spark, dir,
-            spark.range(40).toDF("query_id"), shards = s, routes = r,
+            spark.range(40).toDF("query_id"), shards = s, maxRoutes = r,
             ef = 16, k = 10).collect()
           val wall = (System.nanoTime() - t0) / 1e9
           val byQ = out.groupBy(_.getLong(0))
@@ -1688,7 +1617,7 @@ object ScaleProbe {
             val cells = qrows.map { case (_, qv, qn) =>
               Hnsw.routeCellsAdaptive(cents, qv, qn, s, m).size
             }.sum.toDouble / qrows.length
-            val out = Hnsw.serveShardedRoutedAdaptive(spark, dir,
+            val out = Hnsw.serveShardedRouted(spark, dir,
               spark.range(40).toDF("query_id"), shards = s,
               maxRoutes = s, margin = m, ef = 16, k = 10).collect()
             val byQ = out.groupBy(_.getLong(0))
@@ -1722,7 +1651,7 @@ object ScaleProbe {
           Hnsw.ImageBlobCache.clear()
           val t0 = System.nanoTime()
           val out = Hnsw.serveShardedRoutedQueryTable(spark, cdir,
-            hotQ, shards = 16, routes = 1, ef = 16, k = 10,
+            hotQ, shards = 16, maxRoutes = 1, ef = 16, k = 10,
             qParts = p).collect()
             .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
               r.getDouble(3)))
@@ -1901,7 +1830,7 @@ object ScaleProbe {
         val meanSegs = plan.values.map(_.size).sum.toDouble /
           math.max(plan.size, 1)
         val t1 = System.nanoTime()
-        val routed = II.serveRouted(spark, rw, qdf, maxRoutes = 2,
+        val routed = II.serve(spark, rw, qdf, maxRoutes = 2,
           margin = 0.05, ef = 16, k = 10).collect()
         val wRouted = (System.nanoTime() - t1) / 1e9
         val t0 = System.nanoTime()
@@ -2011,7 +1940,7 @@ object ScaleProbe {
         // sample agreement with the bounded-batch routed serve
         import spark.implicits._
         val sample = oRouted.map(_._1).distinct.take(20).toSeq
-        val batchRouted = II.serveRouted(spark, rw,
+        val batchRouted = II.serve(spark, rw,
           sample.toDF("query_id"), maxRoutes = 1, margin = 0.0,
           ef = 16, k = 10).collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
@@ -2151,14 +2080,14 @@ object ScaleProbe {
             r.getDouble(3))).sortBy(t => (t._1, t._2)).toSeq
         // the driver-Set arm (cap above the delta) is the reference
         val t0 = System.nanoTime()
-        val viaSet = rows(II.serveWithDelta(spark, lw, d, qdf,
-          ef = 16, k = 10))
+        val viaSet = rows(II.serve(spark, lw, qdf, ef = 16, k = 10,
+          delta = Some(d)))
         val wSet = (System.nanoTime() - t0) / 1e9
         spark.conf.set("spark.graft.ann.deadSetCap", "512")
         try {
           val t1 = System.nanoTime()
-          val viaLadder = rows(II.serveWithDelta(spark, lw, d, qdf,
-            ef = 16, k = 10))
+          val viaLadder = rows(II.serve(spark, lw, qdf, ef = 16,
+            k = 10, delta = Some(d)))
           val wLadder = (System.nanoTime() - t1) / 1e9
           assert(viaSet == viaLadder,
             "delta ladder: past-cap serve diverged from the Set arm")

@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -74,7 +76,7 @@ object Sf1Probe {
         stalls += ts.count(t => t > 5 * m && t - m > 1.0)
         rows(name) = (cold, m, ts)
       } catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           rows(name) = (-1.0, -1.0, Nil)
           System.err.println(s"[sf1] $name failed: ${e.getMessage}")
       }
@@ -101,7 +103,7 @@ object Sf1Probe {
       try java.nio.file.Files.write(
         java.nio.file.Paths.get("sf1_full.json"),
         (line + "\n").getBytes("UTF-8"))
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
     }
     println(line)
     spark.stop()

@@ -3,6 +3,8 @@ package graft.api
 import java.security.MessageDigest
 import java.sql.Timestamp
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, Dataset, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -375,7 +377,7 @@ object IndexPipeline {
         java.nio.file.Files.deleteIfExists(p)
       }
       rm(java.nio.file.Paths.get(dir))
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
 
   /** Persisted per-store-state mutation artifacts: the delta rows
     * (vec_id, embedding, nrm — the exact brute arm's input), the

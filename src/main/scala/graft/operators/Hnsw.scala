@@ -434,11 +434,10 @@ object Hnsw {
       { _ => imageOf(spark, dir, indexFor(spark, dir), budgetBytes) })
 
   /** Census of the session image cache over `dirs`: (count, ≈bytes) —
-    * the retention gauge the dirs-only coordinator probe reports
-    * (ScaleProbe hnsw_dirsonly): the dirs-only mode must leave this at
-    * zero while retainImages holds all S. Byte estimate is the
-    * [[imageBytesPerVec]] budget formula over each cached image's
-    * actual vector count/width. */
+    * the retention gauge of the blob-staged sharded serves, which must
+    * leave it at zero (blobs ship by path; no segment image stays
+    * driver-resident). Byte estimate is the [[imageBytesPerVec]] budget
+    * formula over each cached image's actual vector count/width. */
   private[graft] def cachedImageCensus(dirs: Seq[String],
       budgetBytes: Long = DefaultNodeBudget): (Int, Long) = {
     val cached = dirs.flatMap(d => Option(images.get(s"$d#$budgetBytes")))
@@ -580,15 +579,12 @@ object Hnsw {
         exclude = exclude).toDF("vec_id", "score")
         .select(col("vec_id"), lit("indexed").as("segment"), col("score"))
     val q = e.filter(col("vec_id") === 0)
-      .select(col("embedding").as("qv"), col("nrm").as("qn"))
+      .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
+        col("nrm").as("qn"))
     val deltaLive = tombstones.foldLeft(
       e.crossJoin(broadcast(cut)).filter(col("vec_id") >= col("cutoff")))(
       (d, t) => d.join(t, Seq("vec_id"), "left_anti"))
-    val deltaArm = deltaLive
-      .crossJoin(broadcast(q))
-      .withColumn("score",
-        round(cosinePrenormed(dot(col("embedding"), col("qv")),
-          col("nrm"), col("qn")), 6))
+    val deltaArm = deltaCands(deltaLive, broadcast(q))
       .select(col("vec_id"), lit("delta").as("segment"), col("score"))
       .orderBy(desc("score"), col("vec_id"))
       .limit(10)
@@ -995,18 +991,9 @@ object Hnsw {
     * descent+beam over the segment's own graph), and the per-segment
     * answers — EXACT rescored cosines, the same HALF_UP 6-decimal
     * score every serve here reports — merge in a k-bounded aggregate.
-    *
-    * The distribution shape is the honest one for indexes that exceed
-    * cluster-wide replication: each segment image ships to EXACTLY ONE
-    * task (`parallelize(images, S)` — never a broadcast of all S to
-    * every node, which would re-create the monolithic memory bill),
-    * the bounded query batch broadcasts once, and the gather is
-    * `groupBy(query_id)` + the bounded [[graft.functions.TopKAggregator]]
-    * udaf — k·S candidate rows per query into the shuffle, never a
-    * corpus-scale window. Merge order cannot affect the answer: the
-    * bounded buffer keeps the global k-best under the total
-    * (score desc, id asc) order, so the union of segment answers is
-    * commutative by construction. */
+    * The execution shape is the core's bounded-batch stage
+    * ([[batchCands]]): one task per segment image, the bounded query
+    * batch broadcast once, the gather [[shardedGather]]. */
   def serveShardedDistributed(spark: SparkSession, dir: String,
       queries: DataFrame, shards: Int, ef: Int = 16,
       k: Int = 10, exclude: Set[Long] = Set.empty,
@@ -1015,76 +1002,176 @@ object Hnsw {
       shardedCands(spark, dir, dir, queries, shards, ef, k, exclude,
         budgetBytes))
 
-  /** The scatter half: per-segment beam answers as raw
-    * `(query_id, vec_id, score)` candidate rows. `corpusDir` is the
-    * corpus the S segment indexes cover; `queryDir` is where the query
-    * VECTORS live — they differ in the sealed+delta composition, where
-    * a freshly-ingested (unsealed) vector still queries the sealed
-    * segments. */
-  /** Build (or fetch) every segment's image, submitting the
-    * independent per-segment builds CONCURRENTLY: on a cluster these
-    * are separate jobs a FAIR scheduler interleaves across executors,
-    * and sequential submission would serialize S one-time index
-    * builds behind each other for no reason (the probe measured the
-    * sharded wall build-dominated). Determinism is untouched — each
-    * build reads only its own segment dir and the image cache is
-    * keyed per dir, so parallel submission cannot change any answer. */
-  private[graft] def segmentImages(spark: SparkSession,
-      dirs: Seq[String],
-      budgetBytes: Long = DefaultNodeBudget): Seq[IndexImage] = {
+  // ─────────────────────── the scatter-gather core ───────────────────────
+  //
+  // Every sharded and LSM serve is composed from the same five stages:
+  // blob staging, the query-vector lookup, one of the two candidate
+  // stages (bounded batch or query table), and the exact delta arm —
+  // all feeding the one k-bounded gather. Every candidate runs
+  // [[serveVec]] with selfId = the query's own id, so the serves differ
+  // only in which segments, queries and exclude sets they hand in.
+
+  /** Blob staging: build every missing segment index CONCURRENTLY (on
+    * a cluster these are separate jobs a FAIR scheduler interleaves;
+    * sequential submission would serialize S one-time builds), then
+    * stage ONE image at a time ([[imageBlobFor]]: materialize →
+    * serialize → drop) and return the blob PATHS in `dirs` order. Peak
+    * driver residency is one budget-sized image regardless of S; each
+    * task deserializes its own segment via [[ImageBlobCache]]. Warm
+    * calls skip the build step: [[indexFor]] memoizes only the index
+    * path, so re-invoking it per serve would still pay openIndex's
+    * small jobs per segment. */
+  private[graft] def stageBlobs(spark: SparkSession, dirs: Seq[String],
+      budgetBytes: Long = DefaultNodeBudget): Seq[String] = {
     import scala.collection.parallel.CollectionConverters._
-    dirs.par.map(d => imageFor(spark, d, budgetBytes)).seq
+    val toBuild = dirs.filterNot(hasImageBlob(_, budgetBytes))
+    if (toBuild.nonEmpty) toBuild.par.foreach(d => indexFor(spark, d))
+    dirs.map(d => imageBlobFor(spark, d, budgetBytes))
   }
 
-  private def shardedCands(spark: SparkSession, corpusDir: String,
-      queryDir: String, queries: DataFrame, shards: Int, ef: Int,
-      k: Int, exclude: Set[Long],
-      budgetBytes: Long = DefaultNodeBudget): DataFrame = {
-    import spark.implicits._
-    // blob discipline (r12 verdict item 2 — formerly
-    // [[segmentImages]], which held ALL S images on the driver at once
-    // and serialized them from it into the closure): the S indexes
-    // build concurrently as DISK artifacts, the driver then stages one
-    // image at a time ([[imageBlobFor]]: materialize → serialize →
-    // drop) and ships blob PATHS; each task deserializes its own
-    // segment via [[ImageBlobCache]]. Peak driver residency is one
-    // budget-sized image regardless of S — the same discipline the
-    // query-table serves already run.
-    val dirs = shardDirsFor(spark, corpusDir, shards)
-    locally { // first-call concurrency only: staged blobs skip it
-      import scala.collection.parallel.CollectionConverters._
-      val toBuild = dirs.filterNot(hasImageBlob(_, budgetBytes))
-      if (toBuild.nonEmpty) toBuild.par.foreach(d => indexFor(spark, d))
-    }
-    val blobs = dirs.map(d => imageBlobFor(spark, d, budgetBytes))
-    val qrows = Search.embNormed(spark, queryDir)
+  /** Query-vector lookup: the rows of `dir` whose ids `queries` names,
+    * as `(query_id, qv, qn)` — the prenormed query side of both
+    * candidate stages and of the delta arm. */
+  private[graft] def lookupQueryVecs(spark: SparkSession, dir: String,
+      queries: DataFrame): DataFrame =
+    Search.embNormed(spark, dir)
       .join(queries.select(col("query_id").cast("long").as("vec_id")),
         "vec_id")
-      .select(col("vec_id"), col("embedding"), col("nrm"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray, r.getDouble(2)))
+      .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
+        col("nrm").as("qn"))
+
+  private[graft] def collectQueryVecs(
+      qv: DataFrame): Array[(Long, Array[Float], Double)] =
+    qv.collect().map(r =>
+      (r.getLong(0), r.getSeq[Float](1).toArray, r.getDouble(2)))
+
+  /** One segment of a bounded-batch scatter: its staged blob, the
+    * query ids routed to it (None = every query) and the ids its
+    * report excludes. */
+  private[graft] final case class SegTask(blob: String,
+      want: Option[Set[Long]], exclude: Set[Long])
+
+  /** Bounded-batch candidate stage: each segment image ships to
+    * EXACTLY ONE task (`parallelize(segments)` — never a broadcast of
+    * all S images, which would re-create the monolithic memory bill),
+    * the bounded query batch broadcasts once, and each task serves its
+    * routed queries. Exclusion follows the family tombstone rule
+    * ([[serveVec]]'s `exclude`): navigable inside the beam, filtered
+    * from the segment's REPORT, so each segment backfills its own
+    * top-k and the gather merges only live candidates. Emits raw
+    * `(query_id, vec_id, score)` rows for [[shardedGather]]. */
+  private[graft] def batchCands(spark: SparkSession, segs: Seq[SegTask],
+      qrows: Array[(Long, Array[Float], Double)], ef: Int,
+      k: Int): DataFrame = {
+    import spark.implicits._
     val qbc = spark.sparkContext.broadcast(qrows)
-    // tombstones follow the family rule ([[serveVec]]'s exclude):
-    // navigable inside every segment's beam, filtered from each
-    // segment's REPORT — so the k-bounded gather merges only live
-    // candidates and k live answers survive per query (each segment
-    // already backfills its own top-k past the exclusions)
-    spark.sparkContext
-      .parallelize(blobs, math.max(blobs.size, 1))
-      .flatMap { blob =>
-        val img = ImageBlobCache.get(blob)
-        qbc.value.iterator.flatMap { case (qid, qv, qn) =>
-          serveVec(img, qv, qn, selfId = qid, ef = ef, k = k,
-            exclude = exclude).map {
-            case (id, sc) => (qid, id, sc)
+    spark.sparkContext.parallelize(segs, math.max(segs.size, 1))
+      .flatMap { seg =>
+        val img = ImageBlobCache.get(seg.blob)
+        qbc.value.iterator
+          .filter(q => seg.want.forall(_.contains(q._1)))
+          .flatMap { case (qid, qv, qn) =>
+            serveVec(img, qv, qn, selfId = qid, ef = ef, k = k,
+              exclude = seg.exclude).map { case (id, sc) => (qid, id, sc) }
           }
-        }
       }.toDF("query_id", "vec_id", "score")
   }
 
-  /** The gather half: one bounded TopK aggregate over candidate rows
-    * — k·(arms) rows per query into the shuffle, never a corpus-scale
-    * window; commutative, so arms union freely before it. */
+  /** Executor-side routing for the query-table stage: the centroid
+    * table (segment-count-sized, never an image), the adaptive rule's
+    * cap and margin ([[routeCellsAdaptive]]), and each cell's segment
+    * indexes (a budget-split cell serves all its sub-segments). */
+  private[graft] final case class TableRoute(
+      cents: Array[(Long, Array[Double], Double)], maxRoutes: Int,
+      margin: Double, segsOf: Map[Long, Seq[Int]])
+
+  /** The query-dimension sub-key: a mixed hash of the query id, NOT
+    * `qid mod P` — sequential id ranges would land whole strides in
+    * one sub-task. Deterministic (pure function of the id), so the
+    * grouping never changes any answer — only task granularity. */
+  private def qSub(qid: Long, p: Int): Int =
+    (((qid * 0x9E3779B97F4A7C15L) >>> 33) % p).toInt
+
+  /** Query-table candidate stage, for an UNBOUNDED query table: the
+    * query rows fan out to their segments (all of them, or the routed
+    * set computed ON THE EXECUTORS against the broadcast centroid
+    * table), shuffle on `(segment, hash(query_id) mod P)`, and each
+    * group serves against its segment's image loaded from the blob
+    * (per-partition init via [[ImageBlobCache]], which de-duplicates
+    * the image per executor — never a broadcast of all S). All S
+    * segments serve CONCURRENTLY, and the query dimension splits
+    * across P tasks per segment instead of serializing behind one (a
+    * hot routed cell would otherwise be the straggler wall). P = 0
+    * derives `defaultParallelism / S`, floored at 1. `exclude(i)` is
+    * segment i's report exclusion (empty = none). Emits
+    * `(__seg, query_id, vec_id, score)`, `__seg` the segment's index
+    * in `blobs`; nothing query-scale ever lands on the driver. */
+  private[graft] def tableCands(spark: SparkSession, blobs: Seq[String],
+      qv: DataFrame, ef: Int, k: Int, qParts: Int,
+      route: Option[TableRoute] = None,
+      exclude: Seq[Set[Long]] = Seq.empty): DataFrame = {
+    import spark.implicits._
+    val n = blobs.size
+    val p = math.max(1,
+      if (qParts > 0) qParts
+      else spark.sparkContext.defaultParallelism / math.max(n, 1))
+    val routeBc = route.map(spark.sparkContext.broadcast(_))
+    val blobsArr = blobs.toArray
+    val excl = exclude.toArray
+    qv.select(col("query_id").cast("long"), col("qv").cast("array<float>"),
+        col("qn"))
+      .as[(Long, Array[Float], Double)]
+      .flatMap { case (qid, emb, qn) =>
+        val sis: Iterator[Int] = routeBc.fold((0 until n).iterator) { bc =>
+          val r = bc.value
+          routeCellsAdaptive(r.cents, emb, qn, r.maxRoutes, r.margin)
+            .iterator.flatMap(c => r.segsOf.getOrElse(c, Nil))
+        }
+        sis.map(si => (si, qid, emb, qn))
+      }
+      .groupByKey(t => (t._1, qSub(t._2, p)))
+      .flatMapGroups { (key, it) =>
+        val img = ImageBlobCache.get(blobsArr(key._1))
+        val ex = if (excl.isEmpty) Set.empty[Long] else excl(key._1)
+        it.flatMap { case (_, qid, emb, qn) =>
+          serveVec(img, emb, qn, selfId = qid, ef = ef, k = k,
+            exclude = ex).map { case (id, sc) => (key._1, qid, id, sc) }
+        }
+      }
+      .toDF("__seg", "query_id", "vec_id", "score")
+  }
+
+  /** An ingest delta's `(vec_id, embedding)` rows, prenormed for
+    * [[deltaCands]]. */
+  private[graft] def normedRows(delta: DataFrame): DataFrame =
+    delta.select(col("vec_id"),
+        col("embedding").cast("array<float>").as("embedding"))
+      .withColumn("nrm", l2norm(col("embedding")))
+
+  /** Exact delta arm: every `(vec_id, embedding, nrm)` row scored
+    * against every `(query_id, qv, qn)` query with the same rounded
+    * prenormed cosine every serve reports, the query's own id
+    * excluded. The delta is bounded by ingest rate between reseals,
+    * never corpus size, so a delta member of the true top-k is found
+    * exactly and can never be displaced in the gather. The caller
+    * wraps the bounded side in `broadcast(...)` — the query batch on
+    * the bounded serves, the ingest delta on the query-table serve —
+    * so each plan keeps its build side. */
+  private[graft] def deltaCands(rows: DataFrame,
+      queries: DataFrame): DataFrame =
+    rows.crossJoin(queries)
+      .filter(col("vec_id") =!= col("query_id"))
+      .withColumn("score",
+        round(cosinePrenormed(dot(col("embedding"), col("qv")),
+          col("nrm"), col("qn")), 6))
+      .select("query_id", "vec_id", "score")
+
+  /** The gather: one bounded TopK aggregate over candidate rows —
+    * `groupBy(query_id)` + the bounded [[graft.functions.TopKAggregator]]
+    * udaf, k·(arms) rows per query into the shuffle, never a
+    * corpus-scale window. Merge order cannot affect the answer: the
+    * bounded buffer keeps the global k-best under the total
+    * (score desc, id asc) order, so arms union freely before it. */
   private[graft] def shardedGather(spark: SparkSession, k: Int,
       cands: DataFrame): DataFrame =
     cands.groupBy("query_id")
@@ -1094,18 +1181,43 @@ object Hnsw {
       .select(col("query_id"), (col("pos") + 1).cast("long").as("rank"),
         col("col._1").as("vec_id"), col("col._2").as("score"))
 
+  // ─────────────────────────── sharded serves ───────────────────────────
+
+  /** Every segment's image in the session cache, built concurrently —
+    * the driver-resident form [[graft.api.IndexPipeline]] serves from
+    * (the serves below stage blobs instead, [[stageBlobs]]). Each build
+    * reads only its own segment dir and the cache is keyed per dir, so
+    * parallel submission cannot change any answer. */
+  private[graft] def segmentImages(spark: SparkSession,
+      dirs: Seq[String],
+      budgetBytes: Long = DefaultNodeBudget): Seq[IndexImage] = {
+    import scala.collection.parallel.CollectionConverters._
+    dirs.par.map(d => imageFor(spark, d, budgetBytes)).seq
+  }
+
+  /** The residue layout's bounded-batch scatter: `corpusDir` is the
+    * corpus the S segment indexes cover; `queryDir` is where the query
+    * VECTORS live — they differ in the sealed+delta composition, where
+    * a freshly-ingested (unsealed) vector still queries the sealed
+    * segments. */
+  private def shardedCands(spark: SparkSession, corpusDir: String,
+      queryDir: String, queries: DataFrame, shards: Int, ef: Int,
+      k: Int, exclude: Set[Long], budgetBytes: Long): DataFrame = {
+    val blobs = stageBlobs(spark, shardDirsFor(spark, corpusDir, shards),
+      budgetBytes)
+    batchCands(spark, blobs.map(SegTask(_, None, exclude)),
+      collectQueryVecs(lookupQueryVecs(spark, queryDir, queries)), ef, k)
+  }
+
   /** The full lifecycle on the PARTITIONED regime — sealed+delta (and
     * tombstones) composed with the sharded serve, completing the
     * matrix whose monolithic row is [[qHnswDelta]]/[[qHnswTombstone]]:
     * the SEALED corpus (ids below [[Ann.deltaCutoff]]'s boundary)
     * serves through S budget-derived segment images; vectors that
-    * arrived since form the unindexed delta, brute-force-scanned
-    * EXACTLY (bounded by ingest rate between reseals, not corpus
-    * size) with the same rounded-cosine score; both arms' candidates
-    * union into ONE k-bounded gather, so a delta member of the true
-    * top-k can never be displaced. Tombstones apply the family rule
-    * on both arms: navigable in every segment's beam, anti-joined
-    * from the delta scan, never reported. */
+    * arrived since form the unindexed delta, scanned by the exact
+    * delta arm; both arms' candidates union into ONE k-bounded gather.
+    * Tombstones apply the family rule on both arms: navigable in every
+    * segment's beam, anti-joined from the delta scan, never reported. */
   def serveShardedDelta(spark: SparkSession, dir: String,
       queries: DataFrame, shards: Int, ef: Int = 16, k: Int = 10,
       tombstones: Option[DataFrame] = None,
@@ -1113,38 +1225,22 @@ object Hnsw {
     import spark.implicits._
     val e = Search.embNormed(spark, dir)
     val cut = Ann.deltaCutoff(e)
-    val sealedDir = sealedDirFor(spark, dir)
     val exclude: Set[Long] = tombstones.fold(Set.empty[Long])(
       _.as[Long].collect().toSet)
-    val sealedCands = shardedCands(spark, sealedDir, dir, queries,
-      shards, ef, k, exclude, budgetBytes)
-    val qv = e.join(queries.select(
-        col("query_id").cast("long").as("vec_id")), "vec_id")
-      .select(col("vec_id").as("query_id"),
-        col("embedding").as("qv"), col("nrm").as("qn"))
+    val sealedCands = shardedCands(spark, sealedDirFor(spark, dir), dir,
+      queries, shards, ef, k, exclude, budgetBytes)
     val deltaLive = tombstones.foldLeft(
       e.crossJoin(broadcast(cut)).filter(col("vec_id") >= col("cutoff")))(
       (d, t) => d.join(t, Seq("vec_id"), "left_anti"))
-    val deltaCands = deltaLive
-      .crossJoin(broadcast(qv))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("score",
-        round(cosinePrenormed(dot(col("embedding"), col("qv")),
-          col("nrm"), col("qn")), 6))
-      .select("query_id", "vec_id", "score")
-    shardedGather(spark, k, sealedCands.unionByName(deltaCands))
+    shardedGather(spark, k, sealedCands.unionByName(
+      deltaCands(deltaLive, broadcast(lookupQueryVecs(spark, dir, queries)))))
   }
 
   /** [[serveShardedDelta]] where the delta is an EXPLICIT ingest table
     * of `(vec_id, embedding)` rows rather than the id-cutoff
     * convention — the serve the STREAMING lifecycle composes with
-    * ([[graft.streaming.StreamingShardedServe]]): sealed segments
-    * answer through their images, the ingest delta (bounded by
-    * arrival rate between reseals, never corpus size) is scanned
-    * exactly with the same rounded cosine, and both arms merge in the
-    * one k-bounded gather — a delta member of the true top-k can
-    * never be displaced. Queries are corpus ids of the SEALED side
-    * (the registry convention). */
+    * ([[graft.streaming.StreamingShardedServe]]). Queries are corpus
+    * ids of the SEALED side (the registry convention). */
   def serveShardedIngestDelta(spark: SparkSession, sealedDir: String,
       delta: DataFrame, queries: DataFrame, shards: Int, ef: Int = 16,
       k: Int = 10, budgetBytes: Long = DefaultNodeBudget): DataFrame = {
@@ -1157,21 +1253,9 @@ object Hnsw {
       shards, ef, k, Set.empty, budgetBytes)
       .join(broadcast(delta.select("vec_id")), Seq("vec_id"),
         "left_anti")
-    val qv = Search.embNormed(spark, sealedDir)
-      .join(queries.select(col("query_id").cast("long").as("vec_id")),
-        "vec_id")
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
-        col("nrm").as("qn"))
-    val deltaCands = delta.select(col("vec_id"),
-        col("embedding").cast("array<float>").as("embedding"))
-      .withColumn("nrm", l2norm(col("embedding")))
-      .crossJoin(broadcast(qv))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("score",
-        round(cosinePrenormed(dot(col("embedding"), col("qv")),
-          col("nrm"), col("qn")), 6))
-      .select("query_id", "vec_id", "score")
-    shardedGather(spark, k, sealedCands.unionByName(deltaCands))
+    shardedGather(spark, k, sealedCands.unionByName(deltaCands(
+      normedRows(delta),
+      broadcast(lookupQueryVecs(spark, sealedDir, queries)))))
   }
 
   /** The sharded regime's RESEAL ([[resealIndex]]'s partitioned twin):
@@ -1181,8 +1265,9 @@ object Hnsw {
     * reseals into MORE segments, never a bigger per-node image and
     * never a pinned S; this is the operation that keeps the
     * [[IndexImage]] budget gate true across ingest. Returns the
-    * derived S and the segment dirs (images built concurrently and
-    * session-cached, ready to serve). */
+    * derived S and the segment dirs, ready to serve: indexes built and
+    * blobs staged ([[stageBlobs]]), NOT S images resident in the
+    * session cache. */
   def resealSharded(spark: SparkSession, dir: String,
       budgetBytes: Long = DefaultNodeBudget): (Int, Seq[String]) = {
     val stats = Search.embNormed(spark, dir)
@@ -1191,88 +1276,16 @@ object Hnsw {
     val dim = if (stats.isNullAt(1)) 0 else stats.getInt(1)
     val s = shardCountFor(n, dim, budgetBytes)
     val dirs = shardDirsFor(spark, dir, s)
-    // ready-to-serve = indexes built and blobs staged (one image on
-    // the driver at a time — the blob discipline), NOT S images
-    // resident in the session cache
-    locally {
-      import scala.collection.parallel.CollectionConverters._
-      val toBuild = dirs.filterNot(hasImageBlob(_, budgetBytes))
-      if (toBuild.nonEmpty) toBuild.par.foreach(d => indexFor(spark, d))
-    }
-    dirs.foreach(d => imageBlobFor(spark, d, budgetBytes))
+    stageBlobs(spark, dirs, budgetBytes)
     (s, dirs)
   }
 
-  /** The remaining quadrant of the serving matrix: an UNBOUNDED query
-    * table against a PARTITIONED index. [[serveShardedDistributed]]
-    * broadcasts the (bounded) query batch and ships each segment
-    * image to one task; here the QUERY table is the 100 TB axis, so
-    * the roles flip — each segment's budget-sized image broadcasts IN
-    * TURN and [[serveVecsDistributed]] streams the whole query table
-    * through it, with the arm MATERIALIZED (localCheckpoint, k rows
-    * per query) and the broadcast dropped before the next segment
-    * ships, so executor memory holds exactly one segment image at a
-    * time — never the S-image monolithic bill a plain union of lazy
-    * arms would re-create by pulling every broadcast into one job.
-    * The S bounded arms then merge in the same k-bounded gather.
-    * Cost: S passes over the query table, the honest price of an
-    * index no node can hold.
-    *
-    * DIRS-ONLY coordinator (the default): the driver holds only the
-    * built index DIRECTORIES; each arm materializes its one image
-    * from disk, broadcasts it, serves, and drops both the broadcast
-    * and the driver reference before the next arm — so peak driver
-    * retention is ONE budget-sized image, never S. This removes the
-    * last single-node memory assumption of the partitioned regime.
-    * `retainImages = true` opts back into the session image cache —
-    * the repeat-serve convenience of a single-JVM harness whose
-    * coordinator provably fits S images; HnswShardSpec pins the two
-    * modes bit-equal.
-    *
-    * Self-exclusion: each query row threads its own corpus id through
-    * [[serveVecsDistributed]]'s `self_id` column, so every arm runs
-    * [[serveVec]] with the SAME selfId the bounded-batch
-    * [[serveShardedDistributed]] uses — self is excluded from beam
-    * membership and frontier, not merely from reporting, and the two
-    * sharded regimes navigate identically by construction. */
-  def serveShardedQueryTable(spark: SparkSession, dir: String,
-      queries: DataFrame, shards: Int, ef: Int = 16,
-      k: Int = 10, retainImages: Boolean = false,
-      budgetBytes: Long = DefaultNodeBudget): DataFrame = {
-    val qv = Search.embNormed(spark, dir)
-      .join(queries.select(col("query_id").cast("long").as("vec_id")),
-        "vec_id")
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
-        col("vec_id").as("self_id"))
-    val dirs = shardDirsFor(spark, dir, shards)
-    if (retainImages) segmentImages(spark, dirs, budgetBytes)
-    else {
-      // build the S indexes concurrently ONCE (disk artifacts, not
-      // driver memory) — images materialize per arm below
-      import scala.collection.parallel.CollectionConverters._
-      dirs.par.foreach(d => indexFor(spark, d))
-    }
-    val arms = dirs.map { d =>
-      val img =
-        if (retainImages) imageFor(spark, d, budgetBytes)
-        else imageOf(spark, d, indexFor(spark, d), budgetBytes)
-      val bc = spark.sparkContext.broadcast(img)
-      val arm = serveVecsDistributed(spark, bc, qv, ef, k)
-        .select("query_id", "vec_id", "score")
-        .localCheckpoint(true)
-      bc.unpersist()
-      arm
-    }
-    shardedGather(spark, k, arms.reduce(_.unionByName(_)))
-  }
-
   /** Session registry of SERIALIZED segment images on disk
-    * (`dir#budget` → blob path): the artifact the ONE-PASS partitioned
-    * serve ships to executors by PATH instead of broadcast. Written by
-    * the driver ONE image at a time (materialize → serialize → drop —
-    * the dirs-only retention discipline; nothing enters the session
-    * image cache), so peak driver memory stays one budget-sized image
-    * regardless of S. */
+    * (`dir#budget` → blob path): the artifact every sharded serve
+    * ships to executors by PATH instead of broadcast. Written by the
+    * driver ONE image at a time (materialize → serialize → drop;
+    * nothing enters the session image cache), so peak driver memory
+    * stays one budget-sized image regardless of S. */
   private val imageBlobs =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
@@ -1288,22 +1301,19 @@ object Hnsw {
       p.toString
     })
 
-  /** Whether `dir`'s image blob is already staged — serve paths use
-    * this to SKIP their parallel pre-build step on warm calls:
-    * [[indexFor]] memoizes only the index PATH, so invoking it per
-    * serve still pays openIndex's two small jobs per segment, which
-    * at S segments × every warm serve is pure scheduling tax. */
+  /** Whether `dir`'s image blob is already staged — [[stageBlobs]]
+    * skips the parallel pre-build step on warm calls. */
   private[graft] def hasImageBlob(dir: String,
       budgetBytes: Long = DefaultNodeBudget): Boolean =
     imageBlobs.containsKey(s"$dir#$budgetBytes")
 
-  /** EXECUTOR-side image cache for the one-pass serve: each task
-    * deserializes ITS segment's blob once per JVM (per-partition init
-    * — the mapPartitions-with-heavy-setup pattern, not a broadcast of
-    * all S images to every node). Residency per executor = the
-    * DISTINCT segments that executor serves — with segment-pinned
-    * groups and ≥S executors that is one image; a shared local-mode
-    * JVM holds up to S (probes census and [[clear]] it). */
+  /** EXECUTOR-side image cache: each task deserializes ITS segment's
+    * blob once per JVM (per-partition init — the
+    * mapPartitions-with-heavy-setup pattern, not a broadcast of all S
+    * images to every node). Residency per executor = the DISTINCT
+    * segments that executor serves — with segment-pinned groups and
+    * ≥S executors that is one image; a shared local-mode JVM holds up
+    * to S (probes census and [[clear]] it). */
   private[graft] object ImageBlobCache {
     private val cache =
       new java.util.concurrent.ConcurrentHashMap[String, IndexImage]()
@@ -1333,120 +1343,42 @@ object Hnsw {
     def clear(): Unit = cache.clear()
   }
 
-  /** ONE-PASS partitioned serving for an unbounded query table —
-    * [[serveShardedQueryTable]]'s cluster-shaped twin (round 11): the
-    * sequential mode serves the S arms one broadcast at a time, which
-    * is correct for a ONE-executor memory budget but leaves (S−1)/S of
-    * a ≥S-executor cluster idle per arm. Here the roles pin instead of
-    * rotate: queries fan out ×S with a `(segment, query-hash mod P)`
-    * key ([[qPartsFor]] — the query dimension parallelizes across P
-    * tasks per segment, never serializing the unbounded axis behind
-    * one task), and each task loads ITS segment's image from the
-    * prebuilt blob inside the group handler (per-partition init via
-    * [[ImageBlobCache]], which de-duplicates the image per executor —
-    * never a broadcast of all S), so all S segments serve CONCURRENTLY
-    * with per-executor residency still budget-bounded. Same per-candidate
-    * math as the sequential arms ([[serveVec]], same ef/k, same qn
-    * derivation) into the same k-bounded gather — HnswShardSpec pins
-    * the two modes bit-equal; the scale probe measures the wall ratio.
-    * Shuffle cost: |Q|·S embedding rows — the same bytes the S
-    * broadcast-scan passes stream, paid once as a shuffle instead of S
-    * scans. */
-  def serveShardedQueryTableOnePass(spark: SparkSession, dir: String,
+  /** The remaining quadrant of the serving matrix: an UNBOUNDED query
+    * table against a PARTITIONED index. [[serveShardedDistributed]]
+    * broadcasts the bounded query batch; here the QUERY table is the
+    * 100 TB axis, so the queries fan out ×S through the core's
+    * query-table stage ([[tableCands]]) and all S segments serve
+    * concurrently from their blobs. Shuffle cost: |Q|·S embedding
+    * rows, paid once. Same per-candidate math and the same k-bounded
+    * gather as the bounded-batch serve — HnswShardSpec pins the two
+    * regimes bit-equal (ScaleProbe measured this fan-out 1.2–2.0×
+    * faster than serving the S images one broadcast at a time, with
+    * equal answers; SCALE.md round 11). */
+  def serveShardedQueryTable(spark: SparkSession, dir: String,
       queries: DataFrame, shards: Int, ef: Int = 16, k: Int = 10,
       budgetBytes: Long = DefaultNodeBudget, qParts: Int = 0): DataFrame =
-    shardedGather(spark, k,
-      onePassCands(spark, dir, queries, shards, ef, k, budgetBytes,
-        qParts))
+    shardedGather(spark, k, tableCands(spark,
+      stageBlobs(spark, shardDirsFor(spark, dir, shards), budgetBytes),
+      lookupQueryVecs(spark, dir, queries), ef, k, qParts))
 
-  /** Sub-partition count for the QUERY dimension of an unbounded
-    * query-table serve: grouping on segment alone pins each segment's
-    * ENTIRE query stream into one task (per-task work O(|Q|·ef·logN),
-    * parallelism capped at S — and a straggler wall when routing
-    * concentrates a batch into a hot cell), so the group key is
-    * `(segment, hash(query_id) mod P)` instead. [[ImageBlobCache]]
-    * already de-duplicates the per-executor image load, so P tasks of
-    * one segment on one executor share a single image — the memory
-    * story is unchanged. 0 = derive from the cluster:
-    * `defaultParallelism / S`, floored at 1. */
-  private def qPartsFor(spark: SparkSession, shards: Int,
-      qParts: Int): Int =
-    if (qParts > 0) qParts
-    else math.max(1, spark.sparkContext.defaultParallelism /
-      math.max(shards, 1))
-
-  /** The query-dimension sub-key: a mixed hash of the query id, NOT
-    * `qid mod P` — sequential id ranges would land whole strides in
-    * one sub-task. Deterministic (pure function of the id), so the
-    * grouping never changes any answer — only task granularity. */
-  private def qSub(qid: Long, p: Int): Int =
-    (((qid * 0x9E3779B97F4A7C15L) >>> 33) % p).toInt
-
-  /** The one-pass fan-out's candidate stage, shared by the plain and
-    * FILTERED one-pass serves: queries ×S with a segment key, each
-    * segment's query stream lands in one task, per-partition image
-    * init from the blob. `perSegK` is the per-segment report depth —
-    * k for the plain serve, the selectivity-derived pool for the
-    * filtered one. */
-  private def onePassCands(spark: SparkSession, dir: String,
-      queries: DataFrame, shards: Int, ef: Int, perSegK: Int,
-      budgetBytes: Long, qParts: Int = 0): DataFrame = {
-    import spark.implicits._
-    val dirs = shardDirsFor(spark, dir, shards)
-    locally { // first-call concurrency only: staged blobs skip it
-      import scala.collection.parallel.CollectionConverters._
-      val toBuild = dirs.filterNot(hasImageBlob(_, budgetBytes))
-      if (toBuild.nonEmpty) toBuild.par.foreach(d => indexFor(spark, d))
-    }
-    val blobs = dirs.map(d => imageBlobFor(spark, d, budgetBytes))
-    val p = qPartsFor(spark, shards, qParts)
-    val qv = Search.embNormed(spark, dir)
-      .join(queries.select(col("query_id").cast("long").as("vec_id")),
-        "vec_id")
-      .select(col("vec_id").as("query_id"),
-        col("embedding").cast("array<float>").as("qv"),
-        col("vec_id").as("self_id"))
-      .as[(Long, Array[Float], Long)]
-    qv
-      .flatMap { case (qid, emb, self) =>
-        (0 until shards).iterator.map(s => (s, qid, emb, self))
-      }
-      // (segment, query-hash sub-key): the query dimension splits
-      // across P tasks per segment instead of serializing behind one
-      .groupByKey(t => (t._1, qSub(t._2, p)))
-      .flatMapGroups { (key, it) =>
-        val img = ImageBlobCache.get(blobs(key._1))
-        it.flatMap { case (_, qid, emb, self) =>
-          var s = 0.0
-          var i = 0
-          while (i < emb.length) {
-            s += emb(i).toDouble * emb(i).toDouble; i += 1
-          }
-          serveVec(img, emb, math.sqrt(s), selfId = self, ef = ef,
-            k = perSegK)
-            .map { case (id, sc) => (qid, id, sc) }
-        }
-      }
-      .toDF("query_id", "vec_id", "score")
-  }
-
-  /** FILTERED serving × unbounded query table × one-pass fan-out —
-    * the concurrency story composed onto the predicate cell of the
-    * serving matrix: [[serveShardedFiltered]]'s strategy (unfiltered
-    * navigation, selectivity-derived per-segment pool, predicate at
-    * reporting) with [[serveShardedQueryTableOnePass]]'s execution
-    * shape (segment-pinned groups, per-partition blob init, all S
-    * segments serving concurrently). Same answers as running
-    * [[serveShardedFiltered]] over the same queries — HnswShardSpec
-    * pins the equality — at the one-pass wall instead of S passes. */
-  def serveShardedQueryTableOnePassFiltered(spark: SparkSession,
-      dir: String, queries: DataFrame, shards: Int, labelCol: String,
-      labelVal: Long, ef: Int = 64, k: Int = 10,
-      budgetBytes: Long = DefaultNodeBudget, qParts: Int = 0): DataFrame = {
+  /** The filtered serves' shared post-filter step — the family's
+    * post-filter-with-widened-pool rule: each segment's beam NAVIGATES
+    * its unfiltered graph (filtering during traversal disconnects it)
+    * and reports a selectivity-derived POOL (k/sel × 2, never a pinned
+    * constant — each segment holds ~1/S of the label's members, so the
+    * full-depth per-segment pool is conservative by construction);
+    * `cands(pool)` is either candidate stage at that report depth, and
+    * the predicate applies to the pooled EXACT rescored candidates
+    * before the k-bounded gather. Zero selectivity (empty corpus, or a
+    * label no row carries) serves empty instead of deriving an absurd
+    * pool or NPE-ing on the null aggregate. */
+  private def filteredServe(spark: SparkSession, dir: String,
+      labelCol: String, labelVal: Long, ef: Int, k: Int)(
+      cands: Int => DataFrame): DataFrame = {
     val e = Search.embNormed(spark, dir)
     val selRow = e.agg(
-      sum(when(col(labelCol) === labelVal, 1L).otherwise(0L))
-        .cast("double") / count(lit(1))).head
+      sum(when(col(labelCol) === labelVal, 1L).otherwise(0L)).cast("double")
+        / count(lit(1))).head
     val sel = if (selRow.isNullAt(0)) 0.0 else selRow.getDouble(0)
     if (sel == 0.0) {
       import spark.implicits._
@@ -1455,56 +1387,37 @@ object Hnsw {
           .toDF("query_id", "vec_id", "score"))
     }
     val pool = math.max(ef, math.ceil(k / sel * 2).toInt)
-    val cands = onePassCands(spark, dir, queries, shards, ef, pool,
-      budgetBytes, qParts)
-    val matched = cands.join(
-      e.filter(col(labelCol) === labelVal).select("vec_id"), "vec_id")
-    shardedGather(spark, k, matched)
+    shardedGather(spark, k, cands(pool).join(
+      e.filter(col(labelCol) === labelVal).select("vec_id"), "vec_id"))
   }
 
   /** Metadata-FILTERED serving on the PARTITIONED regime — the last
     * cell of the serving matrix ([[qHnswFiltered]] × sharded): every
     * 100 TB retrieval job carries a predicate (the reference's search
     * always takes an optional filter, `adapters/types.ts:66-72`), and
-    * a corpus too big for one node still has to honor it. Strategy is
-    * the family's post-filter-with-widened-pool rule, composed with
-    * the scatter-gather: each segment's beam NAVIGATES its unfiltered
-    * graph (filtering during traversal disconnects it) and reports a
-    * selectivity-derived POOL (k/sel × 2, never a pinned constant —
-    * each segment holds ~1/S of the label's members, so the full-depth
-    * per-segment pool is conservative by construction); the predicate
-    * then applies to the pooled EXACT rescored candidates at
-    * reporting, and the label slice merges in the same k-bounded
-    * gather every sharded serve uses. HnswShardSpec pins fill (k live
-    * matches per query), predicate purity, and the recall floor vs
-    * the exact filtered top-k. */
+    * a corpus too big for one node still has to honor it.
+    * [[filteredServe]] over the bounded-batch stage. HnswShardSpec pins
+    * fill (k live matches per query), predicate purity, and the recall
+    * floor vs the exact filtered top-k. */
   def serveShardedFiltered(spark: SparkSession, dir: String,
       queries: DataFrame, shards: Int, labelCol: String, labelVal: Long,
       ef: Int = 64, k: Int = 10,
-      budgetBytes: Long = DefaultNodeBudget): DataFrame = {
-    val e = Search.embNormed(spark, dir)
-    val selRow = e.agg(
-      sum(when(col(labelCol) === labelVal, 1L).otherwise(0L)).cast("double")
-        / count(lit(1))).head
-    val sel = if (selRow.isNullAt(0)) 0.0 else selRow.getDouble(0)
-    // zero selectivity (empty corpus, or a label no row carries): no
-    // row can satisfy the predicate — serve empty like the other
-    // empty-input paths in this file, instead of deriving an absurd
-    // pool from the 1e-6 floor (or NPE-ing on the null aggregate)
-    if (sel == 0.0) {
-      import spark.implicits._
-      return shardedGather(spark, k,
-        Seq.empty[(Long, Long, Double)]
-          .toDF("query_id", "vec_id", "score"))
-    }
-    val pool = math.max(ef, math.ceil(k / sel * 2).toInt)
-    val cands = shardedCands(spark, dir, dir, queries, shards,
-      ef = ef, k = pool, exclude = Set.empty,
-      budgetBytes = budgetBytes)
-    val matched = cands.join(
-      e.filter(col(labelCol) === labelVal).select("vec_id"), "vec_id")
-    shardedGather(spark, k, matched)
-  }
+      budgetBytes: Long = DefaultNodeBudget): DataFrame =
+    filteredServe(spark, dir, labelCol, labelVal, ef, k)(pool =>
+      shardedCands(spark, dir, dir, queries, shards, ef, pool, Set.empty,
+        budgetBytes))
+
+  /** FILTERED serving × unbounded query table: [[filteredServe]] over
+    * the query-table stage. Same answers as [[serveShardedFiltered]]
+    * over the same queries — HnswShardSpec pins the equality. */
+  def serveShardedQueryTableFiltered(spark: SparkSession,
+      dir: String, queries: DataFrame, shards: Int, labelCol: String,
+      labelVal: Long, ef: Int = 64, k: Int = 10,
+      budgetBytes: Long = DefaultNodeBudget, qParts: Int = 0): DataFrame =
+    filteredServe(spark, dir, labelCol, labelVal, ef, k)(pool =>
+      tableCands(spark,
+        stageBlobs(spark, shardDirsFor(spark, dir, shards), budgetBytes),
+        lookupQueryVecs(spark, dir, queries), ef, pool, qParts))
 
   /** Filtered+sharded serving as a registry row: the planted
     * 4-segment layout, 8 queries, label ≡ 3 predicate, top-5 — the
@@ -1642,14 +1555,15 @@ object Hnsw {
       (dirs, centArr)
     })
 
-  /** Top-R cells for a query vector: the same left-to-right double
-    * dot, prenormed cosine, and HALF_UP 6-decimal rounding
-    * [[Ann.cellAssign]] scores with, under the same
+  /** Cell scores for a query vector, best first: the same
+    * left-to-right double dot, prenormed cosine, and HALF_UP 6-decimal
+    * rounding [[Ann.cellAssign]] scores with, under the same
     * (csim desc, cell asc) order — so routing AGREES with assignment
     * by construction: a corpus vector's own cell is always its top-1
-    * route, which is what makes R=1 routing well-defined. Driver-side
-    * S·d work per query over the collected centroid table. */
-  private def cellScores(
+    * route, which is what makes R=1 routing well-defined. Driver- or
+    * executor-side S·d work per query over the collected centroid
+    * table. */
+  private[graft] def cellScores(
       cents: Array[(Long, Array[Double], Double)], qv: Array[Float],
       qn: Double): Seq[(Long, Double)] =
     cents.map { case (cell, cv, cn) =>
@@ -1666,22 +1580,15 @@ object Hnsw {
       (cell, csim)
     }.sortBy { case (c, cs) => (-cs, c) }.toSeq
 
-  private[graft] def routeCells(
-      cents: Array[(Long, Array[Double], Double)], qv: Array[Float],
-      qn: Double, routes: Int): Seq[Long] =
-    cellScores(cents, qv, qn).take(routes).map(_._1)
-
-  /** ADAPTIVE routing — the answer to the fixed-R tradeoff the scale
-    * probe measures: on clustered corpora the top-1 cell dominates and
-    * R=1 is free, on unstructured corpora the centroid scores bunch
-    * together and a fixed small R silently sheds recall. Keep every
+  /** ADAPTIVE routing — the one routing rule of the family: keep every
     * cell whose similarity is within `margin` of the best (at least
-    * the top-1, at most `maxRoutes`) — a confident query serves one
-    * cell, an ambiguous one widens itself, and the WORST case is the
-    * fixed-R serve at R = maxRoutes. Same scoring and tie order as
-    * [[routeCells]]; margin ≥ 2 (the cosine range) degenerates to
-    * fixed maxRoutes, margin = 0 to confident-only top-1 (plus exact
-    * ties). HnswRouteSpec pins the envelope and both degenerations. */
+    * the top-1, at most `maxRoutes`). On clustered corpora the top-1
+    * cell dominates and a confident query serves one cell; on
+    * unstructured corpora the centroid scores bunch together and an
+    * ambiguous query widens itself. Margin ≥ 2 (the cosine range)
+    * degenerates to fixed-R routing at R = maxRoutes, margin = 0 to
+    * confident-only top-1 (plus exact ties). HnswRouteSpec pins the
+    * envelope and both degenerations. */
   private[graft] def routeCellsAdaptive(
       cents: Array[(Long, Array[Double], Double)], qv: Array[Float],
       qn: Double, maxRoutes: Int, margin: Double): Seq[Long] = {
@@ -1691,160 +1598,68 @@ object Hnsw {
     ranked.takeWhile(_._2 >= best - margin).take(maxRoutes).map(_._1)
   }
 
-  /** [[serveShardedRouted]] with ADAPTIVE per-query routing: each
-    * query serves every cell within `margin` of its best centroid,
-    * capped at `maxRoutes` — the per-query scatter becomes
-    * confidence-derived instead of pinned. */
-  def serveShardedRoutedAdaptive(spark: SparkSession, dir: String,
-      queries: DataFrame, shards: Int, maxRoutes: Int,
-      margin: Double, ef: Int = 16, k: Int = 10, iters: Int = 4,
-      exclude: Set[Long] = Set.empty,
-      budgetBytes: Long = DefaultNodeBudget): DataFrame =
-    routedBatchServe(spark, dir, queries, shards,
-      (cents, qv, qn) =>
-        routeCellsAdaptive(cents, qv, qn, maxRoutes, margin),
-      ef, k, iters, exclude, budgetBytes)
-
   /** ROUTED scatter-gather over the clustered layout — the bounded
-    * query batch fans out to its top-R cells ONLY, never all S:
-    * [[serveShardedDistributed]]'s execution shape (one task per
-    * served image, broadcast query batch, the exact k-bounded gather)
-    * with the scatter trimmed to the union of the batch's routes, so
-    * a bounded batch touches ≤ |Q|·R segment images no matter how
-    * large S grows — the serve an S-in-the-thousands deployment
-    * actually runs. `routes = S` degenerates to full fan-out over the
-    * clustered layout (HnswRouteSpec pins the bit-equality); small R
-    * trades the recall the probe measures for an S/R scatter saving.
-    * Tombstones follow the family rule: navigable in every routed
-    * beam, filtered from the report. */
+    * query batch fans out to its routed cells ONLY, never all S:
+    * [[serveShardedDistributed]]'s execution shape (the core's
+    * bounded-batch stage, broadcast query batch, the exact k-bounded
+    * gather) with the scatter trimmed to the union of the batch's
+    * routes, so a bounded batch touches ≤ |Q|·maxRoutes segment images
+    * no matter how large S grows — the serve an S-in-the-thousands
+    * deployment actually runs. Routing is [[routeCellsAdaptive]]: the
+    * default margin 2.0 is fixed-R routing at R = `maxRoutes`, a
+    * smaller margin lets confident queries serve fewer cells. Images
+    * stage ONLY for cells some query routed to (the batch's working
+    * set), and a routed cell serves ALL its budget-split sub-segments.
+    * `maxRoutes = S` degenerates to full fan-out over the clustered
+    * layout (HnswRouteSpec pins the bit-equality). Tombstones follow
+    * the family rule: navigable in every routed beam, filtered from
+    * the report. */
   def serveShardedRouted(spark: SparkSession, dir: String,
-      queries: DataFrame, shards: Int, routes: Int, ef: Int = 16,
-      k: Int = 10, iters: Int = 4, exclude: Set[Long] = Set.empty,
-      budgetBytes: Long = DefaultNodeBudget): DataFrame =
-    routedBatchServe(spark, dir, queries, shards,
-      (cents, qv, qn) => routeCells(cents, qv, qn, routes),
-      ef, k, iters, exclude, budgetBytes)
-
-  /** The shared bounded-batch routed scatter-gather: `route` maps a
-    * query vector to the cells it serves (fixed-R or adaptive) over
-    * the centroid table; images materialize ONLY for cells some query
-    * routed to — the batch's working set, never the full layout — and
-    * a routed cell serves ALL its budget-split sub-segments. */
-  private def routedBatchServe(spark: SparkSession, dir: String,
-      queries: DataFrame, shards: Int,
-      route: (Array[(Long, Array[Double], Double)], Array[Float],
-        Double) => Seq[Long],
-      ef: Int, k: Int, iters: Int, exclude: Set[Long],
-      budgetBytes: Long): DataFrame = {
-    import spark.implicits._
+      queries: DataFrame, shards: Int, maxRoutes: Int,
+      margin: Double = 2.0, ef: Int = 16, k: Int = 10, iters: Int = 4,
+      exclude: Set[Long] = Set.empty,
+      budgetBytes: Long = DefaultNodeBudget): DataFrame = {
     val (dirs, cents) =
       clusterLayoutFor(spark, dir, shards, iters, budgetBytes)
-    val qrows = Search.embNormed(spark, dir)
-      .join(queries.select(col("query_id").cast("long").as("vec_id")),
-        "vec_id")
-      .select(col("vec_id"), col("embedding"), col("nrm"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray,
-        r.getDouble(2)))
-    val routedQ: Map[Long, Array[(Long, Array[Float], Double)]] =
-      qrows.flatMap { case (qid, qv, qn) =>
-        route(cents, qv, qn).map(c => (c, (qid, qv, qn)))
-      }.groupBy(_._1).map { case (c, qs) => c -> qs.map(_._2) }
-    val served = routedQ.keys.toSeq.sorted
+    val qrows = collectQueryVecs(lookupQueryVecs(spark, dir, queries))
+    val routed: Map[Long, Set[Long]] = qrows.toSeq
+      .flatMap { case (qid, qv, qn) =>
+        routeCellsAdaptive(cents, qv, qn, maxRoutes, margin).map(_ -> qid)
+      }.groupBy(_._1).map { case (c, xs) => c -> xs.map(_._2).toSet }
+    val served = routed.keys.toSeq.sorted
       .flatMap(c => dirs(c).map(d => (c, d)))
-    // blob-routed like every batch scatter (r12 verdict item 2):
-    // indexes build concurrently, images stage one at a time, tasks
-    // deserialize their own cell's blob
-    locally { // first-call concurrency only: staged blobs skip it
-      import scala.collection.parallel.CollectionConverters._
-      val toBuild = served.map(_._2)
-        .filterNot(hasImageBlob(_, budgetBytes))
-      if (toBuild.nonEmpty) toBuild.par.foreach(d => indexFor(spark, d))
-    }
-    val blobs = served.map { case (_, d) =>
-      imageBlobFor(spark, d, budgetBytes) }
-    val qbc = spark.sparkContext.broadcast(routedQ)
-    val cands = spark.sparkContext
-      .parallelize(served.map(_._1).zip(blobs),
-        math.max(served.size, 1))
-      .flatMap { case (cell, blob) =>
-        val img = ImageBlobCache.get(blob)
-        qbc.value.getOrElse(cell, Array.empty[(Long, Array[Float], Double)])
-          .iterator.flatMap { case (qid, qv, qn) =>
-            serveVec(img, qv, qn, selfId = qid, ef = ef, k = k,
-              exclude = exclude).map { case (id, sc) => (qid, id, sc) }
-          }
-      }.toDF("query_id", "vec_id", "score")
-    shardedGather(spark, k, cands)
+    val blobs = stageBlobs(spark, served.map(_._2), budgetBytes)
+    shardedGather(spark, k, batchCands(spark,
+      served.zip(blobs).map { case ((c, _), b) =>
+        SegTask(b, Some(routed(c)), exclude) },
+      qrows, ef, k))
   }
 
   /** ROUTED serving × UNBOUNDED query table — the routing win carried
-    * onto the one-pass axis: [[serveShardedQueryTableOnePass]] fans
-    * every query out ×S because its residue layout gives it no better
-    * choice; over the CLUSTERED layout each query row routes itself
-    * to its top-R cells ON THE EXECUTORS (the S·d centroid table is
-    * the broadcast — segment-count-sized, never an image) and only
-    * then shuffles, so the fan-out is |Q|·R rows instead of |Q|·S and
-    * each segment task serves only the queries that routed to it.
-    * Same per-candidate math as every serve in the family
-    * ([[serveVec]], per-partition [[ImageBlobCache]] init, k-bounded
-    * gather); `routes = S` is full fan-out — HnswRouteSpec pins it
-    * bit-equal to the bounded-batch routed serve at every (R, S)
-    * grid point it checks. Per-executor residency is unchanged (the
-    * DISTINCT segments that executor serves); the scatter saving is
-    * multiplicative with the one-pass concurrency. */
+    * onto the query-table stage: over the CLUSTERED layout each query
+    * row routes itself ON THE EXECUTORS (the S·d centroid table is the
+    * broadcast) and only then shuffles, so the fan-out is |Q|·R rows
+    * instead of |Q|·S. Fixed-R routing (margin 2.0 of
+    * [[routeCellsAdaptive]]); `maxRoutes = S` is full fan-out —
+    * HnswRouteSpec pins it bit-equal to the bounded-batch routed serve
+    * at every R it checks. */
   def serveShardedRoutedQueryTable(spark: SparkSession, dir: String,
-      queries: DataFrame, shards: Int, routes: Int, ef: Int = 16,
+      queries: DataFrame, shards: Int, maxRoutes: Int, ef: Int = 16,
       k: Int = 10, iters: Int = 4,
       budgetBytes: Long = DefaultNodeBudget, qParts: Int = 0): DataFrame = {
-    import spark.implicits._
     val (dirs, cents) =
       clusterLayoutFor(spark, dir, shards, iters, budgetBytes)
     // flattened sub-segment list: a routed cell fans out to ALL its
-    // budget-split sub-segments; the blob index is the shuffle key
+    // budget-split sub-segments
     val flat: Seq[(Long, String)] =
       dirs.toSeq.sortBy(_._1).flatMap { case (c, ds) => ds.map(c -> _) }
-    locally { // first-call concurrency only: staged blobs skip it
-      import scala.collection.parallel.CollectionConverters._
-      val toBuild = flat.map(_._2)
-        .filterNot(hasImageBlob(_, budgetBytes))
-      if (toBuild.nonEmpty) toBuild.par.foreach(d => indexFor(spark, d))
-    }
-    val blobs = flat.map { case (_, d) =>
-      imageBlobFor(spark, d, budgetBytes) }
-    val cellToIdx: Map[Long, Seq[Int]] = flat.zipWithIndex
+    val segsOf: Map[Long, Seq[Int]] = flat.zipWithIndex
       .groupBy(_._1._1)
       .map { case (c, xs) => c -> xs.map(_._2) }
-    val centsBc = spark.sparkContext.broadcast(cents)
-    val idxBc = spark.sparkContext.broadcast(cellToIdx)
-    val qv = Search.embNormed(spark, dir)
-      .join(queries.select(col("query_id").cast("long").as("vec_id")),
-        "vec_id")
-      .select(col("vec_id").as("query_id"),
-        col("embedding").cast("array<float>").as("qv"),
-        col("nrm").as("qn"), col("vec_id").as("self_id"))
-      .as[(Long, Array[Float], Double, Long)]
-    // routing CONCENTRATES queries (a popular cell receives most of
-    // the batch), so the query-dimension sub-key matters MORE here
-    // than in the full fan-out: without it the hot cell's one task is
-    // the straggler wall
-    val p = qPartsFor(spark, shards, qParts)
-    val cands = qv
-      .flatMap { case (qid, emb, qn, self) =>
-        routeCells(centsBc.value, emb, qn, routes).iterator
-          .flatMap(c => idxBc.value.getOrElse(c, Nil))
-          .map(i => (i, qid, emb, qn, self))
-      }
-      .groupByKey(t => (t._1, qSub(t._2, p)))
-      .flatMapGroups { (key, it) =>
-        val img = ImageBlobCache.get(blobs(key._1))
-        it.flatMap { case (_, qid, emb, qn, self) =>
-          serveVec(img, emb, qn, selfId = self, ef = ef, k = k)
-            .map { case (id, sc) => (qid, id, sc) }
-        }
-      }
-      .toDF("query_id", "vec_id", "score")
-    shardedGather(spark, k, cands)
+    shardedGather(spark, k, tableCands(spark,
+      stageBlobs(spark, flat.map(_._2), budgetBytes),
+      lookupQueryVecs(spark, dir, queries), ef, k, qParts,
+      Some(TableRoute(cents, maxRoutes, 2.0, segsOf))))
   }
 
   /** Routed serving as a registry row: the planted 4-cell clustered
@@ -1856,7 +1671,7 @@ object Hnsw {
     * R=1 recall. */
   def qHnswRouted(spark: SparkSession, dir: String): DataFrame =
     serveShardedRouted(spark, dir, spark.range(8).toDF("query_id"),
-      shards = 4, routes = 2, ef = 16, k = 5)
+      shards = 4, maxRoutes = 2, ef = 16, k = 5)
       .orderBy("query_id", "rank")
 
   /** ADAPTIVE routing as a registry row — the production answer to
@@ -1868,9 +1683,8 @@ object Hnsw {
     * commits to SCALE.md. Golden oracle like every trained-graph
     * serve; HnswRouteSpec pins the envelope and both degenerations. */
   def qHnswRoutedAdaptive(spark: SparkSession, dir: String): DataFrame =
-    serveShardedRoutedAdaptive(spark, dir,
-      spark.range(8).toDF("query_id"), shards = 4, maxRoutes = 3,
-      margin = 0.05, ef = 16, k = 5)
+    serveShardedRouted(spark, dir, spark.range(8).toDF("query_id"),
+      shards = 4, maxRoutes = 3, margin = 0.05, ef = 16, k = 5)
       .orderBy("query_id", "rank")
 
   /** Sharded serving as a registry row: 8 queries over a PLANTED

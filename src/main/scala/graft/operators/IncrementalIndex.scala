@@ -29,8 +29,8 @@ import org.apache.spark.sql.functions._
   * Serving is the family scatter-gather: one [[Hnsw.IndexImage]] per
   * segment, per-segment beam with its shadow exclude, candidates into
   * the exact k-bounded merge ([[Hnsw.shardedGather]]). The un-sealed
-  * live delta composes as the usual exact brute arm
-  * ([[serveWithDelta]]).
+  * live delta composes as the usual exact brute arm ([[serve]]'s
+  * `delta`).
   *
   * Scale bounds, stated: the per-segment exclude sets are
   * CORRECTION-bounded (delta ∩ older ids at each seal — zero on an
@@ -184,7 +184,7 @@ object IncrementalIndex {
     *     skip-index pattern applied to the LSM);
     *   - `_centroid` — the member mean vector (cv, cn, n): the
     *     segment's geometric identity for ROUTED serving
-    *     ([[serveRouted]] — the [[Hnsw.routeCellsAdaptive]] machinery
+    *     ([[serve]]'s routing — the [[Hnsw.routeCellsAdaptive]] machinery
     *     over the LSM segment list).
     * Both are (re)derived from the segment's OWN rows — delta-sized at
     * seal, pair-sized at compaction, never a corpus touch. */
@@ -198,14 +198,20 @@ object IncrementalIndex {
     IdFilters.bloomWordsDf(ids, "vec_id", nbits, hashes)
       .coalesce(1).write.mode("overwrite").parquet(s"$segDir/_idbloom")
     val cv: Array[Double] =
-      if (n == 0) Array.empty
-      else spark.read.parquet(s"$segDir/embeddings.parquet")
-        .select(posexplode(col("embedding").cast("array<double>")))
-        .groupBy("pos").agg(avg("col").as("v"))
-        .orderBy("pos").select("v").as[Double].collect()
+      if (n == 0) Array.empty else meanVector(spark, segDir)
     val cn = math.sqrt(cv.map(x => x * x).sum)
     Seq((cv.toSeq, cn, n)).toDF("cv", "cn", "n")
       .coalesce(1).write.mode("overwrite").parquet(s"$segDir/_centroid")
+  }
+
+  /** A segment's member mean vector, from its own rows. */
+  private def meanVector(spark: SparkSession,
+      segDir: String): Array[Double] = {
+    import spark.implicits._
+    spark.read.parquet(s"$segDir/embeddings.parquet")
+      .select(posexplode(col("embedding").cast("array<double>")))
+      .groupBy("pos").agg(avg("col").as("v"))
+      .orderBy("pos").select("v").as[Double].collect()
   }
 
   /** Session cache of per-segment id Blooms, keyed by segment path +
@@ -553,7 +559,6 @@ object IncrementalIndex {
     * batch's ids never enter the scan's path list). */
   private[graft] def queryVecs(spark: SparkSession, ss: Seq[Seg],
       queries: DataFrame): Array[(Long, Array[Float], Double)] = {
-    import graft.functions.VectorFunctions._
     import spark.implicits._
     if (ss.isEmpty) return Array.empty
     val qidArr = queries.select(col("query_id").cast("long"))
@@ -561,9 +566,16 @@ object IncrementalIndex {
     val kept = pruneSegsByIdBloom(spark, ss, qidArr)
     if (kept.isEmpty) return Array.empty
     val qids = qidArr.toSeq.toDF("vec_id")
-    val all = segEmbeddings(spark, kept)
+    latestWins(segEmbeddings(spark, kept)
       .join(broadcast(qids), "vec_id")
-      .select(col("vec_id"), col("embedding"), col("__ord").as("ord"))
+      .select(col("vec_id"), col("embedding"), col("__ord").as("ord")))
+  }
+
+  /** Latest-wins over `(vec_id, embedding, ord)` rows: the newest
+    * segment's row per id, normed and collected. */
+  private def latestWins(
+      all: DataFrame): Array[(Long, Array[Float], Double)] = {
+    import graft.functions.VectorFunctions._
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("vec_id").orderBy(col("ord").desc)
     all.withColumn("__rn", row_number().over(w))
@@ -580,24 +592,13 @@ object IncrementalIndex {
     * timing); no serve path calls it. */
   private[graft] def queryVecsUnion(spark: SparkSession, ss: Seq[Seg],
       queries: DataFrame): Array[(Long, Array[Float], Double)] = {
-    import graft.functions.VectorFunctions._
     val qids = queries.select(col("query_id").cast("long").as("vec_id"))
     ss.map { s0 =>
       spark.read.parquet(s"${s0.dir}/embeddings.parquet")
         .join(broadcast(qids), "vec_id")
         .select(col("vec_id"), col("embedding"), lit(s0.ord).as("ord"))
     }.reduceOption(_.unionByName(_)).fold(
-      Array.empty[(Long, Array[Float], Double)]) { all =>
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("vec_id").orderBy(col("ord").desc)
-      all.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1)
-        .withColumn("nrm", l2norm(col("embedding")))
-        .select("vec_id", "embedding", "nrm")
-        .collect()
-        .map(r => (r.getLong(0), r.getSeq[Float](1).toArray,
-          r.getDouble(2)))
-    }
+      Array.empty[(Long, Array[Float], Double)])(latestWins)
   }
 
   private def queryVecsCached(spark: SparkSession, work: String,
@@ -639,17 +640,65 @@ object IncrementalIndex {
       }
     }
 
-  /** Scatter-gather over the CURRENT segments: one image per segment
-    * task (the [[Hnsw.serveShardedDistributed]] shape), per-segment
-    * beam with that segment's shadow exclude — shadowed ids stay
-    * NAVIGABLE and are never reported, and each beam backfills its
-    * top-k past them, so the k-bounded gather merges only live
-    * latest-wins candidates. */
+  /** Scatter-gather over the CURRENT segments — the one bounded-batch
+    * LSM serve: one image per segment task (the core's bounded-batch
+    * stage, [[Hnsw.batchCands]]), per-segment beam with that segment's
+    * shadow exclude — shadowed ids stay NAVIGABLE and are never
+    * reported, and each beam backfills its top-k past them, so the
+    * k-bounded gather merges only live latest-wins candidates.
+    *
+    * ROUTING: with a non-degenerate `(maxRoutes, margin)` each query
+    * serves only the segments whose `_centroid` similarity is within
+    * `margin` of its best (at least the top-1, at most `maxRoutes` —
+    * [[Hnsw.routeCellsAdaptive]] over the segment list), and images
+    * stage only for the batch's routed working set. On a CLUSTERED
+    * ingest stream (each seal a topical burst) a confident query
+    * touches R ≪ S segment images; on an unstructured stream the
+    * scores bunch within the margin and the query widens itself back
+    * toward full fan-out. The default (maxRoutes ≥ S, margin ≥ 2 — the
+    * cosine range) IS full fan-out and skips the centroid scoring.
+    * Skipping a segment can only cost RECALL, never freshness: the
+    * shadow rule excludes superseded ids from any served segment's
+    * report regardless of which segments the query reached.
+    *
+    * The UN-SEALED live `delta` composes as the core's exact delta arm
+    * ([[Hnsw.deltaCands]]): its ids shadow every sealed segment
+    * (latest-wins) and both arms merge in the one k-bounded gather. The
+    * delta-id exclusion follows the [[graft.model.IdFilters]] ladder: up
+    * to the driver cap the ids ride the task closures as an exact Set
+    * and every sealed beam backfills past them in one pass; PAST the
+    * cap no delta id ever lands on the driver — the serve routes
+    * through [[serveQueryTable]]'s join-shaped deadness table with the
+    * same routing. Both arms are spec-pinned equal across a planted
+    * cap. */
   def serve(spark: SparkSession, work: String, queries: DataFrame,
       ef: Int = 16, k: Int = 10,
-      budgetBytes: Long = Hnsw.DefaultNodeBudget): DataFrame =
+      budgetBytes: Long = Hnsw.DefaultNodeBudget,
+      maxRoutes: Int = Int.MaxValue, margin: Double = 2.0,
+      delta: Option[DataFrame] = None): DataFrame = {
+    import spark.implicits._
+    val deltaIds = delta.map(_.select(col("vec_id")))
+    if (deltaIds.exists(_.count() > graft.model.IdFilters.driverCap(spark)))
+      return serveQueryTable(spark, work, queries, ef, k, budgetBytes,
+        maxRoutes = maxRoutes, margin = margin, delta = delta)
+    val ss = segs(spark, work)
+    val key = stateKey(spark, work)
+    val routed: Option[Map[Int, Set[Long]]] =
+      if (maxRoutes >= ss.size && margin >= 2.0) None
+      else Some(routePlan(spark, work, queries, maxRoutes, margin).toSeq
+        .flatMap { case (qid, ords) => ords.map(o => (o, qid)) }
+        .groupBy(_._1).map { case (o, xs) => o -> xs.map(_._2).toSet })
+    val sealedCands = segCands(spark, work, ss, key, queries, ef, k,
+      deltaIds.fold(Set.empty[Long])(_.as[Long].collect().toSet),
+      budgetBytes, routed)
+    val deltaArm = delta.map { d =>
+      val qv = queryVecsCached(spark, work, ss, queries, key).toSeq
+        .toDF("query_id", "qv", "qn")
+      Hnsw.deltaCands(Hnsw.normedRows(d), broadcast(qv))
+    }
     Hnsw.shardedGather(spark, k,
-      segCands(spark, work, queries, ef, k, Set.empty, budgetBytes))
+      deltaArm.fold(sealedCands)(sealedCands.unionByName(_)))
+  }
 
   /** The per-segment beam candidates, `.distinct()`-ed: in normal
     * operation no two segments report the same (query, id, score) row
@@ -657,53 +706,24 @@ object IncrementalIndex {
     * publish and cleanup can leave the merged segment AND its older
     * member both live — their shared rows duplicate byte-for-byte,
     * and the distinct collapses them so even that window serves
-    * exactly. Candidate volume is |Q|·S·k — batch-bounded. */
-  private def segCands(spark: SparkSession, work: String,
-      queries: DataFrame, ef: Int, k: Int, extraExclude: Set[Long],
-      budgetBytes: Long,
-      routedFor: Option[Map[Int, Set[Long]]] = None): DataFrame = {
-    import spark.implicits._
-    val ss = segs(spark, work)
-    val key = stateKey(spark, work)
+    * exactly. Candidate volume is |Q|·S·k — batch-bounded. A ROUTED
+    * serve (`routedFor`: ord → query ids) stages blobs only for the
+    * segments some query routed to. */
+  private def segCands(spark: SparkSession, work: String, ss: Seq[Seg],
+      key: String, queries: DataFrame, ef: Int, k: Int,
+      extraExclude: Set[Long], budgetBytes: Long,
+      routedFor: Option[Map[Int, Set[Long]]]): DataFrame = {
     val st = excludeStateFor(spark, work, ss, key)
     val qrows = queryVecsCached(spark, work, ss, queries, key)
-    // a ROUTED serve stages blobs only for the batch's working set —
-    // segments some query routed to — never the full list
     val served = routedFor.fold(ss)(m =>
       ss.filter(s0 => m.getOrElse(s0.ord, Set.empty).nonEmpty))
-    // blob discipline (r12 verdict item 2 — formerly
-    // [[Hnsw.segmentImages]], which held ALL S images on the driver
-    // at once and serialized them from it): indexes build concurrently
-    // as disk artifacts, then the driver stages ONE image at a time
-    // ([[Hnsw.imageBlobFor]]) and ships segment blob PATHS; each task
-    // deserializes its own segment via [[Hnsw.ImageBlobCache]], so
-    // peak driver residency is one budget-sized image regardless of S
-    locally { // first-call concurrency only: staged blobs skip it
-      import scala.collection.parallel.CollectionConverters._
-      val toBuild = served.map(_.dir)
-        .filterNot(Hnsw.hasImageBlob(_, budgetBytes))
-      if (toBuild.nonEmpty)
-        toBuild.par.foreach(d => Hnsw.indexFor(spark, d))
-    }
-    val blobs = served.map(s0 =>
-      Hnsw.imageBlobFor(spark, s0.dir, budgetBytes))
+    val blobs = Hnsw.stageBlobs(spark, served.map(_.dir), budgetBytes)
     val cands: DataFrame = st.exact match {
       case Some(perOrd) =>
-        val qbc = spark.sparkContext.broadcast(qrows)
-        spark.sparkContext
-          .parallelize(served.map(_.ord).zip(blobs),
-            math.max(served.size, 1))
-          .flatMap { case (ord, blob) =>
-            val img = Hnsw.ImageBlobCache.get(blob)
-            val ex = perOrd.getOrElse(ord, Set.empty) ++ extraExclude
-            val want = routedFor.map(_.getOrElse(ord, Set.empty[Long]))
-            qbc.value.iterator
-              .filter(q => want.forall(_.contains(q._1)))
-              .flatMap { case (qid, qv, qn) =>
-                Hnsw.serveVec(img, qv, qn, selfId = qid, ef = ef, k = k,
-                  exclude = ex).map { case (id, sc) => (qid, id, sc) }
-              }
-          }.toDF("query_id", "vec_id", "score")
+        Hnsw.batchCands(spark, served.zip(blobs).map { case (s0, b) =>
+          Hnsw.SegTask(b, routedFor.map(_.getOrElse(s0.ord, Set.empty)),
+            perOrd.getOrElse(s0.ord, Set.empty) ++ extraExclude)
+        }, qrows, ef, k)
       case None =>
         bloomCands(spark, served, blobs, qrows, st, ef, k, extraExclude,
           routedFor)
@@ -801,60 +821,48 @@ object IncrementalIndex {
       }.toDF("query_id", "vec_id", "score")
   }
 
-  /** The LSM lifecycle × an UNBOUNDED query table — the serving-
-    * matrix cell [[Hnsw.serveShardedQueryTableOnePass]] fills for the
-    * residue layout, composed with shadows: all segments serve
-    * CONCURRENTLY from blob-cached images, the query table fans out
-    * on a `(segment, hash(query_id) mod P)` key (the query dimension
-    * parallelizes; a hot segment never serializes its stream behind
-    * one task), and NOTHING query-scale ever lands on the driver:
+  /** The LSM lifecycle × an UNBOUNDED query table — the core's
+    * query-table stage ([[Hnsw.tableCands]]) over the segment list,
+    * composed with shadows: all segments serve CONCURRENTLY from
+    * blob-cached images, the query table fans out on a
+    * `(segment, hash(query_id) mod P)` key, and NOTHING query-scale
+    * ever lands on the driver:
     *
-    *   - query vectors resolve latest-wins IN-PLAN (segment union →
-    *     keyed window), not via a driver collect;
+    *   - query vectors resolve latest-wins IN-PLAN (one multi-path
+    *     segment scan → keyed window), not via a driver collect;
     *   - shadow deadness is an equi-join against the correction-
-    *     bounded `(vec_id, max shadow ord)` table — a candidate from
-    *     segment i is dead iff a NEWER segment's shadow holds its id;
+    *     bounded `(vec_id, newest shadowing segment)` table — a
+    *     candidate from segment i is dead iff a NEWER segment's shadow
+    *     holds its id;
     *   - when the shadow total fits the driver cap the per-segment
     *     exact Sets ride the task closures and each beam backfills
     *     past them in ONE pass; past the cap the serve is STILL one
-    *     pass — each beam emits its whole report-filtered visited
-    *     pool (the beam is ef-driven; `k` only bounds the reported
-    *     prefix), the deadness join classifies every candidate, and
-    *     top-k live per (segment, query) falls out of one window.
-    *     The r13 widening ladder re-ran the identical beam per round
-    *     to read a deeper prefix of the same sorted pool; bit-equal
-    *     by construction and spec-pinned.
+    *     pass — each beam emits its whole visited pool (the beam is
+    *     ef-driven; `k` only bounds the reported prefix), the deadness
+    *     join classifies every candidate, and top-k live per
+    *     (segment, query) falls out of one window — exactly the exact
+    *     arm's report-filtered take (spec-pinned).
     *
-    * ROUTING (r12 verdict item 3) composes IN-PLAN: with a
-    * non-degenerate `(maxRoutes, margin)` each query row computes its
-    * adaptive route set ON THE EXECUTORS against the broadcast
-    * segment-centroid table (segment-count-sized — the
-    * [[Hnsw.serveShardedRoutedQueryTable]] pattern over the LSM
-    * segment list) and fans only to its routed segments — |Q|·R
-    * shuffle rows instead of |Q|·S. The default (maxRoutes ≥ S,
-    * margin ≥ 2 — the cosine range) IS full fan-out: the adaptive
-    * rule keeps every cell at that margin, and the code short-circuits
-    * the centroid scoring for it; a wide-but-finite margin is
-    * spec-pinned bit-equal to the full fan-out. Routing trims the
-    * SEALED scatter only — freshness is structurally immune (shadows
-    * exclude superseded ids from every served segment's report, and
-    * the live delta below never rides a routed image).
+    * ROUTING composes IN-PLAN with the same `(maxRoutes, margin)` rule
+    * as [[serve]]: each query row computes its adaptive route set ON
+    * THE EXECUTORS against the broadcast segment-centroid table and
+    * fans only to its routed segments — |Q|·R shuffle rows instead of
+    * |Q|·S. The default is full fan-out and skips the centroid
+    * scoring; a wide-but-finite margin is spec-pinned bit-equal to it.
+    * Routing trims the SEALED scatter only — freshness is structurally
+    * immune.
     *
-    * The LIVE DELTA (r12 verdict item 4) composes as the family's
-    * exact arm, fully in-plan: delta rows (ingest-bounded) broadcast-
-    * cross-join the resolved query vectors with the same rounded
-    * cosine every serve reports, delta ids enter the deadness table at
-    * +∞ ordinal (a delta row supersedes EVERY sealed copy — the
-    * [[serveWithDelta]] contract), and the pool pass backfills any
-    * beam whose report the delta superseded (deeper live candidates
-    * are already in the emitted pool) — so the unbounded-table serve
-    * answers FRESH without requiring a seal. With a delta present the
-    * serve always takes the join-shaped deadness path: no delta id
-    * ever lands in a driver Set or task closure.
+    * The LIVE `delta` composes as the core's exact delta arm, fully
+    * in-plan: delta rows (ingest-bounded) broadcast against the
+    * resolved query table, delta ids enter the deadness table as the
+    * newest segment of all (a delta row supersedes EVERY sealed copy),
+    * and the pool pass backfills any beam whose report the delta
+    * superseded — so the unbounded-table serve answers FRESH without a
+    * seal, and no delta id ever lands in a driver Set or task closure.
     *
-    * Bit-equal to [[serve]] on any bounded batch, and to
-    * [[serveWithDelta]] with a delta (spec-pinned); returns the same
-    * k-bounded gather shape as every serve in the family. */
+    * Bit-equal to [[serve]] on any bounded batch, with or without a
+    * delta (spec-pinned); returns the same k-bounded gather shape as
+    * every serve in the family. */
   def serveQueryTable(spark: SparkSession, work: String,
       queries: DataFrame, ef: Int = 16, k: Int = 10,
       budgetBytes: Long = Hnsw.DefaultNodeBudget,
@@ -869,19 +877,7 @@ object IncrementalIndex {
       return Hnsw.shardedGather(spark, k,
         Seq.empty[(Long, Long, Double)]
           .toDF("query_id", "vec_id", "score"))
-    locally { // first-call concurrency only: staged blobs skip it
-      import scala.collection.parallel.CollectionConverters._
-      val toBuild = ss.map(_.dir)
-        .filterNot(Hnsw.hasImageBlob(_, budgetBytes))
-      if (toBuild.nonEmpty)
-        toBuild.par.foreach(d => Hnsw.indexFor(spark, d))
-    }
-    val blobs = ss.map(s0 => Hnsw.imageBlobFor(spark, s0.dir,
-      budgetBytes))
-    val ords = ss.map(_.ord)
-    val p = math.max(1,
-      if (qParts > 0) qParts
-      else spark.sparkContext.defaultParallelism / math.max(ss.size, 1))
+    val blobs = Hnsw.stageBlobs(spark, ss.map(_.dir), budgetBytes)
     // latest-wins query vectors, in-plan: newest segment holding the
     // id supplies the row — ONE multi-path scan + ONE join
     // ([[segEmbeddings]]), not a scan/join pair per segment: the
@@ -910,163 +906,50 @@ object IncrementalIndex {
       .filter(col("__rn") === 1)
       .select(col("vec_id").as("query_id"),
         col("embedding").cast("array<float>").as("qv"))
-      .as[(Long, Array[Float])]
-    // per-query route sets, executor-side: the broadcast is the
-    // segment CENTROID table plus the ord → fan-index map — both
-    // segment-count-sized, never an image. The degenerate
-    // (maxRoutes ≥ S, margin ≥ 2) serve skips the scoring entirely:
-    // the adaptive rule keeps every cell there by definition.
-    val routeAll = maxRoutes >= ss.size && margin >= 2.0
-    val centsBc = spark.sparkContext.broadcast(
-      if (routeAll) Array.empty[(Long, Array[Double], Double)]
-      else centroidsFor(spark, work, ss, key))
-    val ordIdxBc = spark.sparkContext.broadcast(
-      ords.zipWithIndex.map { case (o, i) => (o.toLong, i) }.toMap)
-    def fanned = qv.flatMap { case (qid, emb) =>
-      var s = 0.0
-      var i = 0
-      while (i < emb.length) {
-        s += emb(i).toDouble * emb(i).toDouble; i += 1
-      }
-      val qn = math.sqrt(s)
-      val sis: Iterator[Int] =
-        if (routeAll) ords.indices.iterator
-        else Hnsw.routeCellsAdaptive(centsBc.value, emb, qn,
-          maxRoutes, margin).iterator.map(ordIdxBc.value)
-      sis.map(si => (si, qid, emb, qn))
-    }
-    val ordsArr = ords.toArray
-    val blobsArr = blobs.toArray
-    def serveRound(fan: org.apache.spark.sql.Dataset[
-        (Int, Long, Array[Float], Double)], kk: Int,
-        exact: Option[Map[Int, Set[Long]]]): DataFrame = {
-      fan.groupByKey(t =>
-          (t._1, (((t._2 * 0x9E3779B97F4A7C15L) >>> 33) % p).toInt))
-        .flatMapGroups { (gk, it) =>
-          val img = Hnsw.ImageBlobCache.get(blobsArr(gk._1))
-          val ord = ordsArr(gk._1)
-          val ex = exact.fold(Set.empty[Long])(_.getOrElse(ord,
-            Set.empty))
-          it.flatMap { case (_, qid, emb, qn) =>
-            Hnsw.serveVec(img, emb, qn, selfId = qid,
-              ef = ef, k = kk, exclude = ex)
-              .map { case (id, sc) => (gk._1, ord, qid, id, sc) }
-          }
-        }.toDF("__segidx", "__segord", "query_id", "vec_id", "score")
-    }
+      .withColumn("qn", l2norm(col("qv")))
+    val route =
+      if (maxRoutes >= ss.size && margin >= 2.0) None
+      else Some(Hnsw.TableRoute(centroidsFor(spark, work, ss, key),
+        maxRoutes, margin,
+        ss.zipWithIndex.map { case (s0, i) => s0.ord.toLong -> Seq(i) }
+          .toMap))
     val cands: DataFrame = (st.exact, delta) match {
       case (Some(perOrd), None) =>
-        // one pass: beams backfill past the bounded exact excludes
-        serveRound(fanned, k, Some(perOrd))
-          .select("query_id", "vec_id", "score")
+        Hnsw.tableCands(spark, blobs, qv, ef, k, qParts, route,
+          ss.map(s0 => perOrd.getOrElse(s0.ord, Set.empty[Long])))
       case _ =>
-        // correction-bounded deadness table: id → newest shadow ord;
-        // a candidate from segment i is dead iff that ord exceeds i.
-        // Live-delta ids enter at +∞ ordinal: a delta row supersedes
-        // every sealed copy, and the join keeps the ids off the
-        // driver entirely (a delta FORCES this path even when the
-        // shadow total fits the cap).
-        //
-        // ONE pool pass, no widening loop (r13 verdict item 3):
-        // [[Hnsw.serveVec]]'s beam is ef-driven — `k` only bounds the
-        // reported prefix of the SAME sorted visited pool — so the r13
-        // ladder re-ran the identical beam per round (plus a shuffle,
-        // a localCheckpoint and a driver count) to read a deeper
-        // prefix. Each beam now emits its whole report-filtered pool
-        // once, the deadness join classifies every candidate, and
-        // top-k LIVE per (segment, query) is exactly the ladder's
-        // terminal answer (a sorted prefix holding ≥ k live reports
-        // the same top-k live as the full pool; an exhausted prefix
-        // IS the pool) — and exactly the exact arm's report-filtered
-        // take, the bit-equality IncrementalIndexSpec pins. Shuffle
-        // volume is |Q|·S·|pool| SMALL rows (pool is ef·hop-bounded),
-        // against the ladder's repeated |Q|·S·k' rows PLUS repeated
-        // beam CPU per round.
-        val shadowTbls = ss.flatMap(s0 =>
+        // correction-bounded deadness table: id → the newest segment
+        // whose shadow holds it, as a segment INDEX (`ss` is
+        // ordinal-sorted, so index order is ordinal order); a
+        // candidate from segment i is dead iff that index exceeds i.
+        // Live-delta ids enter above every segment: a delta row
+        // supersedes every sealed copy, and the join keeps the ids
+        // off the driver entirely (a delta FORCES this path even when
+        // the shadow total fits the cap)
+        val shadowTbls = ss.zipWithIndex.flatMap { case (s0, i) =>
           shadowPathOf(spark, work, s0.ord).map(pp =>
             spark.read.parquet(pp).select(col("vec_id"),
-              lit(s0.ord.toLong).as("__sord"))))
+              lit(i.toLong).as("__sseg")))
+        }
         val deltaTbl = delta.map(_.select(col("vec_id"),
-          lit(Long.MaxValue).as("__sord")))
+          lit(Long.MaxValue).as("__sseg")))
         val maxShadow = (shadowTbls ++ deltaTbl)
           .reduceOption(_.unionByName(_))
-          .getOrElse(Seq.empty[(Long, Long)].toDF("vec_id", "__sord"))
-          .groupBy("vec_id").agg(max("__sord").as("__maxsord"))
+          .getOrElse(Seq.empty[(Long, Long)].toDF("vec_id", "__sseg"))
+          .groupBy("vec_id").agg(max("__sseg").as("__maxsseg"))
         val liveW = org.apache.spark.sql.expressions.Window
-          .partitionBy("__segidx", "query_id")
+          .partitionBy("__seg", "query_id")
           .orderBy(desc("score"), col("vec_id"))
-        serveRound(fanned, Int.MaxValue, None)
+        Hnsw.tableCands(spark, blobs, qv, ef, Int.MaxValue, qParts, route)
           .join(maxShadow, Seq("vec_id"), "left_outer")
-          .filter(!coalesce(col("__maxsord") > col("__segord"),
-            lit(false)))
+          .filter(!coalesce(col("__maxsseg") > col("__seg"), lit(false)))
           .withColumn("__rk", row_number().over(liveW))
           .filter(col("__rk") <= k)
-          .select("query_id", "vec_id", "score")
     }
-    // the live-delta exact arm: the ingest-bounded delta BROADCASTS
-    // against the in-plan resolved query table (the unbounded axis
-    // streams; the bounded one ships) — same rounded cosine, same
-    // self-exclusion as [[serveWithDelta]]'s bounded-batch arm
-    val deltaArm = delta.map { d =>
-      val qvn = qv.toDF("query_id", "qv")
-        .withColumn("qn", l2norm(col("qv")))
-      val dd = d.select(col("vec_id"),
-          col("embedding").cast("array<float>").as("embedding"))
-        .withColumn("nrm", l2norm(col("embedding")))
-      qvn.crossJoin(broadcast(dd))
-        .filter(col("vec_id") =!= col("query_id"))
-        .withColumn("score",
-          round(cosinePrenormed(dot(col("embedding"), col("qv")),
-            col("nrm"), col("qn")), 6))
-        .select("query_id", "vec_id", "score")
-    }
-    val all = deltaArm.fold(cands)(da => cands.unionByName(da))
+    val sealedCands = cands.select("query_id", "vec_id", "score")
+    val all = delta.fold(sealedCands)(d => sealedCands.unionByName(
+      Hnsw.deltaCands(broadcast(Hnsw.normedRows(d)), qv)))
     Hnsw.shardedGather(spark, k, all.distinct())
-  }
-
-  /** [[serve]] with the UN-SEALED live delta composed in: the delta
-    * is scanned exactly (ingest-bounded), its ids shadow every sealed
-    * segment (latest-wins), both arms merge in the one k-bounded
-    * gather — [[Hnsw.serveShardedIngestDelta]]'s contract over the
-    * incremental layout.
-    *
-    * The delta-id exclusion follows the [[graft.model.IdFilters]]
-    * ladder (r12 verdict item 5 — this was the family's last
-    * documented driver-Set exception): up to the driver cap the ids
-    * ride the task closures as an exact Set and every sealed beam
-    * backfills past them in one pass (the delta-bounded fast path the
-    * streaming loop serves at interactive latency); PAST the cap no
-    * delta id ever lands on the driver — the serve routes through
-    * [[serveQueryTable]]'s join-shaped deadness table, where delta
-    * ids enter at +∞ ordinal and widening rounds backfill superseded
-    * reports. Both arms are spec-pinned equal across a planted cap. */
-  def serveWithDelta(spark: SparkSession, work: String, delta: DataFrame,
-      queries: DataFrame, ef: Int = 16, k: Int = 10,
-      budgetBytes: Long = Hnsw.DefaultNodeBudget): DataFrame = {
-    import spark.implicits._
-    import graft.functions.VectorFunctions._
-    val deltaIdsDf = delta.select(col("vec_id"))
-    val nDelta = deltaIdsDf.count()
-    if (nDelta > graft.model.IdFilters.driverCap(spark))
-      return serveQueryTable(spark, work, queries, ef, k, budgetBytes,
-        delta = Some(delta))
-    val deltaIds = deltaIdsDf.as[Long].collect().toSet
-    val sealedCands = segCands(spark, work, queries, ef, k, deltaIds,
-      budgetBytes)
-    val qrows = queryVecsCached(spark, work, segs(spark, work), queries,
-      stateKey(spark, work))
-    val qv = qrows.toSeq
-      .toDF("query_id", "qv", "qn")
-    val deltaCands = delta.select(col("vec_id"),
-        col("embedding").cast("array<float>").as("embedding"))
-      .withColumn("nrm", l2norm(col("embedding")))
-      .crossJoin(broadcast(qv))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("score",
-        round(cosinePrenormed(dot(col("embedding"), col("qv")),
-          col("nrm"), col("qn")), 6))
-      .select("query_id", "vec_id", "score")
-    Hnsw.shardedGather(spark, k, sealedCands.unionByName(deltaCands))
   }
 
   /** Per-work-state segment centroids — (ord, cv, cn) from the
@@ -1079,7 +962,6 @@ object IncrementalIndex {
   private def centroidsFor(spark: SparkSession, work: String,
       ss: Seq[Seg], key: String): Array[(Long, Array[Double], Double)] =
     centroidCache.getOrElseUpdate(s"$work#$key") {
-      import spark.implicits._
       ss.map { s0 =>
         val cp = s"${s0.dir}/_centroid"
         val (cv, cn) =
@@ -1087,39 +969,17 @@ object IncrementalIndex {
             val r = spark.read.parquet(cp).select("cv", "cn").head
             (r.getSeq[Double](0).toArray, r.getDouble(1))
           } else {
-            val rows = spark.read
-              .parquet(s"${s0.dir}/embeddings.parquet")
-              .select(posexplode(col("embedding").cast("array<double>")))
-              .groupBy("pos").agg(avg("col").as("v"))
-              .orderBy("pos").select("v").as[Double].collect()
+            val rows = meanVector(spark, s0.dir)
             (rows, math.sqrt(rows.map(x => x * x).sum))
           }
         (s0.ord.toLong, cv, cn)
       }.toArray
     }
 
-  /** ROUTED LSM serving — [[Hnsw.routeCellsAdaptive]]'s
-    * confidence-derived scatter composed onto the segment lifecycle:
-    * each query serves only the segments whose centroid similarity is
-    * within `margin` of its best (at least the top-1, at most
-    * `maxRoutes`), and the rest of the serve — shadow excludes,
-    * k-bounded gather, image budget — is [[serve]] unchanged. On a
-    * CLUSTERED ingest stream (each seal a topical burst, the shape
-    * real corpora arrive in) a confident query touches R ≪ S segment
-    * images; on an unstructured stream (residue-split init segments
-    * whose centroids all sit near the global mean) the scores bunch
-    * within the margin and the query WIDENS ITSELF back toward full
-    * fan-out — low centroid confidence degrades to [[serve]]
-    * automatically, per query, not by a mode switch. `maxRoutes ≥ S`
-    * with `margin ≥ 2` (the cosine range) is exactly [[serve]]
-    * (spec-pinned). Staleness note: skipping a segment can only cost
-    * RECALL, never freshness — the shadow rule excludes superseded
-    * ids from any served segment's report regardless of which
-    * segments the query reached. Images materialize only for the
-    * batch's routed working set. */
-  /** The adaptive route plan: query id → the segment ords it serves.
-    * Exposed for probes (mean-segments-served gauges); [[serveRouted]]
-    * consumes it verbatim. */
+  /** The adaptive route plan: query id → the segment ords it serves
+    * ([[Hnsw.routeCellsAdaptive]] over the `_centroid` sidecars). The
+    * routed [[serve]] consumes it verbatim; exposed for probes
+    * (mean-segments-served gauges). */
   private[graft] def routePlan(spark: SparkSession, work: String,
       queries: DataFrame, maxRoutes: Int,
       margin: Double): Map[Long, Seq[Int]] = {
@@ -1131,62 +991,6 @@ object IncrementalIndex {
       qid -> Hnsw.routeCellsAdaptive(cents, qv, qn, maxRoutes, margin)
         .map(_.toInt)
     }.toMap
-  }
-
-  def serveRouted(spark: SparkSession, work: String, queries: DataFrame,
-      maxRoutes: Int, margin: Double, ef: Int = 16, k: Int = 10,
-      budgetBytes: Long = Hnsw.DefaultNodeBudget): DataFrame = {
-    val routed: Map[Int, Set[Long]] =
-      routePlan(spark, work, queries, maxRoutes, margin).toSeq
-        .flatMap { case (qid, ords) => ords.map(o => (o, qid)) }
-        .groupBy(_._1).map { case (o, xs) => o -> xs.map(_._2).toSet }
-    Hnsw.shardedGather(spark, k,
-      segCands(spark, work, queries, ef, k, Set.empty, budgetBytes,
-        Some(routed)))
-  }
-
-  /** [[serveRouted]] with the UN-SEALED live delta composed in — the
-    * streaming loop's routed serve: the sealed arm scatters only to
-    * each query's routed segments (adaptive margin), the delta arm is
-    * scanned exactly (ingest-bounded — a live correction or arrival
-    * can never be missed by routing, because it never rides a routed
-    * image at all), delta ids shadow every routed report, and both
-    * arms merge in the one k-bounded gather. Wide margin at full
-    * maxRoutes degenerates to [[serveWithDelta]] (spec-pinned).
-    * Delta-id exclusion rides the same [[graft.model.IdFilters]]
-    * ladder as [[serveWithDelta]]: past the driver cap the serve
-    * routes through [[serveQueryTable]]'s in-plan deadness table with
-    * the SAME adaptive routing — no delta id on the driver. */
-  def serveRoutedWithDelta(spark: SparkSession, work: String,
-      delta: DataFrame, queries: DataFrame, maxRoutes: Int,
-      margin: Double, ef: Int = 16, k: Int = 10,
-      budgetBytes: Long = Hnsw.DefaultNodeBudget): DataFrame = {
-    import spark.implicits._
-    import graft.functions.VectorFunctions._
-    val deltaIdsDf = delta.select(col("vec_id"))
-    if (deltaIdsDf.count() > graft.model.IdFilters.driverCap(spark))
-      return serveQueryTable(spark, work, queries, ef, k, budgetBytes,
-        maxRoutes = maxRoutes, margin = margin, delta = Some(delta))
-    val deltaIds = deltaIdsDf.as[Long].collect().toSet
-    val routed: Map[Int, Set[Long]] =
-      routePlan(spark, work, queries, maxRoutes, margin).toSeq
-        .flatMap { case (qid, ords) => ords.map(o => (o, qid)) }
-        .groupBy(_._1).map { case (o, xs) => o -> xs.map(_._2).toSet }
-    val sealedCands = segCands(spark, work, queries, ef, k, deltaIds,
-      budgetBytes, Some(routed))
-    val qrows = queryVecsCached(spark, work, segs(spark, work), queries,
-      stateKey(spark, work))
-    val qv = qrows.toSeq.toDF("query_id", "qv", "qn")
-    val deltaCands = delta.select(col("vec_id"),
-        col("embedding").cast("array<float>").as("embedding"))
-      .withColumn("nrm", l2norm(col("embedding")))
-      .crossJoin(broadcast(qv))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("score",
-        round(cosinePrenormed(dot(col("embedding"), col("qv")),
-          col("nrm"), col("qn")), 6))
-      .select("query_id", "vec_id", "score")
-    Hnsw.shardedGather(spark, k, sealedCands.unionByName(deltaCands))
   }
 
   /** ONE size-tiered compaction step: merge the ADJACENT segment pair
@@ -1375,7 +1179,7 @@ object IncrementalIndex {
     * serve; IncrementalIndexSpec pins the full-fan-out degeneration
     * and the planted clustered-stream routing behavior. */
   def qHnswIncrRouted(spark: SparkSession, dir: String): DataFrame =
-    serveRouted(spark, workDirFor(spark, dir),
+    serve(spark, workDirFor(spark, dir),
       spark.range(8).toDF("query_id"), maxRoutes = 2, margin = 0.05,
       ef = 16, k = 5)
       .orderBy("query_id", "rank")
@@ -1396,7 +1200,7 @@ object IncrementalIndex {
     * parameters as [[qHnswIncrRouted]] (margin 0.05, maxRoutes 2),
     * but the route set is computed IN-PLAN on the executors against
     * the broadcast `_centroid` table and the fan-out is |Q|·R rows
-    * instead of |Q|·S. Spec-pinned bit-equal to [[serveRouted]] on
+    * instead of |Q|·S. Spec-pinned bit-equal to the routed [[serve]] on
     * any bounded batch; golden oracle like every trained-graph
     * serve. */
   def qHnswIncrTableRouted(spark: SparkSession, dir: String): DataFrame =

@@ -61,12 +61,33 @@ object ChunkStore {
       .bucketBy(buckets, key).sortBy(key)
       .saveAsTable(table)
 
-  /** S9 delete-batch as an anti-join rewrite, staged to `dst`. */
+  /** The partition columns of a store, read from its own directory
+    * layout: the `name=value` directory chain under `path` (hidden
+    * `_`/`.` entries skipped). A rewrite that drops them would leave
+    * the store's rows at the root, where the next partitioned append
+    * hides them from every read. */
+  private[graft] def partitionColsOf(spark: SparkSession,
+      path: String): Seq[String] = {
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def walk(p: org.apache.hadoop.fs.Path): List[String] = {
+      val part = fs.listStatus(p).iterator.filter(_.isDirectory)
+        .map(_.getPath.getName)
+        .find(n => n.contains("=") && !n.startsWith("_") &&
+          !n.startsWith("."))
+      part.fold(List.empty[String])(n => n.takeWhile(_ != '=') ::
+        walk(new org.apache.hadoop.fs.Path(p, n)))
+    }
+    if (fs.getFileStatus(root).isDirectory) walk(root) else Nil
+  }
+
+  /** S9 delete-batch as an anti-join rewrite, staged to `dst` with the
+    * source store's partition layout. */
   def deleteInto(spark: SparkSession, src: String, dst: String,
       ids: DataFrame, idCol: String): Unit = {
     val keep = read(spark, src)
       .join(broadcast(ids.select(col(idCol))), Seq(idCol), "left_anti")
-    write(keep, dst)
+    write(keep, dst, partitionColsOf(spark, src))
   }
 
   /** S9 delete, published: stage the anti-join rewrite beside the
@@ -329,7 +350,7 @@ object ChunkStore {
     read(spark, s"$path/_stats")
 
   /** S8 upsert as union + keep-latest per key (ordered by `versionCol`
-    * desc), staged to `dst`. */
+    * desc), staged to `dst` with the source store's partition layout. */
   def upsertInto(spark: SparkSession, src: String, dst: String,
       updates: DataFrame, idCol: String, versionCol: String): Unit = {
     val w = Window.partitionBy(idCol).orderBy(desc(versionCol))
@@ -337,6 +358,6 @@ object ChunkStore {
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .drop("__rn")
-    write(merged, dst)
+    write(merged, dst, partitionColsOf(spark, src))
   }
 }

@@ -19,7 +19,7 @@ import graft.operators.{Hnsw, IncrementalIndex => II}
   *     (the [[StreamingShardedServe.startIngest]] idempotent
   *     discipline, unchanged)
   *     → queries serve segments + exact-delta in one k-bounded gather
-  *       ([[graft.operators.IncrementalIndex.serveWithDelta]])
+  *       ([[graft.operators.IncrementalIndex.serve]])
   *     → when the delta outgrows a DERIVED fraction of the SMALLEST
   *       sealed segment (the LSM trigger: a delta is worth sealing
   *       when its index would be segment-sized — contrast
@@ -39,44 +39,19 @@ import graft.operators.{Hnsw, IncrementalIndex => II}
 object StreamingIncrementalServe {
 
   /** Serve queries through the sealed segments + whatever has landed
-    * in `$deltaWork/delta` so far. */
+    * in `$deltaWork/delta` so far — [[II.serve]] with the streamed
+    * delta as its live arm. `maxRoutes`/`margin` route the SEALED
+    * scatter only (a burst-heavy stream serves R ≪ S segment images per
+    * query where the corpus has structure); the live delta always
+    * scans exactly, so routing can never cost freshness. An unbounded
+    * query table serves through [[II.serveQueryTable]] with the same
+    * delta (spec-pinned equal). */
   def serve(spark: SparkSession, segWork: String, deltaWork: String,
       queries: DataFrame, ef: Int = 16, k: Int = 10,
-      budgetBytes: Long = Hnsw.DefaultNodeBudget): DataFrame =
-    II.serveWithDelta(spark, segWork,
-      StreamingShardedServe.deltaRows(spark, deltaWork), queries,
-      ef, k, budgetBytes)
-
-  /** [[serve]] through the ADAPTIVE route plan: sealed segments
-    * scatter only where each query's centroid confidence points (the
-    * `_centroid` sidecars every seal/compaction writes), the live
-    * delta still scans exactly — a burst-heavy stream serves R ≪ S
-    * segment images per query with the full-fan-out answer wherever
-    * the corpus has structure, and widens itself where it doesn't.
-    * Wide margin at full maxRoutes ≡ [[serve]] (spec-pinned). */
-  def serveRouted(spark: SparkSession, segWork: String,
-      deltaWork: String, queries: DataFrame, maxRoutes: Int,
-      margin: Double, ef: Int = 16, k: Int = 10,
-      budgetBytes: Long = Hnsw.DefaultNodeBudget): DataFrame =
-    II.serveRoutedWithDelta(spark, segWork,
-      StreamingShardedServe.deltaRows(spark, deltaWork), queries,
-      maxRoutes, margin, ef, k, budgetBytes)
-
-  /** The UNBOUNDED-query-table serve over the streaming lifecycle —
-    * [[serve]]'s in-plan twin (r12 verdict item 4 closed): sealed
-    * segments serve through blob-shipped images with the join-shaped
-    * shadow deadness, the streamed delta composes as the exact
-    * broadcast arm at +∞ ordinal (fresh answers WITHOUT a seal, and
-    * no delta id ever on the driver), and optional adaptive routing
-    * trims the sealed fan to |Q|·R in-plan. Spec-pinned equal to
-    * [[serve]] / [[serveRouted]] on bounded batches. */
-  def serveQueryTable(spark: SparkSession, segWork: String,
-      deltaWork: String, queries: DataFrame, ef: Int = 16, k: Int = 10,
-      maxRoutes: Int = Int.MaxValue, margin: Double = 2.0,
-      budgetBytes: Long = Hnsw.DefaultNodeBudget): DataFrame =
-    II.serveQueryTable(spark, segWork, queries, ef, k, budgetBytes,
-      maxRoutes = maxRoutes, margin = margin,
-      delta = Some(StreamingShardedServe.deltaRows(spark, deltaWork)))
+      budgetBytes: Long = Hnsw.DefaultNodeBudget,
+      maxRoutes: Int = Int.MaxValue, margin: Double = 2.0): DataFrame =
+    II.serve(spark, segWork, queries, ef, k, budgetBytes, maxRoutes,
+      margin, Some(StreamingShardedServe.deltaRows(spark, deltaWork)))
 
   /** Seal the streamed delta as the next segment IF it has outgrown
     * `1/fraction` of the SMALLEST sealed segment (growth measured,

@@ -93,7 +93,7 @@ class HnswRouteSpec extends SparkSpec {
     // query per sub-segment regime + the three cold seeds)
     val qids = Seq(0L, 1L, 2L, 3L, 17L, 28L)
     val out = Hnsw.serveShardedRouted(spark, dir,
-      qids.toDF("query_id"), shards = 4, routes = 1, ef = 32, k = 5,
+      qids.toDF("query_id"), shards = 4, maxRoutes = 1, ef = 32, k = 5,
       budgetBytes = budget).collect()
     val e = rows.map { case (id, v) =>
       (id, v, math.sqrt(v.map(x => x.toDouble * x).sum))
@@ -124,8 +124,9 @@ class HnswRouteSpec extends SparkSpec {
     assert(sample.nonEmpty)
     sample.foreach { r =>
       val qid = r.getLong(0)
-      val route = Hnsw.routeCells(cents, r.getSeq[Float](1).toArray,
-        r.getDouble(2), routes = 1).head
+      val route = Hnsw.routeCellsAdaptive(cents,
+        r.getSeq[Float](1).toArray, r.getDouble(2), maxRoutes = 1,
+        margin = 2.0).head
       assert(route === member(qid),
         s"vector $qid routes to cell $route but lives in ${member(qid)}")
     }
@@ -135,7 +136,7 @@ class HnswRouteSpec extends SparkSpec {
       "equals the driver-side all-cells reference merge") {
     val (dirs, _) = Hnsw.clusterLayoutFor(spark, bigDir, S)
     val out = Hnsw.serveShardedRouted(spark, bigDir,
-      spark.range(8).toDF("query_id"), shards = S, routes = S,
+      spark.range(8).toDF("query_id"), shards = S, maxRoutes = S,
       ef = 16, k = 5).collect()
     val imgs = dirs.toSeq.sortBy(_._1).flatMap(_._2)
       .map(d => Hnsw.imageFor(spark, d))
@@ -166,7 +167,8 @@ class HnswRouteSpec extends SparkSpec {
       .select("vec_id", "embedding", "nrm").collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray, r.getDouble(2)))
       .map { case (qid, qv, qn) =>
-        qid -> Hnsw.routeCells(cents, qv, qn, routes = 2).toSet
+        qid -> Hnsw.routeCellsAdaptive(cents, qv, qn, maxRoutes = 2,
+          margin = 2.0).toSet
       }.toMap
     out.foreach { r =>
       val (qid, vid) = (r.getLong(0), r.getLong(2))
@@ -181,12 +183,12 @@ class HnswRouteSpec extends SparkSpec {
     Hnsw.clusterLayoutFor(spark, bigDir, S)
     Seq(1, 2, S).foreach { r =>
       val batch = Hnsw.serveShardedRouted(spark, bigDir,
-        spark.range(8).toDF("query_id"), shards = S, routes = r,
+        spark.range(8).toDF("query_id"), shards = S, maxRoutes = r,
         ef = 16, k = 5).collect()
         .map(x => (x.getLong(0), x.getLong(1), x.getLong(2),
           x.getDouble(3))).sortBy(t => (t._1, t._2))
       val table = Hnsw.serveShardedRoutedQueryTable(spark, bigDir,
-        spark.range(8).toDF("query_id"), shards = S, routes = r,
+        spark.range(8).toDF("query_id"), shards = S, maxRoutes = r,
         ef = 16, k = 5).collect()
         .map(x => (x.getLong(0), x.getLong(1), x.getLong(2),
           x.getDouble(3))).sortBy(t => (t._1, t._2))
@@ -197,12 +199,12 @@ class HnswRouteSpec extends SparkSpec {
     // query stream splits across P tasks instead of serializing
     // behind one) never changes an answer
     val p1 = Hnsw.serveShardedRoutedQueryTable(spark, bigDir,
-      spark.range(8).toDF("query_id"), shards = S, routes = 2,
+      spark.range(8).toDF("query_id"), shards = S, maxRoutes = 2,
       ef = 16, k = 5, qParts = 1).collect()
       .map(x => (x.getLong(0), x.getLong(1), x.getLong(2),
         x.getDouble(3))).sortBy(t => (t._1, t._2)).toSeq
     val p4 = Hnsw.serveShardedRoutedQueryTable(spark, bigDir,
-      spark.range(8).toDF("query_id"), shards = S, routes = 2,
+      spark.range(8).toDF("query_id"), shards = S, maxRoutes = 2,
       ef = 16, k = 5, qParts = 4).collect()
       .map(x => (x.getLong(0), x.getLong(1), x.getLong(2),
         x.getDouble(3))).sortBy(t => (t._1, t._2)).toSeq
@@ -236,19 +238,22 @@ class HnswRouteSpec extends SparkSpec {
     val e = rows.map { case (id, v) =>
       (id, v, math.sqrt(v.map(x => x.toDouble * x).sum))
     }
-    // degenerations: margin covering the cosine range = fixed R;
-    // margin 0 = top-1 (no exact centroid ties in this geometry)
+    // degenerations: margin covering the cosine range = fixed R (the
+    // top-R cells of the score ranking); margin 0 = top-1 (no exact
+    // centroid ties in this geometry)
+    def fixedR(qv: Array[Float], qn: Double, r: Int): Seq[Long] =
+      Hnsw.cellScores(cents, qv, qn).take(r).map(_._1)
     e.foreach { case (id, qv, qn) =>
       assert(Hnsw.routeCellsAdaptive(cents, qv, qn, 3, 2.0) ===
-        Hnsw.routeCells(cents, qv, qn, 3))
+        fixedR(qv, qn, 3))
       // margin-0 = top-1 plus exact ties; the midpoint is excluded
       // because its two cells may tie at the 6-decimal rounding
       if (id != 200L)
         assert(Hnsw.routeCellsAdaptive(cents, qv, qn, 4, 0.0) ===
-          Hnsw.routeCells(cents, qv, qn, 1))
+          fixedR(qv, qn, 1))
       // envelope: ⊆ fixed maxRoutes, ⊇ top-1, rank-prefix order
       val a = Hnsw.routeCellsAdaptive(cents, qv, qn, 4, 0.3)
-      val fixed = Hnsw.routeCells(cents, qv, qn, 4)
+      val fixed = fixedR(qv, qn, 4)
       assert(a === fixed.take(a.size))
     }
     // cluster members are CONFIDENT (their centroid dominates); the
@@ -262,15 +267,16 @@ class HnswRouteSpec extends SparkSpec {
     val (_, mv, mn) = e(200)
     assert(Hnsw.routeCellsAdaptive(cents, mv, mn, 4, margin).size === 2,
       "the planted midpoint must widen to its two near-equal cells")
-    // serve-level: wide-margin adaptive ≡ fixed full fan-out
+    // serve-level: a wide-but-finite margin (every cell of this
+    // geometry scores within 1.99 of the best) ≡ fixed full fan-out
     def keyed(rs: Array[org.apache.spark.sql.Row]) = rs
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getDouble(3))).sortBy(t => (t._1, t._2)).toSeq
     val qs = Seq(0L, 1L, 200L).toDF("query_id")
-    val wide = keyed(Hnsw.serveShardedRoutedAdaptive(spark, dir, qs,
-      shards = 4, maxRoutes = 4, margin = 2.0, ef = 16, k = 5).collect())
+    val wide = keyed(Hnsw.serveShardedRouted(spark, dir, qs,
+      shards = 4, maxRoutes = 4, margin = 1.99, ef = 16, k = 5).collect())
     val fixed = keyed(Hnsw.serveShardedRouted(spark, dir, qs,
-      shards = 4, routes = 4, ef = 16, k = 5).collect())
+      shards = 4, maxRoutes = 4, ef = 16, k = 5).collect())
     assert(wide === fixed,
       "wide-margin adaptive serve diverged from the fixed full fan-out")
   }
@@ -304,7 +310,7 @@ class HnswRouteSpec extends SparkSpec {
     }
     val out = Hnsw.serveShardedRouted(spark, dir,
       Seq(0L, 1L, 2L, 3L, 40L, 41L).toDF("query_id"),
-      shards = 4, routes = 1, ef = 16, k = 5).collect()
+      shards = 4, maxRoutes = 1, ef = 16, k = 5).collect()
     val e = rows.map { case (id, v) =>
       (id, v, math.sqrt(v.map(x => x.toDouble * x).sum))
     }

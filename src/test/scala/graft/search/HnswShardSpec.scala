@@ -245,7 +245,7 @@ class HnswShardSpec extends SparkSpec {
       assert(rs.length === 5, "tombstoning must backfill, not shrink k"))
   }
 
-  test("query-table sharded serve (segment images broadcast in turn) " +
+  test("query-table sharded serve (one-pass segment-pinned fan-out) " +
       "is bit-equal to the bounded-batch scatter-gather") {
     val batch = Hnsw.qHnswSharded(spark, bigDir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
@@ -260,42 +260,27 @@ class HnswShardSpec extends SparkSpec {
         "serve — the two partitioned regimes must be the same answer")
   }
 
-  test("dirs-only coordinator (default) is bit-equal to the cached-" +
-      "image mode: per-arm image materialization changes no answer") {
-    val qs = spark.range(8).toDF("query_id").repartition(3)
-    def run(retain: Boolean) =
-      Hnsw.serveShardedQueryTable(spark, bigDir, qs, shards = S,
-        ef = 16, k = 5, retainImages = retain).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-          r.getDouble(3)))
-        .sortBy(t => (t._1, t._2))
-    assert(run(retain = false) === run(retain = true),
-      "dirs-only serving diverged from the session-cached images — " +
-        "the coordinator mode must never change an answer")
-  }
-
-  test("one-pass segment-pinned serve is bit-equal to the sequential " +
-      "arms; the driver session image cache stays empty (blobs, not " +
-      "broadcasts) and the executor cache holds ≤ S images") {
+  test("query-table serve retention: the driver session image cache " +
+      "stays empty (blobs, not broadcasts) and the executor cache holds " +
+      "≤ S images") {
     val qs = spark.range(8).toDF("query_id").repartition(3)
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getDouble(3)))
       .sortBy(t => (t._1, t._2))
-    val sequential = rows(Hnsw.serveShardedQueryTable(spark, bigDir,
-      qs, shards = S, ef = 16, k = 5))
+    val batch = rows(Hnsw.serveShardedDistributed(spark, bigDir, qs,
+      shards = S, ef = 16, k = 5))
     Hnsw.ImageBlobCache.clear()
     val dirs = Hnsw.shardDirsFor(spark, bigDir, S)
     val before = Hnsw.cachedImageCensus(dirs)._1
-    val onePass = rows(Hnsw.serveShardedQueryTableOnePass(spark,
+    val onePass = rows(Hnsw.serveShardedQueryTable(spark,
       bigDir, qs, shards = S, ef = 16, k = 5))
-    assert(onePass === sequential,
-      "one-pass segment-pinned serving diverged from the sequential " +
-        "broadcast-in-turn arms")
+    assert(onePass === batch,
+      "the one-pass query-table serve diverged from the bounded-batch " +
+        "serve")
     // retention gauges: the one-pass driver adds NO session images
-    // (the dirs-only discipline — blobs ship by path), and the shared
-    // local-JVM executor cache holds at most the S segment images it
-    // deserialized
+    // (blobs ship by path), and the shared local-JVM executor cache
+    // holds at most the S segment images it deserialized
     assert(Hnsw.cachedImageCensus(dirs)._1 === before,
       "the one-pass serve leaked segment images into the driver cache")
     val (execImgs, _) = Hnsw.ImageBlobCache.census
@@ -316,7 +301,7 @@ class HnswShardSpec extends SparkSpec {
     val sequential = rows(Hnsw.serveShardedFiltered(spark, bigDir, qs,
       shards = S, labelCol = "label", labelVal = 3L, ef = 64, k = 5))
     Hnsw.ImageBlobCache.clear()
-    val onePass = rows(Hnsw.serveShardedQueryTableOnePassFiltered(
+    val onePass = rows(Hnsw.serveShardedQueryTableFiltered(
       spark, bigDir, qs, shards = S, labelCol = "label", labelVal = 3L,
       ef = 64, k = 5))
     Hnsw.ImageBlobCache.clear()
@@ -334,20 +319,20 @@ class HnswShardSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getDouble(3)))
       .sortBy(t => (t._1, t._2)).toSeq
-    val p1 = rows(Hnsw.serveShardedQueryTableOnePass(spark, bigDir,
+    val p1 = rows(Hnsw.serveShardedQueryTable(spark, bigDir,
       qs, shards = S, ef = 16, k = 5, qParts = 1))
-    val p4 = rows(Hnsw.serveShardedQueryTableOnePass(spark, bigDir,
+    val p4 = rows(Hnsw.serveShardedQueryTable(spark, bigDir,
       qs, shards = S, ef = 16, k = 5, qParts = 4))
-    val pd = rows(Hnsw.serveShardedQueryTableOnePass(spark, bigDir,
+    val pd = rows(Hnsw.serveShardedQueryTable(spark, bigDir,
       qs, shards = S, ef = 16, k = 5))
     assert(p4 === p1,
       "query-dimension split at P=4 diverged from the single-task mode")
     assert(pd === p1,
       "the derived default qParts diverged from the single-task mode")
-    val f1 = rows(Hnsw.serveShardedQueryTableOnePassFiltered(spark,
+    val f1 = rows(Hnsw.serveShardedQueryTableFiltered(spark,
       bigDir, qs, shards = S, labelCol = "label", labelVal = 3L,
       ef = 64, k = 5, qParts = 1))
-    val f4 = rows(Hnsw.serveShardedQueryTableOnePassFiltered(spark,
+    val f4 = rows(Hnsw.serveShardedQueryTableFiltered(spark,
       bigDir, qs, shards = S, labelCol = "label", labelVal = 3L,
       ef = 64, k = 5, qParts = 4))
     assert(f4 === f1,

@@ -8,7 +8,9 @@ import graft.operators.{Hnsw, IncrementalIndex => II, Search}
 /** The LSM serve-mode equality pins (bounded batch vs in-plan
   * query table, routed, live delta, past-the-cap) — split from
   * [[IncrementalIndexSpec]] so the parallel test groups overlap
-  * the two suites (round 14 item 1). */
+  * the two suites (round 14 item 1). In the test names, `serveRouted`
+  * and `serveWithDelta` are the bounded [[II.serve]] with routing
+  * (`maxRoutes`/`margin`) and with a live `delta`. */
 class IncrementalServeSpec extends IncrementalFixture {
 
   test("shadow excludes past the driver cap: the Bloom + verified-" +
@@ -75,16 +77,18 @@ class IncrementalServeSpec extends IncrementalFixture {
         r.getDouble(3))).sortBy(t => (t._1, t._2)).toSeq
     val full = rows(II.serve(spark, work, qids.toDF("query_id"),
       ef = 16, k = 5))
-    val wide = rows(II.serveRouted(spark, work, qids.toDF("query_id"),
-      maxRoutes = II.segs(spark, work).size, margin = 2.0,
-      ef = 16, k = 5))
+    // margin 1.99 < 2 exercises the routed code path (no shortcut);
+    // the adaptive rule still keeps every segment at that margin
+    val wide = rows(II.serve(spark, work, qids.toDF("query_id"),
+      ef = 16, k = 5, maxRoutes = II.segs(spark, work).size,
+      margin = 1.99))
     assert(wide === full,
       "wide-margin routed serve must degenerate to the full scatter")
     // query 0 (v0's own direction) at margin 0: top-1 route is the
     // burst segment, and the clone family fills the report
-    val narrow = rows(II.serveRouted(spark, work,
-      Seq(0L).toDF("query_id"), maxRoutes = 1, margin = 0.0,
-      ef = 16, k = 5))
+    val narrow = rows(II.serve(spark, work,
+      Seq(0L).toDF("query_id"), ef = 16, k = 5, maxRoutes = 1,
+      margin = 0.0))
     assert(narrow.nonEmpty)
     assert(narrow.head._3 >= 500000L,
       "the narrow route must reach the burst segment's clones")
@@ -159,8 +163,8 @@ class IncrementalServeSpec extends IncrementalFixture {
     assert(wide === full,
       "wide-but-finite margin must equal the full fan-out bit-for-bit")
     Seq((1, 0.0), (2, 0.05)).foreach { case (mr, mg) =>
-      val batch = rows(II.serveRouted(spark, work, qids.toDF("query_id"),
-        maxRoutes = mr, margin = mg, ef = 16, k = 5))
+      val batch = rows(II.serve(spark, work, qids.toDF("query_id"),
+        ef = 16, k = 5, maxRoutes = mr, margin = mg))
       val table = rows(II.serveQueryTable(spark, work,
         qids.toDF("query_id"), ef = 16, k = 5, maxRoutes = mr,
         margin = mg))
@@ -188,32 +192,31 @@ class IncrementalServeSpec extends IncrementalFixture {
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getDouble(3))).sortBy(t => (t._1, t._2)).toSeq
-    val viaSet = rows(II.serveWithDelta(spark, work, delta,
-      qids.toDF("query_id"), ef = 16, k = 5))
+    val viaSet = rows(II.serve(spark, work, qids.toDF("query_id"),
+      ef = 16, k = 5, delta = Some(delta)))
     val viaTable = rows(II.serveQueryTable(spark, work,
       qids.toDF("query_id"), ef = 16, k = 5, delta = Some(delta)))
     assert(viaTable === viaSet,
-      "in-plan delta composition diverged from serveWithDelta")
+      "in-plan delta composition diverged from the bounded serve")
     // freshness without a seal: query 0's top hit is the corrected id
     // 5 at the NEW row's score
     val top0 = viaTable.filter(t => t._1 == 0L && t._2 == 1L).head
     assert(top0._3 === 5L)
     assert(top0._4 === 1.0)
     // the routed twin, under the default cap (driver-Set arm)
-    val routedSet = rows(II.serveRoutedWithDelta(spark, work, delta,
-      qids.toDF("query_id"), maxRoutes = 2, margin = 0.05,
-      ef = 16, k = 5))
+    val routedSet = rows(II.serve(spark, work, qids.toDF("query_id"),
+      ef = 16, k = 5, maxRoutes = 2, margin = 0.05, delta = Some(delta)))
     spark.conf.set("spark.graft.ann.deadSetCap", "2") // delta of 4 > 2
     try {
       // the ladder reroutes through the in-plan deadness table: same
       // answers, no delta id on the driver
-      val viaLadder = rows(II.serveWithDelta(spark, work, delta,
-        qids.toDF("query_id"), ef = 16, k = 5))
+      val viaLadder = rows(II.serve(spark, work, qids.toDF("query_id"),
+        ef = 16, k = 5, delta = Some(delta)))
       assert(viaLadder === viaSet,
         "past the cap the delta ladder must answer identically")
-      val routedLadder = rows(II.serveRoutedWithDelta(spark, work,
-        delta, qids.toDF("query_id"), maxRoutes = 2, margin = 0.05,
-        ef = 16, k = 5))
+      val routedLadder = rows(II.serve(spark, work,
+        qids.toDF("query_id"), ef = 16, k = 5, maxRoutes = 2,
+        margin = 0.05, delta = Some(delta)))
       assert(routedLadder === routedSet,
         "past the cap the ROUTED delta ladder must answer identically")
     } finally spark.conf.unset("spark.graft.ann.deadSetCap")
@@ -241,8 +244,8 @@ class IncrementalServeSpec extends IncrementalFixture {
       .getSeq[Float](0).toArray
     // live delta corrects id 5 to v0's direction — pre-seal
     val delta = Seq((5L, v0.map(_ * 0.25f))).toDF("vec_id", "embedding")
-    val out = II.serveWithDelta(spark, work, delta,
-      Seq(0L).toDF("query_id"), ef = 16, k = 5).collect()
+    val out = II.serve(spark, work, Seq(0L).toDF("query_id"),
+      ef = 16, k = 5, delta = Some(delta)).collect()
     assert(out.count(_.getLong(2) == 5L) === 1,
       "a live-corrected id must rank once, by its delta row")
     val top = out.filter(_.getLong(1) == 1L).head

@@ -241,4 +241,45 @@ class StoreSpec extends SparkSpec {
     assert(plan.contains("PushedFilters") &&
       (plan.contains("IsNotNull(doc_id)") || plan.contains("EqualTo(doc_id")))
   }
+
+  test("deleteAndCommit / upsertAndCommit keep an IndexPipeline store's " +
+      "sourceType partitioning: a later append still reads every row") {
+    import graft.api.IndexPipeline
+    val t0 = java.sql.Timestamp.valueOf("2026-01-02 03:04:05")
+    // 8 one-chunk files into a fresh sourceType-partitioned store
+    def indexed(name: String): String = {
+      val in = Files.createTempDirectory(s"graft_store_in_$name")
+      (0 until 8).foreach(i => Files.writeString(in.resolve(s"f$i.txt"),
+        s"file $i body " * 5))
+      val store = s"$tmp/$name"
+      IndexPipeline.indexFiles(spark, in.toString, "*", store, t0)
+      assert(spark.read.parquet(s"$store/chunks").count() === 8)
+      store
+    }
+    val del = indexed("partitioned_delete")
+    val chunks = s"$del/chunks"
+    val victim = spark.read.parquet(chunks).select("id").head.getString(0)
+    val spark2 = spark
+    import spark2.implicits._
+    ChunkStore.deleteAndCommit(spark, chunks, Seq(victim).toDF("id"), "id")
+    IndexPipeline.indexText(spark, "appended text body " * 5, "appended",
+      del, t0)
+    assert(spark.read.parquet(chunks).count() === 8,
+      "a delete rewrite lost the store's partitioning: the append hid " +
+        "the rewritten rows")
+    val ups = indexed("partitioned_upsert")
+    val upChunks = s"$ups/chunks"
+    val update = spark.read.parquet(upChunks).limit(1)
+      .withColumn("content", lit("rewritten"))
+      .withColumn("createdAt",
+        lit(java.sql.Timestamp.valueOf("2026-01-03 00:00:00")))
+    ChunkStore.upsertAndCommit(spark, upChunks, update, "id", "createdAt")
+    IndexPipeline.indexText(spark, "appended text body " * 5, "appended",
+      ups, t0)
+    val after = spark.read.parquet(upChunks)
+    assert(after.count() === 9,
+      "an upsert rewrite lost the store's partitioning: the append hid " +
+        "the rewritten rows")
+    assert(after.filter(col("content") === "rewritten").count() === 1)
+  }
 }

@@ -68,8 +68,8 @@ class StreamingIncrementalSpec extends SparkSpec {
     // reference: the SAME vectors as one explicit latest-wins delta
     val explicit = (b1.filterNot(_._1 == 5L) ++ b2)
       .toDF("vec_id", "embedding")
-    val want = rows(II.serveWithDelta(spark, segWork, explicit,
-      queries, ef = 16, k = 5))
+    val want = rows(II.serve(spark, segWork, queries, ef = 16, k = 5,
+      delta = Some(explicit)))
     assert(got === want,
       "streamed incremental serve diverged from the explicit-delta serve")
     // the correction is live: kNN(0) ranks id 5 at 1.0 from the
@@ -77,20 +77,21 @@ class StreamingIncrementalSpec extends SparkSpec {
     val for0 = got.filter(_._1 == 0L)
     assert(for0.count(_._3 == 5L) === 1)
 
-    // ROUTED streamed serve: wide margin at full maxRoutes must be
-    // bit-equal to the full streamed serve (the degeneration pin),
+    // ROUTED streamed serve: a wide-but-finite margin (1.99 < 2 takes
+    // the routed code path) at full maxRoutes must be bit-equal to the
+    // full streamed serve (the degeneration pin),
     // and a narrow margin still reports the live-delta correction —
     // the delta arm never rides a routed image, so routing can only
     // trim SEALED scatter, never freshness
     val S = II.segs(spark, segWork).size
-    val routedWide = rows(StreamingIncrementalServe.serveRouted(spark,
-      segWork, deltaWork, queries, maxRoutes = S, margin = 2.0,
-      ef = 16, k = 5))
+    val routedWide = rows(StreamingIncrementalServe.serve(spark,
+      segWork, deltaWork, queries, ef = 16, k = 5, maxRoutes = S,
+      margin = 1.99))
     assert(routedWide === got,
       "wide-margin routed streamed serve diverged from the full serve")
-    val routedNarrow = rows(StreamingIncrementalServe.serveRouted(spark,
-      segWork, deltaWork, queries, maxRoutes = 1, margin = 0.0,
-      ef = 16, k = 5))
+    val routedNarrow = rows(StreamingIncrementalServe.serve(spark,
+      segWork, deltaWork, queries, ef = 16, k = 5, maxRoutes = 1,
+      margin = 0.0))
     val narrow0 = routedNarrow.filter(_._1 == 0L)
     assert(narrow0.count(_._3 == 5L) === 1,
       "narrow routing must still serve the live-delta correction")
@@ -100,13 +101,14 @@ class StreamingIncrementalSpec extends SparkSpec {
     // at +∞ ordinal — answers exactly like the bounded-batch streamed
     // serve: fresh from the live delta, no seal required, and in the
     // routed variant the delta stays structurally immune to routing
-    val viaTable = rows(StreamingIncrementalServe.serveQueryTable(spark,
-      segWork, deltaWork, queries, ef = 16, k = 5))
+    val streamed = Some(StreamingShardedServe.deltaRows(spark, deltaWork))
+    val viaTable = rows(II.serveQueryTable(spark, segWork, queries,
+      ef = 16, k = 5, delta = streamed))
     assert(viaTable === got,
       "streamed query-table serve diverged from the bounded-batch serve")
-    val viaTableRouted = rows(StreamingIncrementalServe.serveQueryTable(
-      spark, segWork, deltaWork, queries, ef = 16, k = 5,
-      maxRoutes = 1, margin = 0.0))
+    val viaTableRouted = rows(II.serveQueryTable(spark, segWork,
+      queries, ef = 16, k = 5, maxRoutes = 1, margin = 0.0,
+      delta = streamed))
     assert(viaTableRouted.filter(_._1 == 0L).count(_._3 == 5L) === 1,
       "routed query-table serve must still report the live-delta " +
         "correction")

@@ -21,7 +21,24 @@ import org.apache.spark.storage.StorageLevel
   */
 object Cache {
 
-  private val store = mutable.Map.empty[(Int, String, String), DataFrame]
+  /** Per-session state keyed by the session OBJECT — weak keys under
+    * identity equality (`SparkSession` overrides neither `equals` nor
+    * `hashCode`) — never by `System.identityHashCode`, which two
+    * sessions can share. Entries of sessions whose context has stopped
+    * are dropped on every access, so a new session can never read a
+    * dead one's state. `fresh` makes a session's first value. */
+  final class PerSession[M](fresh: => M) {
+    private val m = new java.util.WeakHashMap[SparkSession, M]()
+    def apply(spark: SparkSession): M = synchronized {
+      m.keySet.removeIf(_.sparkContext.isStopped)
+      m.computeIfAbsent(spark, _ => fresh)
+    }
+    def remove(spark: SparkSession): Option[M] =
+      synchronized(Option(m.remove(spark)))
+  }
+
+  private val frames =
+    new PerSession(mutable.Map.empty[(String, String), DataFrame])
 
   /** The `build` thunk runs OUTSIDE the monitor: build paths reach the
     * HNSW artifact caches (ConcurrentHashMap bins held across long
@@ -36,15 +53,16 @@ object Cache {
     * shared — never two live persisted copies. */
   def getOrBuild(spark: SparkSession, key: String, dir: String)(
       build: => DataFrame): DataFrame = {
-    val k = (System.identityHashCode(spark), key, dir)
+    val k = (key, dir)
     synchronized {
-      store.get(k) match {
+      frames(spark).get(k) match {
         case Some(df) => return df
         case None =>
       }
     }
     val df = build
     synchronized {
+      val store = frames(spark)
       store.get(k) match {
         case Some(winner) => winner
         case None =>
@@ -62,29 +80,23 @@ object Cache {
     * session cache the design intends — not eviction roulette. Cost
     * is one cached-read (or one recompute, once) per entry. */
   def rewarm(spark: SparkSession): Unit = {
-    val mine = synchronized {
-      val id = System.identityHashCode(spark)
-      store.collect { case ((s, _, _), df) if s == id => df }.toSeq
-    }
+    val mine = synchronized(frames(spark).values.toSeq)
     mine.foreach(df => try df.count() catch { case NonFatal(_) => () })
   }
 
-  private val sideCaches = mutable.Buffer.empty[Int => Unit]
+  private val sideCaches = mutable.Buffer.empty[SparkSession => Unit]
 
   /** Register a side-cache's per-session eviction (e.g. the ANN salt
     * memo) so [[clear]] drops it together with the DataFrame cache —
     * without this a process-global memo outlives every session and
     * probes that clear the cache silently reuse stale entries. */
-  def registerSideCache(evict: Int => Unit): Unit = synchronized {
+  def registerSideCache(evict: SparkSession => Unit): Unit = synchronized {
     sideCaches += evict
   }
 
   /** Drop everything owned by one session (tests). */
   def clear(spark: SparkSession): Unit = synchronized {
-    val id = System.identityHashCode(spark)
-    store.filterInPlace { case ((s, _, _), df) =>
-      if (s == id) { df.unpersist(false); false } else true
-    }
-    sideCaches.foreach(_(id))
+    frames.remove(spark).foreach(_.values.foreach(_.unpersist(false)))
+    sideCaches.foreach(_(spark))
   }
 }

@@ -407,27 +407,85 @@ object IndexPipeline {
     val dir = s"${cached.work}/mut_${fp.take(16)}"
     val live = ChunkStore.read(spark, s"$storePath/chunks")
       .select(Embedder.hash60Col(col("id")).as("vec_id"), col("id"),
-        col("embedding"), Embedder.hash60Col(col("content")).as("ch"))
+        col("embedding").cast("array<float>").as("embedding"),
+        Embedder.hash60Col(col("content")).as("ch"))
     val sealed0 = spark.read.parquet(s"${cached.work}/ids.parquet")
-    live.join(sealed0.select("id", "ch"), Seq("id", "ch"), "left_anti")
-      .select(col("vec_id"),
-        col("embedding").cast("array<float>").as("embedding"))
-      .withColumn("nrm", l2norm(col("embedding")))
-      .write.mode("overwrite").parquet(s"$dir/delta.parquet")
-    // dead ids sorted: the Bloom path's flagged-candidate verification
-    // is a point lookup, and sorted row groups make the pushdown prune
-    sealed0.join(live.select("id", "ch"), Seq("id", "ch"), "left_anti")
-      .select("vec_id").orderBy("vec_id")
-      .write.mode("overwrite").parquet(s"$dir/dead.parquet")
-    val deltaN = spark.read.parquet(s"$dir/delta.parquet").count()
-    val deadN = spark.read.parquet(s"$dir/dead.parquet").count()
+      .select("vec_id", "id", "ch")
+    val (deltaN, deadN, dead) =
+      localMutation(spark, live, sealed0, cached, dir).getOrElse {
+        live.join(sealed0.select("id", "ch"), Seq("id", "ch"), "left_anti")
+          .select("vec_id", "embedding")
+          .withColumn("nrm", l2norm(col("embedding")))
+          .write.mode("overwrite").parquet(s"$dir/delta.parquet")
+        // dead ids sorted: the Bloom path's flagged-candidate
+        // verification is a point lookup, and sorted row groups make
+        // the pushdown prune
+        sealed0.join(live.select("id", "ch"), Seq("id", "ch"), "left_anti")
+          .select("vec_id").orderBy("vec_id")
+          .write.mode("overwrite").parquet(s"$dir/dead.parquet")
+        (spark.read.parquet(s"$dir/delta.parquet").count(),
+          spark.read.parquet(s"$dir/dead.parquet").count(),
+          spark.read.parquet(s"$dir/dead.parquet"))
+      }
     // bounded exclusion ([[graft.model.IdFilters]]): exact Set up to
     // the driver cap, past it the 8 MB-capped Bloom bitmap whose build
     // collects at most nbits/64 (word, mask) rows
-    val exclusion = graft.model.IdFilters.build(spark,
-      spark.read.parquet(s"$dir/dead.parquet"), "vec_id", deadN,
-      graft.model.IdFilters.driverCap(spark))
+    val exclusion = graft.model.IdFilters.build(spark, dead, "vec_id",
+      deadN, graft.model.IdFilters.driverCap(spark))
     MutationState(fp, dir, deltaN, deadN, exclusion)
+  }
+
+  /** [[deriveMutationState]]'s two anti-joins in-process, for a store
+    * whose vectors fit one AQE partition at the sealed width
+    * ([[graft.operators.Hnsw.fitsOnePartition]] — the HNSW build's gate):
+    * one bounded collect per side, the same `delta`/`dead` rows written,
+    * and the dead ids handed back as a local table. None past the gate,
+    * or when a delta or dead row has a null id or vector element (the
+    * Spark plan's null semantics then apply). */
+  private def localMutation(spark: SparkSession, live: DataFrame,
+      sealed0: DataFrame, cached: AnnArtifact,
+      dir: String): Option[(Long, Long, DataFrame)] = {
+    import spark.implicits._
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val dim = cached.imgs.iterator.flatMap(_.vecs.valuesIterator)
+      .map(_._1.length).nextOption().getOrElse(0)
+    val limit = math.min(Int.MaxValue - 1L,
+      graft.operators.Hnsw.advisoryBytes(spark) / (4L * math.max(1, dim))).toInt + 1
+    def fits(rows: Array[Row]) =
+      graft.operators.Hnsw.fitsOnePartition(spark, rows.length, dim)
+    val liveRows = live.limit(limit).collect()
+    if (!fits(liveRows)) return None
+    val sealedRows = sealed0.limit(limit).collect()
+    if (!fits(sealedRows)) return None
+    // the join key (id, ch); a null part never matches
+    def key(r: Row, ch: Int): Option[(String, Long)] =
+      if (r.isNullAt(1) || r.isNullAt(ch)) None
+      else Some((r.getString(1), r.getLong(ch)))
+    val sealedKeys = sealedRows.flatMap(key(_, 2)).toSet
+    val liveKeys = liveRows.flatMap(key(_, 3)).toSet
+    val delta = liveRows.filter(key(_, 3).forall(k => !sealedKeys(k)))
+    val dead = sealedRows.filter(key(_, 2).forall(k => !liveKeys(k)))
+    val vecs: Array[Option[Array[Float]]] = delta.map(r =>
+      if (r.isNullAt(0) || r.isNullAt(2)) None
+      else {
+        val xs = r.getSeq[java.lang.Float](2)
+        if (xs.contains(null)) None else Some(xs.map(_.floatValue).toArray)
+      })
+    if (vecs.contains(None) || dead.exists(_.isNullAt(0))) return None
+    val schema = StructType(Seq(StructField("vec_id", LongType),
+      StructField("embedding", ArrayType(FloatType)),
+      StructField("nrm", DoubleType)))
+    val rows = delta.indices.map { i =>
+      val v = vecs(i).get
+      Row(delta(i).getLong(0), v.toSeq,
+        math.sqrt(graft.functions.DotProduct.dot(v, v)))
+    }
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/delta.parquet")
+    val deadIds = dead.map(_.getLong(0)).sorted.toSeq.toDF("vec_id")
+    deadIds.coalesce(1).write.mode("overwrite").parquet(s"$dir/dead.parquet")
+    Some((delta.length.toLong, dead.length.toLong, deadIds))
   }
 
   /** Per-(store, budget) mutation state — ONE entry, replaced (and its

@@ -116,6 +116,36 @@ case class DotProduct(left: Expression, right: Expression)
   override def prettyName: String = "graft_dot"
 }
 
+/** The expression's arithmetic on local arrays, for driver- and
+  * executor-local scoring (HNSW serving, the in-process index build):
+  * the same widen-multiply-accumulate sequence, so a local score equals
+  * the engine's `round(graft_dot(a, b) / (|a|·|b|), 6)` bit for bit. */
+object DotProduct {
+
+  /** Σ a(i)·b(i) over the common prefix, widened to double, summed
+    * left to right. (The expression answers NULL on a length mismatch;
+    * callers that can meet one check the lengths themselves.) */
+  def dot(a: Array[Float], b: Array[Float]): Double = {
+    var s = 0.0
+    var i = 0
+    val n = math.min(a.length, b.length)
+    while (i < n) { s += a(i).toDouble * b(i).toDouble; i += 1 }
+    s
+  }
+
+  /** Spark's `round(x, scale)` on a double: HALF_UP on the shortest
+    * decimal form (`BigDecimal.valueOf`); NaN and infinities pass. */
+  def roundHalfUp(x: Double, scale: Int): Double =
+    if (x.isNaN || x.isInfinite) x
+    else java.math.BigDecimal.valueOf(x)
+      .setScale(scale, java.math.RoundingMode.HALF_UP).doubleValue()
+
+  /** The engine's reported score: `round(dot / (na·nb), 6)` —
+    * `cosinePrenormed` under the HALF_UP 6-decimal round. */
+  def score(a: Array[Float], na: Double, b: Array[Float], nb: Double): Double =
+    roundHalfUp(dot(a, b) / (na * nb), 6)
+}
+
 /** `spark.sql.extensions` entry point registering the engine's native
   * functions and optimizer rules. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

@@ -22,7 +22,7 @@ class TopKAggregator(k: Int)
     extends Aggregator[(Long, Double), Seq[(Long, Double)], Seq[(Long, Double)]] {
 
   private def better(a: (Long, Double), b: (Long, Double)): Boolean =
-    a._2 > b._2 || (a._2 == b._2 && a._1 < b._1)
+    TopKAggregator.better(a._1, a._2, b._1, b._2)
 
   override def zero: Seq[(Long, Double)] = Seq.empty
 
@@ -51,6 +51,10 @@ class TopKAggregator(k: Int)
 }
 
 object TopKAggregator {
+  /** The aggregator's order: score desc, then id asc. */
+  def better(aId: Long, aScore: Double, bId: Long, bScore: Double): Boolean =
+    aScore > bScore || (aScore == bScore && aId < bId)
+
   /** Column form for `Dataset.groupByKey(...).agg(...)`. */
   def topK(k: Int) = new TopKAggregator(k).toColumn
 
@@ -78,7 +82,7 @@ class MinKPairAggregator(k: Int)
     extends Aggregator[(Long, Long), Seq[(Long, Long)], Seq[(Long, Long)]] {
 
   private def smaller(a: (Long, Long), b: (Long, Long)): Boolean =
-    a._1 < b._1 || (a._1 == b._1 && a._2 < b._2)
+    MinKPairAggregator.smaller(a._1, a._2, b._1, b._2)
 
   override def zero: Seq[(Long, Long)] = Seq.empty
 
@@ -107,6 +111,10 @@ class MinKPairAggregator(k: Int)
 }
 
 object MinKPairAggregator {
+  /** The aggregator's order: first component asc, then second asc. */
+  def smaller(a1: Long, a2: Long, b1: Long, b2: Long): Boolean =
+    a1 < b1 || (a1 == b1 && a2 < b2)
+
   /** Column form for `Dataset.groupByKey(...).agg(...)`. */
   def minK(k: Int) = new MinKPairAggregator(k).toColumn
 

@@ -1,26 +1,47 @@
 package graft.model
 
+import java.util.concurrent.{Callable, CancellationException, ExecutionException,
+  ExecutorCompletionService, Executors}
+import java.util.concurrent.atomic.AtomicReference
+
+import scala.util.control.NonFatal
+
 /** One bounded-pool map, shared by every overlap-independent-jobs
   * site (guide §2.6): the bench's untimed artifact passes, the
-  * curation pipeline's accounting reads, the stage probe and the
-  * determinism suite each hand-rolled the same submit-all-then-get
-  * Executors plumbing with slightly different lifecycle handling
-  * (round-14 review) — one implementation means one place for the
-  * semantics: input order preserved in the result, the pool always
-  * shut down, the first failure propagated after submission (tasks
-  * already queued run to completion; nothing here is side-effecting
-  * beyond Spark jobs, so that is waste-bounded, not correctness). */
+  * curation pipeline's accounting reads, the stage probe, the sharded
+  * serves' segment builds and the determinism suite — one
+  * implementation means one place for the semantics: input order
+  * preserved in the result, the pool always shut down, and the FIRST
+  * failure (in completion order) rethrown as the element's own
+  * exception, not its `ExecutionException` wrapper. A failure cancels
+  * the rest: elements still queued never run `f`, and running ones
+  * are interrupted (`shutdownNow`). */
 object Pools {
   def mapConcurrent[A, B](xs: Seq[A], par: Int)(f: A => B): Seq[B] = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(par, 1))
+    val pool = Executors.newFixedThreadPool(math.max(par, 1))
+    val done = new ExecutorCompletionService[B](pool)
+    val failed = new AtomicReference[Throwable]()
     try {
       val futs = xs.map { x =>
-        pool.submit(new java.util.concurrent.Callable[B] {
-          def call(): B = f(x)
+        done.submit(new Callable[B] {
+          def call(): B =
+            if (failed.get != null)
+              throw new CancellationException("an earlier element failed")
+            else try f(x) catch {
+              case NonFatal(e) => failed.compareAndSet(null, e); throw e
+            }
         })
       }
+      // a skipped element only exists after `failed` is set, so the
+      // recorded failure wins over any skip that completes before it
+      futs.foreach { _ =>
+        try done.take().get()
+        catch {
+          case e: ExecutionException =>
+            throw Option(failed.get).getOrElse(e.getCause)
+        }
+      }
       futs.map(_.get())
-    } finally pool.shutdown()
+    } finally pool.shutdownNow()
   }
 }

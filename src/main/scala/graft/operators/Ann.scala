@@ -1213,10 +1213,9 @@ object Ann {
     * it when a sampled probe measures worse skew. */
   private val KnnJoinSalt = 8L
 
-  private val saltMemo =
-    scala.collection.concurrent.TrieMap.empty[(Int, String, AnnGeometry), Long]
-  Cache.registerSideCache(id =>
-    saltMemo.filterInPlace { case ((s, _, _), _) => s != id })
+  private val saltMemo = new Cache.PerSession(
+    scala.collection.concurrent.TrieMap.empty[(String, AnnGeometry), Long])
+  Cache.registerSideCache(saltMemo.remove(_))
 
   /** Measured-skew salt factor (r7 verdict item 7): a seeded sampled
     * pass over the bucket table measures the max bucket's share of all
@@ -1231,8 +1230,7 @@ object Ann {
     * unaffected. */
   private[graft] def saltFor(spark: SparkSession, dir: String,
       geo: AnnGeometry): Long =
-    saltMemo.getOrElseUpdate(
-      (System.identityHashCode(spark), dir, geo), {
+    saltMemo(spark).getOrElseUpdate((dir, geo), {
         val r = lshTables(spark, dir, geo)
           .sample(withReplacement = false, 0.25, seed = 42L)
           .groupBy("table", "bucket").agg(count(lit(1)).as("c"))
@@ -2067,7 +2065,7 @@ object Ann {
     * base). */
   def refineKnnGraph(spark: SparkSession, dir: String,
       geo: AnnGeometry = AnnGeometry.Pinned, k: Int = 3,
-      maxRounds: Int = 4): DataFrame = {
+      maxRounds: Int = RefineRounds): DataFrame = {
     // XOR-fold of per-edge hashes: order-independent, overflow-free
     // under ANSI (a SUM of 2^63-scale hashes overflows), and edges are
     // distinct rows so the fold is a proper set checksum.
@@ -2103,6 +2101,9 @@ object Ann {
     }
     g.orderBy("vec_id", "rank")
   }
+
+  /** [[refineKnnGraph]]'s default round budget. */
+  private[graft] val RefineRounds = 4
 
   /** Providers kept per seed slot (hard per-slot cap, smallest ids). */
   private[graft] val SeedProviders = 4

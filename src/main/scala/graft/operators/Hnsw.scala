@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.embed.Embedder.hash60Col
+import graft.functions.DotProduct
 import graft.functions.VectorFunctions._
 
 /** HIERARCHICAL navigable graph serving — the HNSW construction
@@ -118,12 +119,8 @@ object Hnsw {
     ordered.foreach { c =>
       if (selected.size < m) {
         val closerToU = selected.forall { s =>
-          var d = 0.0
-          var i = 0
-          val n = math.min(c._3.length, s._3.length)
-          while (i < n) { d += c._3(i).toDouble * s._3(i).toDouble; i += 1 }
-          val simCS =
-            if (c._4 == 0 || s._4 == 0) -1.0 else d / (c._4 * s._4)
+          val simCS = if (c._4 == 0 || s._4 == 0) -1.0
+            else DotProduct.dot(c._3, s._3) / (c._4 * s._4)
           c._1 > simCS
         }
         if (closerToU) selected += c else pruned += c._2
@@ -168,13 +165,85 @@ object Hnsw {
         explode(selectDiverseUdf(col("cs"), lit(m))).as("v"))
   }
 
-  /** Build the layered index under `indexPath`. Layer 0 reuses the
-    * trained full-corpus graph; each upper layer writes its vector
-    * subset (≤ N/8^l rows) and trains the same way at its own
-    * corpus-derived geometry. Edges are stored as the symmetric
-    * closure so serving needs one lookup per hop, not two. */
+  /** Whether `n` vectors of width `dim` fit one AQE partition:
+    * `n·4·dim ≤ spark.sql.adaptive.advisoryPartitionSizeInBytes` (an
+    * empty layer counts as one element). At that size AQE already
+    * coalesces the distributed build onto about one core, so building
+    * in-process removes only the per-job overhead. */
+  private[graft] def fitsOnePartition(spark: SparkSession, n: Long,
+      dim: Int): Boolean =
+    4L * math.max(1L, n * dim) <= advisoryBytes(spark)
+
+  private[graft] def advisoryBytes(spark: SparkSession): Long =
+    org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+      spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
+
+  /** Build the layered index under `indexPath`: `levels.parquet`
+    * ([[qHnswLevels]]) and `edges<l>.parquet` per occupied layer. Layer 0
+    * trains over the full corpus; each upper layer over its vector subset
+    * (≤ N/8^l rows) at its own corpus-derived geometry. Edges are stored
+    * as the symmetric closure so serving needs one lookup per hop, not
+    * two.
+    *
+    * Per-layer gate: a layer whose vectors fit one AQE partition
+    * ([[fitsOnePartition]]) is built in-process ([[HnswLocal]]) from one
+    * collect of its `(vec_id, embedding)` rows — when layer 0 fits, the
+    * levels too, and the whole build runs 5 + layers Spark jobs (schema
+    * read, stats aggregate, collect, one write per file). Bigger
+    * layers (layer 0 of a 10M-vector segment) keep the Spark build; their
+    * sparse upper layers still go in-process. Both arms write the same
+    * files bit for bit (HnswBuildSpec pins every edge set, the levels and
+    * the entry); a corpus the in-process arm cannot reproduce exactly (a
+    * zero or non-finite vector, mixed widths — [[HnswLocal.rowsOf]])
+    * stays on the Spark arm. */
   def buildIndex(spark: SparkSession, dir: String, indexPath: String,
       k: Int = IndexDegree): HnswIndex = {
+    import spark.implicits._
+    // round 11: the layer graph is HEURISTIC-selected
+    // ([[heuristicEdges]] — Algorithm 4 over the NN-Descent pool ∪
+    // reverse ∪ seeds), not the plain top-k NN-Descent edges: at
+    // equal degree, diverse approach directions beat mutually-
+    // close siblings where cluster MASS is heterogeneous (the
+    // hnsw_hetero probe A/Bs the two builds; the uniform-cluster
+    // and sign-flip grids are selection-neutral by construction —
+    // SCALE.md round 11). `spark.graft.hnsw.heuristicEdges=false`
+    // opts a build back to plain top-k — the probe's A/B arm.
+    val heuristic = spark.conf.getOption("spark.graft.hnsw.heuristicEdges")
+      .forall(_.toBoolean)
+    val emb = Tables.embeddings(spark, dir)
+    val stats = emb.agg(count(lit(1)), max(size(col("embedding")))).head
+    val n = stats.getLong(0)
+    val dim = if (stats.isNullAt(1)) 0 else stats.getInt(1)
+    def writeEdges(l: Int, edges: Seq[(Long, Long)]): Unit =
+      edges.toDF("u", "v").coalesce(1)
+        .write.mode("overwrite").parquet(s"$indexPath/edges$l.parquet")
+    val local =
+      if (fitsOnePartition(spark, n, dim)) HnswLocal.rowsOf(emb) else None
+    local match {
+      case Some(rows) =>
+        val lvl = HnswLocal.levels(rows.ids, levelCap(n))
+        val top = if (n == 0) 0 else lvl.max
+        val entry = if (n == 0) -1L else rows.ids(lvl.indexOf(top))
+        rows.ids.indices.map(i =>
+            (rows.ids(i), lvl(i).toLong, rows.ids(i) == entry))
+          .toDF("vec_id", "level", "is_entry").coalesce(1)
+          .write.mode("overwrite").parquet(s"$indexPath/levels.parquet")
+        if (n == 0) writeEdges(0, Nil)
+        else (0 to top).foreach(l => writeEdges(l,
+          HnswLocal.layerEdges(rows.keep(lvl(_) >= l), k, heuristic)))
+        HnswIndex(indexPath, top, entry)
+      case None => buildDistributed(spark, dir, indexPath, k, heuristic,
+        n, dim, writeEdges)
+    }
+  }
+
+  /** [[buildIndex]]'s Spark arm: levels by [[qHnswLevels]], each layer
+    * by the distributed NN-Descent and selection plans, except that the
+    * first upper layer passing the gate is collected once and it and
+    * every layer above it are built in-process. */
+  private def buildDistributed(spark: SparkSession, dir: String,
+      indexPath: String, k: Int, heuristic: Boolean, n: Long, dim: Int,
+      writeEdges: (Int, Seq[(Long, Long)]) => Unit): HnswIndex = {
     val lv = qHnswLevels(spark, dir).persist()
     try {
       lv.write.mode("overwrite").parquet(s"$indexPath/levels.parquet")
@@ -184,56 +253,62 @@ object Hnsw {
         // hold no ids under sparse hash-derived vec_ids — builds an
         // empty index: no layers, no entry; the serve guard answers
         // no rows rather than crashing the build or emitting noise
-        import spark.implicits._
-        Seq.empty[(Long, Long)].toDF("u", "v")
-          .write.mode("overwrite").parquet(s"$indexPath/edges0.parquet")
+        writeEdges(0, Nil)
         return HnswIndex(indexPath, 0, -1L)
       }
       val top = topRow.getLong(0).toInt
+      val cap = levelCap(n)
+      var upper: Option[(HnswLocal.Rows, Array[Int])] = None
       (0 to top).foreach { l =>
-        val ldir =
-          if (l == 0) dir
-          else {
-            val sub = s"$indexPath/layer$l"
-            Tables.embeddings(spark, dir)
-              .join(lv.filter(col("level") >= l).select("vec_id"), "vec_id")
-              .write.mode("overwrite").parquet(s"$sub/embeddings.parquet")
-            sub
-          }
-        val subN = Tables.embeddings(spark, ldir).count()
-        // round 11: the layer graph is HEURISTIC-selected
-        // ([[heuristicEdges]] — Algorithm 4 over the NN-Descent pool ∪
-        // reverse ∪ seeds), not the plain top-k NN-Descent edges: at
-        // equal degree, diverse approach directions beat mutually-
-        // close siblings where cluster MASS is heterogeneous (the
-        // hnsw_hetero probe A/Bs the two builds; the uniform-cluster
-        // and sign-flip grids are selection-neutral by construction —
-        // SCALE.md round 11). `spark.graft.hnsw.heuristicEdges=false`
-        // opts a build back to plain top-k — the probe's A/B arm.
-        val refined =
-          Ann.refineKnnGraph(spark, ldir, AnnGeometry.forCorpus(subN), k)
-        val g =
-          if (spark.conf.getOption("spark.graft.hnsw.heuristicEdges")
-              .forall(_.toBoolean))
-            heuristicEdges(spark, ldir, refined, k)
-          else refined
-            .select(col("vec_id").as("u"), col("neighbor_id").as("v"))
-        // navigability still needs the random quota beside the kNN
-        // half ([[Ann.seedEdges]], the small-world arm): pure kNN
-        // layers go cluster-closed on clustered corpora — every top-k
-        // edge is an intra-cluster sibling, and with near-orthogonal
-        // clusters greedy descent has no gradient between them (the
-        // graph_serve_clustered probe measured recall capped at 0.40
-        // before this union; the beam absorbs the extra degree).
-        val e = g.union(
-          Ann.seedEdges(spark, ldir, LongRangeEdges)
-            .select(col("u"), col("v")))
-        e.union(e.select(col("v").as("u"), col("u").as("v")))
-          .distinct()
-          .write.mode("overwrite").parquet(s"$indexPath/edges$l.parquet")
+        val members = lv.filter(col("level") >= l).select("vec_id")
+        if (upper.isEmpty && l > 0 &&
+            fitsOnePartition(spark, members.count(), dim))
+          upper = HnswLocal.rowsOf(
+              Tables.embeddings(spark, dir).join(members, "vec_id"))
+            .map(r => (r, HnswLocal.levels(r.ids, cap)))
+        upper match {
+          case Some((rows, lvl)) => writeEdges(l,
+            HnswLocal.layerEdges(rows.keep(lvl(_) >= l), k, heuristic))
+          case None => buildLayer(spark, dir, indexPath, l, members, k,
+            heuristic)
+        }
       }
       HnswIndex(indexPath, top, entryOf(lv))
     } finally lv.unpersist(false)
+  }
+
+  /** One layer of the Spark arm: the layer's vectors (`members` of the
+    * corpus at `dir`; layer 0 is the corpus itself) trained and
+    * selected by the distributed plans, written as `edges<l>`. */
+  private def buildLayer(spark: SparkSession, dir: String,
+      indexPath: String, l: Int, members: DataFrame, k: Int,
+      heuristic: Boolean): Unit = {
+    val ldir =
+      if (l == 0) dir
+      else {
+        val sub = s"$indexPath/layer$l"
+        Tables.embeddings(spark, dir).join(members, "vec_id")
+          .write.mode("overwrite").parquet(s"$sub/embeddings.parquet")
+        sub
+      }
+    val subN = Tables.embeddings(spark, ldir).count()
+    val refined =
+      Ann.refineKnnGraph(spark, ldir, AnnGeometry.forCorpus(subN), k)
+    val g =
+      if (heuristic) heuristicEdges(spark, ldir, refined, k)
+      else refined.select(col("vec_id").as("u"), col("neighbor_id").as("v"))
+    // navigability still needs the random quota beside the kNN half
+    // ([[Ann.seedEdges]], the small-world arm): pure kNN layers go
+    // cluster-closed on clustered corpora — every top-k edge is an
+    // intra-cluster sibling, and with near-orthogonal clusters greedy
+    // descent has no gradient between them (the graph_serve_clustered
+    // probe measured recall capped at 0.40 before this union; the beam
+    // absorbs the extra degree).
+    val e = g.union(
+      Ann.seedEdges(spark, ldir, LongRangeEdges).select(col("u"), col("v")))
+    e.union(e.select(col("v").as("u"), col("u").as("v")))
+      .distinct()
+      .write.mode("overwrite").parquet(s"$indexPath/edges$l.parquet")
   }
 
   private def entryOf(lv: DataFrame): Long = lv
@@ -344,14 +419,7 @@ object Hnsw {
     private def scoreAgainst(q: (Array[Float], Double), id: Long): Double = {
       val (v, nrm) = vecOf(id)
       if (v.isEmpty || nrm == 0 || q._2 == 0) -1.0
-      else {
-        var s = 0.0
-        var i = 0
-        val n = math.min(v.length, q._1.length)
-        while (i < n) { s += v(i).toDouble * q._1(i).toDouble; i += 1 }
-        BigDecimal(s / (nrm * q._2))
-          .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-      }
+      else DotProduct.score(v, nrm, q._1, q._2)
     }
 
     /** Every node of the top occupied layer (bounded: expected
@@ -748,14 +816,7 @@ object Hnsw {
     def sc(id: Long): Double = memo.getOrElseUpdate(id, {
       val (v, nrm) = img.vecs.getOrElse(id, (Array.empty[Float], 0.0))
       if (v.isEmpty || nrm == 0) -1.0
-      else {
-        var s = 0.0
-        var i = 0
-        val n = math.min(v.length, qv.length)
-        while (i < n) { s += v(i).toDouble * qv(i).toDouble; i += 1 }
-        BigDecimal(s / (nrm * qn))
-          .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-      }
+      else DotProduct.score(v, nrm, qv, qn)
     })
     def top(ids: Iterable[Long]): Seq[Long] = ids.toSeq.distinct
       .filter(_ != selfId)
@@ -1011,9 +1072,11 @@ object Hnsw {
   // [[serveVec]] with selfId = the query's own id, so the serves differ
   // only in which segments, queries and exclude sets they hand in.
 
-  /** Blob staging: build every missing segment index CONCURRENTLY (on
-    * a cluster these are separate jobs a FAIR scheduler interleaves;
-    * sequential submission would serialize S one-time builds), then
+  /** Blob staging: build every missing segment index CONCURRENTLY on a
+    * core-sized [[graft.model.Pools]] pool (Spark-arm builds are
+    * separate jobs a FAIR scheduler interleaves, in-process builds run
+    * on the pool threads; sequential submission would serialize S
+    * one-time builds, and a failed build cancels the queued ones), then
     * stage ONE image at a time ([[imageBlobFor]]: materialize →
     * serialize → drop) and return the blob PATHS in `dirs` order. Peak
     * driver residency is one budget-sized image regardless of S; each
@@ -1023,9 +1086,10 @@ object Hnsw {
     * small jobs per segment. */
   private[graft] def stageBlobs(spark: SparkSession, dirs: Seq[String],
       budgetBytes: Long = DefaultNodeBudget): Seq[String] = {
-    import scala.collection.parallel.CollectionConverters._
     val toBuild = dirs.filterNot(hasImageBlob(_, budgetBytes))
-    if (toBuild.nonEmpty) toBuild.par.foreach(d => indexFor(spark, d))
+    graft.model.Pools.mapConcurrent(toBuild,
+      math.min(toBuild.size, Runtime.getRuntime.availableProcessors))(
+      indexFor(spark, _))
     dirs.map(d => imageBlobFor(spark, d, budgetBytes))
   }
 

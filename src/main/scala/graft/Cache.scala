@@ -21,14 +21,19 @@ import org.apache.spark.storage.StorageLevel
   */
 object Cache {
 
-  /** Per-session state keyed by the session OBJECT — weak keys under
-    * identity equality (`SparkSession` overrides neither `equals` nor
-    * `hashCode`) — never by `System.identityHashCode`, which two
-    * sessions can share. Entries of sessions whose context has stopped
-    * are dropped on every access, so a new session can never read a
-    * dead one's state. `fresh` makes a session's first value. */
+  /** Per-session state keyed by the session OBJECT under identity
+    * equality (`SparkSession` overrides neither `equals` nor
+    * `hashCode`), never by `System.identityHashCode`, which two
+    * sessions can share. A plain identity map, not a weak one: the
+    * cached DataFrames hold their session, so weak keys could never be
+    * collected. An entry lives until [[Cache.clear]] (or `remove`)
+    * drops it or its session's context stops; stopped sessions are
+    * swept on every access, so a new session never reads a dead one's
+    * state. Sessions made with `newSession()` on a live context keep
+    * their entries until cleared. `fresh` makes a session's first
+    * value. */
   final class PerSession[M](fresh: => M) {
-    private val m = new java.util.WeakHashMap[SparkSession, M]()
+    private val m = new java.util.IdentityHashMap[SparkSession, M]()
     def apply(spark: SparkSession): M = synchronized {
       m.keySet.removeIf(_.sparkContext.isStopped)
       m.computeIfAbsent(spark, _ => fresh)

@@ -247,17 +247,18 @@ object IndexPipeline {
     * image while it fits the node budget (the replicated/latency
     * regime), S per-segment images past it (the partitioned regime,
     * merged under the engine's exact k-bounded order). */
-  private val annIndexes = new java.util.concurrent.ConcurrentHashMap[
+  private[api] val annIndexes = new java.util.concurrent.ConcurrentHashMap[
     String, AnnArtifact]()
 
   /** A built ANN serving artifact plus the store state it was sealed
     * against: `fingerprint` is the chunks directory's file-listing
     * hash at build time and `sealedCount` the row count it indexed —
     * the two facts [[searchAnn]] needs to detect mutation and decide
-    * between the delta arm and a reseal. */
+    * between the delta arm and a reseal — and `dim` its embedding width
+    * (0 for an empty store). */
   private[api] final case class AnnArtifact(work: String,
       imgs: Seq[graft.operators.Hnsw.IndexImage],
-      fingerprint: String, sealedCount: Long)
+      fingerprint: String, sealedCount: Long, dim: Int)
 
   /** Content fingerprint of a store directory. Preferred path: the
     * store's monotonic snapshot manifest
@@ -314,7 +315,7 @@ object IndexPipeline {
         } else graft.operators.Hnsw.segmentImages(spark,
           graft.operators.Hnsw.shardDirsFor(spark, work, s),
           nodeBudgetBytes)
-      AnnArtifact(work, imgs, fingerprint, n)
+      AnnArtifact(work, imgs, fingerprint, n, dim)
   }
 
   /** The session's artifact for (store, budget) — built on first use,
@@ -395,11 +396,16 @@ object IndexPipeline {
   private[graft] val mutationDerivations =
     new java.util.concurrent.atomic.AtomicLong(0L)
 
+  /** Of those, the derivations that ran in-process ([[localMutation]]) —
+    * the spec's gauge of which arm a derivation took. */
+  private[graft] val localMutationDerivations =
+    new java.util.concurrent.atomic.AtomicLong(0L)
+
   /** The once-per-store-state derivation: the two (id, content-hash)
     * anti-joins between the live store and the sealed ids table —
     * corpus-scale, paid HERE and only here — with their OUTPUTS
     * persisted under the artifact's work dir. */
-  private def deriveMutationState(spark: SparkSession, storePath: String,
+  private[api] def deriveMutationState(spark: SparkSession, storePath: String,
       cached: AnnArtifact, fp: String): MutationState = {
     import spark.implicits._
     import graft.functions.VectorFunctions.l2norm
@@ -435,29 +441,37 @@ object IndexPipeline {
     MutationState(fp, dir, deltaN, deadN, exclusion)
   }
 
+  /** Whether [[deriveMutationState]] may run its anti-joins in-process:
+    * the sealed rows, at the sealed width, pass the HNSW build's gate
+    * ([[graft.operators.Hnsw.fitsInProcess]]). Decided from what the
+    * artifact already records, before anything is collected; an empty
+    * seal (width 0) keeps the Spark plan. */
+  private[api] def mutationFitsInProcess(spark: SparkSession,
+      cached: AnnArtifact): Boolean =
+    cached.dim > 0 &&
+      graft.operators.Hnsw.fitsInProcess(spark, cached.sealedCount, cached.dim)
+
   /** [[deriveMutationState]]'s two anti-joins in-process, for a store
-    * whose vectors fit one AQE partition at the sealed width
-    * ([[graft.operators.Hnsw.fitsOnePartition]] — the HNSW build's gate):
-    * one bounded collect per side, the same `delta`/`dead` rows written,
-    * and the dead ids handed back as a local table. None past the gate,
-    * or when a delta or dead row has a null id or vector element (the
-    * Spark plan's null semantics then apply). */
+    * that passes [[mutationFitsInProcess]]: one bounded collect per
+    * side, the same `delta`/`dead` rows written, and the dead ids
+    * handed back as a local table. None when the live store has grown
+    * past the gate (found by collecting at most one row more than it
+    * admits), or when a delta or dead row has a null id or vector
+    * element (the Spark plan's null semantics then apply). */
   private def localMutation(spark: SparkSession, live: DataFrame,
       sealed0: DataFrame, cached: AnnArtifact,
       dir: String): Option[(Long, Long, DataFrame)] = {
     import spark.implicits._
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
-    val dim = cached.imgs.iterator.flatMap(_.vecs.valuesIterator)
-      .map(_._1.length).nextOption().getOrElse(0)
-    val limit = math.min(Int.MaxValue - 1L,
-      graft.operators.Hnsw.advisoryBytes(spark) / (4L * math.max(1, dim))).toInt + 1
-    def fits(rows: Array[Row]) =
-      graft.operators.Hnsw.fitsOnePartition(spark, rows.length, dim)
+    if (!mutationFitsInProcess(spark, cached)) return None
+    val dim = cached.dim
+    val limit = math.min(graft.operators.Hnsw.LocalMaxRows,
+      graft.operators.Hnsw.advisoryBytes(spark) / (4L * dim)).toInt + 1
     val liveRows = live.limit(limit).collect()
-    if (!fits(liveRows)) return None
-    val sealedRows = sealed0.limit(limit).collect()
-    if (!fits(sealedRows)) return None
+    if (!graft.operators.Hnsw.fitsInProcess(spark, liveRows.length, dim))
+      return None
+    val sealedRows = sealed0.collect()
     // the join key (id, ch); a null part never matches
     def key(r: Row, ch: Int): Option[(String, Long)] =
       if (r.isNullAt(1) || r.isNullAt(ch)) None
@@ -485,6 +499,7 @@ object IndexPipeline {
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/delta.parquet")
     val deadIds = dead.map(_.getLong(0)).sorted.toSeq.toDF("vec_id")
     deadIds.coalesce(1).write.mode("overwrite").parquet(s"$dir/dead.parquet")
+    localMutationDerivations.incrementAndGet()
     Some((delta.length.toLong, dead.length.toLong, deadIds))
   }
 

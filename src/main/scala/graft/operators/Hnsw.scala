@@ -165,14 +165,24 @@ object Hnsw {
         explode(selectDiverseUdf(col("cs"), lit(m))).as("v"))
   }
 
-  /** Whether `n` vectors of width `dim` fit one AQE partition:
+  /** Largest layer, in vectors, built in-process. Past it the Spark
+    * arm builds the layer, whatever the AQE setting: the in-process arm
+    * is single-threaded and holds the layer on the driver, and this is
+    * the largest size at which both arms were measured ([[HnswBuildProbe]],
+    * dim 64, 4-core host: 37 s against 280 s for one segment, 46 s
+    * against 795 s for four concurrent ones). At 100k vectors the
+    * in-process arm took 392 s for one segment, and four concurrent
+    * ones overran a 4 GB driver heap. */
+  private[graft] val LocalMaxRows = 20000L
+
+  /** Whether `n` vectors of width `dim` are built in-process: at most
+    * [[LocalMaxRows]] of them, fitting one AQE partition —
     * `n·4·dim ≤ spark.sql.adaptive.advisoryPartitionSizeInBytes` (an
-    * empty layer counts as one element). At that size AQE already
-    * coalesces the distributed build onto about one core, so building
-    * in-process removes only the per-job overhead. */
-  private[graft] def fitsOnePartition(spark: SparkSession, n: Long,
+    * empty layer counts as one element). Lowering that setting can
+    * only move builds to the Spark arm. */
+  private[graft] def fitsInProcess(spark: SparkSession, n: Long,
       dim: Int): Boolean =
-    4L * math.max(1L, n * dim) <= advisoryBytes(spark)
+    n <= LocalMaxRows && 4L * math.max(1L, n * dim) <= advisoryBytes(spark)
 
   private[graft] def advisoryBytes(spark: SparkSession): Long =
     org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
@@ -185,12 +195,13 @@ object Hnsw {
     * as the symmetric closure so serving needs one lookup per hop, not
     * two.
     *
-    * Per-layer gate: a layer whose vectors fit one AQE partition
-    * ([[fitsOnePartition]]) is built in-process ([[HnswLocal]]) from one
+    * Per-layer gate: a layer of at most [[LocalMaxRows]] vectors that
+    * fit one AQE partition ([[fitsInProcess]]) is built in-process
+    * ([[HnswLocal]], single-threaded on the calling thread) from one
     * collect of its `(vec_id, embedding)` rows — when layer 0 fits, the
     * levels too, and the whole build runs 5 + layers Spark jobs (schema
     * read, stats aggregate, collect, one write per file). Bigger
-    * layers (layer 0 of a 10M-vector segment) keep the Spark build; their
+    * layers (layer 0 of a 100k-vector segment) keep the Spark build; their
     * sparse upper layers still go in-process. Both arms write the same
     * files bit for bit (HnswBuildSpec pins every edge set, the levels and
     * the entry); a corpus the in-process arm cannot reproduce exactly (a
@@ -218,7 +229,7 @@ object Hnsw {
       edges.toDF("u", "v").coalesce(1)
         .write.mode("overwrite").parquet(s"$indexPath/edges$l.parquet")
     val local =
-      if (fitsOnePartition(spark, n, dim)) HnswLocal.rowsOf(emb) else None
+      if (fitsInProcess(spark, n, dim)) HnswLocal.rowsOf(emb) else None
     local match {
       case Some(rows) =>
         val lvl = HnswLocal.levels(rows.ids, levelCap(n))
@@ -262,7 +273,7 @@ object Hnsw {
       (0 to top).foreach { l =>
         val members = lv.filter(col("level") >= l).select("vec_id")
         if (upper.isEmpty && l > 0 &&
-            fitsOnePartition(spark, members.count(), dim))
+            fitsInProcess(spark, members.count(), dim))
           upper = HnswLocal.rowsOf(
               Tables.embeddings(spark, dir).join(members, "vec_id"))
             .map(r => (r, HnswLocal.levels(r.ids, cap)))
@@ -1078,9 +1089,12 @@ object Hnsw {
     * on the pool threads; sequential submission would serialize S
     * one-time builds, and a failed build cancels the queued ones), then
     * stage ONE image at a time ([[imageBlobFor]]: materialize →
-    * serialize → drop) and return the blob PATHS in `dirs` order. Peak
-    * driver residency is one budget-sized image regardless of S; each
-    * task deserializes its own segment via [[ImageBlobCache]]. Warm
+    * serialize → drop) and return the blob PATHS in `dirs` order. While
+    * segments build, each pool thread may hold one in-process layer on
+    * the driver (at most [[LocalMaxRows]] vectors, [[fitsInProcess]]);
+    * while they stage, peak driver residency is one budget-sized image
+    * regardless of S. Each task deserializes its own segment via
+    * [[ImageBlobCache]]. Warm
     * calls skip the build step: [[indexFor]] memoizes only the index
     * path, so re-invoking it per serve would still pay openIndex's
     * small jobs per segment. */

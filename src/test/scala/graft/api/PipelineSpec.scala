@@ -390,6 +390,129 @@ class PipelineSpec extends SparkSpec {
     } finally spark.conf.unset("spark.graft.ann.deadSetCap")
   }
 
+  private val Adv = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+
+  private def withConf[T](key: String, value: String)(f: => T): T = {
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try f
+    finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  /** The sealed artifact of `storeP` at the default node budget. */
+  private def artifactOf(storeP: String): IndexPipeline.AnnArtifact =
+    IndexPipeline.annIndexes.get(
+      s"$storeP#${graft.operators.Hnsw.DefaultNodeBudget}")
+
+  /** One mutation state derived by both arms: in-process at the
+    * session's settings, then by the Spark plan with the gate closed
+    * (advisory partition size 1 byte). Both must write the same
+    * `delta` (vec_id, embedding, nrm) and `dead` (sorted vec_id) rows
+    * and report the same counts. Returns whether the first derivation
+    * ran in-process. */
+  private def bothArmsAgree(storeP: String, tag: String): Boolean = {
+    val art = artifactOf(storeP)
+    val l0 = IndexPipeline.localMutationDerivations.get()
+    val local = IndexPipeline.deriveMutationState(spark, storeP, art,
+      s"local-$tag")
+    val ranLocal = IndexPipeline.localMutationDerivations.get() == l0 + 1
+    val dist = withConf(Adv, "1b") {
+      assert(!IndexPipeline.mutationFitsInProcess(spark, art))
+      IndexPipeline.deriveMutationState(spark, storeP, art, s"spark-$tag")
+    }
+    assert(IndexPipeline.localMutationDerivations.get() ===
+      (if (ranLocal) l0 + 1 else l0), "the closed gate ran in-process")
+    assert(local.deltaN === dist.deltaN)
+    assert(local.deadN === dist.deadN)
+    def delta(d: String) = {
+      val df = spark.read.parquet(s"$d/delta.parquet")
+      (df.schema, df.collect().map(r => (Option(r.get(0)),
+        Option(r.getSeq[Float](1)), Option(r.get(2))))
+        .sortBy(_._1.map(_.toString)).toSeq)
+    }
+    def dead(d: String) = {
+      val df = spark.read.parquet(s"$d/dead.parquet")
+      (df.schema, df.collect().map(_.getLong(0)).toSeq)
+    }
+    assert(delta(local.dir) === delta(dist.dir))
+    assert(dead(local.dir) === dead(dist.dir))
+    assert(dead(local.dir)._2 === dead(local.dir)._2.sorted)
+    ranLocal
+  }
+
+  test("mutation state: the in-process derivation writes the Spark " +
+      "plan's delta and dead rows (append, in-place rewrite, delete, " +
+      "null content); a null chunk id keeps the Spark plan") {
+    val storeP = s"$root/store_mutarms"
+    val vocab = Seq("lilac", "umber", "sienna", "indigo", "russet",
+      "ochre")
+    vocab.zipWithIndex.foreach { case (w, i) =>
+      IndexPipeline.indexText(spark, s"$w arm body " * 30, s"a$i",
+        storeP, t0)
+    }
+    checkAnnParity(storeP, "lilac arm body", 3) // seals
+    assert(IndexPipeline.mutationFitsInProcess(spark, artifactOf(storeP)))
+    IndexPipeline.indexText(spark, "cerulean arm fresh " * 30, "a_new",
+      storeP, t0)
+    val chunks = spark.read.parquet(s"$storeP/chunks")
+    def of(title: String) = chunks.filter(col("metadata.title") === title)
+    val newVec = graft.embed.Embedder
+      .withDim(graft.embed.Embedder.DefaultDim)
+      .embed("zephyr quill " * 30).map(_.toFloat)
+    // a1 rewritten in place (same chunk id, new content and
+    // embedding), a2 deleted, a4's content nulled (a null key part)
+    val mutated = chunks
+      .filter(!col("metadata.title").isin("a1", "a2", "a4"))
+      .unionByName(of("a1").withColumn("content", lit("zephyr quill " * 30))
+        .withColumn("embedding", lit(newVec)))
+      .unionByName(of("a4").withColumn("content", lit(null).cast("string")))
+    val staged = s"$root/store_mutarms_staged"
+    graft.store.ChunkStore.write(mutated, staged,
+      partitionCols = Seq("sourceType"))
+    graft.store.ChunkStore.commitSwap(spark, staged, s"$storeP/chunks")
+    assert(bothArmsAgree(storeP, "a"),
+      "a store inside the gate did not derive in-process")
+    // a row with a null chunk id: the Spark plan's null semantics
+    val cur = spark.read.parquet(s"$storeP/chunks")
+    val withNullId = cur.unionByName(cur
+      .filter(col("metadata.title") === "a3")
+      .withColumn("id", lit(null).cast("string")))
+    val staged2 = s"$root/store_mutarms_staged2"
+    graft.store.ChunkStore.write(withNullId, staged2,
+      partitionCols = Seq("sourceType"))
+    graft.store.ChunkStore.commitSwap(spark, staged2, s"$storeP/chunks")
+    assert(!bothArmsAgree(storeP, "b"),
+      "a null chunk id derived in-process")
+  }
+
+  test("a store sealed empty derives its first mutation with the Spark " +
+      "plan: nothing is collected against a zero sealed width") {
+    val storeE = s"$root/store_empty_seal"
+    IndexPipeline.indexText(spark, "seed slate text " * 30, "e0", storeE,
+      t0)
+    val rows = spark.read.parquet(s"$storeE/chunks")
+    val full = s"$root/store_empty_full"
+    graft.store.ChunkStore.write(rows, full)
+    val empty = s"$root/store_empty_none"
+    graft.store.ChunkStore.write(rows.limit(0), empty)
+    graft.store.ChunkStore.commitSwap(spark, empty, s"$storeE/chunks")
+    assert(IndexPipeline.searchAnn(spark, storeE, "seed slate text", k = 3)
+      .count() === 0) // seals the empty store
+    val art = artifactOf(storeE)
+    assert(art.sealedCount === 0 && art.dim === 0)
+    assert(!IndexPipeline.mutationFitsInProcess(spark, art))
+    graft.store.ChunkStore.commitSwap(spark, full, s"$storeE/chunks")
+    val d0 = IndexPipeline.mutationDerivations.get()
+    val l0 = IndexPipeline.localMutationDerivations.get()
+    checkAnnParity(storeE, "seed slate text", 1)
+    assert(IndexPipeline.mutationDerivations.get() === d0 + 1)
+    assert(IndexPipeline.localMutationDerivations.get() === l0,
+      "the first mutation of an empty seal ran in-process")
+  }
+
   test("S1 raw-text indexing round trips through the same store") {
     indexed
     val r = IndexPipeline.indexText(spark, "plutonium widget factory " * 50,

@@ -89,6 +89,17 @@ object Bench {
       (if (v < 0) Double.NegativeInfinity else -v, k)
     }
 
+  /** The truncated per-query map's rows, in [[lineOrder]]: at most 10
+    * failed rows (the line's `failed` list names every one), then the
+    * slowest timed rows, 40 in all — a mass failure cannot push every
+    * timing out of the line. */
+  private[graft] def lineRows(results: Seq[(String, Double)])
+      : Seq[(String, Double)] = {
+    val (failed, timed) = lineOrder(results).partition(_._2 < 0)
+    val shown = failed.take(10)
+    shown ++ timed.take(40 - shown.size)
+  }
+
   /** Per-row host-stall count. A row with ANY sentinel iteration is a
     * FAILED row, not a stalled one: with the sentinel as the median,
     * the `t > 5*m` test reads every SUCCESSFUL iteration of a flaky
@@ -226,13 +237,13 @@ object Bench {
       // per-query map ever pushes the line past the driver's ~2000-char
       // tail window, keep only the most informative queries rather than
       // risk an unparseable line. Membership is DETERMINISTIC
-      // ([[lineOrder]]: failed rows first — never truncated out — then
-      // slowest-40 with ties broken by name, so equal-timed rows can't
+      // ([[lineRows]]: up to 10 failed rows first, then the slowest
+      // up to 40 in all, ties broken by name, so equal-timed rows can't
       // swap in and out run-to-run), and the headline total/min_total/
       // stall_iters always cover ALL queries — only the per-query map
       // truncates. The full map lands in bench_full.json.
       if (all.length <= 1800) all
-      else mk(lineOrder(results).take(40)
+      else mk(lineRows(results)
         .map { case (k, v) => s"\"" + k + "\":" + fmt(v) }
         .mkString("{", ",", "}"))
     }

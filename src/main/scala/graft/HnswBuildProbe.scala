@@ -6,22 +6,25 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
-import graft.operators.Hnsw
+import graft.operators.{Ann, Hnsw}
 
-/** Build-arm probe for [[Hnsw.buildIndex]]'s per-layer gate: for each
-  * size, builds the HNSW indexes of `segs` synthetic clustered corpora
-  * of `n` vectors at width `dim` concurrently (the sharded serves'
-  * segment builds run on a pool the same way, [[Hnsw.stageBlobs]]), once
-  * per arm, and prints one line per (arm, size): the wall, the Spark
-  * jobs and the driver's peak heap above its post-GC baseline (sampled
-  * every 10 ms; uncollected garbage included). The Spark arm is forced
-  * with `spark.sql.adaptive.advisoryPartitionSizeInBytes` = 1 byte; the
+/** Arm probe for the in-process gate ([[Hnsw.fitsInProcess]]): for
+  * each size, runs `segs` synthetic clustered corpora of `n` vectors at
+  * width `dim` concurrently (the sharded serves' segment builds run on
+  * a pool the same way, [[Hnsw.stageBlobs]]), once per arm, and prints
+  * one line per (arm, size): the wall, the Spark jobs and the driver's
+  * peak heap above its post-GC baseline (sampled every 10 ms;
+  * uncollected garbage included). The `build` target builds the HNSW
+  * index ([[Hnsw.buildIndex]]); the `graph` target collects the
+  * registry graph search ([[Ann.qGraphSearch]], the kNN graph and its
+  * beam) on an emptied session cache. The Spark arm is forced with
+  * `spark.sql.adaptive.advisoryPartitionSizeInBytes` = 1 byte; the
   * `local` arm runs at the session's setting, so a size past the gate
-  * ([[Hnsw.fitsInProcess]]) builds on the Spark arm under both names
-  * (the job count tells which arm ran).
+  * runs on the Spark arm under both names (the job count tells which
+  * arm ran).
   *
   * Usage: runMain graft.HnswBuildProbe <workDir> <n[,n…]> [dim=64]
-  * [segs=1] [arms=local,spark]
+  * [segs=1] [arms=local,spark] [target=build|graph]
   */
 object HnswBuildProbe {
   def main(args: Array[String]): Unit = {
@@ -31,6 +34,8 @@ object HnswBuildProbe {
     val segs = args.lift(3).map(_.toInt).getOrElse(1)
     val arms = args.lift(4).map(_.split(",").toSeq)
       .getOrElse(Seq("local", "spark"))
+    val target = args.lift(5).getOrElse("build")
+    require(Set("build", "graph")(target), s"unknown target $target")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
     GraftSession.setLogLevel(spark, "WARN")
@@ -53,6 +58,7 @@ object HnswBuildProbe {
     val heap = ManagementFactory.getMemoryMXBean
     for (n <- sizes; arm <- arms) {
       spark.conf.set(key, if (arm == "spark") "1b" else default)
+      Cache.clear(spark)
       System.gc()
       val base = heap.getHeapMemoryUsage.getUsed
       val peak = new AtomicLong(base)
@@ -67,11 +73,12 @@ object HnswBuildProbe {
       val j0 = jobs.get
       val t0 = System.nanoTime
       graft.model.Pools.mapConcurrent(0 until segs, segs)(s =>
-        Hnsw.buildIndex(spark, dirOf(n, s), s"$work/index_${arm}_${n}_$s"))
+        if (target == "graph") Ann.qGraphSearch(spark, dirOf(n, s)).collect()
+        else Hnsw.buildIndex(spark, dirOf(n, s), s"$work/index_${arm}_${n}_$s"))
       val wall = (System.nanoTime - t0) / 1e9
       sampling = false
       sampler.join()
-      println(f"hnsw_build arm=$arm n=$n dim=$dim segs=$segs " +
+      println(f"hnsw_$target arm=$arm n=$n dim=$dim segs=$segs " +
         f"wall_s=$wall%.2f jobs=${jobs.get - j0} " +
         f"peak_heap_mb=${(peak.get - base) / 1048576.0}%.0f " +
         f"base_heap_mb=${base / 1048576.0}%.0f")

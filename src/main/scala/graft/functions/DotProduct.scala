@@ -134,10 +134,41 @@ object DotProduct {
   }
 
   /** Spark's `round(x, scale)` on a double: HALF_UP on the shortest
-    * decimal form (`BigDecimal.valueOf`); NaN and infinities pass. */
+    * decimal form (`BigDecimal.valueOf`); NaN and infinities pass.
+    *
+    * Fast path, bit-equal to the `BigDecimal` form (RoundHalfUpSpec
+    * compares raw bits): `y = x·10^scale` is within ~1.5 ulp(y) of the
+    * shortest decimal's scaled value, so when `y`'s fraction sits
+    * clearly away from .5 both round to the same integer `m`, and
+    * `m / 10^scale` is one correctly-rounded division, exactly what
+    * `BigDecimal(m, scale).doubleValue()` returns. Near a tie, past
+    * 2⁵² and for scales without an exact power of ten it takes the
+    * `BigDecimal` path. A zero result is `+0.0`, as there. */
   def roundHalfUp(x: Double, scale: Int): Double =
     if (x.isNaN || x.isInfinite) x
-    else java.math.BigDecimal.valueOf(x)
+    else if (scale < 0 || scale >= Pow10.length) slowRound(x, scale)
+    else {
+      val t = math.abs(x * Pow10(scale))
+      val fl = math.floor(t)
+      val frac = t - fl // exact below 2⁵²
+      if (!(t < 4503599627370496.0) || math.abs(frac - 0.5) <= t * TieMargin)
+        slowRound(x, scale)
+      else {
+        val m = if (frac > 0.5) fl + 1 else fl
+        if (m == 0) 0.0
+        else math.copySign(m / Pow10(scale), x)
+      }
+    }
+
+  /** 2⁻⁴⁴: a relative margin 256× wider than the ~2⁻⁵² between `y`
+    * and the shortest decimal's scaled value. */
+  private val TieMargin = math.scalb(1.0, -44)
+
+  /** 10^0 … 10^22, every one exact as a double. */
+  private val Pow10: Array[Double] = Array.iterate(1.0, 23)(_ * 10)
+
+  private def slowRound(x: Double, scale: Int): Double =
+    java.math.BigDecimal.valueOf(x)
       .setScale(scale, java.math.RoundingMode.HALF_UP).doubleValue()
 
   /** The engine's reported score: `round(dot / (na·nb), 6)` —

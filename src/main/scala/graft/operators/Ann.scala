@@ -1,11 +1,13 @@
 package graft
 package operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 import graft.embed.Embedder.hash60Col
+import graft.functions.DotProduct
 import graft.functions.VectorFunctions._
 
 /** Approximate-nearest-neighbor operators over the embedding column —
@@ -1892,11 +1894,57 @@ object Ann {
     * in N per round at any corpus size, the paper's empirical-cost
     * claim. No corpus-keyed window anywhere: every ranking rides the
     * bounded aggregators; KnnGraphSpec measures the recall gain over
-    * the base graph against brute force. */
+    * the base graph against brute force.
+    *
+    * Gate: a corpus that passes [[Hnsw.fitsInProcess]] (checked on its
+    * count and width before anything is collected) and that
+    * [[HnswLocal.rowsOf]] accepts is collected once and the round runs
+    * in-process ([[HnswLocal.knnGraph]] at the pinned geometry, one
+    * round), returning the same rows and schema as a local DataFrame
+    * (KnnGraphSpec pins the arms). Any other corpus — past the gate, or
+    * one the in-process arm cannot reproduce (a zero vector, whose
+    * cosine the Spark arm fails on with DIVIDE_BY_ZERO) — runs the
+    * Spark plan. */
   def qKnnGraph(spark: SparkSession, dir: String): DataFrame =
     Cache.getOrBuild(spark, "knnGraphPinned", dir) {
-      qKnnGraphG(spark, dir)
+      localKnnGraph(spark, dir).fold(qKnnGraphG(spark, dir)) { case (r, g) =>
+        val rows = for {
+          x <- g.nbr.indices
+          j <- g.nbr(x).indices
+        } yield Row(r.ids(x), (j + 1).toLong, r.ids(g.nbr(x)(j)), g.sc(x)(j))
+        spark.createDataFrame(java.util.Arrays.asList(rows: _*), KnnGraphSchema)
+      }
     }
+
+  /** [[qKnnGraphG]]'s output schema. */
+  private val KnnGraphSchema = StructType(Seq(
+    StructField("vec_id", LongType),
+    StructField("rank", LongType, nullable = false),
+    StructField("neighbor_id", LongType),
+    StructField("score", DoubleType)))
+
+  /** Registry graph builds that ran in-process — the specs' gauge of
+    * which arm [[qKnnGraph]] and [[qGraphSearch]] took. */
+  private[graft] val localGraphBuilds =
+    new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** The corpus at `dir` and its pinned one-round kNN graph built
+    * in-process, when the corpus passes [[Hnsw.fitsInProcess]],
+    * [[HnswLocal.rowsOf]] accepts it and it holds every id of `needIds`
+    * (checked in that order); else None. */
+  private def localKnnGraph(spark: SparkSession, dir: String, needIds: Long*)
+      : Option[(HnswLocal.Rows, HnswLocal.Graph)] = {
+    val emb = Tables.embeddings(spark, dir)
+    val stats = emb.agg(count(lit(1)), max(size(col("embedding")))).head
+    val dim = if (stats.isNullAt(1)) 0 else stats.getInt(1)
+    if (!Hnsw.fitsInProcess(spark, stats.getLong(0), dim)) None
+    else HnswLocal.rowsOf(emb)
+      .filter(r => needIds.forall(java.util.Arrays.binarySearch(r.ids, _) >= 0))
+      .map { r =>
+        localGraphBuilds.incrementAndGet()
+        (r, HnswLocal.knnGraph(r, AnnGeometry.Pinned, 3, rounds = 1))
+      }
+  }
 
   /** [[qKnnGraph]] under an explicit [[AnnGeometry]] — the probe path:
     * ScaleProbe runs the round at `forCorpus(N)` geometry where the
@@ -2140,9 +2188,35 @@ object Ann {
     * (short-range edges cannot cross the corpus). This query remains
     * the registry-pinned single-layer shape; the production scale
     * path is the [[Hnsw]] hierarchy (`q_hnsw_search`), whose sparse
-    * upper layers supply the missing long-range hops. */
+    * upper layers supply the missing long-range hops.
+    *
+    * Gate: [[qKnnGraph]]'s. A corpus that passes it and holds both the
+    * query (id 0) and the entry ([[GraphSearchEntry]]) is collected
+    * once; the graph, its symmetric adjacency and the beam
+    * ([[Hnsw.beamSearch]]) then run on the driver, and the 10 rows come
+    * back as a local DataFrame, equal to the Spark arm's (KnnGraphSpec).
+    * Without either id the Spark arm runs: it drops an entry that is
+    * not in the corpus, where the shared beam would score it −1.0. */
   def qGraphSearch(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
+    localKnnGraph(spark, dir, 0L, GraphSearchEntry).map { case (r, g) =>
+      val ix = (id: Long) => java.util.Arrays.binarySearch(r.ids, id)
+      val q = ix(0L)
+      val adj = Array.fill(r.n)(Array.newBuilder[Long])
+      g.nbr.indices.foreach(x => g.nbr(x).foreach { y =>
+        adj(x) += r.ids(y)
+        adj(y) += r.ids(x)
+      })
+      val sym = adj.map(_.result().distinct)
+      Hnsw.beamSearch(Seq(GraphSearchEntry), id => sym(ix(id)),
+        id => DotProduct.score(r.vecs(ix(id)), r.nrm(ix(id)), r.vecs(q), r.nrm(q)),
+        selfId = 0L, GraphSearchBeam, GraphSearchHops, k = 10)
+    }.getOrElse(beamServeGraph(spark, dir)).toDF("vec_id", "score")
+  }
+
+  /** [[qGraphSearch]]'s Spark arm: the beam over the persisted
+    * symmetric closure of [[qKnnGraph]]. */
+  private def beamServeGraph(spark: SparkSession, dir: String): Seq[(Long, Double)] = {
     val kg = qKnnGraph(spark, dir)
       .select(col("vec_id").as("u"), col("neighbor_id").as("v"))
     val edges = kg.union(kg.select(col("v").as("u"), col("u").as("v")))
@@ -2151,9 +2225,7 @@ object Ann {
     // edge table into the warm session's storage region (accumulated
     // caches starving execution memory is exactly the failure mode
     // GraftSession's storageFraction setting exists for)
-    try
-      beamServe(spark, dir, edges, queryId = 0L, entry = GraphSearchEntry)
-        .toDF("vec_id", "score")
+    try beamServe(spark, dir, edges, queryId = 0L, entry = GraphSearchEntry)
     finally edges.unpersist(false)
   }
 

@@ -847,18 +847,31 @@ object Hnsw {
       l -= 1
     }
     val entries = if (frontier.nonEmpty) frontier else Seq(img.entry)
+    beamSearch(entries, nbrs(0, _), sc, selfId, ef, hopCap, k, exclude)
+  }
+
+  /** The layer-0 beam of [[serveVec]] and of [[Ann.qGraphSearch]]'s
+    * in-process arm, step for step [[Ann.beamServeFrom]]'s loop: score
+    * the entries, expand the beam's neighbours hop by hop, score the
+    * fresh ones, recompute the beam as the best `width` of ALL visited
+    * (`selfId` excluded), stop at `hops` or when no fresh node appears
+    * (a fixpoint), and report the top `k` visited by score desc, id asc,
+    * without `selfId` and `exclude` (tombstones stay navigable). */
+  private[graft] def beamSearch(entries: Seq[Long], nbrs: Long => Array[Long],
+      sc: Long => Double, selfId: Long, width: Int, hops: Int, k: Int,
+      exclude: Set[Long] = Set.empty): Seq[(Long, Double)] = {
     var visited: Map[Long, Double] =
       entries.distinct.map(id => id -> sc(id)).toMap
     var beam: Seq[Long] = entries.distinct
     var hop = 0
     var done = false
-    while (hop < hopCap && !done) {
-      val out = beam.flatMap(nbrs(0, _)).distinct
+    while (hop < hops && !done) {
+      val out = beam.flatMap(nbrs(_)).distinct
       val fresh = out.filterNot(visited.contains)
       if (fresh.isEmpty) done = true
       else visited = visited ++ fresh.map(id => id -> sc(id))
       beam = visited.toSeq.filter(_._1 != selfId)
-        .sortBy { case (id, s) => (-s, id) }.take(ef).map(_._1)
+        .sortBy { case (id, s) => (-s, id) }.take(width).map(_._1)
       hop += 1
     }
     visited.toSeq

@@ -8,18 +8,21 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.{DotProduct, Hash60, MinKPairAggregator, TopKAggregator}
 
-/** The in-process arm of [[Hnsw.buildIndex]]: one layer's build run in
-  * plain Scala over its collected rows, step for step the Spark arm's
-  * plan — [[Hnsw.qHnswLevels]]'s levels and entry, [[Ann.lshTables]]
-  * buckets, the [[Ann.qKnnJoinG]] top-k, the [[Ann.refineKnnGraph]]
-  * rounds with their XOR-folded `xxhash64` stop rule, the
-  * [[Hnsw.heuristicEdges]] pool and [[Hnsw.selectDiverse]], the
-  * [[Ann.seedEdges]] quotas and the symmetric closure. Scores come from
+/** The in-process arm of the graph family: [[Hnsw.buildIndex]]'s
+  * layer build and the registry kNN graph ([[Ann.qKnnGraph]],
+  * [[Ann.qGraphSearch]]), run in plain Scala over collected rows, step
+  * for step the Spark arm's plan — [[Hnsw.qHnswLevels]]'s levels and
+  * entry, [[Ann.lshTables]] buckets, the [[Ann.qKnnJoinG]] top-k, the
+  * seeded [[Ann.qKnnGraphG]] round and the [[Ann.refineKnnGraph]]
+  * rounds with their XOR-folded `xxhash64` stop rule ([[knnGraph]]),
+  * then for a layer the [[Hnsw.heuristicEdges]] pool and
+  * [[Hnsw.selectDiverse]], the [[Ann.seedEdges]] quotas and the
+  * symmetric closure ([[layerEdges]]). Scores come from
   * [[DotProduct.score]] and every bounded ranking keeps the aggregators'
   * own order ([[TopKAggregator.better]], [[MinKPairAggregator.smaller]]),
-  * so the edges equal the Spark arm's bit for bit (HnswBuildSpec pins
-  * it). Nodes are addressed by their index in ascending-id order, so
-  * index order IS the id tie-break. */
+  * so the output equals the Spark arm's bit for bit (HnswBuildSpec and
+  * KnnGraphSpec pin it). Nodes are addressed by their index in
+  * ascending-id order, so index order IS the id tie-break. */
 private[graft] object HnswLocal {
 
   /** A layer's rows in ascending id order: ids, vectors, L2 norms. */
@@ -82,7 +85,7 @@ private[graft] object HnswLocal {
   }
 
   /** A scored graph: per node, neighbor indices and scores in rank order. */
-  private final class Graph(val nbr: Array[Array[Int]],
+  final class Graph(val nbr: Array[Array[Int]],
       val sc: Array[Array[Double]])
 
   /** The first `k` of `xs` under the strict order `before` — the
@@ -127,11 +130,12 @@ private[graft] object HnswLocal {
     out.map(_.result())
   }
 
-  /** Build one layer's symmetric edge set `(u, v)` as corpus ids. */
-  def layerEdges(r: Rows, k: Int, heuristic: Boolean): Array[(Long, Long)] = {
-    val n = r.n
-    val dedup = new Dedup(n)
-    def score(i: Int, j: Int): Double =
+  /** The NN-Descent steps over one set of rows, each the in-memory
+    * form of the Spark plan named beside it. */
+  private final class Steps(r: Rows) {
+    private val n = r.n
+    private val dedup = new Dedup(n)
+    private def score(i: Int, j: Int): Double =
       DotProduct.score(r.vecs(i), r.nrm(i), r.vecs(j), r.nrm(j))
     // rankGraphCandidates: exact scores, top-k per node
     def rank(cand: Array[Array[Int]], kk: Int): Graph = {
@@ -148,7 +152,7 @@ private[graft] object HnswLocal {
       new Graph(nbr, sc)
     }
     // cappedReverse: per target, its k best sources by edge score
-    def cappedReverse(g: Graph): Array[Array[Int]] = {
+    def cappedReverse(g: Graph, k: Int): Array[Array[Int]] = {
       val src = Array.fill(n)(Array.newBuilder[Int])
       val srcSc = Array.fill(n)(Array.newBuilder[Double])
       g.nbr.indices.foreach { u =>
@@ -196,31 +200,47 @@ private[graft] object HnswLocal {
         h ^= XXH64.hashLong(r.ids(y), XXH64.hashLong(r.ids(x), 42L))))
       h
     }
+  }
 
+  /** The refined kNN graph of `r` at `geo`: the [[Ann.qKnnJoinG]] base,
+    * the seeded [[Ann.qKnnGraphG]] round, then [[Ann.refineKnnGraph]]
+    * rounds until the XOR-folded edge checksum repeats or `rounds`
+    * rounds have run (1 = the seeded round alone). */
+  def knnGraph(r: Rows, geo: AnnGeometry, k: Int, rounds: Int): Graph = {
+    val st = new Steps(r)
+    import st._
     // qKnnJoinG: bucket-mates in any table, top-k
-    val base = rank(bucketMates(r, AnnGeometry.forCorpus(n)), k)
+    val base = rank(bucketMates(r, geo), k)
     // qKnnGraphG: the seeded first round
     val seeds = seedEdges(k)
     var g = rank(localJoin(
-      union(base.nbr, cappedReverse(base), seeds, minK(reverse(seeds), k)),
+      union(base.nbr, cappedReverse(base, k), seeds, minK(reverse(seeds), k)),
       base.nbr, seeds), k)
     // refineKnnGraph: further rounds until the edge checksum repeats
     var sum0 = checksum(g)
     var converged = false
     var round = 1
-    while (round < Ann.RefineRounds && !converged) {
-      val next = rank(localJoin(union(g.nbr, cappedReverse(g)), g.nbr), k)
+    while (round < rounds && !converged) {
+      val next = rank(localJoin(union(g.nbr, cappedReverse(g, k)), g.nbr), k)
       val s1 = checksum(next)
       converged = s1 == sum0
       sum0 = s1
       g = next
       round += 1
     }
+    g
+  }
+
+  /** Build one layer's symmetric edge set `(u, v)` as corpus ids. */
+  def layerEdges(r: Rows, k: Int, heuristic: Boolean): Array[(Long, Long)] = {
+    val g = knnGraph(r, AnnGeometry.forCorpus(r.n), k, Ann.RefineRounds)
+    val st = new Steps(r)
+    import st._
     val long = seedEdges(Hnsw.LongRangeEdges)
     val picked: Array[Array[Long]] =
       if (heuristic) {
         val pool = rank(union(g.nbr, reverse(g.nbr), long), 3 * k)
-        Array.tabulate(n) { x =>
+        Array.tabulate(r.n) { x =>
           Hnsw.selectDiverse(pool.nbr(x).indices.map { j =>
             val y = pool.nbr(x)(j)
             (pool.sc(x)(j), r.ids(y), r.vecs(y), r.nrm(y))

@@ -46,6 +46,20 @@ class BenchSpec extends AnyFunSuite {
         "from a truncated map exactly when the line must show it")
   }
 
+  test("lineRows: at most 10 failed rows, the slowest timings stay " +
+      "visible") {
+    val failed = (1 to 50).map(i => f"bad$i%02d" -> Bench.FailureSentinel)
+    val timed = (1 to 10).map(i => s"t$i" -> i.toDouble)
+    val rows = Bench.lineRows(failed ++ timed)
+    assert(rows.map(_._1) ===
+      (1 to 10).map(i => f"bad$i%02d") ++ (10 to 1 by -1).map(i => s"t$i"))
+    // with few failures the map still fills to 40, slowest first
+    val many = (1 to 60).map(i => f"q$i%02d" -> i.toDouble)
+    val some = Bench.lineRows(Seq("broken" -> Bench.FailureSentinel) ++ many)
+    assert(some.size === 40)
+    assert(some.map(_._1) === "broken" +: (60 to 22 by -1).map(i => f"q$i%02d"))
+  }
+
   test("stallCount: a row with any sentinel iteration counts ZERO " +
       "stalls — breakage is not host noise") {
     // with the sentinel as median (-1.0), the 5×-median test read the

@@ -1,9 +1,12 @@
 package graft
 package search
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.SparkThrowable
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.functions.VectorFunctions._
 import graft.operators.{Ann, Search}
@@ -11,8 +14,68 @@ import graft.operators.{Ann, Search}
 /** NN-Descent round + binary-quantization serving: the refinement must
   * strictly improve graph recall against brute force (the reason the
   * round exists), and the Hamming shortlist must be the true Hamming
-  * top-50 with exact rescoring. */
+  * top-50 with exact rescoring. The registry graph rows' in-process arm
+  * is pinned to their Spark arm, which runs when
+  * `spark.sql.adaptive.advisoryPartitionSizeInBytes` is 1 byte. */
 class KnnGraphSpec extends SparkSpec {
+
+  private val Adv = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+
+  private def withConf[T](key: String, value: String)(f: => T): T = {
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try f
+    finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  /** A fresh table directory holding `f` of the embeddings at `src`:
+    * the engine's caches are keyed by directory, so every run gets its
+    * own. */
+  private def corpus(src: String)(f: DataFrame => DataFrame): String = {
+    val d = java.nio.file.Files.createTempDirectory("knn_graph").toString
+    f(Tables.embeddings(spark, src)).write.parquet(s"$d/embeddings.parquet")
+    d
+  }
+
+  private final case class Out(rows: Seq[Row], schema: StructType,
+      localBuilds: Long, jobs: Int)
+
+  /** `query` fully collected over `dir`, with the in-process builds and
+    * the Spark jobs it ran. */
+  private def run(dir: String)(query: (SparkSession, String) => DataFrame): Out = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    val b0 = Ann.localGraphBuilds.get()
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val df = query(spark, dir)
+      val rows = df.collect().toSeq
+      // listener events arrive asynchronously
+      Thread.sleep(500)
+      Out(rows, df.schema, Ann.localGraphBuilds.get() - b0, jobs.get)
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  /** Both arms of `query` on fresh copies of `f` of `src`: default
+    * settings first, then the Spark arm. */
+  private def arms(src: String, f: DataFrame => DataFrame = identity)(
+      query: (SparkSession, String) => DataFrame): (Out, Out) = {
+    val local = run(corpus(src)(f))(query)
+    val dist = withConf(Adv, "1")(run(corpus(src)(f))(query))
+    assert(dist.localBuilds === 0, "the 1-byte setting must force the Spark arm")
+    assert(local.rows === dist.rows)
+    assert(local.schema === dist.schema)
+    (local, dist)
+  }
+
+  private val graphRows: Seq[(String, (SparkSession, String) => DataFrame)] =
+    Seq("q_knn_graph" -> (Ann.qKnnGraph _), "q_graph_search" -> (Ann.qGraphSearch _))
 
   /** Brute-force top-3 graph edges (vec_id, neighbor_id) — the ground
     * truth both operators approximate. */
@@ -162,5 +225,57 @@ class KnnGraphSpec extends SparkSpec {
     val scores = out.map(r => (r.getDouble(2), r.getLong(0)))
     assert(scores.sliding(2).forall(w => w.length < 2 ||
       (w(0)._1 > w(1)._1 || (w(0)._1 == w(1)._1 && w(0)._2 < w(1)._2))))
+  }
+
+  test("registry graph rows: the in-process arm equals the Spark arm " +
+      "at 500 and 2000 vectors, in one collect") {
+    val sf01 = s"${new java.io.File(sfDir).getParent}/sf0.1"
+    for (src <- Seq(sfDir, sf01); (name, q) <- graphRows) {
+      val (local, dist) = arms(src)(q)
+      assert(local.localBuilds === 1, s"$name at $src ran on the Spark arm")
+      assert(local.rows.nonEmpty)
+      // schema read, the two-stage count/width aggregate, one collect,
+      // and for q_knn_graph the session cache's fill
+      info(s"$name at $src: ${local.jobs} jobs in-process, ${dist.jobs} on Spark")
+      assert(local.jobs <= 5, s"$name at $src: ${local.jobs} jobs")
+      assert(dist.jobs > local.jobs)
+    }
+  }
+
+  test("registry graph rows: a corpus without the entry, without the " +
+      "query, or of one row — both arms agree") {
+    val cases: Seq[DataFrame => DataFrame] = Seq(
+      _.filter(col("vec_id") =!= Ann.GraphSearchEntry),
+      _.filter(col("vec_id") =!= 0L),
+      _.orderBy("vec_id").limit(1))
+    for (f <- cases; (name, q) <- graphRows) {
+      val (local, _) = arms(sfDir, f)(q)
+      // the graph itself stays in-process; the beam needs both ids
+      assert(local.localBuilds === 1, name)
+    }
+    // the beam over a graph without its entry finds nothing
+    assert(arms(sfDir, cases(0))(Ann.qGraphSearch)._1.rows.isEmpty)
+  }
+
+  test("registry graph rows: a planted zero vector sends both settings " +
+      "to the Spark arm, which fails with DIVIDE_BY_ZERO") {
+    // AQE may wrap concurrent stage failures in one multi-failure error
+    def conditions(t: Throwable): Seq[String] =
+      (t match {
+        case s: SparkThrowable => Seq(s.getCondition)
+        case _ => Nil
+      }) ++ Option(t.getCause).toSeq.flatMap(conditions) ++
+        t.getSuppressed.toSeq.flatMap(conditions)
+    val zero: DataFrame => DataFrame = _.withColumn("embedding",
+      when(col("vec_id") === 3L, expr("array_repeat(cast(0.0 as float), 64)"))
+        .otherwise(col("embedding")))
+    for ((name, q) <- graphRows; adv <- Seq(None, Some("1"))) {
+      val b0 = Ann.localGraphBuilds.get()
+      val d = corpus(sfDir)(zero)
+      val err = intercept[Exception](adv.fold(q(spark, d).collect())(
+        a => withConf(Adv, a)(q(spark, d).collect())))
+      assert(conditions(err).contains("DIVIDE_BY_ZERO"), s"$name $adv: $err")
+      assert(Ann.localGraphBuilds.get() === b0, s"$name $adv")
+    }
   }
 }

@@ -1,10 +1,11 @@
 package graft
+import scala.util.Try
 import scala.util.control.NonFatal
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main — one JSON line per run (driver contract).
   *
-  * A warmup pass runs every query once at the smallest scale factor
+  * A cold pass runs every query once at the target scale factor
   * before timing: it pays JIT/codegen/classloading once, the way a
   * long-lived cluster session would, so the timed numbers measure the
   * operators rather than JVM startup. Queries are timed in sorted name
@@ -13,20 +14,18 @@ import org.apache.spark.sql.SparkSession
   * Host-stall hardening: a shared host can freeze the JVM for seconds
   * mid-iteration (the BENCH_r06 artifact: alphabetically-contiguous
   * blocks of inflated timings from stall windows sweeping the run
-  * order). Each query therefore runs SPARK_GRAFT_BENCH_ITERS (default
-  * 3) times; the reported per-query number and the headline total are
-  * MEDIANS — one stalled iteration out of three cannot move them —
-  * and the line also carries the min-total plus `stall_iters`, the
-  * count of iterations that diverged >5× (and >1 s) from their
-  * query's median, so a contaminated run is self-identifying instead
-  * of silently inflated.
+  * order). Each query therefore runs [[Iters]] times; the reported
+  * per-query number and the headline total are MEDIANS — one stalled
+  * iteration out of three cannot move them — and the line also
+  * carries the min-total plus `stall_iters`, the count of iterations
+  * that diverged >5× (and >1 s) from their query's median, so a
+  * contaminated run is self-identifying instead of silently inflated.
   *
   * Wall-clock hardening (round 13 — BENCH_r12 timed out at rc=124
-  * with nothing parseable): the warmup and cold passes run
-  * CONCURRENTLY (a bounded pool of SPARK_GRAFT_BENCH_COLD_PAR
-  * queries, default 8). Those passes exist to pay one-time artifact
-  * builds (index trains, layouts, session caches) up front; each
-  * build is a chain of small Spark jobs whose wall is scheduler
+  * with nothing parseable): the cold pass runs CONCURRENTLY (a
+  * bounded pool of [[ColdPar]] queries). It exists to pay one-time
+  * artifact builds (index trains, layouts, session caches) up front;
+  * each build is a chain of small Spark jobs whose wall is scheduler
   * latency, not CPU, so running a few queries' builds concurrently
   * overlaps that latency exactly the way a FAIR-scheduled cluster
   * would — and every artifact cache is a ConcurrentHashMap keyed per
@@ -46,7 +45,8 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
   /** Even-length inputs average the two middle values; shared with
-    * [[Sf1Probe]] so the two reports agree on what "median" means. */
+    * [[ScaleProbe]]'s `sf1` sweep so the two reports agree on what
+    * "median" means. */
   private[graft] def median(ts: Seq[Double]): Double = {
     require(ts.nonEmpty, "median of empty sequence")
     val s = ts.sorted
@@ -63,19 +63,49 @@ object Bench {
     * BENCH from laundering it. */
   private[graft] val FailureSentinel = -1.0
 
-  /** Time `body`; [[FailureSentinel]] if it throws. Factored out of
-    * the run loop so the sentinel contract is unit-testable without a
-    * SparkSession (BenchSpec pins it with a forced failure). */
-  private[graft] def timedOrSentinel(body: => Unit): Double = {
+  /** Time `body`, returning its wall in seconds with its result;
+    * [[FailureSentinel]] with the failure if it throws a NonFatal
+    * (fatal errors propagate). The one timer of the bench and of every
+    * [[ScaleProbe]] entry, factored out so the sentinel contract is
+    * unit-testable without a SparkSession (BenchSpec pins it with a
+    * forced failure). */
+  private[graft] def timedOrSentinel[A](body: => A): (Double, Try[A]) = {
     val t0 = System.nanoTime()
-    try { body; (System.nanoTime() - t0) / 1e9 }
-    catch { case scala.util.control.NonFatal(_) => FailureSentinel }
+    val r = Try(body)
+    (if (r.isSuccess) (System.nanoTime() - t0) / 1e9 else FailureSentinel, r)
   }
 
-  /** Run `f` over `xs` on a bounded pool, preserving input order in
-    * the result. Used ONLY for the untimed artifact passes. */
-  private def mapConcurrent[A, B](xs: Seq[A], par: Int)(f: A => B): Seq[B] =
-    graft.model.Pools.mapConcurrent(xs, par)(f)
+  /** Timed iterations per registry row; the row's number is their
+    * median. */
+  private[graft] val Iters = 3
+
+  /** Width of the concurrent cold pass. 8, not wider: the cold pass's
+    * PEAK memory scales with the slot count, and storage-evicting the
+    * persisted lineages the timed pass reuses trades a smaller cold
+    * wall for inflated medians (measured: 12 slots moved
+    * q_pipeline_full 6.3 → 13.4 s median). Wider than any
+    * artifact-sharing family, so a family's threads parked on one
+    * shared build cannot fill the pool. */
+  private val ColdPar = 8
+
+  /** One `action` over registry row `name` at `dir`, timed by
+    * [[timedOrSentinel]]; its jobs are labelled `bench:phase:name` so
+    * the UI / event log maps stages back to registry rows (guide §1.5;
+    * the description is thread-local, so concurrent passes label
+    * correctly per pool thread). The one per-row timer of [[Bench]]
+    * (`.count()`) and of [[ScaleProbe]]'s `sf1` sweep (the `noop`
+    * sink). */
+  private[graft] def timeRow(spark: SparkSession, dir: String,
+      name: String, phase: String)(action: DataFrame => Unit): Double = {
+    spark.sparkContext.setJobDescription(s"bench:$phase:$name")
+    try timedOrSentinel(action(SparkEntry.queries(name)(spark, dir)))._1
+    finally spark.sparkContext.setJobDescription(null)
+  }
+
+  /** [[Iters]] consecutive timed [[timeRow]]s of `name`. */
+  private[graft] def timeIters(spark: SparkSession, dir: String,
+      name: String)(action: DataFrame => Unit): Seq[Double] =
+    (1 to Iters).map(_ => timeRow(spark, dir, name, "timed")(action))
 
   /** Truncation order for the parseable line's per-query map: FAILED
     * rows (sentinel) first — a failed query must never be truncated
@@ -126,7 +156,7 @@ object Bench {
       .getOrCreate()
     GraftSession.setLogLevel(spark, "WARN")
 
-    val names = SparkEntry.queries.toSeq.sortBy(_._1)
+    val names = SparkEntry.queries.keys.toSeq.sorted
     // Artifact-pass submission order + pool width are convoy defenses:
     // artifact-SHARING families (the four q_hnsw_incr* rows behind one
     // work-dir build; the sharded/filtered pair behind one layout)
@@ -134,19 +164,11 @@ object Bench {
     // small pool filled by ALPHABETICALLY-ADJACENT family members
     // degrades to ~1 effective runner for that build's duration (the
     // r13 first-cut convoy). Blocked threads cost nothing, so the pool
-    // is wider than a family (8), and submission order is a deterministic name-hash
-    // spread so family members don't claim contiguous slots. The
-    // TIMED pass stays alphabetical and sequential — unchanged
-    // protocol, run-to-run comparability.
-    val spread = names.sortBy { case (n, _) =>
-      scala.util.hashing.MurmurHash3.stringHash(n)
-    }
-    // 8, not wider: the cold pass's PEAK memory scales with the slot
-    // count, and storage-evicting the persisted lineages the timed
-    // pass reuses trades a smaller cold wall for inflated medians
-    // (measured: 12 slots moved q_pipeline_full 6.3 → 13.4 s median)
-    val coldPar =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_COLD_PAR", "8").toInt
+    // is wider than a family ([[ColdPar]]), and submission order is a
+    // deterministic name-hash spread so family members don't claim
+    // contiguous slots. The TIMED pass stays alphabetical and
+    // sequential — unchanged protocol, run-to-run comparability.
+    val spread = names.sortBy(scala.util.hashing.MurmurHash3.stringHash)
 
     // No separate small-sf warmup pass (dropped round 13): its JIT/
     // codegen/classloading role is subsumed by the recorded cold pass
@@ -154,15 +176,7 @@ object Bench {
     // timed — while its sf0.001 artifacts and persisted lineages
     // squatted in storage memory for the whole run (evicting the
     // sf0.1 lineages the timed pass reuses) and cost ~275 s of wall
-    // at the 194-query registry. SPARK_GRAFT_WARM_DIR re-enables it.
-    val t0Run = System.nanoTime()
-    sys.env.get("SPARK_GRAFT_WARM_DIR").filter(d =>
-      new java.io.File(d).exists()).foreach { warmDir =>
-      mapConcurrent(spread, coldPar) { case (_, fn) =>
-        try fn(spark, warmDir).count() catch { case NonFatal(_) => () }
-      }
-    }
-    val tWarmup = (System.nanoTime() - t0Run) / 1e9
+    // at the 194-query registry.
 
     // steady-state latency: one recorded COLD pass over the WHOLE
     // registry at the target sf first (pays every session-cache /
@@ -175,25 +189,17 @@ object Bench {
     // context serves many queries, not one). With the cold pass
     // outside the timed set, stall_iters counts ONLY genuine mid-run
     // divergence (r7 verdict item 5).
-    val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt
-    // guide §1.5: label every query's jobs so the UI / event log maps
-    // stages back to registry rows. setJobDescription is thread-local,
-    // so the concurrent cold pass labels correctly per pool thread.
-    def once(name: String, phase: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      spark.sparkContext.setJobDescription(s"bench:$phase:$name")
-      val dt = timedOrSentinel { fn(spark, sfDir).count(): Unit }
-      spark.sparkContext.setJobDescription(null)
-      dt
-    }
+    val count: DataFrame => Unit = _.count()
     val t0Cold = System.nanoTime()
-    val colds = mapConcurrent(spread, coldPar) { case (name, fn) =>
-      name -> once(name, "cold", fn)
+    // the untimed artifact pass runs on a bounded pool, input order
+    // preserved
+    val colds = graft.model.Pools.mapConcurrent(spread, ColdPar) { name =>
+      name -> timeRow(spark, sfDir, name, "cold")(count)
     }.toMap
     val tColdWall = (System.nanoTime() - t0Cold) / 1e9
     // phase marker (pre-timed, so it can never pollute the parseable
     // tail): lets a wall regression be attributed without rerunning
-    println(f"[bench] warmup_wall=$tWarmup%.0fs cold_wall=$tColdWall%.0fs")
+    println(f"[bench] cold_wall=$tColdWall%.0fs")
     System.out.flush()
     // settle before timing: re-materialize the session cache (the
     // cold pass's concurrent execution pressure evicts persisted
@@ -250,9 +256,8 @@ object Bench {
 
     val raw = scala.collection.mutable.ArrayBuffer
       .empty[(String, Double, Seq[Double])]
-    names.foreach { case (name, fn) =>
-      raw += ((name, colds(name),
-        (1 to iters).map(_ => once(name, "timed", fn))))
+    names.foreach { name =>
+      raw += ((name, colds(name), timeIters(spark, sfDir, name)(count)))
       // refresh the parseable tail after EVERY query: a timeout leaves
       // the last refresh — a correct line over the prefix timed so far
       val sofar = raw.toSeq
@@ -272,7 +277,7 @@ object Bench {
     }.mkString("{", ",", "}")
     try java.nio.file.Files.write(
       java.nio.file.Paths.get("bench_full.json"),
-      s"""{"metric":"total","value":${results.map(_._2).sum},"unit":"sec","min_total":$minTotal,"stall_iters":$stallIters,"cold_par":$coldPar,"warmup_wall":${f"$tWarmup%.1f"},"cold_wall":${f"$tColdWall%.1f"},"queries":$full,"sf":"$sfDir"}""".getBytes("UTF-8"))
+      s"""{"metric":"total","value":${results.map(_._2).sum},"unit":"sec","min_total":$minTotal,"stall_iters":$stallIters,"cold_par":$ColdPar,"cold_wall":${f"$tColdWall%.1f"},"queries":$full,"sf":"$sfDir"}""".getBytes("UTF-8"))
     catch { case NonFatal(_) => () }
     spark.stop()
     println(line)

@@ -1,19 +1,66 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.lang.management.ManagementFactory
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Scale experiment: replicate the documents corpus N× (planted exact
-  * duplicates with shifted ids), write it as a derived table, and time
-  * the scale-critical operators against it. Answers "does the plan
-  * hold at k× the data" empirically, and doubles as an end-to-end
-  * dedup correctness check — every fingerprint group must contain
-  * exactly N members.
+import graft.api.{CurationPipeline, IndexPipeline}
+import graft.operators.{Ann, Hnsw, IncrementalIndex => II, Search}
+
+/** The probe harness: a table of named entries, each one a claim an
+  * open ROADMAP item still needs a number for, run against corpora
+  * derived ×`mult` from the tables at `sfDir` and timed by the bench's
+  * one timer ([[Bench.timedOrSentinel]]). Prints ONE JSON line,
+  * `{"probe":"scale","sf":…,"mult":…,"<entry>":{"sec":…,"result":{…}}}`;
+  * a failed entry records the sentinel `sec` and its `error` instead,
+  * and the run exits non-zero. Settled probes were retired with their
+  * code; SCALE.md's retired-probe index names the commit that still
+  * holds each one.
   *
-  * Usage: runMain graft.ScaleProbe [sfDir] [multiplier] [workDir] [only]
-  * (`only` = comma-separated probe names for a targeted run)
+  * Usage: runMain graft.ScaleProbe [sfDir] [mult] [workDir] [only]
+  *
+  * `only` is a comma-separated list of entry names and registry row
+  * names: row names restrict the `sf1` sweep to those rows (and select
+  * it), so `sf1` at mult 1 times named rows in one warm session. An
+  * unknown name fails before any corpus is built.
   */
 object ScaleProbe {
+
+  /** An ordered JSON object; [[json]] renders it. */
+  private[graft] final case class Obj(fields: (String, Any)*)
+
+  /** The probe table, in run order. */
+  private val Entries: Seq[(String, Ctx => Any)] = Seq(
+    "pipeline_full" -> (pipelineFull _),
+    "pipeline_stages" -> (pipelineStages _),
+    "sf1" -> (sf1 _),
+    "searchann_mutated" -> (searchAnnMutated _),
+    "hnsw_sharded" -> (hnswSharded _),
+    "qv_prune" -> (qvPrune _),
+    "hnsw_spill" -> (hnswSpill _),
+    "hnsw_build" -> ((c: Ctx) => hnswArms(c, graph = false)),
+    "hnsw_graph" -> ((c: Ctx) => hnswArms(c, graph = true)))
+
+  /** The entries `only` selects (all when empty) and the registry rows
+    * of the `sf1` sweep (all when `only` names none). Any other name
+    * throws, naming the known entries. */
+  private[graft] def select(only: Set[String]): (Seq[String], Seq[String]) = {
+    val registry = SparkEntry.queries.keySet
+    val unknown = only -- Entries.map(_._1) -- registry
+    if (unknown.nonEmpty)
+      throw new IllegalArgumentException(
+        s"unknown probe ${unknown.toSeq.sorted.mkString(", ")}; known " +
+          s"entries: ${Entries.map(_._1).mkString(", ")}, or any " +
+          "registry row name (selects sf1)")
+    val rows = only.intersect(registry).toSeq.sorted
+    val names = Entries.map(_._1).filter(n => only.isEmpty ||
+      only.contains(n) || (n == "sf1" && rows.nonEmpty))
+    (names, if (rows.isEmpty) registry.toSeq.sorted else rows)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val mult = args.lift(1).map(_.toInt).getOrElse(20)
@@ -21,111 +68,139 @@ object ScaleProbe {
       java.nio.file.Files.createTempDirectory("graft_scale").toString)
     val only: Set[String] =
       args.lift(3).map(_.split(",").toSet).getOrElse(Set.empty)
+    select(only)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
     GraftSession.setLogLevel(spark, "WARN")
+    val (line, failed) =
+      try run(spark, sfDir, mult, work, only) finally spark.stop()
+    println(line)
+    if (failed.nonEmpty) sys.exit(1)
+  }
 
-    // derived corpus: mult copies of every doc, ids shifted per replica
-    val docs = Tables.documents(spark, sfDir)
-    val n0 = docs.count()
-    docs.crossJoin(spark.range(mult).withColumnRenamed("id", "rep"))
-      .withColumn("doc_id", col("doc_id") + col("rep") * 10000000L)
-      .drop("rep")
-      .write.mode("overwrite").parquet(s"$work/documents.parquet")
-    // embeddings pass through (vector ops scale-tested at base size)
-    spark.read.parquet(s"$sfDir/embeddings.parquet")
-      .write.mode("overwrite").parquet(s"$work/embeddings.parquet")
-    // events: mult per-replica users, each with the base user's exact
-    // history — funnel/retention counts must then scale by exactly mult
-    // while every rate stays bit-identical to the base run
-    Tables.events(spark, sfDir)
-      .crossJoin(spark.range(mult).withColumnRenamed("id", "rep"))
-      .withColumn("user_id", col("user_id") + col("rep") * 10000000L)
-      .withColumn("event_id", col("event_id") + col("rep") * 1000000000L)
-      .drop("rep")
-      .write.mode("overwrite").parquet(s"$work/events.parquet")
+  /** Run the selected entries; returns the JSON line and the names of
+    * the entries that failed. Each entry runs as its own job: session
+    * caches are dropped first, so its time covers the operator's whole
+    * lineage. */
+  private[graft] def run(spark: SparkSession, sfDir: String, mult: Int,
+      work: String, only: Set[String]): (String, Seq[String]) = {
+    val (names, rows) = select(only)
+    val c = new Ctx(spark, sfDir, mult, work, rows)
+    val results = names.map { name =>
+      Cache.clear(spark)
+      spark.sharedState.cacheManager.clearCache()
+      spark.sparkContext.setJobDescription(s"probe:$name")
+      val (sec, r) = try Bench.timedOrSentinel(Entries.toMap.apply(name)(c))
+        finally spark.sparkContext.setJobDescription(null)
+      r.failed.foreach(e => System.err.println(s"[probe] $name failed: $e"))
+      (name, sec, r)
+    }
+    (json(Obj(Seq("probe" -> "scale", "sf" -> sfDir, "mult" -> mult) ++
+      results.map { case (name, sec, r) =>
+        name -> Obj("sec" -> sec, r.fold(
+          e => "error" -> String.valueOf(e.getMessage), "result" -> _))
+      }: _*)),
+      results.collect { case (name, _, r) if r.isFailure => name })
+  }
 
-    // base-scale answers for the exact-scaling checks (cheap: sf base)
-    val baseFunnel = operators.Events.qFunnel(spark, sfDir).collect()
-      .map(r => r.getLong(0) -> (r.getLong(2), r.getDouble(3))).toMap
-    val baseRet = operators.Events.qRetention(spark, sfDir).collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+  /** Compact JSON: [[Obj]] → object, Seq → array, doubles to 3
+    * decimals (non-finite → null). */
+  private[graft] def json(v: Any): String = v match {
+    case Obj(fs @ _*) =>
+      fs.map { case (k, x) => json(k) + ":" + json(x) }.mkString("{", ",", "}")
+    case xs: Seq[_] => xs.map(json).mkString("[", ",", "]")
+    case d: Double =>
+      if (d.isNaN || d.isInfinite) "null"
+      else BigDecimal(d).setScale(3, BigDecimal.RoundingMode.HALF_UP)
+        .underlying.stripTrailingZeros.toPlainString
+    case s: String => s.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case ch if ch < ' ' => f"\\u${ch.toInt}%04x"
+      case ch => ch.toString
+    }.mkString("\"", "", "\"")
+    case x => x.toString
+  }
 
-    /** Each probe runs as its own JOB: session caches are dropped
-      * first, so the time covers the operator's full lineage (shingle
-      * builds included) — the production shape, where a 100 TB dedup
-      * job does not share a JVM with the quality job. (Keeping every
-      * family's caches hot in one 8 GB driver made the 20× working set
-      * overflow storage memory and thrash — a real lesson: session
-      * caches need a per-job budget. The warm-session sharing story is
-      * what Bench measures at sf0.1.) */
-    def time[A](name: String)(f: => A): Option[(String, Double, A)] = {
-      if (only.nonEmpty && !only.contains(name)) None
-      else {
-        Cache.clear(spark)
-        spark.sharedState.cacheManager.clearCache()
-        val t0 = System.nanoTime()
-        val r = f
-        Some((name, (System.nanoTime() - t0) / 1e9, r))
+  /** `body`'s wall in seconds and its result, on the bench's timer;
+    * a failure propagates to the entry. */
+  private def wall[A](body: => A): (Double, A) = {
+    val (t, r) = Bench.timedOrSentinel(body)
+    (t, r.get)
+  }
+
+  /** One run's settings and its derived corpora, each built at most
+    * once per run and only when an entry reads it. */
+  private final class Ctx(val spark: SparkSession, val sfDir: String,
+      val mult: Int, val work: String, val rows: Seq[String]) {
+
+    /** `mult` copies of `df`: replica r moves each column of `shifts`
+      * by r × its unit, so keys stay distinct across replicas and
+      * joined within one; `derive` then sets columns from the replica
+      * number `rep` before it is dropped. */
+    def replicate(df: DataFrame, shifts: Seq[(String, Long)],
+        derive: (String, Column)*): DataFrame = {
+      val rep = df.crossJoin(spark.range(mult).withColumnRenamed("id", "rep"))
+      val shifted = shifts.foldLeft(rep) { case (d, (c, unit)) =>
+        d.withColumn(c, col(c) + col("rep") * unit)
       }
-    }
-
-    /** Replicated embeddings (identical vectors, shifted ids), built
-      * AT MOST ONCE per run however many probes consume it — three
-      * probes (emb_drift, pq_refine, cluster_cap) share the derived
-      * table; rebuilding it per probe would be two redundant
-      * corpus-scale write passes. Lazy so a targeted `only` run that
-      * skips all three never pays the build. */
-    lazy val embxDir: String = {
-      spark.read.parquet(s"$sfDir/embeddings.parquet")
-        .crossJoin(spark.range(mult).withColumnRenamed("id", "rep"))
-        .withColumn("vec_id", col("vec_id") + col("rep") * 10000000L)
+      derive.foldLeft(shifted) { case (d, (c, e)) => d.withColumn(c, e) }
         .drop("rep")
-        .write.mode("overwrite").parquet(s"$work/embx/embeddings.parquet")
-      s"$work/embx"
     }
 
-    /** Sign-flip replicated embeddings WITH labels — the distinct-
-      * vector derived corpus the serving probes share (filtered
-      * sharded serve, one-pass fan-out, LSM lifecycle, streaming
-      * loop). One build, many consumers; lazy like [[embxDir]]. */
+    private def write(df: DataFrame, dir: String, table: String): Unit =
+      df.write.mode("overwrite").parquet(s"$dir/$table.parquet")
+
+    /** The documents, `mult` exact copies with shifted ids. */
+    private def docs = replicate(Tables.documents(spark, sfDir),
+      Seq("doc_id" -> 10000000L))
+
+    lazy val docsDir: String = {
+      val d = s"$work/docs"
+      write(docs, d, "documents")
+      d
+    }
+
+    /** Every fact table replicated, with per-replica id shifts that
+      * keep join keys consistent within a replica; the dimension
+      * tables pass through (their cardinality is scale-invariant). */
+    lazy val sf1Dir: String = {
+      val d = s"$work/sf1"
+      write(docs, d, "documents")
+      write(replicate(Tables.events(spark, sfDir),
+        Seq("user_id" -> 10000000L, "event_id" -> 1000000000L)), d, "events")
+      // lineitem and orders shift the SAME order-key unit so every
+      // replica keeps its fact-fact join intact
+      write(replicate(Tables.lineitem(spark, sfDir),
+        Seq("l_orderkey" -> 100000000L)), d, "lineitem")
+      write(replicate(Tables.orders(spark, sfDir),
+        Seq("o_orderkey" -> 100000000L)), d, "orders")
+      write(replicate(Tables.embeddings(spark, sfDir),
+        Seq("vec_id" -> 10000000L)), d, "embeddings")
+      Seq("region", "nation", "customer", "supplier", "part").foreach(t =>
+        write(Tables.t(spark, sfDir, t), d, t))
+      d
+    }
+
+    /** Sign-flip replicated embeddings with labels: distinct vectors
+      * (replica r > 0 flips a hash-chosen half of the coordinates),
+      * the corpus the serving entries share. */
     lazy val hnswProbeDir: String = {
-      val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-        .select("vec_id", "embedding")
-      val nBase = emb.count()
-      emb.crossJoin(spark.range(mult).withColumnRenamed("id", "rep"))
-        .withColumn("embedding", expr(
+      val emb = Tables.embeddings(spark, sfDir).select("vec_id", "embedding")
+      val d = s"$work/hm"
+      write(replicate(emb, Seq("vec_id" -> emb.count()),
+        "embedding" -> expr(
           "transform(embedding, (x, i) -> CASE WHEN rep = 0 THEN x " +
             "WHEN pmod(hash(rep, i), 2) = 0 THEN x ELSE -x END)"))
-        .withColumn("vec_id", col("vec_id") + col("rep") * nBase)
-        .drop("rep")
-        .withColumn("label", pmod(col("vec_id"), lit(8L)))
-        .write.mode("overwrite").parquet(s"$work/hm/embeddings.parquet")
-      s"$work/hm"
+        .withColumn("label", pmod(col("vec_id"), lit(8L))), d, "embeddings")
+      d
     }
 
-    /** Clustered corpus: 16 planted clusters on one-hot axes of R^64
-      * with deterministic jitter — the shape routing exists for. One
-      * build, shared by the routed, margin-grid, hot-cell, and
-      * routed-LSM probes; lazy like [[embxDir]]. */
-    lazy val routedClusteredDir: String = {
-      val n = spark.read.parquet(s"$hnswProbeDir/embeddings.parquet")
-        .count()
-      val cdir = s"$work/routed_clustered"
-      spark.range(n).select(col("id").as("vec_id"), expr(
-        "transform(sequence(0, 63), j -> CAST((CASE WHEN j = " +
-          "(id % 16) * 4 THEN 1.0 ELSE 0.0 END) + " +
-          "0.05 * (pmod(hash(id, j), 7) - 3) AS FLOAT))")
-        .as("embedding"))
-        .write.mode("overwrite").parquet(s"$cdir/embeddings.parquet")
-      cdir
-    }
-
-    /** Exact brute-force top-10 for queries `vec_id < 40` of `dir` —
-      * the recall denominator every routed/serving probe shares. */
+    /** Exact brute-force top-10 for queries `vec_id < 40` of `dir`,
+      * the query itself excluded — the recall denominator. */
     def bruteTop10(dir: String): Map[Long, Set[Long]] = {
       import graft.functions.VectorFunctions.{cosinePrenormed, dot}
-      val e = operators.Search.embNormed(spark, dir)
+      val e = Search.embNormed(spark, dir)
       val qv = e.filter(col("vec_id") < 40)
         .select(col("vec_id").as("qid"),
           col("embedding").as("qv"), col("nrm").as("qn"))
@@ -143,2218 +218,314 @@ object ScaleProbe {
         .map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
     }
 
-    val results = Seq(
-      time("exact_dedup") {
-        val g = operators.Dedup.qDedupExact(spark, work)
-        val bad = g.filter(col("n_docs") =!= mult.toLong).count()
-        s"groups=${g.count()} wrong_size=$bad"
-      },
-      time("minhash_candidates") {
-        val c = operators.Dedup.qDedupMinhash(spark, work)
-        val perfect = c.filter(col("jaccard") === 1.0).count()
-        s"pairs=${c.count()} perfect=$perfect"
-      },
-      time("simhash") {
-        s"docs=${operators.Dedup.qDedupSimhash(spark, work).count()}"
-      },
-      time("simhash_rep") {
-        // exact-first composition: under ×mult replication the pairwise
-        // stage must see only the BASE corpus's distinct texts — the
-        // rep-level rows are bit-identical to the base run (same rep
-        // pairs, same hamming) with doc_pairs exactly ×mult², so output
-        // stays FLAT where the all-pairs audit twin grows ×mult²
-        // (222M rows at 10× sf0.1). The timed span includes the cheap
-        // base-scale reference run.
-        val base = operators.Dedup.qSimhashRep(spark, sfDir).collect()
-          .map(r => (r.getLong(0), r.getLong(1)) ->
-            (r.getLong(2), r.getLong(3))).toMap
-        val scaled = operators.Dedup.qSimhashRep(spark, work).collect()
-        val m2 = mult.toLong * mult
-        val exact = scaled.length == base.size && scaled.forall { r =>
-          base.get((r.getLong(0), r.getLong(1)))
-            .exists { case (h, p) =>
-              h == r.getLong(2) && p * m2 == r.getLong(3) }
-        }
-        s"pairs=${scaled.length} base_pairs=${base.size} exact_mult2=$exact"
-      },
-      time("keyword_freq") {
-        s"rows=${operators.TextAnalysis.qKeywordFreq(spark, work).count()}"
-      },
-      time("semantic_search") {
-        s"rows=${operators.Search.qSearchSemantic(spark, work).count()}"
-      },
-      time("boilerplate") {
-        // replication makes every trigram corpus-shared (df ≥ mult), so
-        // the probe's correctness check is that NOTHING survives the
-        // keep flag — the operator must recognize a fully-templated
-        // corpus as fully boilerplate.
-        val b = operators.Curation.qBoilerplate(spark, work)
-        s"rows=${b.count()} kept=${b.filter(col("keep")).count()}"
-      },
-      time("rarity") {
-        s"rows=${operators.Curation.qRarity(spark, work).count()}"
-      },
-      time("gopher_rules") {
-        s"rows=${operators.Quality.qGopherRules(spark, work).count()}"
-      },
-      time("substr_dedup") {
-        // every replica-k>0 doc's grams all exist under a replica-0
-        // doc_id, so first-occurrence-wins must drop ≥ (mult-1)/mult
-        // of the corpus; survivors are a subset of replica 0.
-        val s = operators.Quality.qSubstrDedup(spark, work)
-        val kept = s.filter(col("keep")).count()
-        s"rows=${s.count()} kept=$kept kept_outside_rep0=${
-          s.filter(col("keep") && col("doc_id") >= 10000000L).count()}"
-      },
-      time("winnow_pairs") {
-        // replicas share every fingerprint: the top pairs must all be
-        // perfect-overlap (sim = 1.0)
-        val p = operators.Quality.qWinnow(spark, work)
-        s"pairs=${p.count()} perfect=${p.filter(col("sim") === 1.0).count()}"
-      },
-      time("ppl_bucket") {
-        s"rows=${operators.Quality.qPplBucket(spark, work).count()}"
-      },
-      time("lsh_tune") {
-        // every replica pair agrees on all 16 minima, so it collides in
-        // EVERY band of every config: each config's candidate and
-        // est-half counts must cover all planted pairs; and because the
-        // band boundaries nest (an r=8 band is two whole r=4 bands),
-        // candidates must be monotone non-increasing in rows-per-band
-        val planted = n0 * mult.toLong * (mult - 1) / 2
-        val t = operators.Dedup.qLshTune(spark, work)
-          .orderBy("rows_per_band").collect()
-        val cands = t.map(_.getLong(2))
-        val est = t.map(_.getLong(3))
-        val covers = cands.forall(_ >= planted) && est.forall(_ >= planted)
-        val mono = cands.sliding(2).forall(p => p(0) >= p(1))
-        s"cands=${cands.mkString("/")} covers_planted=$covers monotone=$mono"
-      },
-      time("semdedup") {
-        // exact replicas are jaccard-1.0 pairs, so all mult replicas of
-        // a base doc land in one component; sizes are therefore exact
-        // multiples of mult, and the keep-best representative (max
-        // n_chars, min doc_id tie-break) must ALWAYS be a replica-0 doc
-        val g = operators.Dedup.qSemdedup(spark, work)
-        val badSize = g.filter(col("group_size") % mult =!= 0).count()
-        val badRep = g.filter(col("kept_doc") >= 10000000L).count()
-        s"groups=${g.count()} size_not_mult_of_$mult=$badSize non_rep0_kept=$badRep"
-      },
-      time("funnel") {
-        val f = operators.Events.qFunnel(spark, work).collect()
-        val exact = f.forall { r =>
-          val (bn, bc) = baseFunnel(r.getLong(0))
-          r.getLong(2) == bn * mult && r.getDouble(3) == bc
-        }
-        s"steps=${f.length} counts_x${mult}_rates_exact=$exact"
-      },
-      time("line_dedup") {
-        // a replica-k>0 doc's every segment already occurred at the
-        // same position of its replica-0 twin (smaller doc_id), so
-        // first-occurrence-wins must keep ZERO segments outside
-        // replica 0 — and replica-0 docs must keep exactly what the
-        // base corpus kept (duplication adds nothing new)
-        val d = operators.Dedup.qLineDedup(spark, work)
-        val outside = d.filter(col("doc_id") >= 10000000L &&
-          col("n_kept") > 0).count()
-        val keptTotal = d.agg(sum("n_kept")).head.getLong(0)
-        s"docs=${d.count()} kept_outside_rep0=$outside kept_total=$keptTotal"
-      },
-      time("kmv_distinct") {
-        // the distinct set per language is replication-invariant, so
-        // the sketch AND the exact count must be bit-identical to the
-        // base corpus run
-        val base = operators.TextAnalysis.qKmvDistinct(spark, sfDir)
-        val rep = operators.TextAnalysis.qKmvDistinct(spark, work)
-        val same = rep.exceptAll(base).isEmpty && base.exceptAll(rep).isEmpty
-        s"langs=${rep.count()} identical_to_base=$same"
-      },
-      time("knn_join_planted") {
-        // replicate the embeddings (shifted ids) into a side dir: every
-        // vector then has mult−1 exact twins in its own LSH bucket
-        // (bucketing is value-determined), so EVERY vector's rank-1
-        // neighbor must score 1.0 and be a twin (id ≡ mod shift)
-        // bounded base slice: the bucket self-join is quadratic per
-        // bucket, and replication multiplies every bucket by mult —
-        // 500 × mult vectors keeps the probe minutes-free while still
-        // exercising the planted-twin structure
-        val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-          .filter(col("vec_id") < 500)
-        emb.crossJoin(spark.range(mult).withColumnRenamed("id", "rep"))
-          .withColumn("vec_id", col("vec_id") + col("rep") * 10000000L)
-          .drop("rep")
-          .write.mode("overwrite").parquet(s"$work/knn/embeddings.parquet")
-        // (rank-1 may be a non-twin only if it ALSO scores 1.0 — the
-        // base corpus plants exact-duplicate embeddings — so the check
-        // is on the score, which the twin guarantees)
-        val nEmb = emb.count()
-        val out = operators.Ann.qKnnJoin(spark, s"$work/knn")
-        val r1 = out.filter(col("rank") === 1)
-        val notPerfect = r1.filter(col("score") =!= 1.0).count()
-        s"vectors=${r1.count()}/${nEmb * mult} rank1_not_1.0=$notPerfect"
-      },
-      time("semdedup_giant_cluster") {
-        // one 10k-member duplicate component planted beside the real
-        // corpus labels: keep-best must reduce it map-side (argmax
-        // aggregate — the window formulation would single-task the
-        // cluster) and pick the longest member, min doc_id tie-break
-        val big = spark.range(10000).select(
-          (col("id") + 500000000L).as("doc_id"), lit(777777L).as("grp"))
-        val labels = operators.Dedup.componentLabels(spark, work)
-          .unionByName(big)
-        val docs = Tables.documents(spark, work)
-          .select(col("doc_id"), col("n_chars").cast("long").as("n_chars"))
-          .unionByName(spark.range(10000).select(
-            (col("id") + 500000000L).as("doc_id"),
-            (col("id") % 997).as("n_chars")))
-        val out = operators.Dedup.keepBest(labels, docs)
-        val g = out.filter(col("group_id") === 777777L).collect().head
-        // max n_chars = 996, first doc_id achieving it = 500000996
-        val ok = g.getAs[Long]("group_size") == 10000L &&
-          g.getAs[Long]("kept_doc") == 500000996L &&
-          g.getAs[Long]("kept_chars") == 996L
-        s"groups=${out.count()} giant_argmax_ok=$ok"
-      },
-      time("pack_batches_giant_shard") {
-        // worst case for sequential packing: ONE source owning the
-        // whole replicated corpus. The shipped two-pass plan must emit
-        // exactly the single-window formulation's bins while no task
-        // sorts more than PackSegmentDocs rows.
-        spark.read.parquet(s"$work/documents.parquet")
-          .withColumn("source", lit("giant"))
-          .write.mode("overwrite").parquet(s"$work/giant/documents.parquet")
-        val fast = operators.Curation.qPackBatches(spark, s"$work/giant")
-        val twin = operators.Curation.packBatchesWindowTwin(spark, s"$work/giant")
-        val same = fast.exceptAll(twin).isEmpty && twin.exceptAll(fast).isEmpty
-        s"bins=${fast.count()} identical_to_window_twin=$same"
-      },
-      time("mine_bitext_planted") {
-        // parallel-corpus plant: an en-only corpus plus mult exact
-        // "translations" per en doc (identical embedding, shifted id,
-        // lang 'xx'). Identical vectors share an LSH bucket, every
-        // twin's backward neighborhood contains a perfect score, and
-        // both sides of every margin share the forward average — so
-        // each en doc's argmax-margin candidate must itself be a
-        // perfect match: all 20 mined pairs score s_micro = 1e6 with
-        // margin ≥ 1, en on the left, planted ids on the right, while
-        // the candidate join stays bucket-mate-bounded as the non-en
-        // side grows ×mult.
-        val en = Tables.documents(spark, sfDir).filter(col("lang") === "en")
-        val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-          .join(en.select(col("doc_id").as("vec_id")), "vec_id")
-        val reps = spark.range(mult).withColumnRenamed("id", "rep")
-        en.unionByName(en.crossJoin(reps)
-            .withColumn("doc_id", col("doc_id") + (col("rep") + 2) * 10000000L)
-            .withColumn("lang", lit("xx")).drop("rep"))
-          .write.mode("overwrite").parquet(s"$work/bitext/documents.parquet")
-        emb.unionByName(emb.crossJoin(reps)
-            .withColumn("vec_id", col("vec_id") + (col("rep") + 2) * 10000000L)
-            .drop("rep"))
-          .write.mode("overwrite").parquet(s"$work/bitext/embeddings.parquet")
-        val out = operators.Ann.qMineBitext(spark, s"$work/bitext").collect()
-        val perfect = out.count(_.getAs[Long]("score_micro") == 1000000L)
-        val marginOk = out.count(_.getAs[Long]("margin_micro") >= 1000000L)
-        val sides = out.count { r =>
-          r.getAs[Long]("en_id") < 10000000L &&
-            r.getAs[Long]("other_id") >= 20000000L }
-        s"mined=${out.length} perfect=$perfect margin_ge_1=$marginOk " +
-          s"planted_side=$sides"
-      },
-      time("ann_geometry") {
-        // r7 verdict item 1's "done" probe. Derived corpus: mult
-        // sign-flip replicas of the base embeddings — DISTINCT vectors
-        // (a per-replica deterministic sign pattern re-orients every
-        // vector), so candidate volume reflects the GEOMETRY, not
-        // intrinsic duplication — plus a planted near-twin (one nudged
-        // component, cosine ≈ 1) for every 97th vector. Checks:
-        // candidates under AnnGeometry.forCorpus stay near-linear
-        // (cand_per_vec ~flat across 20×/50× runs) while the pinned
-        // 4-plane geometry goes quadratic, and the multi-table
-        // OR-of-ANDs keeps planted-twin recall high at the higher
-        // plane count.
-        import operators.{Ann, AnnGeometry}
-        val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-          .select("vec_id", "embedding")
-        val flipped = emb
-          .crossJoin(spark.range(mult).withColumnRenamed("id", "rep"))
-          .withColumn("embedding", expr(
-            "transform(embedding, (x, i) -> CASE WHEN rep = 0 THEN x " +
-              "WHEN pmod(hash(rep, i), 2) = 0 THEN x ELSE -x END)"))
-          .withColumn("vec_id", col("vec_id") + col("rep") * 10000000L)
-          .drop("rep")
-        val twins = flipped.filter(col("vec_id") % 97 === 0)
-          .withColumn("vec_id", col("vec_id") + 1000000000L)
-          .withColumn("embedding", expr(
-            "transform(embedding, (x, i) -> CASE WHEN i = " +
-              "CAST(vec_id % 64 AS INT) THEN CAST(x + 0.02 AS FLOAT) " +
-              "ELSE x END)"))
-        flipped.unionByName(twins)
-          .write.mode("overwrite").parquet(s"$work/geo/embeddings.parquet")
-        val gdir = s"$work/geo"
-        val n = spark.read.parquet(s"$gdir/embeddings.parquet").count()
-        val nTwins = twins.count()
-        val geo = AnnGeometry.forCorpus(n)
-        val candGeo = Ann.knnCandidatePairs(spark, gdir, geo).count()
-        val candPinned =
-          Ann.knnCandidatePairs(spark, gdir, AnnGeometry.Pinned).count()
-        val hits = Ann.qKnnJoinG(spark, gdir, geo)
-          .filter(col("vec_id") >= 1000000000L &&
-            col("neighbor_id") === col("vec_id") - 1000000000L)
-          .select("vec_id").distinct().count()
-        // IVF at scaled cells: a probe reads ~2·(max cell)/N of the
-        // corpus — the share must shrink as cells grow with sqrt(N)
-        def maxCellShare(cells: Int): Double = {
-          val mx = Ann.ivfRankedG(spark, gdir, cells)
-            .filter(col("rn") === 1)
-            .groupBy("cell").agg(count(lit(1)).as("c"))
-            .agg(max("c")).head.getLong(0)
-          mx.toDouble / n
-        }
-        s"n=$n geo=${geo.planes}p${geo.tables}t cand_geo=$candGeo " +
-          s"cand_pinned=$candPinned cand_per_vec=${candGeo / n} " +
-          s"pinned_per_vec=${candPinned / n} " +
-          s"twin_recall=${f"${hits.toDouble / nTwins}%.3f"} " +
-          s"ivf_max_share_${geo.ivfCells}c=${f"${maxCellShare(geo.ivfCells)}%.3f"} " +
-          s"ivf_max_share_8c=${f"${maxCellShare(8)}%.3f"}"
-      },
-      time("salt_mega_bucket") {
-        // r7 verdict item 7's "done" probe: a corpus whose every vector
-        // shares ONE sign pattern (positive scalings of one base
-        // vector) lands entirely in a single LSH bucket in every
-        // table — the maximally task-pinned join. The measured-skew
-        // salt must exceed the baseline 8 so the single bucket's pair
-        // space still spreads across tasks.
-        import operators.{Ann, AnnGeometry}
-        val base = spark.read.parquet(s"$sfDir/embeddings.parquet")
-          .filter(col("vec_id") === 0).select("embedding")
-        spark.range(100L * mult).withColumnRenamed("id", "vec_id")
-          .crossJoin(base)
-          .withColumn("embedding", expr(
-            "transform(embedding, x -> CAST(x * (1.0 + " +
-              "pmod(vec_id, 13) / 1000.0) AS FLOAT))"))
-          .write.mode("overwrite").parquet(s"$work/mega/embeddings.parquet")
-        val salt = Ann.saltFor(spark, s"$work/mega", AnnGeometry.Pinned)
-        val out = Ann.qKnnJoinG(spark, s"$work/mega")
-        s"vectors=${100L * mult} salt=$salt salt_gt_8=${salt > 8} " +
-          s"rank1_rows=${out.filter(col("rank") === 1).count()}"
-      },
-      time("codebook_refine") {
-        // spherical-k-means training at scale: the same sign-flip
-        // derived corpus as ann_geometry (distinct vectors), cells
-        // from forCorpus; report the quality/balance movement from
-        // the bootstrap codebook to the trained one.
-        import operators.{Ann, AnnGeometry}
-        val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-          .select("vec_id", "embedding")
-        emb.crossJoin(spark.range(mult).withColumnRenamed("id", "rep"))
-          .withColumn("embedding", expr(
-            "transform(embedding, (x, i) -> CASE WHEN rep = 0 THEN x " +
-              "WHEN pmod(hash(rep, i), 2) = 0 THEN x ELSE -x END)"))
-          .withColumn("vec_id", col("vec_id") + col("rep") * 10000000L)
-          .drop("rep")
-          .write.mode("overwrite").parquet(s"$work/cb/embeddings.parquet")
-        val cdir = s"$work/cb"
-        val n = spark.read.parquet(s"$cdir/embeddings.parquet").count()
-        val cells = AnnGeometry.forCorpus(n).ivfCells
-        val boot = operators.Search.embNormed(spark, cdir)
-          .filter(col("vec_id") < cells)
-          .select(col("vec_id").as("cell"),
-            expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("cv"),
-            col("nrm").cast("double").as("cn"))
-        def quality(cents: org.apache.spark.sql.DataFrame): (Long, Double) = {
-          val a = Ann.cellAssignScored(spark, cdir, cents)
-            .groupBy("cell")
-            .agg(count(lit(1)).as("c"), sum("csim_micro").as("s"))
-            .agg(sum("s").as("tot"), max("c").as("mx"))
-            .collect()(0)
-          (a.getLong(0), a.getLong(1).toDouble / n)
-        }
-        val (q0, share0) = quality(boot)
-        val t0 = System.nanoTime()
-        val refined = Ann.refineCodebook(spark, cdir, iters = 2, cells = cells)
-        val trainSec = (System.nanoTime() - t0) / 1e9
-        val (q1, share1) = quality(refined)
-        s"n=$n cells=$cells train2_s=${f"$trainSec%.2f"} " +
-          s"csim_total_boot=$q0 csim_total_refined=$q1 " +
-          s"improved=${q1 >= q0} max_share_boot=${f"$share0%.3f"} " +
-          s"max_share_refined=${f"$share1%.3f"}"
-      },
-      time("ivf_reseal") {
-        // r7 verdict item 4's "done" probe: seal the base corpus, grow
-        // a mult× delta on top, time the sealed+delta serve and the
-        // re-seal compaction, then prove the post-seal probe equals the
-        // from-scratch full-corpus qAnnIvf.
-        import operators.Ann
-        val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-        emb.write.mode("overwrite")
-          .parquet(s"$work/seal_base/embeddings.parquet")
-        emb.unionByName(emb
-            .crossJoin(spark.range(mult).withColumnRenamed("id", "rep"))
-            .withColumn("vec_id", col("vec_id") + (col("rep") + 1) * 10000000L)
-            .drop("rep"))
-          .write.mode("overwrite")
-          .parquet(s"$work/seal_grown/embeddings.parquet")
-        val idx = s"$work/seal_idx"
-        Ann.buildIndexes(spark, s"$work/seal_base", idx)
-        val t1 = System.nanoTime()
-        val preRows = Ann.probeIvfDelta(spark, s"$work/seal_grown", idx).count()
-        val serveSec = (System.nanoTime() - t1) / 1e9
-        val t2 = System.nanoTime()
-        Ann.resealIndex(spark, s"$work/seal_grown", idx)
-        val sealSec = (System.nanoTime() - t2) / 1e9
-        val post = Ann.probeIvfIndex(spark, s"$work/seal_grown", idx)
-        val scratch = Ann.qAnnIvf(spark, s"$work/seal_grown")
-        val same = post.exceptAll(scratch).isEmpty &&
-          scratch.exceptAll(post).isEmpty
-        s"delta=${mult * emb.count()} pre_rows=$preRows " +
-          s"delta_serve_s=${f"$serveSec%.2f"} seal_s=${f"$sealSec%.2f"} " +
-          s"post_eq_scratch=$same"
-      },
-      time("ann_tombstone") {
-        // delete lifecycle at mult× corpus: tombstone 10% of the
-        // replicated ids (every replica of vec_id ≡ 7 mod 10, EXCLUDING
-        // the codebook/query ids < 8), then (a) the live serve excludes
-        // every tombstoned id while still filling k, (b) the
-        // anti-join's cost rides the bounded tombstone broadcast — the
-        // serve stays delta-probe-shaped, (c) compaction drops exactly
-        // the tombstoned rows from the index.
-        import operators.Ann
-        val idx = s"$work/tomb_idx"
-        Ann.buildSealedIndex(spark, embxDir, idx)
-        val dead = spark.read.parquet(s"$embxDir/embeddings.parquet")
-          .select("vec_id")
-          .filter(col("vec_id") % 10 === 7 && col("vec_id") >= 8)
-        Ann.writeTombstones(spark, dead, idx)
-        val nDead = dead.count()
-        val t1 = System.nanoTime()
-        val live = Ann.probeIvfDeltaLive(spark, embxDir, idx)
-        val rows = live.collect()
-        val serveSec = (System.nanoTime() - t1) / 1e9
-        val cleanK = rows.length == 10 &&
-          rows.forall(r => !(r.getLong(0) % 10 == 7 && r.getLong(0) >= 8))
-        val t2 = System.nanoTime()
-        Ann.resealWithTombstones(spark, embxDir, idx)
-        val sealSec = (System.nanoTime() - t2) / 1e9
-        val after = store.ChunkStore.read(spark, s"$idx/ivf")
-        val total = spark.read.parquet(s"$embxDir/embeddings.parquet").count()
-        val dropped = total - after.count()
-        s"tombstoned=$nDead full_k_clean=$cleanK dropped=$dropped " +
-          s"live_serve_s=${f"$serveSec%.2f"} seal_s=${f"$sealSec%.2f"}"
-      },
-      time("bpe_train") {
-        // Replication multiplies word FREQUENCIES by mult but leaves
-        // the vocabulary identical — so the trainer must learn the
-        // SAME merge table with pair_counts exactly ×mult, and since
-        // every round after the initial word count runs on the
-        // vocabulary table, round cost must stay flat vs mult (the
-        // Heaps-law claim in bpeTrain's scaladoc, tested not assumed).
-        import operators.Curation
-        val base = Curation.bpeTrain(spark, sfDir, Curation.BpeMerges)
-          .orderBy("rank").collect()
-          .map(r => (r.getLong(0), r.getString(1), r.getString(2),
-            r.getLong(3)))
-        val t1 = System.nanoTime()
-        val scaled = Curation.bpeTrain(spark, work, Curation.BpeMerges)
-          .orderBy("rank").collect()
-          .map(r => (r.getLong(0), r.getString(1), r.getString(2),
-            r.getLong(3)))
-        val trainSec = (System.nanoTime() - t1) / 1e9
-        val exact = scaled.length == base.length &&
-          scaled.zip(base).forall { case ((rk, l, r, c), (brk, bl, br, bc)) =>
-            rk == brk && l == bl && r == br && c == bc * mult
-          }
-        // encode on the replicated corpus: every replica must get its
-        // base doc's exact token count
-        val enc = Curation.qBpeEncode(spark, work)
-        val perDoc = enc
-          .withColumn("base_id", col("doc_id") % 10000000L)
-          .select("base_id", "n_tokens").distinct().count()
-        s"merges_x${mult}_exact=$exact train_s=${f"$trainSec%.2f"} " +
-          s"enc_rows=${enc.count()} distinct_base_profiles=$perDoc"
-      },
-      time("unigram_train") {
-        // Same Heaps-law contract as bpe_train: replication scales
-        // word frequencies by mult but not the vocabulary, so the
-        // trained piece table must keep the SAME pieces at the SAME
-        // ranks with Viterbi counts exactly ×mult and prob_micro
-        // bit-identical (zero-count coverage chars scale as 0×mult —
-        // the fallback-tier design exists precisely so no floored
-        // unit perturbs the total; see unigramSegment). Train cost
-        // must stay vocabulary-bound; every replica doc must encode
-        // to its base profile.
-        import operators.Curation
-        val base = Curation.unigramTrain(spark, sfDir)
-          .orderBy("rank").collect()
-          .map(r => (r.getLong(0), r.getString(1), r.getLong(2),
-            r.getLong(3)))
-        val t1 = System.nanoTime()
-        val scaled = Curation.unigramTrain(spark, work)
-          .orderBy("rank").collect()
-          .map(r => (r.getLong(0), r.getString(1), r.getLong(2),
-            r.getLong(3)))
-        val trainSec = (System.nanoTime() - t1) / 1e9
-        val exact = scaled.length == base.length &&
-          scaled.zip(base).forall {
-            case ((rk, p, c, pm), (brk, bp, bc, bpm)) =>
-              rk == brk && p == bp && c == bc * mult && pm == bpm
-          }
-        val enc = Curation.qUnigramEncode(spark, work)
-        val perDoc = enc
-          .withColumn("base_id", col("doc_id") % 10000000L)
-          .select("base_id", "n_tokens").distinct().count()
-        s"pieces_x${mult}_exact=$exact train_s=${f"$trainSec%.2f"} " +
-          s"enc_rows=${enc.count()} distinct_base_profiles=$perDoc"
-      },
-      time("nb_classifier") {
-        // Replication multiplies every class's doc and token counts by
-        // mult, so the PRIORS must be bit-identical to the base model
-        // and the model's shape (V×C likelihoods, C priors/fallbacks)
-        // must not grow — the model is vocabulary-bound, not
-        // corpus-bound. Scoring volume grows linearly with held-out
-        // docs; the confusion matrix must account for every one.
-        import operators.Quality
-        def priorRows(d: String) = Quality.nbTrain(
-            Tables.documents(spark, d)
-              .filter(col("doc_id") % 5 =!= 0))
-        val base = priorRows(sfDir)
-        val scaled = priorRows(work)
-        val samePriors = scaled.priors.exceptAll(base.priors).isEmpty &&
-          base.priors.exceptAll(scaled.priors).isEmpty
-        val sameShape =
-          scaled.wordLik.count() == base.wordLik.count() &&
-            scaled.unseen.count() == base.unseen.count()
-        val conf = operators.Quality.qNbClassifier(spark, work)
-        val held = Tables.documents(spark, work)
-          .filter(col("doc_id") % 5 === 0).count()
-        val confTotal = conf.agg(sum("n_docs")).collect()(0).getLong(0)
-        s"priors_identical=$samePriors model_shape_flat=$sameShape " +
-          s"held=$held conf_total=$confTotal all_scored=${held == confTotal}"
-      },
-      time("corpus_diff") {
-        // linear two-scan + one full-outer join; token conservation
-        // must hold at any scale
-        val r = operators.Curation.qCorpusDiff(spark, work).collect()
-        val v1 = Tables.documents(spark, work)
-          .agg(sum(size(operators.TextAnalysis.toks(col("text"))))
-            .cast("long")).collect()(0).getLong(0)
-        val conserved =
-          v1 + r.map(_.getLong(3)).sum == r.map(_.getLong(4)).sum
-        s"rows=${r.length} conserved=$conserved"
-      },
-      time("retention") {
-        val r = operators.Events.qRetention(spark, work).collect()
-        val exact = r.length == baseRet.size && r.forall { row =>
-          baseRet((row.getLong(0), row.getLong(1))) * mult == row.getLong(2)
-        }
-        s"cells=${r.length} counts_x${mult}_exact=$exact"
-      },
-      time("pack_shards") {
-        // hash-routed packing: lossless token accounting at any mult,
-        // and the stable layout spreads the replicated corpus evenly —
-        // no shard owns more than ~3× its fair share (hash uniformity)
-        val r = operators.Curation.qPackShards(spark, work).collect()
-        val docsTotal = r.map(_.getLong(2)).sum
-        val fair = (n0 * mult).toDouble / operators.Curation.StableShards
-        val maxShard = r.groupBy(_.getLong(0)).values
-          .map(_.map(_.getLong(2)).sum).max
-        s"bins=${r.length} lossless=${docsTotal == n0 * mult} " +
-          s"max_shard_over_fair=${f"${maxShard / fair}%.2f"}"
-      },
-      time("emb_drift") {
-        // expected v2 membership recomputed from the derived corpus's
-        // own release pattern (replica ids shift the % classes);
-        // cosines must stay in (0,1] with the big-corpus centroids
-        // now stable under the 1/7 drop
-        val embx = embxDir
-        val e = spark.read.parquet(s"$embx/embeddings.parquet")
-          .select("vec_id", "label").collect()
-          .map(r => (r.getLong(0), r.getInt(1)))
-        val r = operators.Ann.qEmbDrift(spark, embx).collect()
-        val ok = r.forall { row =>
-          val l = row.getInt(0)
-          row.getLong(1) == e.count(_._2 == l).toLong &&
-          row.getLong(2) == (e.count(x => x._2 == l && x._1 % 7 != 0) +
-            e.count(x => x._2 == l && x._1 % 13 == 0)).toLong &&
-          row.getDouble(3) > 0.95 && row.getDouble(3) <= 1.0
-        }
-        s"labels=${r.length} counts_and_cos_ok=$ok"
-      },
-      time("pq_refine") {
-        // per-subspace Lloyd over the replicated embeddings (identical
-        // vectors, shifted ids): objective must fall monotonically and
-        // the round cost is one broadcast-distance pass + one tiny
-        // (sub,cid,d) shuffle — flat-in-mult up to the scan
-        val embx = embxDir
-        val sv = Tables.embeddings(spark, embx)
-          .select(col("vec_id"),
-            posexplode(col("embedding")).as(Seq("d", "x")))
-          .withColumn("se",
-            round(col("x").cast("double") * 1000000, 0).cast("long"))
-          .withColumn("sub",
-            floor(col("d") / operators.Ann.SubDim).cast("long"))
-        val e0 = operators.Ann.pqQuantError(sv,
-          operators.Ann.refinePqCodebooks(spark, embx, 0))
-        val c2 = operators.Ann.refinePqCodebooks(spark, embx, 2)
-        val e2 = operators.Ann.pqQuantError(sv, c2)
-        val served = operators.Ann.pqServeWith(spark, embx, c2).count()
-        s"err_drop_pct=${(e0 - e2) * 100 / math.max(1L, e0)} " +
-          s"monotone=${e2 <= e0} served=$served"
-      },
-      time("dist_drift") {
-        // v1 replicates every language equally, so v1 shares must be
-        // BIT-IDENTICAL to the base run at any mult (v2's %-pattern
-        // shifts with replica ids — its invariant is the share-sum
-        // range, not replay equality)
-        val base = operators.Curation.qDistDrift(spark, sfDir).collect()
-          .map(r => r.getString(0) -> r.getLong(3)).toMap
-        val r = operators.Curation.qDistDrift(spark, work).collect()
-        val v1exact = r.length == base.size &&
-          r.forall(row => base(row.getString(0)) == row.getLong(3))
-        val sums = Seq(3, 4).map(i => r.map(_.getLong(i)).sum)
-        val sumOk = sums.forall(s =>
-          s > 1000000L - r.length && s <= 1000000L)
-        s"langs=${r.length} v1_shares_bit_identical=$v1exact " +
-          s"share_sums_ok=$sumOk"
-      },
-      time("shard_churn") {
-        // expected per-class totals derive from the derived corpus's
-        // own %-patterns (replica id shifts change which docs the
-        // simulated release drops/revises/adds — recompute, don't
-        // scale the base); localization structure: 64 stable shards,
-        // dirty verdict consistent
-        val ids = Tables.documents(spark, work).select("doc_id")
-        val expAdd = ids.filter(col("doc_id") % 13 === 0).count()
-        val expRem = ids.filter(col("doc_id") % 7 === 0).count()
-        val expRev = ids.filter(col("doc_id") % 7 =!= 0 &&
-          col("doc_id") % 11 === 0).count()
-        val r = operators.Curation.qShardChurn(spark, work).collect()
-        def tot(i: Int) = r.map(_.getLong(i)).sum
-        val classesOk = tot(2) == expAdd && tot(3) == expRem &&
-          tot(4) == expRev
-        val dirtyOk = r.forall(row => row.getBoolean(5) ==
-          (row.getLong(2) + row.getLong(3) + row.getLong(4) > 0))
-        s"shards=${r.length} class_totals_exact=$classesOk " +
-          s"dirty_consistent=$dirtyOk"
-      },
-      time("cluster_cap") {
-        // every cell ×mult members (replicas are identical vectors
-        // with shifted ids, so each replica lands in its base's cell);
-        // the codebook stays vec_id<8 = the 8 original vectors. With
-        // mult > capK every cell's top value family alone over-fills
-        // the budget, so ALL survivors must sit at the cell's max
-        // csim — the planted-mega-cluster worst case: the cap keeps
-        // only the most prototypical family, in bounded-buffer time
-        val embx = embxDir
-        val r = operators.Ann.qClusterCap(spark, embx).collect()
-        val cells = r.map(_.getLong(0)).distinct.length
-        val budget = r.groupBy(_.getLong(0))
-          .forall(_._2.length <= operators.Ann.ClusterCapK)
-        val maxOnly = mult <= operators.Ann.ClusterCapK ||
-          r.groupBy(_.getLong(0)).forall { case (_, rows) =>
-            val mx = rows.map(_.getLong(3)).max
-            rows.forall(_.getLong(3) == mx)
-          }
-        s"cells=$cells rows=${r.length} budget_ok=$budget " +
-          s"survivors_at_max_csim=$maxOnly"
-      },
-      time("heavy_hitters") {
-        // replication multiplies every token count AND the corpus total
-        // by mult, so the heavy-hitter SET and fractions must be
-        // bit-identical to the base run and counts exactly mult× —
-        // while the MG buffer stays at its fixed budget however large
-        // N grows (the whole point of the sketch pass)
-        val base = operators.TextAnalysis.qHeavyHitters(spark, sfDir)
-          .collect().map(r => r.getString(0) -> (r.getLong(1),
-            r.getDouble(2))).toMap
-        val r = operators.TextAnalysis.qHeavyHitters(spark, work).collect()
-        val exact = r.length == base.size && r.forall { row =>
-          val (n, frac) = base(row.getString(0))
-          n * mult == row.getLong(1) && frac == row.getDouble(2)
-        }
-        s"hitters=${r.length} set_and_counts_x${mult}_exact=$exact"
-      },
-      time("quantile_sketch") {
-        // per-replica users carry the base user's exact history, so the
-        // value multiset per event_type scales every multiplicity by
-        // mult — ceil-rank EXACT quantiles are then bit-identical to
-        // the base run and n exactly mult×, while the sketch side keeps
-        // its fixed 128-row sample per group (drawn over the new id
-        // space) and only its measured error may move
-        val base = operators.Events.qQuantileSketch(spark, sfDir)
-          .collect().map(r => (r.getString(0), r.getInt(1)) ->
-            (r.getLong(2), r.getDouble(5))).toMap
-        val r = operators.Events.qQuantileSketch(spark, work).collect()
-        val exactInvariant = r.length == base.size && r.forall { row =>
-          val (n, exact) = base((row.getString(0), row.getInt(1)))
-          n * mult == row.getLong(2) && exact == row.getDouble(5)
-        }
-        val kBounded = r.forall(_.getLong(3) == operators.Events.QsK)
-        val maxErr = r.map(_.getDouble(6)).max
-        s"rows=${r.length} exact_side_x${mult}_invariant=$exactInvariant " +
-          s"k_bounded=$kBounded max_abs_err=$maxErr"
-      },
-      time("emb_cov") {
-        // replicated vectors: n, per-dim sums and pair sums all scale
-        // by exactly mult, so every covariance numerator must be
-        // exactly mult² × the base value — while the aggregation
-        // buffer stays a constant 2,144 longs per partition (the wall
-        // should track the linear scan, nothing else)
-        val base = operators.Ann.qEmbCov(spark, sfDir).collect()
-          .map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(6)).toMap
-        val r = operators.Ann.qEmbCov(spark, embxDir).collect()
-        val m2 = mult.toLong * mult
-        val exact = r.length == base.size && r.forall { row =>
-          base((row.getInt(0), row.getInt(1))) * m2 == row.getLong(6)
-        }
-        s"rows=${r.length} cov_num_x${mult}sq_exact=$exact"
-      },
-      time("table_stats") {
-        // replication multiplies every row count by mult but adds no
-        // new VALUES except in the shifted id column — so for the
-        // value columns ndv (and the KMV estimate, a pure function of
-        // the distinct-hash set) must be bit-identical to the base
-        // run, while doc_id must profile as unique at the new size
-        val base = operators.Relational.qTableStats(spark, sfDir)
-          .collect().map(r => r.getString(0) ->
-            (r.getLong(1), r.getLong(3), r.getLong(4), r.getLong(5))).toMap
-        val r = operators.Relational.qTableStats(spark, work).collect()
-        val ok = r.length == base.size && r.forall { row =>
-          val (n, sumLen, ndv, kmv) = base(row.getString(0))
-          row.getLong(1) == n * mult && (row.getString(0) match {
-            case "doc_id" => row.getLong(4) == n * mult
-            case _ => row.getLong(3) == sumLen * mult &&
-              row.getLong(4) == ndv && row.getLong(5) == kmv
-          })
-        }
-        s"cols=${r.length} counts_x${mult}_value_ndv_invariant=$ok"
-      },
-      time("zorder") {
-        // the quadtree extent law is per-cell and scale-free: at any
-        // corpus size every cell must span ≤ 2^13 of each 2^16 dim,
-        // and the cell population must be exactly mult x the base
-        // cell's (replicated users keep their event times)
-        val base = operators.Events.qZorderStats(spark, sfDir).collect()
-          .map(r => r.getLong(0) -> r.getLong(1)).toMap
-        val r = operators.Events.qZorderStats(spark, work).collect()
-        val law = r.forall(c => c.getLong(3) - c.getLong(2) <= 8191 &&
-          c.getLong(5) - c.getLong(4) <= 8191)
-        // replicated user ids rescale the user-bucket grid, so cell
-        // POPULATIONS shift across cells; the lossless check is the
-        // total and the law, not per-cell equality
-        val lossless = r.map(_.getLong(1)).sum == base.values.sum * mult
-        s"cells=${r.length} extent_law=$law lossless=$lossless"
-      },
-      time("bloom_saturation") {
-        // fixed-geometry failure + its fix, measured. Plain
-        // replication duplicates TEXTS, so the fingerprint key set
-        // (and the filter) is replication-invariant — itself worth
-        // knowing, but not the saturation case. The saturating corpus
-        // salts each replica's text (mult x genuinely-new keys): the
-        // pinned 4096-bit filter fills toward ~50% (fpp -> percents)
-        // while the corpus-sized geometry (bloomBitsFor) holds fpp an
-        // order of magnitude lower. Same failure-mode-then-fix
-        // contract as ann_geometry.
-        docs.crossJoin(spark.range(mult).withColumnRenamed("id", "rep"))
-          .withColumn("doc_id", col("doc_id") + col("rep") * 10000000L)
-          .withColumn("text",
-            concat(col("text"), lit(" #v"), col("rep")))
-          .drop("rep")
-          .write.mode("overwrite").parquet(s"$work/salted/documents.parquet")
-        val saltedDir = s"$work/salted"
-        val inv = operators.Curation.qBloomIndex(spark, work).collect()
-          .map(_.getLong(1)).max
-        val pinned = operators.Curation.qBloomIndex(spark, saltedDir).collect()
-        val maxKeys = pinned.map(_.getLong(1)).max
-        val scaledBits = operators.Curation.bloomBitsFor(maxKeys)
-        val scaled = operators.Curation
-          .bloomIndexG(spark, saltedDir, scaledBits).collect()
-        val fppP = pinned.map(_.getLong(3)).max
-        val fppS = scaled.map(_.getLong(3)).max
-        s"replicated_keys_per_shard=$inv salted_keys_per_shard=$maxKeys " +
-          s"pinned_fpp_micro=$fppP scaled_bits=$scaledBits " +
-          s"scaled_fpp_micro=$fppS improved=${fppS * 5 <= fppP}"
-      },
-      time("shard_plan") {
-        val r = operators.Curation.qShardPlan(spark, work).collect()
-        val fullExceptTail = r.dropRight(1)
-          .forall(_.getLong(1) == operators.Curation.ShardDocs)
-        val lossless = r.map(_.getLong(1)).sum == n0 * mult
-        s"shards=${r.length} full_except_tail=$fullExceptTail " +
-          s"lossless=$lossless"
-      },
-      time("impact_serve") {
-        // Impact-ordered serving on the replicated corpus — the
-        // fixed-constant-vs-N contract probed like ann_geometry /
-        // bloom_saturation: at the PINNED m the per-term list
-        // truncates to replicas of the few highest-impact docs (the
-        // ×mult duplication makes every doc occupy mult tied slots)
-        // and the exhaustive-overlap collapses; deriving m from the
-        // duplication factor (m × mult) restores it, while the index
-        // stays m-bounded per term in both geometries.
-        import operators.Search
-        val full = Search.qSearchBm25(spark, work).collect()
-          .map(_.getLong(0)).toSet
-        val fastPinned = Search.qImpactTopk(spark, work).collect()
-          .map(_.getLong(0)).toSet
-        val mScaled = Search.ImpactM * mult
-        val fastScaled = Search.qImpactTopkG(spark, work, mScaled)
-          .collect().map(_.getLong(0)).toSet
-        val maxList = Search.impactIndexG(spark, work, mScaled)
-          .groupBy("term").count().agg(max("count")).head.getLong(0)
-        s"pinned_overlap=${(fastPinned intersect full).size} " +
-          s"scaled_m=$mScaled scaled_overlap=${(fastScaled intersect full).size} " +
-          s"m_bounded=${maxList <= mScaled}"
-      },
-      time("range_join") {
-        // The banded interval join on the replicated events table
-        // (mult per-replica users, identical histories): every replica
-        // purchase must count exactly mult × its base event's
-        // in-band clicks (each base click reappears once per replica
-        // user), so per-purchase counts scale ×mult while the plan
-        // stays the 3-bucket equi-join — output is quadratic in mult
-        // only because the TRUE in-band pair count is (like
-        // q_simhash_near, intrinsic, not a plan hazard).
-        val base = operators.Events.qRangeJoin(spark, sfDir).collect()
-          .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-        val scaled = operators.Events.qRangeJoin(spark, work).collect()
-        val exact = scaled.length == base.size * mult &&
-          scaled.forall { r =>
-            base.get(r.getLong(0) % 1000000000L).exists { case (n, c) =>
-              r.getLong(1) == n * mult && r.getLong(2) == c * mult
-            }
-          }
-        s"purchases=${scaled.length} per_purchase_x${mult}_exact=$exact"
-      },
-      time("knn_graph") {
-        // One NN-Descent round at corpus-scaled geometry. Derived
-        // corpus: sign-flip replicas re-idded CONTIGUOUSLY (the seed
-        // edges' `hash mod N` init requires ids 0..N-1 — the operator's
-        // documented invariant) plus a contiguous tail block of
-        // planted near-twins (one nudged component) every 97th vector.
-        // Checks: the round's candidate volume stays near-linear in N
-        // (cand_per_vec ~flat across 20x/50x), and twin recall does
-        // not drop from base graph to refined graph while the refined
-        // graph recovers twins the bucket-closed base cannot see
-        // beyond.
-        import operators.{Ann, AnnGeometry}
-        val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-          .select("vec_id", "embedding")
-        val nBase = emb.count()
-        val flipped = emb
-          .crossJoin(spark.range(mult).withColumnRenamed("id", "rep"))
-          .withColumn("embedding", expr(
-            "transform(embedding, (x, i) -> CASE WHEN rep = 0 THEN x " +
-              "WHEN pmod(hash(rep, i), 2) = 0 THEN x ELSE -x END)"))
-          .withColumn("vec_id", col("vec_id") + col("rep") * nBase)
-          .drop("rep")
-        val tw0 = mult * nBase
-        val twins = flipped.filter(col("vec_id") % 97 === 0)
-          .withColumn("vec_id", lit(tw0) + (col("vec_id") / 97L).cast("long"))
-          .withColumn("embedding", expr(
-            "transform(embedding, (x, i) -> CASE WHEN i = " +
-              s"CAST((vec_id - $tw0) * 97 % 64 AS INT) " +
-              "THEN CAST(x + 0.02 AS FLOAT) ELSE x END)"))
-        flipped.unionByName(twins)
-          .write.mode("overwrite").parquet(s"$work/kg/embeddings.parquet")
-        val gdir = s"$work/kg"
-        val n = spark.read.parquet(s"$gdir/embeddings.parquet").count()
-        val nTwins = twins.count()
-        val geo = AnnGeometry.forCorpus(n)
-        val cand = Ann.knnGraphCandidates(spark, gdir, geo, 3).count()
-        def twinHits(g: org.apache.spark.sql.DataFrame): Long = g
-          .filter(col("vec_id") >= tw0 &&
-            col("neighbor_id") === (col("vec_id") - tw0) * 97L)
-          .select("vec_id").distinct().count()
-        val baseHits = twinHits(Ann.qKnnJoinG(spark, gdir, geo))
-        val refHits = twinHits(Ann.qKnnGraphG(spark, gdir, geo))
-        s"n=$n geo=${geo.planes}p${geo.tables}t cand=$cand " +
-          s"cand_per_vec=${cand / n} " +
-          s"base_twin_recall=${f"${baseHits.toDouble / nTwins}%.3f"} " +
-          s"refined_twin_recall=${f"${refHits.toDouble / nTwins}%.3f"} " +
-          s"no_drop=${refHits >= baseHits}"
-      },
-      time("knn_refine") {
-        // The iterated NN-Descent trainer at corpus-derived geometry
-        // on the same twin-planted corpus as knn_graph (built there;
-        // rebuild here so a targeted run stands alone): the converged
-        // graph's twin recall must be >= the single round's, score
-        // mass must not decrease, and the loop must terminate well
-        // inside the round budget (the fixpoint check is one
-        // aggregate per round).
-        import operators.{Ann, AnnGeometry}
-        val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-          .select("vec_id", "embedding")
-        val nBase = emb.count()
-        val flipped = emb
-          .crossJoin(spark.range(mult).withColumnRenamed("id", "rep"))
-          .withColumn("embedding", expr(
-            "transform(embedding, (x, i) -> CASE WHEN rep = 0 THEN x " +
-              "WHEN pmod(hash(rep, i), 2) = 0 THEN x ELSE -x END)"))
-          .withColumn("vec_id", col("vec_id") + col("rep") * nBase)
-          .drop("rep")
-        val tw0 = mult * nBase
-        val twins = flipped.filter(col("vec_id") % 97 === 0)
-          .withColumn("vec_id", lit(tw0) + (col("vec_id") / 97L).cast("long"))
-          .withColumn("embedding", expr(
-            "transform(embedding, (x, i) -> CASE WHEN i = " +
-              s"CAST((vec_id - $tw0) * 97 % 64 AS INT) " +
-              "THEN CAST(x + 0.02 AS FLOAT) ELSE x END)"))
-        flipped.unionByName(twins)
-          .write.mode("overwrite").parquet(s"$work/kr/embeddings.parquet")
-        val gdir = s"$work/kr"
-        val n = spark.read.parquet(s"$gdir/embeddings.parquet").count()
-        val nTwins = twins.count()
-        val geo = AnnGeometry.forCorpus(n)
-        def micro(g: org.apache.spark.sql.DataFrame): Long = g
-          .agg(coalesce(sum((col("score") * 1000000).cast("long")), lit(0L)))
-          .head.getLong(0)
-        def twinHits(g: org.apache.spark.sql.DataFrame): Long = g
-          .filter(col("vec_id") >= tw0 &&
-            col("neighbor_id") === (col("vec_id") - tw0) * 97L)
-          .select("vec_id").distinct().count()
-        val one = Ann.qKnnGraphG(spark, gdir, geo)
-        val m1 = micro(one); val h1 = twinHits(one)
-        val conv = Ann.refineKnnGraph(spark, gdir, geo)
-        val m2 = micro(conv); val h2 = twinHits(conv)
-        s"n=$n geo=${geo.planes}p${geo.tables}t " +
-          s"round1_recall=${f"${h1.toDouble / nTwins}%.3f"} " +
-          s"conv_recall=${f"${h2.toDouble / nTwins}%.3f"} " +
-          s"score_mass_nondecreasing=${m2 >= m1} " +
-          s"recall_nondecreasing=${h2 >= h1}"
-      },
-      time("graph_serve") {
-        // Graph SERVING at corpus scale — the half of the family
-        // knn_graph/knn_refine leave unprobed. Twin-planted corpus
-        // (as knn_graph); 10 spread queries; recall@10 vs the
-        // brute-force exact top-10. Three shapes measured: the
-        // registry's flat fixed-entry beam, the flat beam with a
-        // corpus-derived IVF entry (Ann.graphEntryFor), and the HNSW
-        // hierarchy (Hnsw.buildIndex + Searcher.serve). The first
-        // grid run of this probe is why Hnsw exists: the flat beam
-        // collapses to ~0.03 recall at 20x REGARDLESS of entry or
-        // budget (16 hops x beam 32 reached 0.09) — a short-range
-        // k-NN graph is not navigable, and the hierarchy's sparse
-        // upper layers supply the missing long-range hops.
-        import operators.{Ann, AnnGeometry, Search}
-        import graft.functions.VectorFunctions.{cosinePrenormed, dot}
-        val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-          .select("vec_id", "embedding")
-        val nBase = emb.count()
-        val flipped = emb
-          .crossJoin(spark.range(mult).withColumnRenamed("id", "rep"))
-          .withColumn("embedding", expr(
-            "transform(embedding, (x, i) -> CASE WHEN rep = 0 THEN x " +
-              "WHEN pmod(hash(rep, i), 2) = 0 THEN x ELSE -x END)"))
-          .withColumn("vec_id", col("vec_id") + col("rep") * nBase)
-          .drop("rep")
-        val tw0 = mult * nBase
-        val twins = flipped.filter(col("vec_id") % 97 === 0)
-          .withColumn("vec_id", lit(tw0) + (col("vec_id") / 97L).cast("long"))
-          .withColumn("embedding", expr(
-            "transform(embedding, (x, i) -> CASE WHEN i = " +
-              s"CAST((vec_id - $tw0) * 97 % 64 AS INT) " +
-              "THEN CAST(x + 0.02 AS FLOAT) ELSE x END)"))
-        flipped.unionByName(twins)
-          .write.mode("overwrite").parquet(s"$work/gs/embeddings.parquet")
-        val gdir = s"$work/gs"
-        val n = spark.read.parquet(s"$gdir/embeddings.parquet").count()
-        val geo = AnnGeometry.forCorpus(n)
-        val g = Ann.refineKnnGraph(spark, gdir, geo)
-          .select(col("vec_id").as("u"), col("neighbor_id").as("v"))
-        val edges = g.union(g.select(col("v").as("u"), col("u").as("v")))
-          .distinct().persist()
-        edges.count()
-        val qids: Seq[Long] =
-          (1 to 10).map(i => 2L + (i.toLong * 7919L) % (tw0 - 2))
-        val e = Search.embNormed(spark, gdir)
-        val qv = e.filter(col("vec_id").isin(qids: _*))
-          .select(col("vec_id").as("qid"),
-            col("embedding").as("qv"), col("nrm").as("qn"))
-        val w = org.apache.spark.sql.expressions.Window.partitionBy("qid")
-          .orderBy(desc("score"), col("vec_id"))
-        val exact: Map[Long, Set[Long]] = e.crossJoin(broadcast(qv))
-          .filter(col("vec_id") =!= col("qid"))
-          .withColumn("score", round(
-            cosinePrenormed(dot(col("embedding"), col("qv")),
-              col("nrm"), col("qn")), 6))
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 10)
-          .select("qid", "vec_id").collect()
-          .groupBy(_.getLong(0))
-          .map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
-        def serve(entryFor: Long => Long, hops: Int,
-            beam: Int): (Double, Double) = {
-          val t0 = System.nanoTime()
-          val rs = qids.map { qid =>
-            val top = Ann.beamServe(spark, gdir, edges, qid, entryFor(qid),
-              hops = hops, beamW = beam)
-              .map(_._1).toSet
-            top.count(exact(qid).contains) / 10.0
-          }
-          (rs.sum / rs.size, (System.nanoTime() - t0) / 1e9)
-        }
-        val (rFlat, tFlat) = serve(_ => Ann.GraphSearchEntry, 3, 8)
-        val (rEntry, tEntry) =
-          serve(qid => Ann.graphEntryFor(spark, gdir, qid, geo.ivfCells),
-            3, 8)
-        edges.unpersist(false)
-        val tb0 = System.nanoTime()
-        val idx = operators.Hnsw.buildIndex(spark, gdir, s"$work/gs_idx")
-        val tBuild = (System.nanoTime() - tb0) / 1e9
-        val searcher = new operators.Hnsw.Searcher(spark, gdir, idx)
-        // planted-structure recall: serve each of 10 twin queries and
-        // check the planted near-twin lands in the top-10 (the same
-        // structured gauge knn_graph/knn_refine use — generic top-10
-        // on this sign-flip corpus is dimensionality-capped for ANY
-        // sublinear method, twins are the navigable signal)
-        val twinQs = (1 to 10).map(i => tw0 + (i.toLong * 13L) % (n - tw0))
-        val (rHnsw, tHnsw, twinHit, rHnsw64) =
-          try {
-            val t0 = System.nanoTime()
-            val rs = qids.map { qid =>
-              val top = searcher.serve(qid, ef = 32).map(_._1).toSet
-              top.count(exact(qid).contains) / 10.0
-            }
-            val wall = (System.nanoTime() - t0) / 1e9
-            val th = twinQs.count { qid =>
-              searcher.serve(qid, ef = 32).map(_._1)
-                .contains((qid - tw0) * 97L)
-            }.toDouble / twinQs.size
-            val r64 = qids.map { qid =>
-              val top = searcher.serve(qid, ef = 64).map(_._1).toSet
-              top.count(exact(qid).contains) / 10.0
-            }
-            (rs.sum / rs.size, wall, th, r64.sum / r64.size)
-          } finally searcher.close()
-        s"n=$n geo=${geo.planes}p${geo.tables}t queries=${qids.size} " +
-          s"flat_recall10=${f"$rFlat%.2f"}@${f"$tFlat%.0f"}s " +
-          s"ivf_entry_recall10=${f"$rEntry%.2f"}@${f"$tEntry%.0f"}s " +
-          s"hnsw_recall10=${f"$rHnsw%.2f"}@${f"$tHnsw%.0f"}s " +
-          s"hnsw_recall10_ef64=${f"$rHnsw64%.2f"} " +
-          s"hnsw_twin_hit=${f"$twinHit%.2f"} " +
-          s"hnsw_levels=${idx.maxLevel} hnsw_build=${f"$tBuild%.0f"}s"
-      },
-      time("graph_serve_clustered") {
-        // The graph_serve probe's sign-flip corpus is ADVERSARIALLY
-        // FLAT (replicas are near-random 64-d vectors; pairwise
-        // cosines concentrate, so generic top-10 recall is
-        // dimensionality-capped for any sublinear method). This twin
-        // probe derives a CLUSTERED corpus from the same base — every
-        // base embedding becomes a cluster of mult jittered copies
-        // (per-(rep,dim) hash noise ≤ ±0.05), so each query's true
-        // top-10 are its cluster siblings and navigability is
-        // measurable: HNSW must recover the neighborhood the flat
-        // fixed-budget beam cannot.
-        import operators.{Ann, AnnGeometry, Search}
-        import graft.functions.VectorFunctions.{cosinePrenormed, dot}
-        val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-          .select("vec_id", "embedding")
-        val nBase = emb.count()
-        emb.crossJoin(spark.range(mult).withColumnRenamed("id", "rep"))
-          .withColumn("embedding", expr(
-            "transform(embedding, (x, i) -> CASE WHEN rep = 0 THEN x " +
-              "ELSE CAST(x + (pmod(hash(rep, i, vec_id), 21) - 10) " +
-              "* 0.005 AS FLOAT) END)"))
-          .withColumn("vec_id", col("vec_id") + col("rep") * nBase)
-          .drop("rep")
-          .write.mode("overwrite").parquet(s"$work/gc/embeddings.parquet")
-        val gdir = s"$work/gc"
-        val n = spark.read.parquet(s"$gdir/embeddings.parquet").count()
-        val qids: Seq[Long] = (1 to 10).map(i => 2L + (i.toLong * 7919L) % n)
-        val e = Search.embNormed(spark, gdir)
-        val qv = e.filter(col("vec_id").isin(qids: _*))
-          .select(col("vec_id").as("qid"),
-            col("embedding").as("qv"), col("nrm").as("qn"))
-        val w = org.apache.spark.sql.expressions.Window.partitionBy("qid")
-          .orderBy(desc("score"), col("vec_id"))
-        val exact: Map[Long, Set[Long]] = e.crossJoin(broadcast(qv))
-          .filter(col("vec_id") =!= col("qid"))
-          .withColumn("score", round(
-            cosinePrenormed(dot(col("embedding"), col("qv")),
-              col("nrm"), col("qn")), 6))
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 10)
-          .select("qid", "vec_id").collect()
-          .groupBy(_.getLong(0))
-          .map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
-        val geo = AnnGeometry.forCorpus(n)
-        val g = Ann.qKnnGraphG(spark, gdir, geo)
-          .select(col("vec_id").as("u"), col("neighbor_id").as("v"))
-        val edges = g.union(g.select(col("v").as("u"), col("u").as("v")))
-          .distinct().persist()
-        edges.count()
-        val rFlat = qids.map { qid =>
-          Ann.beamServe(spark, gdir, edges, qid, Ann.GraphSearchEntry)
-            .map(_._1).count(exact(qid).contains) / 10.0
-        }.sum / qids.size
-        edges.unpersist(false)
-        val idx = operators.Hnsw.buildIndex(spark, gdir, s"$work/gc_idx")
-        val searcher = new operators.Hnsw.Searcher(spark, gdir, idx)
-        val (rHnsw, rHnsw64) =
-          try {
-            def rec(ef: Int) = qids.map { qid =>
-              searcher.serve(qid, ef = ef)
-                .map(_._1).count(exact(qid).contains) / 10.0
-            }.sum / qids.size
-            (rec(32), rec(64))
-          } finally searcher.close()
-        s"n=$n clusters=$nBase flat_recall10=${f"$rFlat%.2f"} " +
-          s"hnsw_recall10=${f"$rHnsw%.2f"} " +
-          s"hnsw_recall10_ef64=${f"$rHnsw64%.2f"}"
-      },
-      time("hnsw_dist_serve") {
-        // The distributed HNSW serve's throughput claim, measured: one
-        // broadcast index image + mapPartitions over a 100×-larger
-        // query batch vs the driver-side searcher loop. Corpus =
-        // sign-flip replicas (distinct vectors, the graph_serve
-        // recipe); correctness gauge = the distributed rows for the
-        // driver's own queries must match it exactly (the HnswDistSpec
-        // equality, re-proven on the derived corpus at mult×).
-        import operators.Hnsw
-        val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-          .select("vec_id", "embedding")
-        val nBase = emb.count()
-        emb.crossJoin(spark.range(mult).withColumnRenamed("id", "rep"))
-          .withColumn("embedding", expr(
-            "transform(embedding, (x, i) -> CASE WHEN rep = 0 THEN x " +
-              "WHEN pmod(hash(rep, i), 2) = 0 THEN x ELSE -x END)"))
-          .withColumn("vec_id", col("vec_id") + col("rep") * nBase)
-          .drop("rep")
-          .write.mode("overwrite").parquet(s"$work/hd/embeddings.parquet")
-        val gdir = s"$work/hd"
-        val n = spark.read.parquet(s"$gdir/embeddings.parquet").count()
-        val tb0 = System.nanoTime()
-        val idx = Hnsw.buildIndex(spark, gdir, s"$work/hd_idx")
-        val tBuild = (System.nanoTime() - tb0) / 1e9
-        val qDriver = (0L until 20L)
-        val searcher = new Hnsw.Searcher(spark, gdir, idx)
-        val (driverAns, tDrv) =
-          try {
-            val t0 = System.nanoTime()
-            val a = qDriver.map(q => q -> searcher.serve(q, ef = 16, k = 5))
-            (a.toMap, (System.nanoTime() - t0) / 1e9)
-          } finally searcher.close()
-        val nDist = 2000L
-        val t1 = System.nanoTime()
-        val dist = Hnsw.serveDistributed(spark, gdir, idx,
-          spark.range(nDist).toDF("query_id").repartition(32),
-          ef = 16, k = 5).persist()
-        val served = dist.select("query_id").distinct().count()
-        val tDist = (System.nanoTime() - t1) / 1e9
-        val eq = dist.filter(col("query_id") < 20)
-          .collect()
-          .groupBy(_.getLong(0))
-          .forall { case (q, rs) =>
-            rs.sortBy(_.getLong(1))
-              .map(r => (r.getLong(2), r.getDouble(3))).toSeq ==
-              driverAns(q)
-          }
-        dist.unpersist(false)
-        s"n=$n build=${f"$tBuild%.0f"}s " +
-          s"driver_qps=${f"${qDriver.size / tDrv}%.1f"} " +
-          s"dist_queries=$served dist_qps=${f"${served / tDist}%.1f"} " +
-          s"dist_equals_driver=$eq"
-      },
-      time("hnsw_sharded") {
-        // The PARTITIONED-index serve (Hnsw.serveShardedDistributed)
-        // at mult×: segment count derived from a 1 MiB planted
-        // serving-node budget (NOT pinned — S grows with the corpus:
-        // ~3 at 10×, ~12 at 50×), so the probe exercises the gate the
-        // IndexImage doc promises. Gauges: recall@10 vs exact brute
-        // force for the sharded serve AND for the monolithic single
-        // image (the merge must not lose recall — each segment's graph
-        // is searched independently, so sharded recall should hold or
-        // beat), plus build/serve walls for both layouts.
-        import operators.{Ann, Hnsw, Search}
-        import graft.functions.VectorFunctions.{cosinePrenormed, dot}
-        val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-          .select("vec_id", "embedding")
-        val nBase = emb.count()
-        emb.crossJoin(spark.range(mult).withColumnRenamed("id", "rep"))
-          .withColumn("embedding", expr(
-            "transform(embedding, (x, i) -> CASE WHEN rep = 0 THEN x " +
-              "WHEN pmod(hash(rep, i), 2) = 0 THEN x ELSE -x END)"))
-          .withColumn("vec_id", col("vec_id") + col("rep") * nBase)
-          .drop("rep")
-          .write.mode("overwrite").parquet(s"$work/hs/embeddings.parquet")
-        val gdir = s"$work/hs"
-        val n = spark.read.parquet(s"$gdir/embeddings.parquet").count()
-        val budget = 1L << 20
-        val s = Hnsw.shardCountFor(n, 64, budget)
-        val qids = (0L until 40L)
-        val e = Search.embNormed(spark, gdir)
-        val qv = e.filter(col("vec_id") < 40)
-          .select(col("vec_id").as("qid"),
-            col("embedding").as("qv"), col("nrm").as("qn"))
-        val w = org.apache.spark.sql.expressions.Window.partitionBy("qid")
-          .orderBy(desc("score"), col("vec_id"))
-        val exact: Map[Long, Set[Long]] = e.crossJoin(broadcast(qv))
-          .filter(col("vec_id") =!= col("qid"))
-          .withColumn("score", round(
-            cosinePrenormed(dot(col("embedding"), col("qv")),
-              col("nrm"), col("qn")), 6))
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 10)
-          .select("qid", "vec_id").collect()
-          .groupBy(_.getLong(0))
-          .map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
-        // sharded: S segment builds + images + scatter-gather serve
-        val ts0 = System.nanoTime()
-        val shardAns = Hnsw.serveShardedDistributed(spark, gdir,
-          spark.range(40).toDF("query_id"), shards = s, ef = 16, k = 10)
-          .collect()
-        val tShard = (System.nanoTime() - ts0) / 1e9
-        val rShard = {
-          val byQ = shardAns.groupBy(_.getLong(0))
-            .map { case (q, rs) => q -> rs.map(_.getLong(2)).toSet }
-          qids.map(q => byQ.getOrElse(q, Set.empty[Long])
-            .count(exact(q).contains) / 10.0).sum / qids.size
-        }
-        // monolithic: one full-corpus image, same queries
-        val tm0 = System.nanoTime()
-        val mono = Hnsw.imageFor(spark, gdir)
-        val monoAns = qids.map(q =>
-          q -> Hnsw.serveLocal(mono, q, ef = 16, k = 10).map(_._1).toSet)
-          .toMap
-        val tMono = (System.nanoTime() - tm0) / 1e9
-        val rMono = qids.map(q =>
-          monoAns(q).count(exact(q).contains) / 10.0).sum / qids.size
-        // the LIFECYCLE composition at mult×: sealed segments +
-        // exactly-scanned delta + tombstones, one k-bounded gather.
-        // The delta arm is EXACT, so every query whose true top-10
-        // contains a live delta id must report it — measured, not
-        // assumed (deltaHit below). The wall includes the sealed
-        // corpus's own S segment builds (the sealed 90% is a
-        // different corpus than the full-corpus shards above).
-        val cutoff = Ann.deltaCutoff(Search.embNormed(spark, gdir))
-          .collect().head.getAs[Long]("cutoff")
-        val dead = (0L until n).filter(_ % 97 == 13).toSet
-        val td0 = System.nanoTime()
-        val deltaAns = Hnsw.serveShardedDelta(spark, gdir,
-          spark.range(40).toDF("query_id"), shards = s, ef = 16,
-          k = 10, tombstones = Some(
-            spark.createDataFrame(dead.toSeq.map(Tuple1(_)))
-              .toDF("vec_id"))).collect()
-        val tDelta = (System.nanoTime() - td0) / 1e9
-        val tombClean = deltaAns.forall(r => !dead.contains(r.getLong(2)))
-        val byQd = deltaAns.groupBy(_.getLong(0))
-          .map { case (q, rs) => q -> rs.map(_.getLong(2)).toSet }
-        // of the exact top-10s, the LIVE delta members that must appear
-        val deltaWanted = qids.flatMap(q => exact(q)
-          .filter(id => id >= cutoff && !dead.contains(id))
-          .map(q -> _))
-        val deltaHit = deltaWanted.count { case (q, id) =>
-          byQd.getOrElse(q, Set.empty).contains(id) }
-        // the query-TABLE serve (unbounded-query quadrant): fan a
-        // 2,000-row query table out to the S warm segment images in
-        // one pass; the gauge is q/s and equality is spec-pinned
-        // (HnswShardSpec)
-        val tq0 = System.nanoTime()
-        val servedQt = Hnsw.serveShardedQueryTable(spark, gdir,
-          spark.range(2000).toDF("query_id").repartition(32),
-          shards = s, ef = 16, k = 10)
-          .select(countDistinct("query_id")).head.getLong(0)
-        val tQt = (System.nanoTime() - tq0) / 1e9
-        s"n=$n budget=1MiB shards=$s " +
-          s"shard_recall10=${f"$rShard%.2f"} " +
-          s"mono_recall10=${f"$rMono%.2f"} " +
-          s"shard_wall=${f"$tShard%.0f"}s mono_wall=${f"$tMono%.0f"}s " +
-          "(both walls include their index build+image) " +
-          s"delta_wall=${f"$tDelta%.0f"}s " +
-          s"delta_hits=$deltaHit/${deltaWanted.size} " +
-          s"tombstones_clean=$tombClean " +
-          s"qtable_queries=$servedQt qtable_qps=${f"${servedQt / tQt}%.1f"}"
-      },
-      time("hnsw_ef_grid") {
-        // efSearch grid on the REAL (un-derived) corpus: the bake-off
-        // row reads hnsw recall@10 through qHnswSearch's family
-        // default, so the default should be the measured knee of this
-        // curve, not a guess — the graph_serve grid only covered the
-        // adversarial sign-flip corpus. 20 spread queries, recall@10
-        // vs exact brute force, driver-local beam (serve cost is
-        // microseconds either way — recall is the only axis here).
-        import operators.{Hnsw, Search}
-        import graft.functions.VectorFunctions.{cosinePrenormed, dot}
-        val e = Search.embNormed(spark, sfDir)
-        val img = Hnsw.imageFor(spark, sfDir)
-        val qids = (0L until 20L)
-        val qv = e.filter(col("vec_id") < 20)
-          .select(col("vec_id").as("qid"),
-            col("embedding").as("qv"), col("nrm").as("qn"))
-        val w = org.apache.spark.sql.expressions.Window.partitionBy("qid")
-          .orderBy(desc("score"), col("vec_id"))
-        val exact: Map[Long, Set[Long]] = e.crossJoin(broadcast(qv))
-          .filter(col("vec_id") =!= col("qid"))
-          .withColumn("score", round(
-            cosinePrenormed(dot(col("embedding"), col("qv")),
-              col("nrm"), col("qn")), 6))
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 10)
-          .select("qid", "vec_id").collect()
-          .groupBy(_.getLong(0))
-          .map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
-        val grid = Seq(8, 16, 32, 64, 128).map { ef =>
-          val r = qids.map { q =>
-            Hnsw.serveLocal(img, q, ef = ef, k = 10).map(_._1)
-              .count(exact(q).contains) / 10.0
-          }.sum / qids.size
-          s"ef$ef=${f"$r%.2f"}"
-        }
-        s"corpus=$sfDir n=${e.count()} " + grid.mkString(" ")
-      },
-      time("hnsw_sharded_filtered") {
-        // Filtered serving on the partitioned regime at mult× (r9
-        // verdict item 5): selectivity-derived per-segment pools,
-        // predicate at reporting, k-bounded gather. Gauges: fill (10
-        // label-matching rows per query), purity, recall@10 vs the
-        // exact filtered top-10, serve wall at the budget-derived S.
-        import operators.{Hnsw, Search}
-        import graft.functions.VectorFunctions.{cosinePrenormed, dot}
-        val gdir = hnswProbeDir
-        val e = Search.embNormed(spark, gdir)
-        val n = e.count()
-        val s = Hnsw.shardCountFor(n, 64, 1L << 20)
-        val qids = (0L until 40L)
-        val t0 = System.nanoTime()
-        val out = Hnsw.serveShardedFiltered(spark, gdir,
-          spark.range(40).toDF("query_id"), shards = s,
-          labelCol = "label", labelVal = 3L, ef = 64, k = 10).collect()
-        val tServe = (System.nanoTime() - t0) / 1e9
-        val labeled = e.filter(col("label") === 3)
-          .select("vec_id").collect().map(_.getLong(0)).toSet
-        val pure = out.forall(r => labeled.contains(r.getLong(2)))
-        val fill = out.groupBy(_.getLong(0)).values
-          .count(_.length == 10)
-        val qv = e.filter(col("vec_id") < 40)
-          .select(col("vec_id").as("qid"),
-            col("embedding").as("qv"), col("nrm").as("qn"))
-        val w = org.apache.spark.sql.expressions.Window.partitionBy("qid")
-          .orderBy(desc("score"), col("vec_id"))
-        val exact: Map[Long, Set[Long]] = e.filter(col("label") === 3)
-          .crossJoin(broadcast(qv))
-          .filter(col("vec_id") =!= col("qid"))
-          .withColumn("score", round(
-            cosinePrenormed(dot(col("embedding"), col("qv")),
-              col("nrm"), col("qn")), 6))
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 10)
-          .select("qid", "vec_id").collect()
-          .groupBy(_.getLong(0))
-          .map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
-        val byQ = out.groupBy(_.getLong(0))
-          .map { case (q, rs) => q -> rs.map(_.getLong(2)).toSet }
-        val recall = qids.map(q => byQ.getOrElse(q, Set.empty[Long])
-          .count(exact.getOrElse(q, Set.empty).contains) / 10.0)
-          .sum / qids.size
-        // the query-table filtered arm (round 11): same strategy, the
-        // segment-pinned concurrent fan-out — answers must match the
-        // bounded-batch filtered serve row for row
-        Hnsw.ImageBlobCache.clear()
-        val t1 = System.nanoTime()
-        val outOne = Hnsw.serveShardedQueryTableFiltered(spark,
-          gdir, spark.range(40).toDF("query_id"), shards = s,
-          labelCol = "label", labelVal = 3L, ef = 64, k = 10).collect()
-        val tOne = (System.nanoTime() - t1) / 1e9
-        Hnsw.ImageBlobCache.clear()
-        def keyed(rs: Array[org.apache.spark.sql.Row]) = rs
-          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-          .sortBy(identity).toSeq
-        val onePassEq = keyed(outOne) == keyed(out)
-        s"n=$n shards=$s filled=$fill/40 pure=$pure " +
-          s"recall10=${f"$recall%.2f"} wall=${f"$tServe%.0f"}s " +
-          s"onepass_equal=$onePassEq onepass_wall=${f"$tOne%.0f"}s"
-      },
-      time("hnsw_onepass") {
-        // The query-table serve's one-pass segment-pinned fan-out at
-        // S=4 and S=10 (2,000 queries): its wall and the executor
-        // blob-cache census (≤ S images in the shared local JVM; 1 per
-        // executor on a pinned cluster).
-        import operators.Hnsw
-        val gdir = hnswProbeDir
-        val n = spark.read.parquet(s"$gdir/embeddings.parquet").count()
-        val qs = spark.range(2000).toDF("query_id").repartition(32)
-        val rows = Seq(4, 10).map { s =>
-          Hnsw.stageBlobs(spark, Hnsw.shardDirsFor(spark, gdir, s))
-          Hnsw.ImageBlobCache.clear()
-          val t1 = System.nanoTime()
-          val served = Hnsw.serveShardedQueryTable(spark, gdir, qs,
-            shards = s).count()
-          val tOne = (System.nanoTime() - t1) / 1e9
-          val (execImgs, _) = Hnsw.ImageBlobCache.census
-          Hnsw.ImageBlobCache.clear()
-          s"S=$s rows=$served onepass_wall=${f"$tOne%.0f"}s " +
-            s"exec_imgs=$execImgs"
-        }
-        s"n=$n " + rows.mkString(" ")
-      },
-      time("hnsw_routed") {
-        // Centroid-routed clustered sharding at mult× (round 11 ext):
-        // the claim is the R/S scatter saving with measured recall —
-        // on the sign-flip corpus (no cluster structure, the WORST
-        // case for routing: k-means cells are arbitrary) recall must
-        // degrade gracefully toward R=S, and on a genuinely clustered
-        // corpus R=1 must hold near-full recall. Gauges: recall@10 vs
-        // the exact brute top-10 at R ∈ {1,2,4,S}, serve walls, the
-        // one-time layout wall, and the clustered-corpus R=1 row.
-        import operators.Hnsw
-        def routedRecall(dir: String, s: Int, r: Int,
-            exact: Map[Long, Set[Long]]): (Double, Double) = {
-          val t0 = System.nanoTime()
-          val out = Hnsw.serveShardedRouted(spark, dir,
-            spark.range(40).toDF("query_id"), shards = s, maxRoutes = r,
-            ef = 16, k = 10).collect()
-          val wall = (System.nanoTime() - t0) / 1e9
-          val byQ = out.groupBy(_.getLong(0))
-            .map { case (q, rs) => q -> rs.map(_.getLong(2)).toSet }
-          val rec = (0L until 40L).map(q =>
-            byQ.getOrElse(q, Set.empty[Long])
-              .count(exact.getOrElse(q, Set.empty).contains) / 10.0)
-            .sum / 40.0
-          (rec, wall)
-        }
-        val gdir = hnswProbeDir
-        val n = spark.read.parquet(s"$gdir/embeddings.parquet").count()
-        val S = 8
-        val tl0 = System.nanoTime()
-        Hnsw.clusterLayoutFor(spark, gdir, S)
-        val tLayout = (System.nanoTime() - tl0) / 1e9
-        val exactG = bruteTop10(gdir)
-        val flat = Seq(1, 2, 4, S).map { r =>
-          val (rec, wall) = routedRecall(gdir, S, r, exactG)
-          s"R=$r recall10=${f"$rec%.2f"} wall=${f"$wall%.0f"}s"
-        }
-        val cdir = routedClusteredDir
-        val exactC = bruteTop10(cdir)
-        val tc16 = System.nanoTime()
-        Hnsw.clusterLayoutFor(spark, cdir, 16)
-        val tLayoutC = (System.nanoTime() - tc16) / 1e9
-        val (recC1, wallC1) = routedRecall(cdir, 16, 1, exactC)
-        val (recC16, _) = routedRecall(cdir, 16, 16, exactC)
-        s"n=$n S=$S layout=${f"$tLayout%.0f"}s ${flat.mkString(" ")} " +
-          s"| clustered S=16 layout=${f"$tLayoutC%.0f"}s " +
-          s"R=1 recall10=${f"$recC1%.2f"} wall=${f"$wallC1%.0f"}s " +
-          s"R=16 recall10=${f"$recC16%.2f"}"
-      },
-      time("hnsw_incr") {
-        // The LSM lifecycle's cost claim at mult×: sealing a 5% delta
-        // builds ONE delta-sized index, where the reseal alternative
-        // re-lays-out and re-indexes the whole grown corpus — the
-        // walls must separate by roughly the corpus/delta ratio.
-        // Gauges: init/seal/reseal walls, post-seal clone findability
-        // (each delta row is a half-scaled clone of a base vector:
-        // querying the base id must report its clone at rank 1 with
-        // score 1.0 through the shadow-aware scatter-gather), and one
-        // compaction step's wall + segment arithmetic.
-        import operators.{Hnsw, IncrementalIndex => II, Search}
-        val gdir = hnswProbeDir
-        val e = Search.embNormed(spark, gdir)
-        val n = e.count()
-        val dim = e.select(size(col("embedding"))).head.getInt(0)
-        val bpv = Hnsw.imageBytesPerVec(dim)
-        val budget = math.max(1L, n * bpv / 6)
-        val iw = s"$work/incr_work"
-        val ti0 = System.nanoTime()
-        val segs0 = II.initSegments(spark, gdir, iw, budget)
-        locally {
-          import scala.collection.parallel.CollectionConverters._
-          segs0.par.foreach(s0 => Hnsw.indexFor(spark, s0.dir))
-        }
-        val tInit = (System.nanoTime() - ti0) / 1e9
-        val dN = n / 20
-        val delta = e.filter(col("vec_id") < dN)
-          .select((col("vec_id") + 1000000000L).as("vec_id"),
-            expr("transform(embedding, x -> x * CAST(0.5 AS FLOAT))")
-              .as("embedding"))
-        val ts0 = System.nanoTime()
-        II.sealDelta(spark, iw, delta)
-        val tSeal = (System.nanoTime() - ts0) / 1e9
-        val out = II.serve(spark, iw,
-          spark.range(40).toDF("query_id"), ef = 16, k = 10).collect()
-        val found = (0L until 40L).count { q =>
-          out.exists(r => r.getLong(0) == q && r.getLong(1) == 1L &&
-            r.getLong(2) == q + 1000000000L && r.getDouble(3) == 1.0)
-        }
-        // the contrast arm: the full reseal over the same grown corpus
-        val udir = s"$work/incr_union"
-        spark.read.parquet(s"$gdir/embeddings.parquet")
-          .select("vec_id", "embedding")
-          .unionByName(delta)
-          .write.mode("overwrite").parquet(s"$udir/embeddings.parquet")
-        val tr0 = System.nanoTime()
-        val (sReseal, _) = Hnsw.resealSharded(spark, udir, budget)
-        val tReseal = (System.nanoTime() - tr0) / 1e9
-        // one size-tiered step under a 2×-budget compaction window:
-        // the delta segment folds into its neighbor, count drops by 1
-        val before = II.segs(spark, iw).size
-        val tc0 = System.nanoTime()
-        val step = II.compactOnce(spark, iw, budget * 2)
-        val tCompact = (System.nanoTime() - tc0) / 1e9
-        val after = II.segs(spark, iw).size
-        s"n=$n delta=$dN init=${f"$tInit%.0f"}s " +
-          s"seal=${f"$tSeal%.0f"}s reseal(S=$sReseal)=${f"$tReseal%.0f"}s " +
-          s"seal_vs_reseal=${f"${tReseal / math.max(tSeal, 0.001)}%.1f"}x " +
-          s"clone_found=$found/40 compact=$step " +
-          s"segs=$before->$after compact_wall=${f"$tCompact%.0f"}s"
-      },
-      time("hnsw_routed_margin") {
-        // The margin GRID for adaptive routing (round 12): recall@10
-        // vs mean cells served per query, on BOTH corpus shapes, so
-        // the default margin is a measured knee, not a guess. maxRoutes
-        // = S (the margin alone decides width): a clustered corpus
-        // should hold near-full recall at ~1 cell across small
-        // margins; the sign-flip corpus should buy recall roughly
-        // linearly in cells served.
-        import operators.Hnsw
-        def grid(dir: String, s: Int): String = {
-          val (_, cents) = Hnsw.clusterLayoutFor(spark, dir, s)
-          val exact = bruteTop10(dir)
-          val qrows = operators.Search.embNormed(spark, dir)
-            .filter(col("vec_id") < 40)
-            .select("vec_id", "embedding", "nrm").collect()
-            .map(r => (r.getLong(0), r.getSeq[Float](1).toArray,
-              r.getDouble(2)))
-          Seq(0.0, 0.02, 0.05, 0.1, 0.2, 0.5).map { m =>
-            val cells = qrows.map { case (_, qv, qn) =>
-              Hnsw.routeCellsAdaptive(cents, qv, qn, s, m).size
-            }.sum.toDouble / qrows.length
-            val out = Hnsw.serveShardedRouted(spark, dir,
-              spark.range(40).toDF("query_id"), shards = s,
-              maxRoutes = s, margin = m, ef = 16, k = 10).collect()
-            val byQ = out.groupBy(_.getLong(0))
-              .map { case (q, rs) => q -> rs.map(_.getLong(2)).toSet }
-            val rec = (0L until 40L).map(q =>
-              byQ.getOrElse(q, Set.empty[Long])
-                .count(exact.getOrElse(q, Set.empty).contains) / 10.0)
-              .sum / 40.0
-            s"m=$m cells=${f"$cells%.1f"} recall10=${f"$rec%.2f"}"
-          }.mkString(" ")
-        }
-        s"clustered(S=16): ${grid(routedClusteredDir, 16)} | " +
-          s"signflip(S=8): ${grid(hnswProbeDir, 8)}"
-      },
-      time("hnsw_hotcell") {
-        // The routed query-table straggler wall (round 12): a query
-        // batch CONCENTRATED on one cell lands, pre-fix, in a single
-        // task (group key = segment alone); the (segment, qhash mod P)
-        // key splits it. Gauges: walls at qParts=1 (the old mode) vs
-        // qParts=8 on a 2000-query hot batch, answers bit-equal on a
-        // sample.
-        import operators.Hnsw
-        val cdir = routedClusteredDir
-        Hnsw.clusterLayoutFor(spark, cdir, 16)
-        // every query from cluster 3 → (near-)every route hits cell 3
-        val hotQ = spark.read.parquet(s"$cdir/embeddings.parquet")
-          .filter(pmod(col("vec_id"), lit(16L)) === 3L)
-          .select(col("vec_id").as("query_id")).limit(2000)
-        hotQ.cache(); val nq = hotQ.count()
-        def run(p: Int): (Double, Array[(Long, Long, Long, Double)]) = {
-          Hnsw.ImageBlobCache.clear()
-          val t0 = System.nanoTime()
-          val out = Hnsw.serveShardedRoutedQueryTable(spark, cdir,
-            hotQ, shards = 16, maxRoutes = 1, ef = 16, k = 10,
-            qParts = p).collect()
-            .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-              r.getDouble(3)))
-          ((System.nanoTime() - t0) / 1e9, out.sortBy(t => (t._1, t._2)))
-        }
-        val (w1, o1) = run(1)
-        val (w8, o8) = run(8)
-        hotQ.unpersist()
-        val equal = o1.toSeq == o8.toSeq
-        s"hot_queries=$nq wall_p1=${f"$w1%.1f"}s wall_p8=${f"$w8%.1f"}s " +
-          s"speedup=${f"${w1 / math.max(w8, 0.001)}%.1f"}x equal=$equal"
-      },
-      time("hnsw_incr_updates") {
-        // The UPDATE-HEAVY LSM stream (round 12): corrections
-        // accumulate across seals with lazy compaction, past the
-        // driver cap — the serve must hold the bounded-exclusion
-        // contract (one Bloom bitmap in task closures, never a
-        // correction-sized Set), derive its exclusion state ONCE, and
-        // keep repeat-serve walls flat. Cap planted at 512 so the 20×
-        // point also exercises the Bloom branch (the 50× stream
-        // crosses the production 4096 cap on its own).
-        import operators.{Hnsw, IncrementalIndex => II, Search}
-        val gdir = hnswProbeDir
-        val e = Search.embNormed(spark, gdir)
-        val n = e.count()
-        val dim = e.select(size(col("embedding"))).head.getInt(0)
-        val budget = math.max(1L, n * Hnsw.imageBytesPerVec(dim) / 6)
-        val uw = s"$work/incr_updates"
-        II.initSegments(spark, gdir, uw, budget)
-        // 6 update-heavy seals: each RE-DELIVERS a disjoint n/50 slice
-        // of existing ids with rescaled embeddings — all corrections
-        val slice = n / 50
-        val tSeals = (0 until 6).map { b =>
-          val d = e.filter(col("vec_id") >= b * slice &&
-              col("vec_id") < (b + 1) * slice)
-            .select(col("vec_id"), expr(
-              s"transform(embedding, x -> x * CAST(0.9 AS FLOAT))")
-              .as("embedding"))
-          val t0 = System.nanoTime()
-          II.sealDelta(spark, uw, d)
-          (System.nanoTime() - t0) / 1e9
-        }
-        val corrections = II.segs(spark, uw).map(s0 =>
-          II.shadowOf(spark, uw, s0.ord).count()).sum
-        spark.conf.set("spark.graft.ann.deadSetCap", "512")
-        try {
-          val walls = (0 until 3).map { _ =>
-            val t0 = System.nanoTime()
-            val out = II.serve(spark, uw,
-              spark.range(40).toDF("query_id"), ef = 16, k = 10)
-              .count()
-            ((System.nanoTime() - t0) / 1e9, out)
-          }
-          val d0 = II.shadowDerivations.get
-          II.serve(spark, uw, spark.range(40).toDF("query_id"),
-            ef = 16, k = 10).count()
-          val extraDerivs = II.shadowDerivations.get - d0
-          s"n=$n corrections=$corrections cap=512 " +
-            s"seals=${tSeals.map(t => f"$t%.0f").mkString("/")}s " +
-            s"serve_walls=${walls.map(t => f"${t._1}%.1f").mkString("/")}s " +
-            s"rows=${walls.head._2} repeat_derivations=$extraDerivs"
-        } finally spark.conf.unset("spark.graft.ann.deadSetCap")
-      },
-      time("hnsw_incr_seal_scale") {
-        // Seal-time shadow-DERIVATION cost vs corpus id volume (round
-        // 12), measured in isolation — the end-to-end seal wall is
-        // delta-index-build dominated at toy scale and would mask it.
-        // The sidecar path probes S Bloom bitmaps over the DELTA ids
-        // (delta-sized work) + flagged point lookups; the full-scan
-        // path unions every older segment's id column and semi-joins.
-        // The derived correction sets must be identical; the walls
-        // separate by the full-id-scan tax, which grows with the
-        // corpus while the sidecar arm does not.
-        import operators.{Hnsw, IncrementalIndex => II, Search}
-        val gdir = hnswProbeDir
-        val e = Search.embNormed(spark, gdir)
-        val n = e.count()
-        val dim = e.select(size(col("embedding"))).head.getInt(0)
-        val budget = math.max(1L, n * Hnsw.imageBytesPerVec(dim) / 6)
-        val w = s"$work/seal_scale"
-        II.initSegments(spark, gdir, w, budget)
-        val segsNow = II.segs(spark, w)
-        // 200 corrections staged as the seal would stage them
-        val deltaIds = e.filter(col("vec_id") < 200).select("vec_id")
-        deltaIds.write.mode("overwrite").parquet(s"$w/staged_ids")
-        val staged = spark.read.parquet(s"$w/staged_ids")
-        def timed[A](f: => A): (Double, A) = {
-          val t0 = System.nanoTime()
-          val r = f
-          ((System.nanoTime() - t0) / 1e9, r)
-        }
-        val (wSide, shSide) = timed {
-          II.deriveShadowIdsSidecar(spark, segsNow, staged)
-            .map(_.distinct().collect().map(_.getLong(0)).toSet)
-            .getOrElse(Set.empty[Long])
-        }
-        val (wScan, shScan) = timed {
-          val all = segsNow.map(s0 => spark.read
-              .parquet(s"${s0.dir}/embeddings.parquet").select("vec_id"))
-            .reduce(_.unionByName(_))
-          staged.join(all, Seq("vec_id"), "left_semi").distinct()
-            .collect().map(_.getLong(0)).toSet
-        }
-        s"n=$n segs=${segsNow.size} delta=200 " +
-          s"derive_sidecar=${f"$wSide%.2f"}s " +
-          s"derive_fullscan=${f"$wScan%.2f"}s " +
-          s"tax=${f"${wScan / math.max(wSide, 0.001)}%.1f"}x " +
-          s"shadow_parity=${shSide == shScan} corrections=${shSide.size}"
-      },
-      time("hnsw_incr_routed") {
-        // Routing × the LSM lifecycle (round 12): a BURSTY ingest
-        // stream — init segments hold clusters 0-3 mixed, then four
-        // topical seals (clusters 4-7) — serves burst queries through
-        // the adaptive route plan at R ≪ S with full-fan-out recall,
-        // because each sealed segment's `_centroid` sidecar gives it a
-        // real geometric identity. Gauges: routed-vs-full overlap@10,
-        // recall@10 vs brute for both, mean segments served vs S.
-        import operators.{IncrementalIndex => II}
-        val cdir = routedClusteredDir
-        val all = spark.read.parquet(s"$cdir/embeddings.parquet")
-        val baseDir = s"$work/incr_routed_base"
-        all.filter(pmod(col("vec_id"), lit(16L)) < 4L)
-          .write.mode("overwrite").parquet(s"$baseDir/embeddings.parquet")
-        val rw = s"$work/incr_routed_work"
-        val nb = spark.read
-          .parquet(s"$baseDir/embeddings.parquet").count()
-        val dim = 64
-        val budget = math.max(1L,
-          nb * operators.Hnsw.imageBytesPerVec(dim) / 4)
-        II.initSegments(spark, baseDir, rw, budget)
-        (4L to 7L).foreach { c =>
-          II.sealDelta(spark, rw,
-            all.filter(pmod(col("vec_id"), lit(16L)) === c)
-              .select("vec_id", "embedding"))
-        }
-        val S = II.segs(spark, rw).size
-        // 40 burst queries: ten each from clusters 4-7
-        val qids = (4L to 7L).flatMap(c =>
-          (0 until 10).map(i => c + 16L * i))
-        import spark.implicits._
-        val qdf = qids.toDF("query_id")
-        val exact = {
-          import graft.functions.VectorFunctions.{cosinePrenormed, dot}
-          // the brute denominator covers the LSM's corpus (clusters
-          // 0-7), not the unreached clusters 8-15
-          val e = operators.Search.embNormed(spark, cdir)
-            .filter(pmod(col("vec_id"), lit(16L)) < 8L)
-          val qv = e.filter(col("vec_id").isin(qids: _*))
-            .select(col("vec_id").as("qid"),
-              col("embedding").as("qv"), col("nrm").as("qn"))
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy("qid").orderBy(desc("score"), col("vec_id"))
-          e.crossJoin(broadcast(qv))
-            .filter(col("vec_id") =!= col("qid"))
-            .withColumn("score", round(
-              cosinePrenormed(dot(col("embedding"), col("qv")),
-                col("nrm"), col("qn")), 6))
-            .withColumn("rn", row_number().over(w))
-            .filter(col("rn") <= 10)
-            .select("qid", "vec_id").collect()
-            .groupBy(_.getLong(0))
-            .map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
-        }
-        def recall(rows: Array[org.apache.spark.sql.Row]): Double = {
-          val byQ = rows.groupBy(_.getLong(0))
-            .map { case (q, rs) => q -> rs.map(_.getLong(2)).toSet }
-          qids.map(q => byQ.getOrElse(q, Set.empty[Long])
-            .count(exact.getOrElse(q, Set.empty).contains) / 10.0)
-            .sum / qids.size
-        }
-        // routed runs FIRST (cold): it builds/loads images only for
-        // the batch's routed working set — the scatter saving includes
-        // the build bill; the full serve then pays the rest
-        val plan = II.routePlan(spark, rw, qdf, maxRoutes = 2,
-          margin = 0.05)
-        val meanSegs = plan.values.map(_.size).sum.toDouble /
-          math.max(plan.size, 1)
-        val t1 = System.nanoTime()
-        val routed = II.serve(spark, rw, qdf, maxRoutes = 2,
-          margin = 0.05, ef = 16, k = 10).collect()
-        val wRouted = (System.nanoTime() - t1) / 1e9
-        val t0 = System.nanoTime()
-        val full = II.serve(spark, rw, qdf, ef = 16, k = 10).collect()
-        val wFull = (System.nanoTime() - t0) / 1e9
-        val fullByQ = full.groupBy(_.getLong(0))
-          .map { case (q, rs) => q -> rs.map(_.getLong(2)).toSet }
-        val overlap = qids.map { q =>
-          val r = routed.filter(_.getLong(0) == q).map(_.getLong(2)).toSet
-          if (fullByQ.getOrElse(q, Set.empty).isEmpty) 1.0
-          else r.intersect(fullByQ(q)).size.toDouble /
-            math.max(fullByQ(q).size, 1)
-        }.sum / qids.size
-        s"S=$S mean_segs_routed=${f"$meanSegs%.1f"} " +
-          s"recall_full=${f"${recall(full)}%.2f"} " +
-          s"recall_routed=${f"${recall(routed)}%.2f"} " +
-          s"overlap=${f"$overlap%.2f"} " +
-          s"wall_full=${f"$wFull%.1f"}s wall_routed=${f"$wRouted%.1f"}s"
-      },
-      time("hnsw_blob_batch") {
-        // Blob-routed bounded-batch scatter (round 13 — r12 verdict
-        // item 2): the batch serves at S=12 must leave ZERO images in
-        // the driver session cache (tasks deserialize their own
-        // segment from its blob) and driver heap must stay flat
-        // relative to the S×image bill the old all-images mode paid.
-        // Gauges: census (must be 0), measured driver heap delta
-        // across the serve vs the S×image contrast, wall, answer
-        // sanity (40 queries × k rows).
-        import operators.{Hnsw, Search}
-        val gdir = hnswProbeDir
-        val e = Search.embNormed(spark, gdir)
-        val n = e.count()
-        val dim = e.select(size(col("embedding"))).head.getInt(0)
-        val s = 12
-        def usedMb(): Long = {
-          System.gc(); System.gc()
-          (Runtime.getRuntime.totalMemory -
-            Runtime.getRuntime.freeMemory) / (1 << 20)
-        }
-        // pre-build the layout + indexes so the measured serve is the
-        // scatter, not the one-time artifact build
-        val dirs = Hnsw.shardDirsFor(spark, gdir, s)
-        val before = usedMb()
-        val t0 = System.nanoTime()
-        val rows = Hnsw.serveShardedDistributed(spark, gdir,
-          spark.range(40).toDF("query_id"), shards = s, ef = 16,
-          k = 10).count()
-        val wall = (System.nanoTime() - t0) / 1e9
-        val after = usedMb()
-        val census = Hnsw.cachedImageCensus(dirs)
-        val imageBill = n * Hnsw.imageBytesPerVec(dim) / (1 << 20)
-        s"n=$n S=$s rows=$rows wall=${f"$wall%.1f"}s " +
-          s"census_images=${census._1} " +
-          s"driver_heap=${before}->${after}MB " +
-          s"(all_images_bill=${imageBill}MB)"
-      },
-      time("hnsw_table_routed") {
-        // Routing × the LSM unbounded-query-table serve (round 13 —
-        // r12 verdict item 3): the in-plan route set must trim the
-        // shuffle fan from |Q|·S to |Q|·R on a clustered lifecycle,
-        // including the HOT-CELL shape (a batch concentrated on one
-        // sealed burst). Gauges: walls full-fan-out vs routed on a
-        // 2000-query hot batch, mean routed width, answer overlap on
-        // the hot cluster's queries, and the routed answers' agreement
-        // with the bounded-batch routed serve on a sample.
-        import operators.{IncrementalIndex => II}
-        val cdir = routedClusteredDir
-        val all = spark.read.parquet(s"$cdir/embeddings.parquet")
-        val baseDir = s"$work/table_routed_base"
-        all.filter(pmod(col("vec_id"), lit(16L)) < 4L)
-          .write.mode("overwrite").parquet(s"$baseDir/embeddings.parquet")
-        val rw = s"$work/table_routed_work"
-        val nb = spark.read
-          .parquet(s"$baseDir/embeddings.parquet").count()
-        val budget = math.max(1L,
-          nb * operators.Hnsw.imageBytesPerVec(64) / 4)
-        II.initSegments(spark, baseDir, rw, budget)
-        (4L to 7L).foreach { c =>
-          II.sealDelta(spark, rw,
-            all.filter(pmod(col("vec_id"), lit(16L)) === c)
-              .select("vec_id", "embedding"))
-        }
-        val s = II.segs(spark, rw).size
-        // hot batch: 2000 queries from the cluster-5 sealed burst
-        val hotQ = all.filter(pmod(col("vec_id"), lit(16L)) === 5L)
-          .select(col("vec_id").as("query_id")).limit(2000)
-        hotQ.cache(); val nq = hotQ.count()
-        def run(mr: Int, mg: Double): (Double,
-            Array[(Long, Long, Long, Double)]) = {
-          val t0 = System.nanoTime()
-          val out = II.serveQueryTable(spark, rw, hotQ, ef = 16,
-            k = 10, maxRoutes = mr, margin = mg).collect()
-            .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-              r.getDouble(3)))
-          ((System.nanoTime() - t0) / 1e9, out.sortBy(t => (t._1, t._2)))
-        }
-        val (wFull, oFull) = run(Int.MaxValue, 2.0)
-        val (wRouted, oRouted) = run(1, 0.0)
-        hotQ.unpersist()
-        val fullByQ = oFull.groupBy(_._1)
-          .map { case (q, rs) => q -> rs.map(_._3).toSet }
-        val overlap = oRouted.groupBy(_._1).map { case (q, rs) =>
-          val f = fullByQ.getOrElse(q, Set.empty[Long])
-          if (f.isEmpty) 1.0
-          else rs.map(_._3).toSet.intersect(f).size.toDouble / f.size
-        }.sum / math.max(fullByQ.size, 1)
-        // sample agreement with the bounded-batch routed serve
-        import spark.implicits._
-        val sample = oRouted.map(_._1).distinct.take(20).toSeq
-        val batchRouted = II.serve(spark, rw,
-          sample.toDF("query_id"), maxRoutes = 1, margin = 0.0,
-          ef = 16, k = 10).collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-            r.getDouble(3))).sortBy(t => (t._1, t._2)).toSeq
-        val sampleEq = oRouted
-          .filter(t => sample.contains(t._1)).toSeq == batchRouted
-        s"S=$s hot_queries=$nq wall_full=${f"$wFull%.1f"}s " +
-          s"wall_routed=${f"$wRouted%.1f"}s " +
-          s"speedup=${f"${wFull / math.max(wRouted, 0.001)}%.1f"}x " +
-          s"overlap=${f"$overlap%.2f"} batch_equal=$sampleEq"
-      },
-      time("qv_resolution") {
-        // Latest-wins query-vector resolution at a REALISTIC segment
-        // count (round 13 residual #2): the r13 first cut resolved
-        // queries via an S-leg unionByName (a scan + a broadcast join
-        // per segment), whose PLAN grows O(S) — Catalyst analysis,
-        // S scan legs, S joins — exactly the guide's wide-union
-        // planning tax. The rewrite is ONE multi-path scan with the
-        // segment ordinal extracted from the rename-published basename
-        // (plan O(1) in S; the S-ness degrades to file listing).
-        // Gauges: both arms timed in isolation at a planted S=64
-        // lifecycle, answers asserted bit-equal (the union twin is the
-        // reference arm, kept for exactly this probe and the spec).
-        import operators.{Hnsw, IncrementalIndex => II, Search}
-        val gdir = hnswProbeDir
-        val e = Search.embNormed(spark, gdir)
-        val n = e.count()
-        val dim = e.select(size(col("embedding"))).head.getInt(0)
-        val budget = math.max(1L, n * Hnsw.imageBytesPerVec(dim) / 64)
-        val qw = s"$work/qv_resolution"
-        II.initSegments(spark, gdir, qw, budget)
-        val ss = II.segs(spark, qw)
-        import spark.implicits._
-        val qdf = (0L until 64L).toDF("query_id")
-        def arm(f: => Array[(Long, Array[Float], Double)])
-            : (Double, Seq[(Long, Seq[Float], Double)]) = {
-          val t0 = System.nanoTime()
-          val r = f
-          ((System.nanoTime() - t0) / 1e9,
-            r.sortBy(_._1).map(t => (t._1, t._2.toSeq, t._3)).toSeq)
-        }
-        val (wScan, oScan) = arm(II.queryVecs(spark, ss, qdf))
-        val (wUnion, oUnion) = arm(II.queryVecsUnion(spark, ss, qdf))
-        // asserted, not just interpolated (r13 advice): a divergence
-        // must FAIL the probe, not reword its gauge string
-        assert(oScan == oUnion,
-          "qv_resolution: multi-path scan diverged from the union twin")
-        s"S=${ss.size} q=64 equal=${oScan == oUnion} " +
-          s"wall_scan=${f"$wScan%.1f"}s wall_union=${f"$wUnion%.1f"}s " +
-          s"speedup=${f"${wUnion / math.max(wScan, 0.001)}%.1f"}x"
-      },
-      time("qv_prune") {
-        // The qid-Bloom path prune on the bounded-batch resolution
-        // (round 14 — r13 verdict item 4): at LSM-realistic S the
-        // multi-path scan listed and opened EVERY segment's files for
-        // a point lookup most segments provably cannot answer. Gauges:
-        // segments kept vs S, both arms timed, answers asserted
-        // bit-equal (no false negatives ⇒ identical join rows).
-        import operators.{Hnsw, IncrementalIndex => II, Search}
-        val gdir = hnswProbeDir
-        val e = Search.embNormed(spark, gdir)
-        val n = e.count()
-        val dim = e.select(size(col("embedding"))).head.getInt(0)
-        val budget = math.max(1L, n * Hnsw.imageBytesPerVec(dim) / 64)
-        val pw = s"$work/qv_prune"
-        II.initSegments(spark, gdir, pw, budget)
-        val ss = II.segs(spark, pw)
-        import spark.implicits._
-        val qids = (0L until 8L)
-        val qdf = qids.toDF("query_id")
-        def arm(f: => Array[(Long, Array[Float], Double)])
-            : (Double, Seq[(Long, Seq[Float], Double)]) = {
-          val t0 = System.nanoTime()
-          val r = f
-          ((System.nanoTime() - t0) / 1e9,
-            r.sortBy(_._1).map(t => (t._1, t._2.toSeq, t._3)).toSeq)
-        }
-        // ONE try/finally around the whole conf-mutation span
-        // (round-14 review: a throw in the FULL arm used to leak the
-        // disabled-prune conf into every later probe), and `kept` is
-        // computed while the prune is force-enabled so the gauge can
-        // never silently read no-prune on a small-S layout
-        val (wFull, oFull, wPruned, oPruned, kept) =
-          try {
-            spark.conf.set("spark.graft.ann.qvPruneMinSegs",
-              (ss.size + 1).toString)
-            val (wf, of) = arm(II.queryVecs(spark, ss, qdf))
-            spark.conf.set("spark.graft.ann.qvPruneMinSegs", "1")
-            val (wp, op) = arm(II.queryVecs(spark, ss, qdf))
-            (wf, of, wp, op, II.pruneSegsByIdBloom(spark, ss, qids.toArray))
-          } finally spark.conf.unset("spark.graft.ann.qvPruneMinSegs")
-        assert(oPruned == oFull,
-          "qv_prune: pruned resolution diverged from the full scan")
-        // the load-bearing gauge is SCANNED FILES (the r13 verdict's
-        // "Done" criterion): at this toy scale every segment file is
-        // tiny and file-open cost is noise, so walls read ~flat — the
-        // prune's value is the data/footer reads skipped per segment,
-        // which grows with segment size while the sidecar scan stays
-        // words-table-sized
-        def partFiles(segs: Seq[II.Seg]): Int = segs.map { s0 =>
-          val p = new org.apache.hadoop.fs.Path(
-            s"${s0.dir}/embeddings.parquet")
-          p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .listStatus(p).count(_.getPath.getName.endsWith(".parquet"))
-        }.sum
-        s"S=${ss.size} q=8 kept=${kept.size} " +
-          s"files_scanned=${partFiles(ss)}->${partFiles(kept)} " +
-          s"equal=${oPruned == oFull} " +
-          s"wall_full=${f"$wFull%.2f"}s wall_pruned=${f"$wPruned%.2f"}s"
-      },
-      time("hnsw_delta_ladder") {
-        // The delta-exclusion ladder (round 13 — r12 verdict item 5):
-        // a LIVE delta past the driver cap must serve through the
-        // in-plan deadness table with answers identical to the
-        // driver-Set arm, at a wall that stays serve-shaped (no
-        // quadratic blowup from the widening rounds). Delta = n/20
-        // corrections (every one supersedes a sealed id); cap planted
-        // at 512 so both points exercise the ladder.
-        import operators.{Hnsw, IncrementalIndex => II, Search}
-        val gdir = hnswProbeDir
-        val e = Search.embNormed(spark, gdir)
-        val n = e.count()
-        val dim = e.select(size(col("embedding"))).head.getInt(0)
-        val budget = math.max(1L, n * Hnsw.imageBytesPerVec(dim) / 6)
-        val lw = s"$work/delta_ladder"
-        II.initSegments(spark, gdir, lw, budget)
-        val dN = n / 20
-        val delta = e.filter(col("vec_id") < dN)
-          .select(col("vec_id"), expr(
-            "transform(embedding, x -> x * CAST(0.9 AS FLOAT))")
-            .as("embedding"))
-        delta.write.mode("overwrite").parquet(s"$lw/delta_rows")
-        val d = spark.read.parquet(s"$lw/delta_rows")
-        val qdf = spark.range(40).toDF("query_id")
-        def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-            r.getDouble(3))).sortBy(t => (t._1, t._2)).toSeq
-        // the driver-Set arm (cap above the delta) is the reference
-        val t0 = System.nanoTime()
-        val viaSet = rows(II.serve(spark, lw, qdf, ef = 16, k = 10,
-          delta = Some(d)))
-        val wSet = (System.nanoTime() - t0) / 1e9
-        spark.conf.set("spark.graft.ann.deadSetCap", "512")
-        try {
-          val t1 = System.nanoTime()
-          val viaLadder = rows(II.serve(spark, lw, qdf, ef = 16,
-            k = 10, delta = Some(d)))
-          val wLadder = (System.nanoTime() - t1) / 1e9
-          assert(viaSet == viaLadder,
-            "delta ladder: past-cap serve diverged from the Set arm")
-          s"n=$n delta=$dN cap=512 equal=${viaSet == viaLadder} " +
-            s"wall_set=${f"$wSet%.1f"}s wall_ladder=${f"$wLadder%.1f"}s"
-        } finally spark.conf.unset("spark.graft.ann.deadSetCap")
-      },
-      time("hnsw_spill") {
-        // The Searcher's size-gate spill path, deliberately tripped
-        // (cacheGate=0 — no upper-layer driver cache at all) vs the
-        // cached default, after the r11 per-hop BATCHING: a spilled
-        // descent now runs one adjacency probe + one vector fetch per
-        // fixpoint step instead of one job per candidate. Gauges:
-        // answers equal, per-query serve wall on both paths.
-        import operators.Hnsw
-        val gdir = hnswProbeDir
-        val n = spark.read.parquet(s"$gdir/embeddings.parquet").count()
-        val idx = Hnsw.indexFor(spark, gdir)
-        val qids = (1 to 20).map(i => 2L + (i.toLong * 131L) % (n - 2))
-        val cached = new Hnsw.Searcher(spark, gdir, idx)
-        val spilled = new Hnsw.Searcher(spark, gdir, idx, cacheGate = 0L)
-        try {
-          val t0 = System.nanoTime()
-          val a = qids.map(q => cached.serve(q, ef = 32))
-          val tCached = (System.nanoTime() - t0) / 1e9
-          val t1 = System.nanoTime()
-          val b = qids.map(q => spilled.serve(q, ef = 32))
-          val tSpill = (System.nanoTime() - t1) / 1e9
-          s"n=$n levels=${idx.maxLevel} queries=${qids.size} " +
-            s"equal=${a == b} cached_wall=${f"$tCached%.1f"}s " +
-            s"spilled_wall=${f"$tSpill%.1f"}s " +
-            s"spilled_per_query=${f"${tSpill / qids.size}%.2f"}s"
-        } finally { cached.close(); spilled.close() }
-      },
-      time("hnsw_hetero") {
-        // Heuristic neighbor selection A/B on the corpus shape
-        // Algorithm 4 actually targets: HETEROGENEOUS cluster mass.
-        // Half the corpus is one jittered mass-attractor cluster
-        // (500× any truth cluster), the other half is uniform truth
-        // clusters — plain top-k layer edges inside and near the
-        // attractor are all intra-attractor siblings, so greedy
-        // descent entering it (the entry point is mass-biased) has
-        // only the 2/node random seeds as escape routes; the
-        // heuristic prunes mutually-close siblings in favor of
-        // diverse directions at equal degree. Both builds share the
-        // same corpus, levels, NN-Descent graph and seed quota — the
-        // ONLY difference is the selection rule
-        // (spark.graft.hnsw.heuristicEdges).
-        import operators.{Hnsw, Search}
-        import graft.functions.VectorFunctions.{cosinePrenormed, dot}
-        val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-          .select("vec_id", "embedding")
-        val nBase = emb.count()
-        val cMult = math.max(2, mult / 2)
-        val attrN = nBase * cMult // attractor = half the total mass
-        val gdir = s"$work/hh"
-        val clusters = emb
-          .crossJoin(spark.range(cMult).withColumnRenamed("id", "rep"))
-          .withColumn("embedding", expr(
-            "transform(embedding, (x, i) -> CASE WHEN rep = 0 THEN x " +
-              "ELSE CAST(x + (pmod(hash(rep, i, vec_id), 21) - 10) " +
-              "* 0.005 AS FLOAT) END)"))
-          .withColumn("vec_id", col("vec_id") + col("rep") * nBase)
-          .drop("rep")
-        val attractor = emb.orderBy("vec_id").limit(1)
-          .crossJoin(spark.range(attrN).withColumnRenamed("id", "rep"))
-          .withColumn("embedding", expr(
-            "transform(embedding, (x, i) -> CAST(x + " +
-              "(pmod(hash(rep, i), 21) - 10) * 0.005 AS FLOAT))"))
-          .withColumn("vec_id", lit(nBase * cMult.toLong) + col("rep"))
-          .drop("rep")
-        clusters.unionByName(attractor)
-          .write.mode("overwrite").parquet(s"$gdir/embeddings.parquet")
-        val n = spark.read.parquet(s"$gdir/embeddings.parquet").count()
-        // queries from TRUTH clusters (never the attractor center's)
-        val qids: Seq[Long] = (1 to 10).map(i =>
-          1L + (i.toLong * 7919L) % (nBase - 1))
-        val e = Search.embNormed(spark, gdir)
-        val qv = e.filter(col("vec_id").isin(qids: _*))
-          .select(col("vec_id").as("qid"),
-            col("embedding").as("qv"), col("nrm").as("qn"))
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("qid").orderBy(desc("score"), col("vec_id"))
-        val exact: Map[Long, Set[Long]] = e.crossJoin(broadcast(qv))
-          .filter(col("vec_id") =!= col("qid"))
-          .withColumn("score", round(
-            cosinePrenormed(dot(col("embedding"), col("qv")),
-              col("nrm"), col("qn")), 6))
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 10)
-          .select("qid", "vec_id").collect()
-          .groupBy(_.getLong(0))
-          .map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
-        def build(flag: Boolean, path: String): Hnsw.HnswIndex = {
-          spark.conf.set("spark.graft.hnsw.heuristicEdges",
-            flag.toString)
-          try Hnsw.buildIndex(spark, gdir, path)
-          finally spark.conf.unset("spark.graft.hnsw.heuristicEdges")
-        }
-        def recall(idx: Hnsw.HnswIndex, ef: Int): Double = {
-          val searcher = new Hnsw.Searcher(spark, gdir, idx)
-          try qids.map { qid =>
-            searcher.serve(qid, ef = ef).map(_._1)
-              .count(exact(qid).contains) / 10.0
-          }.sum / qids.size finally searcher.close()
-        }
-        val idxPlain = build(flag = false, s"$work/hh_plain")
-        val idxHeur = build(flag = true, s"$work/hh_heur")
-        val (p16, p32) = (recall(idxPlain, 16), recall(idxPlain, 32))
-        val (h16, h32) = (recall(idxHeur, 16), recall(idxHeur, 32))
-        s"n=$n attractor=$attrN cluster_size=$cMult " +
-          s"plain_recall10=${f"$p16%.2f"}@ef16/${f"$p32%.2f"}@ef32 " +
-          s"heuristic_recall10=${f"$h16%.2f"}@ef16/${f"$h32%.2f"}@ef32"
-      },
-      time("searchann_mutated") {
-        // Repeat searchAnn serves against an UNCHANGED mutated store
-        // (r10 verdict item 1): the delta/dead derivation (two
-        // corpus-scale anti-joins) must run ONCE per store state and
-        // persist its outputs — every later call scans only the
-        // mutation-sized tables. Gauges: derivation counter across 6
-        // mutated serves (must be exactly 1), first-mutated vs repeat
-        // walls.
-        import api.IndexPipeline
-        val sp = s"$work/annstore"
-        val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-          .select(col("doc_id"), col("text"))
-        val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-          .select("vec_id", "embedding")
-        val base = docs.join(emb, col("doc_id") === col("vec_id"))
-        val nBase = base.count()
-        base.crossJoin(spark.range(mult).withColumnRenamed("id", "rep"))
-          .withColumn("cid", col("doc_id") + col("rep") * nBase * 10L)
-          .select(concat(lit("c"), col("cid")).as("id"),
-            concat(lit("s"), col("cid")).as("sourceId"),
-            lit(0).as("chunkIndex"), col("text").as("content"),
-            col("embedding").cast("array<float>").as("embedding"),
-            lit("docs").as("sourceType"))
-          .write.mode("overwrite").parquet(s"$sp/chunks")
-        val q = "quartz telescope meridian"
-        def serveOnce(): Double = {
-          val t = System.nanoTime()
-          IndexPipeline.searchAnn(spark, sp, q, k = 5).collect()
-          (System.nanoTime() - t) / 1e9
-        }
-        val tSeal = serveOnce() // builds + seals the artifact
-        // mutate: append a ~0.1% delta of NEW texts (no API manifest —
-        // the probe exercises the listing-fallback fingerprint too)
-        docs.limit(math.max(1, (nBase / 1000).toInt))
-          .join(emb, col("doc_id") === col("vec_id"))
-          .select(concat(lit("cx"), col("doc_id")).as("id"),
-            concat(lit("sx"), col("doc_id")).as("sourceId"),
-            lit(0).as("chunkIndex"),
-            concat(col("text"), lit(" zephyr-delta")).as("content"),
-            col("embedding").cast("array<float>").as("embedding"),
-            lit("docs").as("sourceType"))
-          .write.mode("append").parquet(s"$sp/chunks")
-        val d0 = IndexPipeline.mutationDerivations.get()
-        val tFirst = serveOnce() // pays the one-time derivation
-        val reps = (1 to 5).map(_ => serveOnce())
-        val derivations = IndexPipeline.mutationDerivations.get() - d0
-        s"chunks=${nBase * mult} delta=${math.max(1, nBase / 1000)} " +
-          s"seal_serve=${f"$tSeal%.0f"}s first_mutated=${f"$tFirst%.1f"}s " +
-          s"repeat_min=${f"${reps.min}%.1f"}s " +
-          s"repeat_median=${f"${Bench.median(reps)}%.1f"}s " +
-          s"derivations=$derivations"
-      },
-      time("stream_shard_loop") {
-        // The composed streaming lifecycle at mult× (r9 verdict item
-        // 7): delta batches land → sealed-segments + exact-delta serve
-        // → measured-growth reseal at the re-derived S. Gauges: serve
-        // rows, reseal S growth, each stage's wall.
-        import operators.{Ann, Hnsw, Search}
-        val gdir = hnswProbeDir
-        val e = Search.embNormed(spark, gdir)
-        val cutoff = Ann.deltaCutoff(e).head.getLong(0)
-        val sealedDir = Hnsw.sealedDirFor(spark, gdir)
-        val swork = s"$work/ssl"
-        val ti0 = System.nanoTime()
-        val delta = e.filter(col("vec_id") >= cutoff)
-          .select("vec_id", "embedding")
-        delta.filter(pmod(col("vec_id"), lit(2L)) === 0)
-          .write.mode("overwrite").parquet(s"$swork/delta/batch=0")
-        delta.filter(pmod(col("vec_id"), lit(2L)) === 1)
-          .write.mode("overwrite").parquet(s"$swork/delta/batch=1")
-        val tIngest = (System.nanoTime() - ti0) / 1e9
-        val nSealed = Search.embNormed(spark, sealedDir).count()
-        // budget chosen so the 11% reseal growth crosses an S
-        // boundary: the sealed corpus derives S, the grown corpus
-        // must derive S+1 — the "more segments, never a bigger
-        // per-node image" rule made visible in the record
-        val budget = nSealed * Hnsw.imageBytesPerVec(64) / 4 + 1
-        val s = Hnsw.shardCountFor(nSealed, 64, budget)
-        val ts0 = System.nanoTime()
-        val served = streaming.StreamingShardedServe.serve(spark,
-          sealedDir, swork, spark.range(40).toDF("query_id"),
-          shards = s, ef = 16, k = 10)
-          .select(countDistinct("query_id")).head.getLong(0)
-        val tServe = (System.nanoTime() - ts0) / 1e9
-        val tr0 = System.nanoTime()
-        val (grown, s2) = streaming.StreamingShardedServe.maybeReseal(
-          spark, sealedDir, swork, budgetBytes = budget,
-          fraction = 20L).get
-        val tReseal = (System.nanoTime() - tr0) / 1e9
-        val tg0 = System.nanoTime()
-        val after = Hnsw.serveShardedDistributed(spark, grown,
-          spark.range(40).toDF("query_id"), shards = s2, ef = 16, k = 10)
-          .select(countDistinct("query_id")).head.getLong(0)
-        val tAfter = (System.nanoTime() - tg0) / 1e9
-        s"sealed=$nSealed shards=$s->$s2 " +
-          s"ingest=${f"$tIngest%.0f"}s serve=${f"$tServe%.0f"}s " +
-          s"(queries=$served) reseal=${f"$tReseal%.0f"}s " +
-          s"post_serve=${f"$tAfter%.0f"}s (queries=$after)"
-      },
-      time("pipeline_full") {
-        // The composed curation lineage (quality → exact dedup →
-        // decon → near-dup → sample → pack → shard) end to end at
-        // ×mult replication — the 100 TB snapshot rehearsal. The
-        // replicas are EXACT duplicates (same text, shifted ids), so
-        // every dedup layer fires: the quality chain's span-dedup
-        // component (first-occurrence-wins) already collapses the
-        // replicas, the exact stage guarantees it, and the FULL
-        // manifest from quality onward must equal the base run's —
-        // the curated snapshot of 20 identical crawls IS the snapshot
-        // of one. The base-run manifest is recomputed inside the
-        // timed span (cheap: sf base).
-        val base = api.CurationPipeline.full(spark, sfDir).collect()
-          .map(r => r.getString(1) -> (r.getLong(2), r.getLong(4))).toMap
-        val m = api.CurationPipeline.full(spark, work).collect()
-          .map(r => r.getString(1) -> (r.getLong(2), r.getLong(4))).toMap
-        val collapsed = Seq("after_quality", "after_exact", "after_decon",
-          "after_neardup", "after_sample", "packed", "sharded")
-          .forall(k => m(k) == base(k))
-        s"input=${m("input")._1} quality=${m("after_quality")._1} " +
-          s"exact=${m("after_exact")._1} decon=${m("after_decon")._1} " +
-          s"neardup=${m("after_neardup")._1} " +
-          s"sample=${m("after_sample")._1} " +
-          s"batches=${m("packed")._2} shards=${m("sharded")._2} " +
-          s"collapses_to_base=$collapsed"
-      },
-      time("ann_binary") {
-        // Binary-quantization serve at mult x replicated vectors
-        // (embxDir): the Hamming scan is an 8-byte column pass, so the
-        // wall must stay flat-ish; recall@10 is measured against the
-        // exact brute-force top-10 for the same query (replica ties
-        // resolve by id in both rankings).
-        import operators.{Ann, Search}
-        val out = Ann.qAnnBinary(spark, embxDir).collect().map(_.getLong(0))
-        val e = Search.embNormed(spark, embxDir)
-        val q = e.filter(col("vec_id") === 0)
-          .select(col("embedding").as("qv"), col("nrm").as("qn"))
-        val brute = e.filter(col("vec_id") =!= 0)
-          .crossJoin(broadcast(q))
-          .withColumn("score", round(
-            graft.functions.VectorFunctions.cosinePrenormed(
-              graft.functions.VectorFunctions.dot(col("embedding"), col("qv")),
-              col("nrm"), col("qn")), 6))
-          .orderBy(desc("score"), col("vec_id"))
-          .limit(10).collect().map(_.getLong(0)).toSet
-        s"vectors=${e.count()} returned=${out.length} " +
-          s"recall10=${f"${out.count(brute.contains).toDouble / 10}%.2f"}"
-      })
+    /** The HNSW arm entries' corpora: 10·mult and 100·mult vectors of
+      * width 64 in 64 clusters (a fixed centroid per cluster plus
+      * seeded noise). */
+    lazy val armCorpora: Seq[(Long, String)] =
+      Seq(10L, 100L).map(_ * mult).map { n =>
+        val d = s"$work/arms_$n"
+        write(spark.range(n).select(col("id").as("vec_id"),
+          array((0 until 64).map(j =>
+            (sin((col("id") % 64) * 7.0 + j) + randn(j) * 0.3)
+              .cast("float")): _*).as("embedding")), d, "embeddings")
+        n -> d
+      }
+  }
 
-    val expectPairs = n0 * mult.toLong * (mult - 1) / 2
-    println(s"""{"probe":"scale","base_docs":$n0,"mult":$mult,""" +
-      s""""derived_docs":${n0 * mult},"expected_dup_pairs":$expectPairs,""" +
-      results.flatten.map { case (n, t, r) => s""""$n":{"sec":${f"$t%.2f"},"result":"$r"}""" }
-        .mkString("", ",", "}"))
-    spark.stop()
+  /** The composed curation lineage at ×mult exact replication. The
+    * replicas collapse in the dedup layers, so the manifest from
+    * quality onward must equal the base run's (computed inside the
+    * timed span; cheap at base size). ROADMAP item 2's number. */
+  private def pipelineFull(c: Ctx): Any = {
+    def manifest(dir: String) =
+      CurationPipeline.full(c.spark, dir).collect()
+        .map(r => r.getString(1) -> (r.getLong(2), r.getLong(4))).toMap
+    val base = manifest(c.sfDir)
+    val m = manifest(c.docsDir)
+    Obj("input" -> m("input")._1, "quality" -> m("after_quality")._1,
+      "exact" -> m("after_exact")._1, "decon" -> m("after_decon")._1,
+      "neardup" -> m("after_neardup")._1, "sample" -> m("after_sample")._1,
+      "batches" -> m("packed")._2, "shards" -> m("sharded")._2,
+      "collapses_to_base" -> Seq("after_quality", "after_exact",
+        "after_decon", "after_neardup", "after_sample", "packed", "sharded")
+        .forall(k => m(k) == base(k)))
+  }
+
+  /** Per-stage walls of `q_pipeline_full`, built from its own stage
+    * builders (CurationPipeline.stage*) with a timer at each stage's
+    * first materialization, so each number is that stage's incremental
+    * cost; the second iteration is what a warm re-run pays. */
+  private def pipelineStages(c: Ctx): Any = {
+    import CurationPipeline._
+    val (spark, dir) = (c.spark, c.docsDir)
+    (1 to 2).map { _ =>
+      val out = Seq.newBuilder[(String, Any)]
+      def t[A](label: String)(f: => A): A = {
+        val (s, r) = wall(f)
+        out += label -> s
+        r
+      }
+      val docs = stageDocs(spark, dir)
+      val s2 = stageQuality(spark, dir, docs)
+      t("s2_quality_s")(s2.count())
+      val s3 = stageExact(s2)
+      t("s3_exact_s")(s3.count())
+      val s4 = stageDecon(spark, dir, s3)
+      t("s4_decon_s")(s4.count())
+      val labels = t("s5_components_s")(neardupLabels(spark, dir, s4))
+      val s5 = stageNeardup(s4, labels)
+      t("s5_neardup_s")(s5.count())
+      val s6 = stageSample(s5)
+      t("s6_sample_s")(s6.count())
+      t("s7_pack_s")(stagePacked(spark, dir, s6).count())
+      t("accounting_s")(graft.model.Pools.mapConcurrent(
+        Seq(docs, s2, s3, s4, s5, s6), 6)(stageAcct))
+      Seq(s2, s4, s5, s6).foreach(_.unpersist(false))
+      Obj(out.result(): _*)
+    }
+  }
+
+  /** The registry at ×mult — every fact table replicated — each row
+    * fully materialized (the `noop` sink) once cold and [[Bench.Iters]]
+    * times warm. A failed row records the sentinel and is named in
+    * `failed`. */
+  private def sf1(c: Ctx): Any = {
+    val dir = c.sf1Dir
+    val noop: DataFrame => Unit =
+      _.write.format("noop").mode("overwrite").save()
+    val timed = c.rows.map { name =>
+      val cold = Bench.timeRow(c.spark, dir, name, "cold")(noop)
+      (name, cold, Bench.timeIters(c.spark, dir, name)(noop))
+    }
+    Obj(
+      "total_median" ->
+        timed.map(t => Bench.median(t._3)).filter(_ >= 0).sum,
+      "stall_iters" -> timed.map(t => Bench.stallCount(t._3)).sum,
+      "failed" -> timed.collect {
+        case (name, cold, ts) if (cold +: ts).exists(_ < 0) => name },
+      "queries" -> Obj(timed.map { case (name, cold, ts) =>
+        name -> Obj("cold" -> cold, "median" -> Bench.median(ts))
+      }: _*))
+  }
+
+  /** Repeat `searchAnn` serves against an unchanged mutated store: the
+    * delta/dead derivation must run once per store state, so 6 mutated
+    * serves derive exactly once. ROADMAP item 3's number (first
+    * mutated vs repeat wall). */
+  private def searchAnnMutated(c: Ctx): Any = {
+    import c.spark
+    val sp = s"${c.work}/annstore"
+    val docs = Tables.documents(spark, c.sfDir).select("doc_id", "text")
+    val emb = Tables.embeddings(spark, c.sfDir).select("vec_id", "embedding")
+    val base = docs.join(emb, col("doc_id") === col("vec_id"))
+    val nBase = base.count()
+    def chunks(df: DataFrame, prefix: String, content: Column) =
+      df.select(concat(lit(s"c$prefix"), col("doc_id")).as("id"),
+        concat(lit(s"s$prefix"), col("doc_id")).as("sourceId"),
+        lit(0).as("chunkIndex"), content.as("content"),
+        col("embedding").cast("array<float>").as("embedding"),
+        lit("docs").as("sourceType"))
+    chunks(c.replicate(base, Seq("doc_id" -> nBase * 10L)), "", col("text"))
+      .write.mode("overwrite").parquet(s"$sp/chunks")
+    val q = "quartz telescope meridian"
+    def serveOnce(): Double =
+      wall(IndexPipeline.searchAnn(spark, sp, q, k = 5).collect())._1
+    val tSeal = serveOnce() // builds + seals the artifact
+    // mutate: append a ~0.1% delta of NEW texts (no API manifest — the
+    // listing-fallback fingerprint is exercised too)
+    val nDelta = math.max(1, (nBase / 1000).toInt)
+    chunks(docs.limit(nDelta).join(emb, col("doc_id") === col("vec_id")),
+      "x", concat(col("text"), lit(" zephyr-delta")))
+      .write.mode("append").parquet(s"$sp/chunks")
+    val d0 = IndexPipeline.mutationDerivations.get()
+    val tFirst = serveOnce() // pays the one-time derivation
+    val reps = (1 to 5).map(_ => serveOnce())
+    Obj("chunks" -> nBase * c.mult, "delta" -> nDelta,
+      "seal_serve_s" -> tSeal, "first_mutated_s" -> tFirst,
+      "repeat_min_s" -> reps.min, "repeat_median_s" -> Bench.median(reps),
+      "derivations" -> (IndexPipeline.mutationDerivations.get() - d0))
+  }
+
+  /** The partitioned-index serve at ×mult, its segment count derived
+    * from a 1 MiB serving-node budget: recall@10 of the sharded serve
+    * and of one monolithic image against brute force, and the
+    * sealed + exact-delta + tombstone composition, whose delta arm must
+    * report every live delta id of the exact top-10s. ROADMAP item
+    * 4(c)'s sharded-regime recall. */
+  private def hnswSharded(c: Ctx): Any = {
+    import c.spark
+    val gdir = c.hnswProbeDir
+    val n = Tables.embeddings(spark, gdir).count()
+    val s = Hnsw.shardCountFor(n, 64, 1L << 20)
+    val qids = 0L until 40L
+    val exact = c.bruteTop10(gdir)
+    def recall(ans: Map[Long, Set[Long]]) = qids.map(q =>
+      ans.getOrElse(q, Set.empty[Long]).count(exact(q).contains) / 10.0)
+      .sum / qids.size
+    def byQuery(rs: Array[org.apache.spark.sql.Row]) = rs.groupBy(_.getLong(0))
+      .map { case (q, xs) => q -> xs.map(_.getLong(2)).toSet }
+    val (tShard, shardAns) = wall(Hnsw.serveShardedDistributed(spark, gdir,
+      spark.range(40).toDF("query_id"), shards = s, ef = 16, k = 10).collect())
+    val (tMono, monoAns) = wall {
+      val mono = Hnsw.imageFor(spark, gdir)
+      qids.map(q => q -> Hnsw.serveLocal(mono, q, ef = 16, k = 10)
+        .map(_._1).toSet).toMap
+    }
+    // the lifecycle composition: sealed segments + exactly-scanned
+    // delta + tombstones, one k-bounded gather (its wall includes the
+    // sealed corpus's own segment builds)
+    val cutoff = Ann.deltaCutoff(Search.embNormed(spark, gdir))
+      .collect().head.getAs[Long]("cutoff")
+    val dead = (0L until n).filter(_ % 97 == 13).toSet
+    val (tDelta, deltaAns) = wall(Hnsw.serveShardedDelta(spark, gdir,
+      spark.range(40).toDF("query_id"), shards = s, ef = 16, k = 10,
+      tombstones = Some(spark.createDataFrame(dead.toSeq.map(Tuple1(_)))
+        .toDF("vec_id"))).collect())
+    val byQd = byQuery(deltaAns)
+    val deltaWanted = qids.flatMap(q => exact(q)
+      .filter(id => id >= cutoff && !dead.contains(id)).map(q -> _))
+    Obj("n" -> n, "budget_bytes" -> (1L << 20), "shards" -> s,
+      "shard_recall10" -> recall(byQuery(shardAns)),
+      "mono_recall10" -> recall(monoAns),
+      "shard_wall_s" -> tShard, "mono_wall_s" -> tMono,
+      "delta_wall_s" -> tDelta,
+      "delta_hits" -> deltaWanted.count { case (q, id) =>
+        byQd.getOrElse(q, Set.empty).contains(id) },
+      "delta_wanted" -> deltaWanted.size,
+      "tombstones_clean" -> deltaAns.forall(r => !dead.contains(r.getLong(2))))
+  }
+
+  /** The qid-Bloom path prune on the bounded-batch query-vector
+    * resolution over a 64-way segment layout: segments and files kept,
+    * both arms timed, answers asserted equal (no false negatives). The
+    * deferred mtime-keyed Bloom memo's number. */
+  private def qvPrune(c: Ctx): Any = {
+    import c.spark
+    import spark.implicits._
+    val gdir = c.hnswProbeDir
+    val e = Search.embNormed(spark, gdir)
+    val n = e.count()
+    val dim = e.select(size(col("embedding"))).head.getInt(0)
+    val pw = s"${c.work}/qv_prune"
+    II.initSegments(spark, gdir, pw,
+      math.max(1L, n * Hnsw.imageBytesPerVec(dim) / 64))
+    val ss = II.segs(spark, pw)
+    val qids = 0L until 8L
+    def arm(): (Double, Seq[(Long, Seq[Float], Double)]) = {
+      val (t, r) = wall(II.queryVecs(spark, ss, qids.toDF("query_id")))
+      (t, r.sortBy(_._1).map(x => (x._1, x._2.toSeq, x._3)).toSeq)
+    }
+    // one try/finally around the whole conf-mutation span, and `kept`
+    // computed while the prune is force-enabled so the gauge can never
+    // read no-prune on a small-S layout
+    val key = "spark.graft.ann.qvPruneMinSegs"
+    val ((wFull, oFull), (wPruned, oPruned), kept) =
+      try {
+        spark.conf.set(key, (ss.size + 1).toString)
+        val full = arm()
+        spark.conf.set(key, "1")
+        (full, arm(), II.pruneSegsByIdBloom(spark, ss, qids.toArray))
+      } finally spark.conf.unset(key)
+    assert(oPruned == oFull,
+      "qv_prune: pruned resolution diverged from the full scan")
+    // the load-bearing gauge is SCANNED FILES: at probe scale file-open
+    // cost is noise, so walls read ~flat
+    def partFiles(segs: Seq[II.Seg]): Int = segs.map { s0 =>
+      val p = new org.apache.hadoop.fs.Path(s"${s0.dir}/embeddings.parquet")
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .listStatus(p).count(_.getPath.getName.endsWith(".parquet"))
+    }.sum
+    Obj("segments" -> ss.size, "queries" -> qids.size, "kept" -> kept.size,
+      "files_full" -> partFiles(ss), "files_pruned" -> partFiles(kept),
+      "equal" -> true, "wall_full_s" -> wFull, "wall_pruned_s" -> wPruned)
+  }
+
+  /** The Searcher's size-gate spill path, tripped (cacheGate = 0: no
+    * upper-layer driver cache) against the cached default: answers
+    * equal, per-query serve wall on both paths. The deferred image-blob
+    * spill's number. */
+  private def hnswSpill(c: Ctx): Any = {
+    import c.spark
+    val gdir = c.hnswProbeDir
+    val n = Tables.embeddings(spark, gdir).count()
+    val idx = Hnsw.indexFor(spark, gdir)
+    val qids = (1 to 20).map(i => 2L + (i.toLong * 131L) % (n - 2))
+    val cached = new Hnsw.Searcher(spark, gdir, idx)
+    val spilled = new Hnsw.Searcher(spark, gdir, idx, cacheGate = 0L)
+    try {
+      val (tCached, a) = wall(qids.map(q => cached.serve(q, ef = 32)))
+      val (tSpill, b) = wall(qids.map(q => spilled.serve(q, ef = 32)))
+      Obj("n" -> n, "levels" -> idx.maxLevel, "queries" -> qids.size,
+        "equal" -> (a == b), "cached_wall_s" -> tCached,
+        "spilled_wall_s" -> tSpill,
+        "spilled_per_query_s" -> tSpill / qids.size)
+    } finally { cached.close(); spilled.close() }
+  }
+
+  /** Both arms of the in-process gate ([[Hnsw.fitsInProcess]]) at each
+    * of [[Ctx.armCorpora]]: the HNSW build ([[Hnsw.buildIndex]]), or
+    * with `graph` the registry graph search ([[Ann.qGraphSearch]]).
+    * Per (size, arm): the wall, the Spark jobs, and the driver's peak
+    * heap above its post-GC baseline (sampled every 10 ms). The Spark
+    * arm is forced with `spark.sql.adaptive.advisoryPartitionSizeInBytes`
+    * = 1 byte; a size past the gate runs on the Spark arm under both
+    * names (the job count tells which arm ran). ROADMAP item 4's
+    * number. */
+  private def hnswArms(c: Ctx, graph: Boolean): Any = {
+    import c.spark
+    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val default = spark.conf.get(key)
+    val jobs = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    val heap = ManagementFactory.getMemoryMXBean
+    // the post-GC heap once it stops falling, GCs 500 ms apart: what a
+    // Spark arm leaves is released asynchronously after its jobs end,
+    // so one GC right after the arm still counted it (measured: 286–319
+    // MB, against 111–127 MB half a second later)
+    def settledHeap(): Long = {
+      def gc() = { System.gc(); heap.getHeapMemoryUsage.getUsed }
+      var (prev, cur) = (Long.MaxValue, gc())
+      for (_ <- 1 to 10 if cur < prev - (1L << 20)) {
+        Thread.sleep(500)
+        prev = cur
+        cur = gc()
+      }
+      cur
+    }
+    val corpora = c.armCorpora
+    spark.sparkContext.addSparkListener(listener)
+    try for ((n, dir) <- corpora; arm <- Seq("local", "spark")) yield {
+      spark.conf.set(key, if (arm == "spark") "1b" else default)
+      // blocking: Cache.clear unpersists without waiting, and blocks a
+      // previous arm still holds would read as this arm's baseline
+      spark.sparkContext.getPersistentRDDs.values
+        .foreach(_.unpersist(blocking = true))
+      Cache.clear(spark)
+      val base = settledHeap()
+      val peak = new AtomicLong(base)
+      @volatile var sampling = true
+      val sampler = new Thread(() =>
+        while (sampling) {
+          peak.accumulateAndGet(heap.getHeapMemoryUsage.getUsed, math.max)
+          Thread.sleep(10)
+        })
+      sampler.setDaemon(true)
+      sampler.start()
+      val j0 = jobs.get
+      val (t, _) =
+        try wall(if (graph) Ann.qGraphSearch(spark, dir).collect()
+          else Hnsw.buildIndex(spark, dir, s"${c.work}/index_${arm}_$n"))
+        finally { sampling = false; sampler.join() }
+      Obj("arm" -> arm, "n" -> n, "dim" -> 64, "wall_s" -> t,
+        "jobs" -> (jobs.get - j0),
+        "peak_heap_mb" -> (peak.get - base) / 1048576.0,
+        "base_heap_mb" -> base / 1048576.0)
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      spark.conf.set(key, default)
+    }
   }
 }

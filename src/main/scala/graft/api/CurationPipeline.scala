@@ -146,11 +146,11 @@ object CurationPipeline {
   }
 
   // ---- stage lineage builders, the single source of truth ----------
-  // Shared with [[graft.PipelineStageProbe]] (round-14 review: the
-  // probe hand-copied ~60 lines of the stages verbatim, so any change
-  // to full() — this round's pack-stage rewrite had to be mirrored by
-  // hand — would silently make the committed stage profile measure a
-  // pipeline that no longer exists). The persists live HERE so the
+  // Shared with the `pipeline_stages` entry of [[graft.ScaleProbe]]
+  // (round-14 review: the probe hand-copied ~60 lines of the stages
+  // verbatim, so any change to full() — this round's pack-stage
+  // rewrite had to be mirrored by hand — would silently make the
+  // committed stage profile measure a pipeline that no longer exists). The persists live HERE so the
   // two consumers cannot diverge on caching either; full() and the
   // probe only differ in WHEN they materialize (the probe times each
   // stage's first action).

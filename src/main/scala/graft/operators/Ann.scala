@@ -1315,9 +1315,10 @@ object Ann {
     qKnnJoinG(spark, dir)
 
   /** Distinct bucket-mate candidate PAIRS under a geometry — the
-    * volume [[ScaleProbe]] measures to show linear growth under
-    * [[AnnGeometry.forCorpus]] where the pinned geometry is quadratic.
-    * No payload, no scoring: exactly the pair set [[qKnnJoinG]] ranks. */
+    * volume the retired `ann_geometry` probe measured to show linear
+    * growth under [[AnnGeometry.forCorpus]] where the pinned geometry
+    * is quadratic. No payload, no scoring: exactly the pair set
+    * [[qKnnJoinG]] ranks. */
   def knnCandidatePairs(spark: SparkSession, dir: String,
       geo: AnnGeometry): DataFrame = {
     val bt = lshTables(spark, dir, geo)
@@ -1929,27 +1930,29 @@ object Ann {
     new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** The corpus at `dir` and its pinned one-round kNN graph built
-    * in-process, when the corpus passes [[Hnsw.fitsInProcess]],
-    * [[HnswLocal.rowsOf]] accepts it and it holds every id of `needIds`
-    * (checked in that order); else None. */
+    * in-process, when the corpus passes [[Hnsw.fitsInProcess]], holds
+    * every id of `needIds` (both checked on one aggregate, before
+    * anything is collected) and [[HnswLocal.rowsOf]] accepts it; else
+    * None. */
   private def localKnnGraph(spark: SparkSession, dir: String, needIds: Long*)
       : Option[(HnswLocal.Rows, HnswLocal.Graph)] = {
     val emb = Tables.embeddings(spark, dir)
-    val stats = emb.agg(count(lit(1)), max(size(col("embedding")))).head
+    val stats = emb.agg(count(lit(1)), max(size(col("embedding"))) +:
+      needIds.map(id => count(when(col("vec_id") === id, 1))): _*).head
     val dim = if (stats.isNullAt(1)) 0 else stats.getInt(1)
-    if (!Hnsw.fitsInProcess(spark, stats.getLong(0), dim)) None
+    if (!Hnsw.fitsInProcess(spark, stats.getLong(0), dim) ||
+        needIds.indices.exists(i => stats.getLong(2 + i) == 0L)) None
     else HnswLocal.rowsOf(emb)
-      .filter(r => needIds.forall(java.util.Arrays.binarySearch(r.ids, _) >= 0))
       .map { r =>
         localGraphBuilds.incrementAndGet()
         (r, HnswLocal.knnGraph(r, AnnGeometry.Pinned, 3, rounds = 1))
       }
   }
 
-  /** [[qKnnGraph]] under an explicit [[AnnGeometry]] — the probe path:
-    * ScaleProbe runs the round at `forCorpus(N)` geometry where the
-    * candidate volume stays near-linear, exactly as the base kNN join
-    * is probed. */
+  /** [[qKnnGraph]]'s Spark arm under an explicit [[AnnGeometry]]: the
+    * seeded first round of [[refineKnnGraph]], which the HNSW layer
+    * build runs at `forCorpus(N)` geometry so the candidate volume
+    * stays near-linear. */
   def qKnnGraphG(spark: SparkSession, dir: String,
       geo: AnnGeometry = AnnGeometry.Pinned, k: Int = 3): DataFrame =
     rankGraphCandidates(spark, dir,
@@ -2056,7 +2059,7 @@ object Ann {
     * refined graph: pure kNN layers go CLUSTER-CLOSED on clustered
     * corpora (every top-k edge is an intra-cluster sibling; with
     * near-orthogonal clusters greedy descent then has no gradient
-    * between them — ScaleProbe's graph_serve_clustered measured
+    * between them — the retired graph_serve_clustered probe measured
     * recall capped at 0.40), and the long-range quota is exactly the
     * "small world" half of navigable-small-world graphs. */
   private[graft] def seedEdges(spark: SparkSession, dir: String,
@@ -2231,17 +2234,14 @@ object Ann {
 
   /** One beam search over a prepared symmetric edge table: expand the
     * beam's neighbors hop by hop, exact-score newcomers against the
-    * query vector, keep the best `beamW` visited, return the top-`k`
-    * of everything visited (query itself excluded). Factored out of
-    * [[qGraphSearch]] so the scale probe can serve MANY queries from
-    * MANY entry strategies over one persisted graph; registry
-    * semantics (query 0, entry [[GraphSearchEntry]]) are this with the
-    * defaults. */
+    * query vector, keep the best [[GraphSearchBeam]] visited, return
+    * the top-10 of everything visited (query itself excluded).
+    * Factored out of [[qGraphSearch]] so a spec can serve many queries
+    * over one persisted graph; registry semantics are query 0 from
+    * entry [[GraphSearchEntry]]. */
   private[graft] def beamServe(spark: SparkSession, dir: String,
-      edges: DataFrame, queryId: Long, entry: Long,
-      hops: Int = GraphSearchHops, beamW: Int = GraphSearchBeam,
-      k: Int = 10): Seq[(Long, Double)] =
-    beamServeFrom(spark, dir, edges, queryId, Seq(entry), hops, beamW, k)
+      edges: DataFrame, queryId: Long, entry: Long): Seq[(Long, Double)] =
+    beamServeFrom(spark, dir, edges, queryId, Seq(entry))
 
   /** [[beamServe]] from an ENTRY SET — identical algorithm, the beam
     * just starts populated with every entry (the multi-entry descent
@@ -2289,27 +2289,6 @@ object Ann {
       .filter { case (id, _) => id != queryId && !excludeIds.contains(id) }
       .sortBy { case (id, s) => (-s, id) }
       .take(k)
-  }
-
-  /** Corpus-derived beam ENTRY for a query: the member of the query's
-    * nearest IVF cell that sits closest to that cell's centroid — the
-    * HNSW-family answer to "where does the descent start". A FIXED
-    * entry id is a pinned constant that degrades as N grows (the entry
-    * drifts arbitrarily far from any given query; hops are bounded, so
-    * a far entry directly costs recall — ScaleProbe's graph_serve
-    * measures exactly this). Cost: two point lookups on the cached
-    * [[ivfRankedG]] table — no new corpus pass. */
-  private[graft] def graphEntryFor(spark: SparkSession, dir: String,
-      queryId: Long, cells: Int = AnnGeometry.Pinned.ivfCells): Long = {
-    val ranked = ivfRankedG(spark, dir, cells)
-    val qcell = ranked
-      .filter(col("vec_id") === queryId && col("rn") === 1)
-      .select("cell").head.getLong(0)
-    ranked
-      .filter(col("rn") === 1 && col("cell") === qcell &&
-        col("vec_id") =!= queryId)
-      .orderBy(desc("csim"), col("vec_id"))
-      .select("vec_id").head.getLong(0)
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

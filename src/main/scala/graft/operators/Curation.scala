@@ -110,9 +110,8 @@ object Curation {
     * each ≤ 4096 rows however big the shard is. Identical output to
     * the one-window formulation (the oracle keeps it). */
   /** The single-window formulation qPackBatches replaced — kept as the
-    * equivalence twin for specs and the giant-shard ScaleProbe (it IS
-    * the oracle's SQL shape). Unshippable at scale: one task per
-    * source shard. */
+    * equivalence twin for specs (it IS the oracle's SQL shape).
+    * Unshippable at scale: one task per source shard. */
   private[graft] def packBatchesWindowTwin(
       spark: SparkSession, dir: String): DataFrame =
     packWindowTwinFrom(Tables.documents(spark, dir)
@@ -1342,18 +1341,6 @@ object Curation {
   private[graft] val BloomBits = 4096L
   private[graft] val BloomK = 4
   private[graft] val BloomShards = 16L
-
-  /** Corpus-size-derived filter width — the same lesson as
-    * [[AnnGeometry.forCorpus]]: a FIXED m saturates as keys grow
-    * (fill → 1, fpp → 1), so production sizes the filter to ~10 bits
-    * per expected key (next power of two, floor [[BloomBits]]); the
-    * registry pins the 4096-bit test geometry so oracle rows stay
-    * hash-exact. The `bloom_saturation` probe measures exactly this
-    * failure and its fix. */
-  private[graft] def bloomBitsFor(keysPerShard: Long): Long = {
-    val target = math.max(BloomBits, 10L * keysPerShard)
-    java.lang.Long.highestOneBit(target - 1) << 1
-  }
 
   /** Bit positions of one key: `hash60(h:i) mod m` for i < k — the
     * k-hash construction with the engine's portable hash, so the

@@ -756,7 +756,8 @@ object Dedup {
     * component before the shuffle, so a pathological million-member
     * duplicate cluster ships |partitions| rows, not |cluster|. (The
     * row_number-window formulation this replaced put the whole
-    * cluster in one task; see the giant-cluster ScaleProbe row.) */
+    * cluster in one task; see the retired semdedup_giant_cluster probe
+    * in SCALE.md.) */
   def qSemdedup(spark: SparkSession, dir: String): DataFrame =
     keepBest(componentLabels(spark, dir),
       Tables.documents(spark, dir)

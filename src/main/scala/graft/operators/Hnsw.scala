@@ -10,8 +10,8 @@ import graft.functions.VectorFunctions._
 
 /** HIERARCHICAL navigable graph serving — the HNSW construction
   * (Malkov & Yashunin 2016) re-expressed Spark-first, and the measured
-  * answer to the flat graph's scale failure: ScaleProbe's graph_serve
-  * grid shows beam search over the single-layer k-NN graph collapses
+  * answer to the flat graph's scale failure: the retired graph_serve
+  * probe's grid showed beam search over the single-layer k-NN graph collapses
   * to recall@10 ≈ 0.03 at 20× corpus (n≈10k) REGARDLESS of entry
   * strategy or budget (16 hops × beam 32 reaches 0.09) — a degree-2k
   * graph of short-range edges is not navigable, exactly the
@@ -168,9 +168,10 @@ object Hnsw {
   /** Largest layer, in vectors, built in-process. Past it the Spark
     * arm builds the layer, whatever the AQE setting: the in-process arm
     * is single-threaded and holds the layer on the driver, and this is
-    * the largest size at which both arms were measured ([[HnswBuildProbe]],
-    * dim 64, 4-core host: 37 s against 280 s for one segment, 46 s
-    * against 795 s for four concurrent ones). At 100k vectors the
+    * the largest size at which both arms were measured (the probe now
+    * in [[graft.ScaleProbe]]'s `hnsw_build` entry, dim 64, 4-core host:
+    * 37 s against 280 s for one segment, 46 s against 795 s for four
+    * concurrent ones). At 100k vectors the
     * in-process arm took 392 s for one segment, and four concurrent
     * ones overran a 4 GB driver heap. */
   private[graft] val LocalMaxRows = 20000L
@@ -575,7 +576,7 @@ object Hnsw {
   def qHnswSearch(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     // ef = 32 is the measured knee of the recall curve on the real
-    // corpus (ScaleProbe hnsw_ef_grid: 0.84 @ 16, 0.96 @ 32, 0.99 @
+    // corpus (retired probe hnsw_ef_grid: 0.84 @ 16, 0.96 @ 32, 0.99 @
     // 64 — recall@10 over 20 queries); serve cost is a driver-local
     // beam either way, so the default sits at the knee, not below it
     serveLocal(imageFor(spark, dir), 0L, ef = 32)
@@ -1434,24 +1435,6 @@ object Hnsw {
     def clear(): Unit = cache.clear()
   }
 
-  /** The remaining quadrant of the serving matrix: an UNBOUNDED query
-    * table against a PARTITIONED index. [[serveShardedDistributed]]
-    * broadcasts the bounded query batch; here the QUERY table is the
-    * 100 TB axis, so the queries fan out ×S through the core's
-    * query-table stage ([[tableCands]]) and all S segments serve
-    * concurrently from their blobs. Shuffle cost: |Q|·S embedding
-    * rows, paid once. Same per-candidate math and the same k-bounded
-    * gather as the bounded-batch serve — HnswShardSpec pins the two
-    * regimes bit-equal (ScaleProbe measured this fan-out 1.2–2.0×
-    * faster than serving the S images one broadcast at a time, with
-    * equal answers; SCALE.md round 11). */
-  def serveShardedQueryTable(spark: SparkSession, dir: String,
-      queries: DataFrame, shards: Int, ef: Int = 16, k: Int = 10,
-      budgetBytes: Long = DefaultNodeBudget, qParts: Int = 0): DataFrame =
-    shardedGather(spark, k, tableCands(spark,
-      stageBlobs(spark, shardDirsFor(spark, dir, shards), budgetBytes),
-      lookupQueryVecs(spark, dir, queries), ef, k, qParts))
-
   /** The filtered serves' shared post-filter step — the family's
     * post-filter-with-widened-pool rule: each segment's beam NAVIGATES
     * its unfiltered graph (filtering during traversal disconnects it)
@@ -1497,18 +1480,6 @@ object Hnsw {
     filteredServe(spark, dir, labelCol, labelVal, ef, k)(pool =>
       shardedCands(spark, dir, dir, queries, shards, ef, pool, Set.empty,
         budgetBytes))
-
-  /** FILTERED serving × unbounded query table: [[filteredServe]] over
-    * the query-table stage. Same answers as [[serveShardedFiltered]]
-    * over the same queries — HnswShardSpec pins the equality. */
-  def serveShardedQueryTableFiltered(spark: SparkSession,
-      dir: String, queries: DataFrame, shards: Int, labelCol: String,
-      labelVal: Long, ef: Int = 64, k: Int = 10,
-      budgetBytes: Long = DefaultNodeBudget, qParts: Int = 0): DataFrame =
-    filteredServe(spark, dir, labelCol, labelVal, ef, k)(pool =>
-      tableCands(spark,
-        stageBlobs(spark, shardDirsFor(spark, dir, shards), budgetBytes),
-        lookupQueryVecs(spark, dir, queries), ef, pool, qParts))
 
   /** Filtered+sharded serving as a registry row: the planted
     * 4-segment layout, 8 queries, label ≡ 3 predicate, top-5 — the
@@ -1724,33 +1695,6 @@ object Hnsw {
       served.zip(blobs).map { case ((c, _), b) =>
         SegTask(b, Some(routed(c)), exclude) },
       qrows, ef, k))
-  }
-
-  /** ROUTED serving × UNBOUNDED query table — the routing win carried
-    * onto the query-table stage: over the CLUSTERED layout each query
-    * row routes itself ON THE EXECUTORS (the S·d centroid table is the
-    * broadcast) and only then shuffles, so the fan-out is |Q|·R rows
-    * instead of |Q|·S. Fixed-R routing (margin 2.0 of
-    * [[routeCellsAdaptive]]); `maxRoutes = S` is full fan-out —
-    * HnswRouteSpec pins it bit-equal to the bounded-batch routed serve
-    * at every R it checks. */
-  def serveShardedRoutedQueryTable(spark: SparkSession, dir: String,
-      queries: DataFrame, shards: Int, maxRoutes: Int, ef: Int = 16,
-      k: Int = 10, iters: Int = 4,
-      budgetBytes: Long = DefaultNodeBudget, qParts: Int = 0): DataFrame = {
-    val (dirs, cents) =
-      clusterLayoutFor(spark, dir, shards, iters, budgetBytes)
-    // flattened sub-segment list: a routed cell fans out to ALL its
-    // budget-split sub-segments
-    val flat: Seq[(Long, String)] =
-      dirs.toSeq.sortBy(_._1).flatMap { case (c, ds) => ds.map(c -> _) }
-    val segsOf: Map[Long, Seq[Int]] = flat.zipWithIndex
-      .groupBy(_._1._1)
-      .map { case (c, xs) => c -> xs.map(_._2) }
-    shardedGather(spark, k, tableCands(spark,
-      stageBlobs(spark, flat.map(_._2), budgetBytes),
-      lookupQueryVecs(spark, dir, queries), ef, k, qParts,
-      Some(TableRoute(cents, maxRoutes, 2.0, segsOf))))
   }
 
   /** Routed serving as a registry row: the planted 4-cell clustered

@@ -306,13 +306,13 @@ object Search {
     impactIndexG(spark, dir, ImpactM)
 
   /** [[impactIndex]] at an explicit list length — the geometry knob
-    * (same contract as AnnGeometry / bloomBitsFor: the registry pins
-    * [[ImpactM]] for oracle hash-exactness; scale jobs derive m from
-    * corpus size ÷ expected distinct-doc ratio, because a list length
-    * that ignores duplication truncates to replicas of the few
-    * highest-impact documents — ScaleProbe measures overlap collapsing
-    * to 0 at ×20 duplication under the pinned m and restored under the
-    * scaled one). */
+    * (same contract as AnnGeometry: the registry pins [[ImpactM]] for
+    * oracle hash-exactness; scale jobs derive m from corpus size ÷
+    * expected distinct-doc ratio, because a list length that ignores
+    * duplication truncates to replicas of the few highest-impact
+    * documents — the retired `impact_serve` probe measured overlap
+    * collapsing to 0 at ×20 duplication under the pinned m and
+    * restored under the scaled one; SCALE.md). */
   private[graft] def impactIndexG(spark: SparkSession,
       dir: String, m: Int): DataFrame =
     Cache.getOrBuild(spark, s"impactIndex@$m", dir) {

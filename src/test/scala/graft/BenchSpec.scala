@@ -9,19 +9,21 @@ import org.scalatest.funsuite.AnyFunSuite
 class BenchSpec extends AnyFunSuite {
 
   test("timedOrSentinel times a successful body") {
-    val dt = Bench.timedOrSentinel { Thread.sleep(10) }
+    val (dt, r) = Bench.timedOrSentinel { Thread.sleep(10); 42 }
     assert(dt >= 0.005, s"elapsed $dt too small for a 10 ms body")
     assert(dt < 5.0, s"elapsed $dt absurd for a 10 ms body")
+    assert(r.get === 42, "the body's result must come back with its time")
   }
 
   test("a throwing body records the sentinel, not its elapsed wall") {
-    val dt = Bench.timedOrSentinel {
+    val (dt, r) = Bench.timedOrSentinel {
       Thread.sleep(10)
       throw new RuntimeException("forced query failure")
     }
     assert(dt === Bench.FailureSentinel,
       "a failing query must bench as the sentinel, never as a duration")
     assert(dt < 0, "the sentinel must be impossible to read as a time")
+    assert(r.failed.get.getMessage === "forced query failure")
   }
 
   test("fatal errors propagate — the sentinel swallows only NonFatal") {

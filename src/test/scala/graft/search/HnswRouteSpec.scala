@@ -177,42 +177,6 @@ class HnswRouteSpec extends SparkSpec {
     }
   }
 
-  test("routed query-table serve (executor-side routing, one-pass " +
-      "fan-out) is bit-equal to the bounded-batch routed serve at " +
-      "every R") {
-    Hnsw.clusterLayoutFor(spark, bigDir, S)
-    Seq(1, 2, S).foreach { r =>
-      val batch = Hnsw.serveShardedRouted(spark, bigDir,
-        spark.range(8).toDF("query_id"), shards = S, maxRoutes = r,
-        ef = 16, k = 5).collect()
-        .map(x => (x.getLong(0), x.getLong(1), x.getLong(2),
-          x.getDouble(3))).sortBy(t => (t._1, t._2))
-      val table = Hnsw.serveShardedRoutedQueryTable(spark, bigDir,
-        spark.range(8).toDF("query_id"), shards = S, maxRoutes = r,
-        ef = 16, k = 5).collect()
-        .map(x => (x.getLong(0), x.getLong(1), x.getLong(2),
-          x.getDouble(3))).sortBy(t => (t._1, t._2))
-      assert(table.toSeq === batch.toSeq,
-        s"query-table routing diverged from the batch serve at R=$r")
-    }
-    // the query-dimension sub-key (a hot routed cell's antidote: its
-    // query stream splits across P tasks instead of serializing
-    // behind one) never changes an answer
-    val p1 = Hnsw.serveShardedRoutedQueryTable(spark, bigDir,
-      spark.range(8).toDF("query_id"), shards = S, maxRoutes = 2,
-      ef = 16, k = 5, qParts = 1).collect()
-      .map(x => (x.getLong(0), x.getLong(1), x.getLong(2),
-        x.getDouble(3))).sortBy(t => (t._1, t._2)).toSeq
-    val p4 = Hnsw.serveShardedRoutedQueryTable(spark, bigDir,
-      spark.range(8).toDF("query_id"), shards = S, maxRoutes = 2,
-      ef = 16, k = 5, qParts = 4).collect()
-      .map(x => (x.getLong(0), x.getLong(1), x.getLong(2),
-        x.getDouble(3))).sortBy(t => (t._1, t._2)).toSeq
-    assert(p4 === p1,
-      "routed query-table serve diverged under the query-dim split")
-    Hnsw.ImageBlobCache.clear()
-  }
-
   test("adaptive routing: margin envelope between top-1 and fixed " +
       "maxRoutes, confident queries stay narrow, ambiguous queries " +
       "widen themselves, and the wide-margin serve is bit-equal to " +

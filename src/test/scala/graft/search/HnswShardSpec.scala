@@ -245,101 +245,6 @@ class HnswShardSpec extends SparkSpec {
       assert(rs.length === 5, "tombstoning must backfill, not shrink k"))
   }
 
-  test("query-table sharded serve (one-pass segment-pinned fan-out) " +
-      "is bit-equal to the bounded-batch scatter-gather") {
-    val batch = Hnsw.qHnswSharded(spark, bigDir).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-      .sortBy(t => (t._1, t._2))
-    val table = Hnsw.serveShardedQueryTable(spark, bigDir,
-      spark.range(8).toDF("query_id").repartition(3), shards = S,
-      ef = 16, k = 5).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-      .sortBy(t => (t._1, t._2))
-    assert(table === batch,
-      "the streamed-query-table serve diverged from the bounded-batch " +
-        "serve — the two partitioned regimes must be the same answer")
-  }
-
-  test("query-table serve retention: the driver session image cache " +
-      "stays empty (blobs, not broadcasts) and the executor cache holds " +
-      "≤ S images") {
-    val qs = spark.range(8).toDF("query_id").repartition(3)
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getDouble(3)))
-      .sortBy(t => (t._1, t._2))
-    val batch = rows(Hnsw.serveShardedDistributed(spark, bigDir, qs,
-      shards = S, ef = 16, k = 5))
-    Hnsw.ImageBlobCache.clear()
-    val dirs = Hnsw.shardDirsFor(spark, bigDir, S)
-    val before = Hnsw.cachedImageCensus(dirs)._1
-    val onePass = rows(Hnsw.serveShardedQueryTable(spark,
-      bigDir, qs, shards = S, ef = 16, k = 5))
-    assert(onePass === batch,
-      "the one-pass query-table serve diverged from the bounded-batch " +
-        "serve")
-    // retention gauges: the one-pass driver adds NO session images
-    // (blobs ship by path), and the shared local-JVM executor cache
-    // holds at most the S segment images it deserialized
-    assert(Hnsw.cachedImageCensus(dirs)._1 === before,
-      "the one-pass serve leaked segment images into the driver cache")
-    val (execImgs, _) = Hnsw.ImageBlobCache.census
-    assert(execImgs > 0 && execImgs <= S,
-      s"executor blob cache holds $execImgs images, expected 1..$S")
-    Hnsw.ImageBlobCache.clear()
-    assert(Hnsw.ImageBlobCache.census._1 === 0)
-  }
-
-  test("one-pass filtered serve equals the sequential filtered serve " +
-      "row for row — the predicate cell composed onto the one-pass " +
-      "fan-out") {
-    val qs = spark.range(8).toDF("query_id")
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getDouble(3)))
-      .sortBy(t => (t._1, t._2))
-    val sequential = rows(Hnsw.serveShardedFiltered(spark, bigDir, qs,
-      shards = S, labelCol = "label", labelVal = 3L, ef = 64, k = 5))
-    Hnsw.ImageBlobCache.clear()
-    val onePass = rows(Hnsw.serveShardedQueryTableFiltered(
-      spark, bigDir, qs, shards = S, labelCol = "label", labelVal = 3L,
-      ef = 64, k = 5))
-    Hnsw.ImageBlobCache.clear()
-    assert(onePass === sequential,
-      "the one-pass filtered serve diverged from the sequential " +
-        "filtered serve")
-  }
-
-  test("query-dimension sub-partitioning (qParts) never changes an " +
-      "answer: P=1 (the old single-task-per-segment mode), P=4, and " +
-      "the derived default are bit-equal — only task granularity " +
-      "moves") {
-    val qs = spark.range(8).toDF("query_id")
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getDouble(3)))
-      .sortBy(t => (t._1, t._2)).toSeq
-    val p1 = rows(Hnsw.serveShardedQueryTable(spark, bigDir,
-      qs, shards = S, ef = 16, k = 5, qParts = 1))
-    val p4 = rows(Hnsw.serveShardedQueryTable(spark, bigDir,
-      qs, shards = S, ef = 16, k = 5, qParts = 4))
-    val pd = rows(Hnsw.serveShardedQueryTable(spark, bigDir,
-      qs, shards = S, ef = 16, k = 5))
-    assert(p4 === p1,
-      "query-dimension split at P=4 diverged from the single-task mode")
-    assert(pd === p1,
-      "the derived default qParts diverged from the single-task mode")
-    val f1 = rows(Hnsw.serveShardedQueryTableFiltered(spark,
-      bigDir, qs, shards = S, labelCol = "label", labelVal = 3L,
-      ef = 64, k = 5, qParts = 1))
-    val f4 = rows(Hnsw.serveShardedQueryTableFiltered(spark,
-      bigDir, qs, shards = S, labelCol = "label", labelVal = 3L,
-      ef = 64, k = 5, qParts = 4))
-    assert(f4 === f1,
-      "the filtered one-pass serve diverged under the query split")
-    Hnsw.ImageBlobCache.clear()
-  }
-
   test("filtered sharded serve: k label-matching rows per query " +
       "(fill), predicate pure, recall vs exact filtered top-k clears " +
       "the floor") {

@@ -7,8 +7,9 @@ import graft.operators.{Ann, Hnsw, Search}
 
 /** The HNSW hierarchy ([[Hnsw]]): geometric level scaffolding, layered
   * build over the unchanged NN-Descent machinery, and the descent+beam
-  * serve — the scale path for graph serving after ScaleProbe measured
-  * the flat single-layer beam collapsing at 20× (recall@10 ≈ 0.03).
+  * serve — the scale path for graph serving after the retired
+  * `graph_serve` probe measured the flat single-layer beam collapsing
+  * at 20× (recall@10 ≈ 0.03; SCALE.md).
   */
 class HnswSpec extends SparkSpec {
 

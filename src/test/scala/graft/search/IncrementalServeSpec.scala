@@ -114,10 +114,21 @@ class IncrementalServeSpec extends IncrementalFixture {
         r.getDouble(3))).sortBy(t => (t._1, t._2)).toSeq
     val batch = rows(II.serve(spark, work, qids.toDF("query_id"),
       ef = 16, k = 5))
+    Hnsw.ImageBlobCache.clear()
+    val dirs = II.segs(spark, work).map(_.dir)
+    val before = Hnsw.cachedImageCensus(dirs)._1
     val tableExact = rows(II.serveQueryTable(spark, work,
       qids.toDF("query_id"), ef = 16, k = 5))
     assert(tableExact === batch,
       "in-plan query-table serve diverged (exact-exclude mode)")
+    // retention: the one-pass serve adds no driver session images
+    // (blobs ship by path), and the shared local-JVM executor cache
+    // holds at most one image per segment
+    assert(Hnsw.cachedImageCensus(dirs)._1 === before,
+      "the one-pass serve leaked segment images into the driver cache")
+    val (execImgs, _) = Hnsw.ImageBlobCache.census
+    assert(execImgs > 0 && execImgs <= dirs.size,
+      s"executor blob cache holds $execImgs images, expected 1..${dirs.size}")
     val tableP3 = rows(II.serveQueryTable(spark, work,
       qids.toDF("query_id"), ef = 16, k = 5, qParts = 3))
     assert(tableP3 === batch,

@@ -257,6 +257,30 @@ class KnnGraphSpec extends SparkSpec {
     assert(arms(sfDir, cases(0))(Ann.qGraphSearch)._1.rows.isEmpty)
   }
 
+  test("graph search without the entry or the query: the corpus is " +
+      "collected once, by the graph build, not again by the rejected " +
+      "beam") {
+    for (f <- Seq[DataFrame => DataFrame](
+        _.filter(col("vec_id") =!= Ann.GraphSearchEntry),
+        _.filter(col("vec_id") =!= 0L))) {
+      val collects = new java.util.concurrent.atomic.AtomicInteger()
+      val l = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          if (e.stageInfos.exists(_.name.startsWith("collect at HnswLocal")))
+            collects.incrementAndGet()
+      }
+      spark.sparkContext.addSparkListener(l)
+      val (local, _) =
+        try arms(sfDir, f)(Ann.qGraphSearch)
+        finally spark.sparkContext.removeSparkListener(l)
+      // the in-process kNN graph under the Spark beam is the one build
+      assert(local.localBuilds === 1)
+      // local arm: the graph build's collect; Spark arm: none
+      assert(collects.get === 1,
+        "the beam's missing-id check must reject before collecting")
+    }
+  }
+
   test("registry graph rows: a planted zero vector sends both settings " +
       "to the Spark arm, which fails with DIVIDE_BY_ZERO") {
     // AQE may wrap concurrent stage failures in one multi-failure error
